@@ -153,7 +153,7 @@ object Bench {
       // static shuffle partition count — q75's KB-sized admission
       // frames each cost 32-64 near-empty task launches per consumer
       // stage, which amplified occasional JIT-cold windows into
-      // 15-40 s outliers (tools.Q75Probe round-7 table, SCALE.md)
+      // 15-40 s outliers (round-7 table in SCALE.md; probe: see git rev e579ea9)
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       // the measured host is local[32] with RAM far beyond the sf0.1
       // working set: columnar-cache compression only burns CPU inside

@@ -563,23 +563,12 @@ object NearDup {
     * agreeing permutations (unbiased estimator, stderr ≈
     * 1/sqrt(numPerms)).
     */
-  def sigJaccardEst(a: Column, b: Column): Column = {
-    // fused agreement count (round-17 opt): one codegen'd loop per
-    // pair instead of two interpreted HOF passes + a boolean-array
-    // allocation. Value-identical: SigAgreeCount mirrors the
-    // zip_with/filter null and length-mismatch semantics exactly, and
-    // the closing division is the same int→double cast divide.
-    // `spark.graft.sigAgreeExpr=false` restores the HOF composition
-    // (tools.AbProbe escape hatch).
-    val direct = org.apache.spark.sql.SparkSession.getActiveSession
-      .forall(_.conf.get("spark.graft.sigAgreeExpr", "true").toBoolean)
-    if (direct)
-      graft.expressions.SimilarityExpressions.sig_agree_count(a, b)
-        .cast("double") / size(a)
-    else
-      size(filter(zip_with(a, b, (x, y) => x === y), v => v))
-        .cast("double") / size(a)
-  }
+  def sigJaccardEst(a: Column, b: Column): Column =
+    // one codegen'd agreement loop per pair (SigAgreeCount: NULL
+    // elements never agree, a length mismatch counts over the shorter
+    // prefix), closed by the int→double cast divide
+    graft.expressions.SimilarityExpressions.sig_agree_count(a, b)
+      .cast("double") / size(a)
 
   /** Incremental near-dup admission: keep the incoming rows that are
     * near-dups of NEITHER the existing corpus NOR a kept earlier row
@@ -596,7 +585,7 @@ object NearDup {
     * returning: a one-shot call leaves only the two output-sized
     * checkpointed results, owned by the caller (review r8: the
     * earlier form silently discarded the release handle and leaked
-    * four persisted intermediate frames per call).
+    * its persisted intermediate frames per call).
     * Callers that want lazy outputs and control over release timing
     * use [[incrementalDedupManaged]], as the streaming `dedupBatch`
     * does.
@@ -607,111 +596,49 @@ object NearDup {
       bands: Int = 16, threshold: Double = 0.7): (DataFrame, DataFrame) = {
     val (admitted, newSigs, release) = incrementalDedupManaged(
       corpusSigs, incoming, idCol, textCol, shingleLen, numPerms, bands, threshold)
-    try (admitted.transform(graft.state.Checkpoints.stableLazy), newSigs.transform(graft.state.Checkpoints.stableLazy))
+    try (admitted.transform(graft.state.Checkpoints.stable),
+      newSigs.transform(graft.state.Checkpoints.stable))
     finally release()
   }
 
   /** [[incrementalDedup]] plus a release handle that unpersists the
-    * cached intermediates this call CREATED (batch signatures,
-    * survivors, self-pair list, and the corpus signatures unless the
-    * caller had already persisted them — a caller-owned cache is never
-    * clobbered) at the Dataset level — removing their CacheManager
-    * entries, not just the backing RDD blocks, so a long-running
-    * stream or batch loop does not accumulate InMemoryRelations on
-    * the driver. Call it only AFTER the admitted / newSigs outputs are
-    * materialized (written or checkpointed): releasing earlier forces
-    * the next action to recompute the whole sig→band→verify subtree.
+    * one cached intermediate this call CREATED — the batch frame (rows
+    * plus signatures) — at the Dataset level, removing its
+    * CacheManager entry, not just the backing RDD blocks, so a
+    * long-running stream or batch loop does not accumulate
+    * InMemoryRelations on the driver. The corpus signatures are never
+    * cached here, so a caller-owned corpus cache is never touched.
+    * Call it only AFTER the admitted / newSigs outputs are
+    * materialized (written or checkpointed): releasing earlier makes
+    * the next action recompute the batch signatures.
+    *
+    * Materialization strategy: one batch cache, one EAGER cut of the
+    * verified candidate pairs (batch vs corpus and batch vs batch,
+    * from ONE band join), the rejected ids computed on the driver for
+    * small pair sets, and one narrow job per output — see
+    * [[graft.pipelines.CorpusPipeline.admitBatch]]. On a micro-batch
+    * the cost is driver time between jobs, so the job count is what
+    * this shape minimizes. Every frame with several consumers is
+    * materialized before they run: lazily persisted frames raced by
+    * the CC gate's consumers re-ran the sig→band→verify pipeline a
+    * variable number of times, 4 s to 31 s for the same query in the
+    * same fresh JVM (see git rev e579ea9).
+    * Rows that carry no signature (fewer than `shingleLen` tokens, or
+    * NULL text) cannot be near-dups and are admitted unconditionally
+    * (parity with the full path, which keeps them as pairless nodes).
     */
   def incrementalDedupManaged(
       corpusSigs: DataFrame, incoming: DataFrame, idCol: String,
       textCol: String, shingleLen: Int = 3, numPerms: Int = 64,
-      bands: Int = 16, threshold: Double = 0.7): (DataFrame, DataFrame, () => Unit) = {
-    // Materialization strategy: the admission decision tree is consumed
-    // by MULTIPLE Spark jobs — the CC gate, the admitted-rows write,
-    // and the signature-state append — and repartition barriers only
-    // share exchanges WITHIN one job, so without explicit
-    // materialization every downstream action re-runs the whole
-    // sig→band→verify subtree (measured 3× recompute = 14 s instead of
-    // ~4 s at sf0.1). Each stage is EAGERLY persisted (memory-then-
-    // disk, materialized by a count before anything consumes it):
-    // round 6 tried lazy persists folded into the first action, and
-    // the resulting plan was wildly nondeterministic under the bench —
-    // the CC gate's incremental `limit(n+1)` execution plus broadcast
-    // subtrees racing over the not-yet-cached frames re-ran the
-    // sig→band→verify pipeline a variable number of times, measured
-    // 4 s to 31 s for the SAME query in the SAME fresh JVM
-    // (tools.Q75Probe, round 7). The four counts are one small job
-    // each over a batch-sized cached frame — deterministic and cheap —
-    // and lineage is kept (unlike localCheckpoint), so executor loss
-    // recomputes instead of failing the query. The intermediates are
-    // batch-sized signature frames (KBs–MBs per million-doc batch: id
-    // + numPerms longs).
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    def eager(df: DataFrame): DataFrame = { val p = df.persist(lvl); p.count(); p }
-    // corpus state: consumed by the band join AND the verify join; in
-    // production it is a parquet-backed (id, signature) frame — the
-    // persist pins it so neither consumer re-reads (or, when a
-    // caller builds it inline, re-shingles) the corpus. If the CALLER
-    // already persisted it (a daily-increment driver reusing one
-    // corpus cache across batches), it is left alone and the release
-    // handle must not clobber it — release only what this call created.
-    // (round-17 probed overlapping the batch-signature build with the
-    // corpus-state materialization — NEUTRAL on A/B, q75 +0.05 s;
-    // reverted, serial kept)
-    val inSigs = eager(minhashSignatures(incoming, idCol, textCol, shingleLen, numPerms))
-    val corpusAlreadyCached =
-      corpusSigs.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val corpSigs = if (corpusAlreadyCached) corpusSigs else eager(corpusSigs)
-    val inBands = lshBands(inSigs, idCol, "__sig", bands, numPerms)
-    val corpusBands = lshBands(corpSigs, idCol, "__sig", bands, numPerms)
-
-    // batch vs corpus: any estimated match disqualifies the batch row
-    val vsCorpus = inBands.select(col("band"), col("band_hash"), col(idCol).as("id_new"))
-      .join(corpusBands.select(col("band"), col("band_hash"), col(idCol).as("id_old")),
-        Seq("band", "band_hash"))
-      .select("id_new", "id_old").distinct()
-      .join(inSigs.select(col(idCol).as("id_new"), col("__sig").as("__sig_new")), "id_new")
-      .join(corpSigs.select(col(idCol).as("id_old"), col("__sig").as("__sig_old")), "id_old")
-      .filter(sigJaccardEst(col("__sig_new"), col("__sig_old")) >= threshold)
-      .select(col("id_new").as(idCol)).distinct()
-    // survivors feeds four consumers (self-band, two verify joins,
-    // admission anti-join) across several jobs
-    val survivors = eager(inSigs.join(vsCorpus, Seq(idCol), "left_anti"))
-
-    // batch-internal: min-id keeper per near-dup cluster (fixpoint CC)
-    val selfCands = lshCandidatePairs(
-      lshBands(survivors, idCol, "__sig", bands, numPerms), idCol)
-    val selfPairs = eager(selfCands
-      .join(survivors.select(col(idCol).as("id_a"), col("__sig").as("__sa")), "id_a")
-      .join(survivors.select(col(idCol).as("id_b"), col("__sig").as("__sb")), "id_b")
-      .filter(sigJaccardEst(col("__sa"), col("__sb")) >= threshold)
-      .select("id_a", "id_b")) // reused by pairNodes (×2), the CC gate, and the CC loop
-    // iterate components only over nodes that occur in a dup pair —
-    // the fixpoint loop's per-round overhead then scales with the
-    // (small) clustered subset, not the whole batch
-    val pairNodes = selfPairs.select(col("id_a").as("node"))
-      .unionByName(selfPairs.select(col("id_b").as("node"))).distinct()
-    val labels = graft.pipelines.CorpusPipeline.minLabelComponents(
-      pairNodes, selfPairs)
-    val keepIds = survivors.select(col(idCol))
-      .join(labels.filter(col("node") =!= col("label"))
-          .select(col("node").as(idCol)),
-        Seq(idCol), "left_anti")
-
-    // rows that carry no signature cannot be near-dups — admitted
-    // unconditionally (parity with the full path, which keeps them as
-    // pairless nodes). coalesce catches NULL text: tokens(NULL) is
-    // NULL, and a bare `size(...) < n` filter evaluates to NULL there,
-    // silently dropping the row from BOTH branches.
-    val shortRows = incoming.filter(
-      coalesce(size(TextOps.tokens(col(textCol))), lit(0)) < shingleLen)
-    val admitted = incoming.join(keepIds, Seq(idCol), "left_semi")
-      .unionByName(shortRows)
-    val newSigs = inSigs.join(keepIds, Seq(idCol), "left_semi")
-    val caches = (if (corpusAlreadyCached) Seq.empty else Seq(corpSigs)) ++
-      Seq(inSigs, survivors, selfPairs)
-    (admitted, newSigs, () => caches.foreach(_.unpersist(blocking = false)))
-  }
+      bands: Int = 16, threshold: Double = 0.7): (DataFrame, DataFrame, () => Unit) =
+    graft.pipelines.CorpusPipeline.admitBatch(corpusSigs, incoming, idCol,
+      // coalesce catches NULL text: tokens(NULL) is NULL
+      eligible = coalesce(size(TextOps.tokens(col(textCol))), lit(0)) >= shingleLen,
+      state = Seq("__sig" -> minhashSignature(
+        TextOps.wordShingles(col(textCol), shingleLen), numPerms)),
+      payload = "__sig",
+      bandRows = df => lshBands(df, "__id", "__p", bands, numPerms),
+      verify = (a, b) => sigJaccardEst(a, b) >= threshold)
 
   // ------------------------------------------------------------------
   // SimHash

@@ -4,7 +4,7 @@ import graft.dedup.NearDup
 import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
+import org.apache.spark.sql.types._
 
 /** Training-corpus curation pipeline: the composition a 100 TB
   * pretraining-data run actually executes — quality gating, language
@@ -125,7 +125,6 @@ object CorpusPipeline {
     if (sample.length <= smallEdgeLimit) {
       val s = nodes.sparkSession
       import s.implicits._
-      import org.apache.spark.sql.types._
       val mappingDf = edges.schema("id_a").dataType match {
         case ByteType | ShortType | IntegerType | LongType =>
           Some(driverUnionFind(
@@ -217,8 +216,8 @@ object CorpusPipeline {
     * components → keep the minimum id per duplicate cluster. One call
     * to the shared [[dropByPairs]] tail (review r8: this body, the
     * generic tail, and the incremental admission each carried their
-    * own copy of the keeper kernel; only the incremental one keeps
-    * its inline form, for its eager-persist orchestration).
+    * own copy of the keeper kernel; the incremental families share
+    * [[admitBatch]], which resolves small pair sets on the driver).
     */
   def nearDupDrop(docs: DataFrame, idCol: String, textCol: String,
                   threshold: Double = 0.8, maxIter: Int = 50): DataFrame =
@@ -372,21 +371,21 @@ object CorpusPipeline {
     * EAGERLY materialized (localCheckpoint) and the admission
     * pipeline's cached intermediates are released before returning —
     * only the two output-sized checkpointed results remain, owned by
-    * the caller (review r8: discarding the release handle leaked four
-    * persisted intermediate frames, including the per-call
-    * corpus-state cache, per invocation). Batch loops that want lazy
-    * outputs and release control use the managed form, as the
+    * the caller (review r8: discarding the release handle leaked the
+    * persisted intermediates per invocation). Batch loops that want
+    * lazy outputs and release control use the managed form, as the
     * streaming `semanticDedupBatch` does.
     */
   def incrementalSemanticDedup(
       corpusState: DataFrame, incoming: DataFrame, idCol: String,
       vecCol: String, threshold: Double, bands: Int = 96,
-      bitsPerBand: Int = 6, seed: Long = 42L, maxIter: Int = 50,
-      dedupBeforeVerify: Boolean = true): (DataFrame, DataFrame) = {
+      bitsPerBand: Int = 6, seed: Long = 42L,
+      maxIter: Int = 50): (DataFrame, DataFrame) = {
     val (admitted, newState, release) = incrementalSemanticDedupManaged(
       corpusState, incoming, idCol, vecCol, threshold, bands, bitsPerBand,
-      seed, maxIter, dedupBeforeVerify)
-    try (admitted.transform(graft.state.Checkpoints.stableLazy), newState.transform(graft.state.Checkpoints.stableLazy))
+      seed, maxIter)
+    try (admitted.transform(graft.state.Checkpoints.stable),
+      newState.transform(graft.state.Checkpoints.stable))
     finally release()
   }
 
@@ -410,114 +409,175 @@ object CorpusPipeline {
     * verify on the same quantized representation the decision is a pure
     * function of the stored state: no fp32-vs-int8 asymmetry at the
     * threshold, and any engine recomputing the q89 quantization formula
-    * reproduces the admission exactly (the q92 oracle does).
+    * reproduces the admission exactly (the q92 oracle does). The codes
+    * feed the banding and cosine expressions directly: each element
+    * converts to double exactly inside the fused codegen loop.
     *
-    * Scale shape mirrors the MinHash incremental path: candidates come
-    * from banded hyperplane LSH over the codes — only (bandKey, id)
-    * pairs shuffle, codes are fetched per surviving candidate;
-    * the corpus contributes O(|state|), not O(corpus text/fp32); each
-    * admission stage is EAGERLY persisted because the tree feeds
-    * multiple jobs (see incrementalDedupManaged's materialization
-    * comment — same measured rationale), and the release handle
-    * unpersists only what this call created, never a caller-owned
-    * corpus-state cache. Rows with a NULL/empty embedding cannot be
-    * near-dups — admitted unconditionally, excluded from the new state
-    * (parity with the MinHash path's short-row rule). Recall is the
-    * (bands, bitsPerBand) OR-amplification envelope documented on
+    * Scale shape is the MinHash path's, through the same kernel
+    * ([[admitBatch]]): candidates come from banded hyperplane LSH over
+    * the codes — only (bandKey, id) rows shuffle, codes are fetched per
+    * distinct candidate; the corpus contributes O(|state|), not
+    * O(corpus text/fp32), and is never cached; the release handle
+    * unpersists only the batch frame this call created. Rows with a
+    * NULL/empty embedding cannot be near-dups — admitted
+    * unconditionally, excluded from the new state (parity with the
+    * MinHash path's short-row rule). Recall is the (bands, bitsPerBand)
+    * OR-amplification envelope documented on
     * [[graft.dedup.NearDup.lshCosinePairsBanded]].
     */
   def incrementalSemanticDedupManaged(
       corpusState: DataFrame, incoming: DataFrame, idCol: String,
       vecCol: String, threshold: Double, bands: Int = 96,
-      bitsPerBand: Int = 6, seed: Long = 42L, maxIter: Int = 50,
-      dedupBeforeVerify: Boolean = true): (DataFrame, DataFrame, () => Unit) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    def eager(df: DataFrame): DataFrame = { val p = df.persist(lvl); p.count(); p }
-    // int8 codes feed the banding/cosine expressions DIRECTLY (both
-    // accept integral arrays since round 17): each element converts to
-    // double exactly inside the fused codegen loop, so the dot products
-    // and the threshold compare are bit-identical to the earlier
-    // `transform(c, _.cast(double))` composition — which the round-16
-    // q92 profile showed as an INTERPRETED per-element lambda
-    // allocating a fresh double array per pair/row.
-    // `spark.graft.int8Direct=false` restores the cast composition
-    // (tools.AbProbe escape hatch; values identical either way).
-    def qd(c: Column): Column =
-      if (corpusState.sparkSession.conf
-          .get("spark.graft.int8Direct", "true").toBoolean) c
-      else transform(c, x => x.cast(org.apache.spark.sql.types.DoubleType))
-    def banded(state: DataFrame): DataFrame = state.select(col(idCol),
-      explode(graft.expressions.SimilarityExpressions.hyperplane_bands(
-        qd(col("qvec")), bands, bitsPerBand, seed)).as("__band"))
+      bitsPerBand: Int = 6, seed: Long = 42L,
+      maxIter: Int = 50): (DataFrame, DataFrame, () => Unit) = {
+    val codes = graft.similarity.Ann.int8Codes(col(vecCol))
+    admitBatch(corpusState, incoming, idCol,
+      eligible = col(vecCol).isNotNull && size(col(vecCol)) > 0,
+      state = Seq("scale" -> codes.getField("scale"), "qvec" -> codes.getField("qvec")),
+      payload = "qvec",
+      bandRows = df => df.select(col("__id"),
+        explode(graft.expressions.SimilarityExpressions.hyperplane_bands(
+          col("__p"), bands, bitsPerBand, seed)).as("__band")),
+      verify = (a, b) => NearDup.cosine(a, b) >= threshold,
+      maxIter = maxIter)
+  }
 
-    // quantize the batch once; empty/NULL vectors carry no direction
-    // and are routed around the admission tree entirely
-    // (round-17 probed overlapping this with the corpus-state
-    // materialization — NEUTRAL on A/B, q92 −0.04 s; reverted)
-    val batchState = eager(
-      graft.similarity.Ann.quantizeInt8(incoming, idCol, vecCol)
-        .filter(col("qvec").isNotNull && size(col("qvec")) > 0))
-    val corpusAlreadyCached =
-      corpusState.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val corpState = if (corpusAlreadyCached) corpusState else eager(corpusState)
+  /** The admission kernel shared by both incremental families
+    * ([[graft.dedup.NearDup.incrementalDedupManaged]],
+    * [[incrementalSemanticDedupManaged]]): admit the `incoming` rows
+    * that are near-dups of neither the stored `corpus` state nor a
+    * kept lower-id row of the same batch.
+    *
+    * A family supplies its `eligible` predicate (rows failing it cannot
+    * be near-dups and are admitted unconditionally), its `state`
+    * columns computed per eligible row (`payload` names the one that
+    * is banded and verified; the corpus carries the same columns),
+    * `bandRows` mapping an `(__id, __p)` frame to `(__id, key...)`
+    * band rows, and the pairwise `verify` predicate over two payloads
+    * (the batch row's first).
+    *
+    * Materialization strategy — one cache and one cut per call, since
+    * on a micro-batch the driver time between jobs, not the work, is
+    * the cost:
+    *  - the batch (incoming rows wrapped as one struct, plus the state
+    *    columns) is persisted once and materialized by the job that
+    *    collects the ids of its ineligible rows; both output writes
+    *    read it, so the incoming source is scanned exactly once;
+    *  - the corpus state is read, never cached: it is scanned by the
+    *    band join and by the payload join of the one pair job;
+    *  - ONE band join of the batch's band keys against the union of the
+    *    corpus's and the batch's own band keys yields every candidate,
+    *    tagged corpus or self (self pairs keep a < b); candidates are
+    *    distinct'ed, verified in one pass and cut EAGERLY
+    *    (Checkpoints.stable). Collision and verification are facts about
+    *    a pair alone, so dropping the self pairs that touch a
+    *    corpus-matched row afterwards leaves exactly the self pairs of
+    *    the corpus survivors;
+    *  - the cut feeds the [[minLabelComponents]] size gate directly: up
+    *    to `smallEdgeLimit` verified pairs, the rejected ids (corpus
+    *    matches plus non-minimum component members) are computed by
+    *    union-find on the driver and each write is one narrow job
+    *    against a broadcast local relation; over the limit (or for an
+    *    id type without a driver ordering) the distributed fixpoint
+    *    runs over the cut instead. The choice depends only on the pair
+    *    count.
+    *
+    * Output contract (the q75/q92 oracles and the specs pin it): an
+    * eligible row is admitted iff its id is not rejected, and an
+    * eligible row with a NULL id is never admitted; an ineligible row
+    * is admitted once, and a second time when an admitted eligible row
+    * of the same batch carries its id; rows sharing an id are all kept
+    * or all rejected. The new state holds the admitted eligible rows'
+    * `idCol` and `state` columns. The driver holds the distinct ids of
+    * the ineligible rows for one step: they are the rows admitted
+    * without any work.
+    */
+  private[graft] def admitBatch(
+      corpus: DataFrame, incoming: DataFrame, idCol: String,
+      eligible: Column, state: Seq[(String, Column)], payload: String,
+      bandRows: DataFrame => DataFrame, verify: (Column, Column) => Column,
+      maxIter: Int = 50,
+      smallEdgeLimit: Long = 100000L): (DataFrame, DataFrame, () => Unit) = {
+    val spark = incoming.sparkSession
+    val batch = incoming.select(
+        Seq(struct(col("*")).as("__in"), col(idCol), eligible.as("__elig")) ++
+          state.map { case (n, c) => when(eligible, c).as(n) }: _*)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val idType = batch.schema(idCol).dataType
+    def local(ids: Seq[Any], dt: DataType): DataFrame = broadcast(spark.createDataFrame(
+      java.util.Arrays.asList(ids.map(org.apache.spark.sql.Row(_)): _*),
+      StructType(Seq(StructField("__r", dt)))))
+    // the one job that materializes the batch cache (a scan builds
+    // whole cached partitions); the ids of its ineligible rows are
+    // needed only for the rare id shared with an eligible row
+    val ineligible = batch.filter(!col("__elig")).select(col(idCol))
+      .collect().map(_.get(0)).filter(_ != null).distinct
+    val shared =
+      if (ineligible.isEmpty) Array.empty[Any]
+      else batch.filter(col("__elig"))
+        .join(local(ineligible, idType), col(idCol) === col("__r"), "left_semi")
+        .select(col(idCol)).collect().map(_.get(0)).distinct
 
-    // batch vs corpus: any band collision that verifies disqualifies.
-    // `dedupBeforeVerify` is the same corpus-shape knob as
-    // lshCosinePairsBanded's (identical output either way): true
-    // dedups the candidate multiset before fetching codes — scale-safe
-    // on dup-DENSE corpora where a duplicate cluster collides in
-    // nearly every band; false skips the full-multiset
-    // shuffle+hash-aggregate and distincts only the (id-level) result
-    // — wins when collisions are mostly non-duplicates, and this
-    // stage needs no pair-level distinct at all then, because only
-    // "matched ANY corpus row" survives.
-    val rawCands = banded(batchState).select(col("__band"), col(idCol).as("id_new"))
-      .join(banded(corpState).select(col("__band"), col(idCol).as("id_old")), "__band")
-      .select("id_new", "id_old")
-    val cands = if (dedupBeforeVerify) rawCands.distinct() else rawCands
-    // (Round-17 probed pinning the verify joins at session width —
-    // REJECTED on A/B, q92 +2.2 s: AQE converts these joins to
-    // broadcast at runtime, so explicit keyed exchanges on the
-    // persisted state frames were pure added shuffle.)
-    val vsCorpus = cands
-      .join(batchState.select(col(idCol).as("id_new"), col("qvec").as("__qn")), "id_new")
-      .join(corpState.select(col(idCol).as("id_old"), col("qvec").as("__qo")), "id_old")
-      .filter(NearDup.cosine(qd(col("__qn")), qd(col("__qo"))) >= threshold)
-      .select(col("id_new").as(idCol)).distinct()
-    // survivors feeds the self-banding, both verify joins, and the
-    // admission anti-join across several jobs
-    val survivors = eager(batchState.join(vsCorpus, Seq(idCol), "left_anti"))
+    val mine = batch.filter(col("__elig"))
+      .select(col(idCol).as("__id"), col(payload).as("__p"))
+    val theirs = corpus.select(col(idCol).as("__id"), col(payload).as("__p"))
+    val probe = bandRows(mine)
+    val keys = probe.columns.filterNot(_ == "__id").toSeq
+    val pairs = probe.withColumnRenamed("__id", "__a")
+      .join(bandRows(theirs).withColumn("__self", lit(false))
+          .unionByName(probe.withColumn("__self", lit(true)))
+          .withColumnRenamed("__id", "__b"), keys)
+      .filter(!col("__self") || col("__a") < col("__b"))
+      .select("__a", "__b", "__self").distinct()
+      .join(mine.select(col("__id").as("__a"), col("__p").as("__pa")), "__a")
+      .join(theirs.withColumn("__self", lit(false))
+          .unionByName(mine.withColumn("__self", lit(true)))
+          .select(col("__id").as("__b"), col("__p").as("__pb"), col("__self")),
+        Seq("__b", "__self"))
+      .filter(verify(col("__pa"), col("__pb")))
+      .select("__a", "__b", "__self")
+      .transform(graft.state.Checkpoints.stable)
 
-    // batch-internal: min-id keeper per near-dup component (the pair
-    // list feeds CC, so HERE the post-verify distinct is required when
-    // the multiset was not deduped pre-verify)
-    val sb = banded(survivors)
-    val rawSelf = sb.select(col("__band"), col(idCol).as("id_a"))
-      .join(sb.select(col("__band"), col(idCol).as("id_b")), "__band")
-      .filter(col("id_a") < col("id_b")).select("id_a", "id_b")
-    val selfCands = if (dedupBeforeVerify) rawSelf.distinct() else rawSelf
-    val verifiedSelf = selfCands
-      .join(survivors.select(col(idCol).as("id_a"), col("qvec").as("__qa")), "id_a")
-      .join(survivors.select(col(idCol).as("id_b"), col("qvec").as("__qb")), "id_b")
-      .filter(NearDup.cosine(qd(col("__qa")), qd(col("__qb"))) >= threshold)
-      .select("id_a", "id_b")
-    val selfPairs = eager(
-      if (dedupBeforeVerify) verifiedSelf else verifiedSelf.distinct())
-    val pairNodes = selfPairs.select(col("id_a").as("node"))
-      .unionByName(selfPairs.select(col("id_b").as("node"))).distinct()
-    val labels = minLabelComponents(pairNodes, selfPairs, maxIter)
-    val keepIds = survivors.select(col(idCol))
-      .join(labels.filter(col("node") =!= col("label"))
-          .select(col("node").as(idCol)),
-        Seq(idCol), "left_anti")
+    val sample = pairs.limit(math.min(smallEdgeLimit + 1, Int.MaxValue.toLong).toInt)
+      .collect()
+    // rejected ids: the batch rows with a verified corpus match, plus
+    // the non-minimum members of the components their self pairs form
+    def onDriver[T: Ordering: scala.reflect.ClassTag](dt: DataType, key: Any => T): DataFrame = {
+      val hits = sample.filter(!_.getBoolean(2)).map(r => key(r.get(0))).toSet
+      val edges = sample.filter(_.getBoolean(2))
+        .map(r => (key(r.get(0)), key(r.get(1))))
+        .filterNot { case (a, b) => hits(a) || hits(b) }
+      local((hits ++ driverUnionFind(edges).collect {
+        case (n, root) if n != root => n }).toSeq, dt)
+    }
+    val rejected = idType match {
+      case _ if sample.length > smallEdgeLimit => distributedRejects(pairs, maxIter)
+      case ByteType | ShortType | IntegerType | LongType => onDriver(LongType, asLong)
+      case StringType => onDriver(StringType, _.asInstanceOf[String])
+      case _ => distributedRejects(pairs, maxIter)
+    }
+    val kept = batch.filter((col("__elig") || col(idCol).isin(shared: _*)) &&
+        col(idCol).isNotNull)
+      .join(rejected, col(idCol) === col("__r"), "left_anti")
+    val admitted = batch.filter(!col("__elig")).unionByName(kept).select("__in.*")
+    val newState = kept.filter(col("__elig"))
+      .select((idCol +: state.map(_._1)).map(col): _*)
+    (admitted, newState, () => batch.unpersist(blocking = false))
+  }
 
-    val noVec = incoming.filter(col(vecCol).isNull || size(col(vecCol)) === 0)
-    val admitted = incoming.join(keepIds, Seq(idCol), "left_semi")
-      .unionByName(noVec)
-    val newState = batchState.join(keepIds, Seq(idCol), "left_semi")
-    val caches = (if (corpusAlreadyCached) Seq.empty else Seq(corpState)) ++
-      Seq(batchState, survivors, selfPairs)
-    (admitted, newState, () => caches.foreach(_.unpersist(blocking = false)))
+  /** [[admitBatch]]'s over-the-limit branch: the rejected ids `__r` of
+    * a verified pair cut, through the distributed fixpoint.
+    */
+  private def distributedRejects(pairs: DataFrame, maxIter: Int): DataFrame = {
+    val hits = pairs.filter(!col("__self")).select(col("__a").as("__r"))
+    val self = pairs.filter(col("__self"))
+      .join(hits.select(col("__r").as("__a")), Seq("__a"), "left_anti")
+      .join(hits.select(col("__r").as("__b")), Seq("__b"), "left_anti")
+      .select(col("__a").as("id_a"), col("__b").as("id_b"))
+    val nodes = self.select(col("id_a").as("node"))
+      .unionByName(self.select(col("id_b").as("node"))).distinct()
+    hits.unionByName(minLabelComponents(nodes, self, maxIter)
+      .filter(col("node") =!= col("label")).select(col("node").as("__r")))
   }
 
   /** Stage 5 — token budgeting: running token total in a deterministic

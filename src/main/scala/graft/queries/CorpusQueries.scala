@@ -86,12 +86,12 @@ object CorpusQueries {
       val (admitted, _, release) = graft.dedup.NearDup.incrementalDedupManaged(
         sigs, batch, "doc_id", "text", threshold = 0.8)
       // materialize the (tiny) rejected-id answer eagerly, then release
-      // the admission pipeline's cached intermediates — repeated
+      // the admission pipeline's cached batch frame — repeated
       // invocations (bench min-of-3, a batch loop) would otherwise
-      // accumulate four InMemoryRelations per call
+      // accumulate an InMemoryRelation per call
       val out = batch.select("doc_id")
         .join(admitted.select("doc_id"), Seq("doc_id"), "left_anti")
-        .transform(graft.state.Checkpoints.stableLazy)
+        .transform(graft.state.Checkpoints.stable)
       release()
       out
     }),
@@ -258,18 +258,18 @@ object CorpusQueries {
       val corpus = embs.filter(col("vec_id") % 2 === 0)
       val batch  = embs.filter(col("vec_id") % 2 === 1)
       val state = graft.similarity.Ann.quantizeInt8(corpus, "vec_id", "embedding")
-      // dedupBeforeVerify keeps its default (true) here: unlike q51,
-      // where skipping the pair-multiset distinct won, the incremental
-      // path fetches codes through TWO joins per candidate row, so the
-      // multiset distinct pays for itself — measured 5.3 s vs 10.7 s
-      // at sf0.1 (tools.Q92Probe A/B)
+      // the admission kernel distincts the candidate multiset before
+      // fetching codes: unlike q51, where skipping that distinct won,
+      // it fetches codes through TWO joins per candidate row, so the
+      // distinct pays for itself — measured 5.3 s vs 10.7 s at sf0.1
+      // (see git rev e579ea9)
       val (admitted, _, release) = CorpusPipeline.incrementalSemanticDedupManaged(
         state, batch, "vec_id", "embedding", threshold = 0.45)
       // materialize the (tiny) rejected-id answer eagerly, then release
       // the admission pipeline's cached intermediates (bench min-of-3)
       val out = batch.select("vec_id")
         .join(admitted.select("vec_id"), Seq("vec_id"), "left_anti")
-        .transform(graft.state.Checkpoints.stableLazy)
+        .transform(graft.state.Checkpoints.stable)
       release()
       out
     }),

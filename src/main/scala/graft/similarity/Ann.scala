@@ -282,8 +282,17 @@ object Ann {
     * asserted cross-engine by the q89 oracle.
     */
   def quantizeInt8(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val asDouble = transform(col(vecCol), x => x.cast(DoubleType))
-    val out = graft.expressions.ExprOps.bind(asDouble) { v =>
+    val out = int8Codes(col(vecCol))
+    df.select(col(idCol), out.getField("scale").as("scale"),
+      out.getField("qvec").as("qvec"))
+  }
+
+  /** The `struct(scale, qvec)` of [[quantizeInt8]] for one vector
+    * column, for callers that project it beside other columns.
+    */
+  def int8Codes(vec: Column): Column = {
+    val asDouble = transform(vec, x => x.cast(DoubleType))
+    graft.expressions.ExprOps.bind(asDouble) { v =>
       graft.expressions.ExprOps.bind(array_max(transform(v, x => abs(x)))) { scale =>
         struct(
           scale.as("scale"),
@@ -293,8 +302,6 @@ object Ann {
             .as("qvec"))
       }
     }
-    df.select(col(idCol), out.getField("scale").as("scale"),
-      out.getField("qvec").as("qvec"))
   }
 
   /** Matryoshka-style prefix-dimension recall report: rank the corpus

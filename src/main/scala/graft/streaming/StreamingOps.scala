@@ -435,7 +435,7 @@ object StreamingOps {
   /** One micro-batch of streaming corpus admission, exposed for direct
     * testing and batch-mode replay. The batch is near-dup-checked
     * against the persisted signature state (NEVER the corpus text) via
-    * `NearDup.incrementalDedup`; admitted rows and their signatures
+    * `NearDup.incrementalDedupManaged`; admitted rows and their signatures
     * land in per-batch partitions `outPath/batch=<id>` and
     * `sigPath/batch=<id>`.
     *
@@ -449,15 +449,17 @@ object StreamingOps {
     * of the path (HDFS/S3-safe), with a read-and-catch fallback for a
     * state dir that exists but holds no readable footers yet.
     *
-    * Cache hygiene: by default the batch releases the admission
-    * pipeline's persisted intermediates (dead weight once the writes
-    * land) at the DATASET level via the handle
+    * Cache hygiene: admission holds ONE cache per batch — the batch
+    * rows with their signatures, read by both writes — beside one
+    * eager cut of the verified candidate pairs (see
+    * `CorpusPipeline.admitBatch`); the stored signature state is read,
+    * never cached. By default the batch releases that cache (dead
+    * weight once the writes land) at the DATASET level via the handle
     * `incrementalDedupManaged` returns — removing the CacheManager
-    * entries too, so a long-running stream does not accumulate
-    * InMemoryRelations on the driver. The release targets exactly the
-    * frames this batch created; caches owned by other queries on the
-    * same SparkContext are untouched. `cleanupCaches = false` opts out
-    * (e.g. to inspect the intermediates after a test run).
+    * entry too, so a long-running stream does not accumulate
+    * InMemoryRelations on the driver. Caches owned by other queries on
+    * the same SparkContext are untouched. `cleanupCaches = false` opts
+    * out (e.g. to inspect the cached batch after a test run).
     */
   def dedupBatch(batch: DataFrame, batchId: Long, idCol: String, textCol: String,
                  sigPath: String, outPath: String, threshold: Double,
@@ -524,8 +526,8 @@ object StreamingOps {
     * half-written retry excludes its own partial `batch=<id>` state
     * from the corpus before re-deciding — a crash between the writes
     * can neither double-admit nor leak state for rows never admitted.
-    * Same cache hygiene: the admission pipeline's intermediates are
-    * released at the Dataset level once the writes land.
+    * Same cache hygiene: the one cached batch frame is released at
+    * the Dataset level once the writes land.
     */
   def semanticDedupBatch(batch: DataFrame, batchId: Long, idCol: String,
                          vecCol: String, statePath: String, outPath: String,

@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** Wall-vs-tasktime noise profile for the round-7 micro-uptick
   * queries (VERDICT r7 "What's wrong #3": q50 0.66→0.91 s, q53
   * 0.405→0.499 s, q58 0.365→0.504 s, q36 0.62→0.69 s — all map-only
-  * or tiny, all inside their historical bands). Methodology is
-  * Q75Probe's: a 50 ms-tick steal detector attributes host
+  * or tiny, all inside their historical bands). Methodology is the
+  * retired q75 probe's (see git rev e579ea9): a 50 ms-tick steal detector attributes host
   * starvation, and a job listener splits each query's wall time into
   * summed executor task time vs scheduler/driver time. If the
   * upticks were a code regression, task time would grow round-over-

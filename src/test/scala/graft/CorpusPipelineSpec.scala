@@ -648,25 +648,46 @@ class CorpusPipelineSpec extends SparkSpec {
 
   test("incrementalSemanticDedup: audited vs an exact quadratic ground truth " +
     "on sf0.001 embeddings (quantize -> cosine vs corpus -> union-find)") {
+    // the sf0.001 batch plus NULL/empty, id-sharing and corpus-id rows
     val embs = Tables.embeddings(spark, sf("sf0.001"))
     val corpus = embs.filter(col("vec_id") % 2 === 0)
-    val batch  = embs.filter(col("vec_id") % 2 === 1)
+    val odd  = embs.filter(col("vec_id") % 2 === 1)
+    val (firstOdd, maxId) = odd.agg(min("vec_id"), max("vec_id")).as[(Long, Long)].head()
+    val vecType = embs.schema("embedding").dataType
+    val batch = odd.select("vec_id", "embedding").unionByName(Seq(
+      // NULL and empty vectors
+      odd.filter(col("vec_id") === firstOdd).select(
+        lit(maxId + 2).as("vec_id"), lit(null).cast(vecType).as("embedding")),
+      odd.filter(col("vec_id") === firstOdd).select(
+        lit(maxId + 4).as("vec_id"), slice(col("embedding"), 1, 0).as("embedding")),
+      // an empty vector sharing its id with a real batch row
+      odd.filter(col("vec_id") === firstOdd).select(
+        col("vec_id"), slice(col("embedding"), 1, 0).as("embedding")),
+      // batch ids equal to corpus ids: a copy of corpus row 2, and the
+      // negation of corpus row 4
+      corpus.filter(col("vec_id") === 2).select(lit(0L).as("vec_id"), col("embedding")),
+      corpus.filter(col("vec_id") === 4).select(lit(2L).as("vec_id"),
+        transform(col("embedding"), x => -x).as("embedding"))
+    ).reduce(_ unionByName _))
     val state = graft.similarity.Ann.quantizeInt8(corpus, "vec_id", "embedding")
     val (admitted, newState, release) =
       CorpusPipeline.incrementalSemanticDedupManaged(
         state, batch, "vec_id", "embedding", threshold = 0.45)
-    val admittedIds = admitted.select("vec_id").as[Long].collect().toSet
-    val stateIds = newState.select("vec_id").as[Long].collect().toSet
+    val admittedRows = admitted.select(col("vec_id"),
+        coalesce(size(col("embedding")), lit(-1)).as("n")).as[(Long, Int)]
+      .collect().toSeq.sorted
+    val stateIds = newState.select("vec_id").as[Long].collect().toSeq.sorted
     release()
 
     // independent ground truth in plain Scala: same IEEE quantization
     // formula, exact quadratic cosine (no LSH), union-find min-label
-    val all = embs.select("vec_id", "embedding").collect().map { r =>
-      r.getLong(0) -> r.getSeq[Any](1).map {
-        case f: java.lang.Float => f.toDouble
-        case d: java.lang.Double => d.doubleValue
-      }.toArray
-    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("vec_id", "embedding").collect().toSeq.map { r =>
+        r.getLong(0) -> Option(r.getSeq[Any](1)).map(_.map {
+          case f: java.lang.Float => f.toDouble
+          case d: java.lang.Double => d.doubleValue
+        }.toArray).orNull
+      }
     def quant(v: Array[Double]): Array[Double] = {
       val s = v.map(math.abs).max
       if (s == 0) v.map(_ => 0.0) else v.map(x => math.floor(x / s * 127 + 0.5))
@@ -676,11 +697,11 @@ class CorpusPipelineSpec extends SparkSpec {
       while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
       if (na > 0 && nb > 0) dot / (math.sqrt(na) * math.sqrt(nb)) else 0.0
     }
-    val q = all.map { case (id, v) => id -> quant(v) }.toMap
-    val corpusIds = q.keys.filter(_ % 2 == 0).toSeq.sorted
-    val batchIds = q.keys.filter(_ % 2 == 1).toSeq.sorted
-    val rejCorpus = batchIds.filter(b =>
-      corpusIds.exists(c => cos(q(b), q(c)) >= 0.45)).toSet
+    val corpusQ = rows(corpus).map { case (_, v) => quant(v) }
+    val batchRows = rows(batch)
+    val q = batchRows.collect { case (id, v) if v != null && v.nonEmpty => id -> quant(v) }.toMap
+    val batchIds = q.keys.toSeq.sorted
+    val rejCorpus = batchIds.filter(b => corpusQ.exists(c => cos(q(b), c) >= 0.45)).toSet
     val surv = batchIds.filterNot(rejCorpus)
     val parent = scala.collection.mutable.Map(surv.map(x => x -> x): _*)
     def find(x: Long): Long = {
@@ -694,12 +715,20 @@ class CorpusPipelineSpec extends SparkSpec {
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
     val rejSelf = surv.filter(x => find(x) != x).toSet
-    val expected = batchIds.toSet -- rejCorpus -- rejSelf
-    assert(rejCorpus.nonEmpty || rejSelf.nonEmpty,
-      "fixture must exercise at least one rejection path")
-    assert(admittedIds === expected)
-    // every admitted row here has a real vector -> state mirrors admission
-    assert(stateIds === expected)
+    val kept = batchIds.toSet -- rejCorpus -- rejSelf
+    assert(rejCorpus.nonEmpty && rejSelf.nonEmpty,
+      "fixture must exercise both rejection paths")
+    assert(rejCorpus.contains(0L), "the copy of corpus row 2 under corpus id 0 is rejected")
+    assert(kept.contains(firstOdd), "the id shared with an empty vector is admitted")
+    // a vector row is admitted iff its id is kept; a NULL/empty one
+    // once, and once more when its id is also a kept vector row's
+    val expected = batchRows.flatMap { case (id, v) =>
+      val n = if (v == null) -1 else v.length
+      if (n > 0) (if (kept(id)) Seq(id -> n) else Nil)
+      else Seq(id -> n) ++ (if (kept(id)) Seq(id -> n) else Nil)
+    }.sorted
+    assert(admittedRows === expected)
+    assert(stateIds === kept.toSeq.sorted)
   }
 
   test("semanticDecontaminate: flags == independent quadratic recompute on " +
@@ -739,27 +768,89 @@ class CorpusPipelineSpec extends SparkSpec {
 
   test("incrementalSemanticDedup: NULL/empty vectors admitted unconditionally, " +
     "excluded from state; caller-owned corpus cache survives release") {
-    val corpus = Seq((0L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f)))
-      .toDF("vec_id", "embedding")
+    // also: an in-batch chain, a row matching the corpus and the batch,
+    // an id on an empty and a vector row, batch ids equal to corpus ids
+    // 6-dim vectors: the corpus spans dims 0-1, the chain dims 2-3
+    def v(xs: (Int, Double)*): Array[Float] = {
+      val a = Array.fill(6)(0.0f); xs.foreach { case (i, x) => a(i) = x.toFloat }; a
+    }
+    def deg(d: Double) = math.toRadians(d)
+    val corpus = Seq((0L, v(0 -> 1.0)), (2L, v(1 -> 1.0))).toDF("vec_id", "embedding")
     val state = graft.similarity.Ann.quantizeInt8(corpus, "vec_id", "embedding").persist()
     state.count()
     val batch = Seq(
-      (1L, Array(1.0f, 0.01f)),  // cosine ~0.99997 vs corpus 0 -> rejected
-      (3L, Array(-1.0f, 1.0f)),  // no corpus match -> survivor, min of its pair
-      (5L, Array(-0.99f, 1.0f)), // batch-internal near-dup of 3 -> rejected
-      (7L, Array.empty[Float]),  // no direction -> admitted unconditionally
-      (9L, null.asInstanceOf[Array[Float]])
+      (1L, v(0 -> 1.0, 1 -> 0.01)),    // cosine ~0.99997 vs corpus 0 -> rejected
+      (3L, v(0 -> -1.0, 1 -> 1.0)),    // no corpus match -> survivor, min of its pair
+      (5L, v(0 -> -0.99, 1 -> 1.0)),   // batch-internal near-dup of 3 -> rejected
+      (7L, Array.empty[Float]),        // no direction -> admitted unconditionally
+      (9L, null.asInstanceOf[Array[Float]]),
+      // a 3-row chain: 11~13 and 13~15 (cos 20°), 11 !~ 15 (cos 40°)
+      (11L, v(2 -> 1.0)),
+      (13L, v(2 -> math.cos(deg(20)), 3 -> math.sin(deg(20)))),
+      (15L, v(2 -> math.cos(deg(40)), 3 -> math.sin(deg(40)))),
+      // 21 matches corpus 0 (10°) AND batch row 23 (20° apart); 23 is
+      // 30° from corpus 0, so with 21 rejected by the corpus 23 is kept
+      (21L, v(0 -> math.cos(deg(10)), 1 -> math.sin(deg(10)))),
+      (23L, v(0 -> math.cos(deg(30)), 1 -> math.sin(deg(30)))),
+      // batch ids equal to corpus ids: 0 matches corpus 2, 2 is novel
+      (0L, v(0 -> 0.01, 1 -> 1.0)),
+      (2L, v(4 -> 1.0)),
+      // one id on an empty row and on a novel vector row
+      (31L, Array.empty[Float]),
+      (31L, v(5 -> 1.0))
     ).toDF("vec_id", "embedding")
     val (admitted, newState, release) =
       CorpusPipeline.incrementalSemanticDedupManaged(
         state, batch, "vec_id", "embedding", threshold = 0.9)
-    assert(admitted.select("vec_id").as[Long].collect().toSet === Set(3L, 7L, 9L))
-    assert(newState.select("vec_id").as[Long].collect().toSet === Set(3L))
+    // the empty row of id 31 is admitted unconditionally AND through
+    // its kept vector sibling's id, as the per-stage form did
+    assert(admitted.select("vec_id").as[Long].collect().sorted.toSeq ===
+      Seq(2L, 3L, 7L, 9L, 11L, 23L, 31L, 31L, 31L))
+    assert(newState.select("vec_id").as[Long].collect().sorted.toSeq ===
+      Seq(2L, 3L, 11L, 23L, 31L))
     release()
     assert(state.storageLevel !=
       org.apache.spark.storage.StorageLevel.NONE,
       "release must not clobber a caller-owned corpus-state cache")
     state.unpersist()
+  }
+
+  test("admitBatch: the over-the-limit distributed branch admits exactly " +
+    "what the driver-side union-find branch admits") {
+    // a toy family: the payload IS the band-key list, and every
+    // colliding pair verifies
+    val corpus = Seq((1L, Seq(10L)), (2L, Seq(20L))).toDF("id", "keys")
+    val batch = Seq(
+      (5L, Seq(10L)),        // matches corpus 1
+      (6L, Seq(10L, 30L)),   // matches corpus 1 and batch row 7
+      (7L, Seq(30L)),        // its only partner is rejected: kept
+      (8L, Seq(40L)),        // chain 8 - 9 - 11: 8 kept
+      (9L, Seq(40L, 50L)),
+      (11L, Seq(50L)),
+      (2L, Seq(60L)),        // a corpus id, novel: kept
+      (12L, null.asInstanceOf[Seq[Long]]),
+      (8L, null.asInstanceOf[Seq[Long]])  // shares id 8: admitted twice
+    ).toDF("id", "keys")
+    def admit(limit: Long, idType: String) = {
+      def typed(df: org.apache.spark.sql.DataFrame) = df.withColumn("id", col("id").cast(idType))
+      val (admitted, newState, release) = CorpusPipeline.admitBatch(
+        typed(corpus), typed(batch), "id", eligible = col("keys").isNotNull,
+        state = Seq("keys" -> col("keys")), payload = "keys",
+        bandRows = df => df.select(col("__id"), explode(col("__p")).as("__k")),
+        verify = (_, _) => lit(true), smallEdgeLimit = limit)
+      try (admitted.select(col("id").cast("string")).as[String].collect().sorted.toSeq,
+        newState.select(col("id").cast("string")).as[String].collect().sorted.toSeq)
+      finally release()
+    }
+    def strs(ids: Long*) = ids.map(_.toString).sorted
+    val expected = (strs(2, 7, 8, 8, 8, 12), strs(2, 7, 8))
+    assert(admit(100000L, "long") === expected)
+    assert(admit(0L, "long") === expected)
+    // string ids order lexicographically: "11" is the chain's minimum,
+    // so 8 is rejected and its short row is admitted once
+    val expectedStr = (strs(2, 7, 8, 11, 12), strs(2, 7, 11))
+    assert(admit(100000L, "string") === expectedStr)
+    assert(admit(0L, "string") === expectedStr)
   }
 
   test("containmentScore: verbatim quote scores 1.0, disjoint doc 0.0, " +

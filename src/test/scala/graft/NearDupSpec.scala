@@ -97,6 +97,46 @@ class NearDupSpec extends SparkSpec {
     assert(rows.map(_.getInt(0)).toSeq === Seq(3, 0, 2, 2, 0))
   }
 
+  test("sigJaccardEst and the int8-code cosine equal plain-Scala " +
+    "references: NULL arrays, NULL elements, length mismatches") {
+    val rnd = new scala.util.Random(5)
+    def sig(n: Int): Seq[java.lang.Long] = Seq.fill(n)(
+      if (rnd.nextInt(8) == 0) null else java.lang.Long.valueOf(rnd.nextInt(3).toLong))
+    val sigPairs = Seq((null, sig(8)), (sig(8), null)) ++
+      (1 to 300).map(_ => (sig(6 + rnd.nextInt(3)), sig(6 + rnd.nextInt(3))))
+    def agreeRef(a: Seq[java.lang.Long], b: Seq[java.lang.Long]): Option[Double] =
+      if (a == null || b == null) None
+      else Some(a.zip(b).count { case (x, y) => x != null && y != null && x == y }
+        .toDouble / a.size)
+    val est = sigPairs.toDF("a", "b")
+      .select(NearDup.sigJaccardEst(col("a"), col("b"))).collect()
+      .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
+    assert(est.toSeq === sigPairs.map { case (a, b) => agreeRef(a, b) })
+    assert(sigPairs.exists { case (a, b) => a != null && b != null && a.size != b.size })
+
+    def codes(n: Int): Array[Int] = Array.fill(n)(rnd.nextInt(255) - 127)
+    val codePairs = Seq((null, codes(8)), (codes(8), codes(9)), (Array.fill(8)(0), codes(8))) ++
+      (1 to 300).map { _ => val d = 4 + rnd.nextInt(60); (codes(d), codes(d)) }
+    def cosRef(a: Array[Int], b: Array[Int]): Option[Double] =
+      if (a == null || b == null || a.length != b.length) None
+      else {
+        var dot = 0.0; var na = 0.0; var nb = 0.0
+        a.indices.foreach { i =>
+          val (x, y) = (a(i).toDouble, b(i).toDouble)
+          dot += x * y; na += x * x; nb += y * y
+        }
+        Some(if (na > 0 && nb > 0) dot / (math.sqrt(na) * math.sqrt(nb)) else 0.0)
+      }
+    val cos = codePairs.toDF("a", "b")
+      .select(NearDup.cosine(col("a"), col("b"))).collect()
+      .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
+    cos.toSeq.zip(codePairs.map { case (a, b) => cosRef(a, b) }).foreach {
+      case (Some(g), Some(w)) =>
+        assert(java.lang.Double.doubleToRawLongBits(g) === java.lang.Double.doubleToRawLongBits(w))
+      case (g, w) => assert(g === w)
+    }
+  }
+
   test("exactDedup keeps min id per content group with dup_count") {
     val df = Seq((1L, "same"), (5L, "same"), (3L, "same"), (2L, "unique"))
       .toDF("doc_id", "text")
@@ -215,6 +255,90 @@ class NearDupSpec extends SparkSpec {
     val (again, _) = NearDup.incrementalDedup(
       grown, incoming.filter(!$"doc_id".isin(13L, 15L)), "doc_id", "text", threshold = 0.7)
     assert(again.count() === 0)
+
+    // edge inputs against a plain-Scala replica of the admission rule:
+    // a candidate shares a 4-perm band slice and verifies on signature
+    // agreement; min-label union-find over the corpus survivors
+    def words(from: Int, n: Int) = (from until from + n).map(i => s"t$i").mkString(" ")
+    val corpus2 = Seq((1L, words(0, 20)), (2L, words(100, 20)), (3L, words(200, 20)))
+      .toDF("doc_id", "text")
+    val batch2 = Seq(
+      (40L, words(300, 20)),  // head of a 3-row in-batch chain: kept
+      (41L, words(300, 25)),  // near 40
+      (42L, words(300, 30)),  // near 41, not near 40
+      (30L, words(0, 24)),    // near corpus 1
+      (31L, words(0, 28)),    // near 30 but not corpus 1: 30 is rejected, so 31 is kept
+      (2L, words(100, 22)),   // a corpus id, near corpus 2
+      (3L, words(500, 20)),   // a corpus id, novel
+      (50L, "too short"),     // short row sharing its id with ...
+      (50L, words(600, 20)),  // ... a novel long row
+      (51L, ""),
+      (52L, null.asInstanceOf[String]))
+      .toDF("doc_id", "text")
+    def sigsOf(df: org.apache.spark.sql.DataFrame) =
+      NearDup.minhashSignatures(df, "doc_id", "text").as[(Long, Seq[Long])].collect().toMap
+    val (cs, bs) = (sigsOf(corpus2), sigsOf(batch2))
+    def near(a: Seq[Long], b: Seq[Long]) =
+      a.grouped(4).zip(b.grouped(4)).exists { case (x, y) => x == y } &&
+        a.zip(b).count { case (x, y) => x == y }.toDouble / a.size >= 0.7
+    val hits = bs.keySet.filter(b => cs.values.exists(near(bs(b), _)))
+    val surv = (bs.keySet -- hits).toSeq.sorted
+    val selfEdges = for {
+      i <- surv.indices; j <- i + 1 until surv.size if near(bs(surv(i)), bs(surv(j)))
+    } yield (surv(i), surv(j))
+    val root = scala.collection.mutable.Map(surv.map(x => x -> x): _*)
+    def find(x: Long): Long = if (root(x) == x) x else { root(x) = find(root(x)); root(x) }
+    selfEdges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) root(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val rejected = hits ++ surv.filter(x => find(x) != x)
+    // the fixture must exercise every case it names
+    assert(hits === Set(30L, 2L), s"corpus matches: $hits")
+    assert(selfEdges.toSet === Set((40L, 41L), (41L, 42L)), s"self edges: $selfEdges")
+    assert(near(bs(30L), bs(31L)) && !near(bs(31L), cs(1L)))
+    // an eligible row is admitted iff its id is not rejected; a short
+    // row once, and once more when an admitted long row shares its id
+    val expected = batch2.as[(Long, String)].collect().toSeq.flatMap { case (id, text) =>
+      if (bs.contains(id) && text != null && text.trim.split("\\s+").length >= 3)
+        (if (rejected(id)) Nil else Seq(id -> text))
+      else Seq(id -> text) ++ (if (bs.contains(id) && !rejected(id)) Seq(id -> text) else Nil)
+    }
+    val (admitted2, newSigs2) = NearDup.incrementalDedup(
+      corpusSigs = NearDup.minhashSignatures(corpus2, "doc_id", "text"),
+      batch2, "doc_id", "text", threshold = 0.7)
+    def sorted(rows: Seq[(Long, String)]) = rows.sortBy { case (i, t) => (i, String.valueOf(t)) }
+    assert(sorted(admitted2.as[(Long, String)].collect().toSeq) === sorted(expected))
+    assert(sorted(expected).map(_._1) ===
+      Seq(3L, 31L, 40L, 50L, 50L, 50L, 51L, 52L))
+    assert(newSigs2.select("doc_id").as[Long].collect().sorted.toSeq ===
+      bs.keySet.filterNot(rejected).toSeq.sorted)
+  }
+
+  test("one-shot incrementalDedup / incrementalSemanticDedup return " +
+    "outputs already checkpointed when the call returns, under reliable " +
+    "checkpoints (where a lazy cut would run after the release)") {
+    def cut(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.getOrElse(fail(s"not a checkpointed frame:\n${df.queryExecution.analyzed}"))
+    val docs = Seq((1L, "alpha beta gamma delta epsilon"), (2L, "alpha beta gamma delta zeta"))
+      .toDF("doc_id", "text")
+    val vecs = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f))).toDF("vec_id", "embedding")
+    val flag = graft.state.Checkpoints.ReliableFlag
+    val dir = tempDir("oneshot_ckpt")
+    org.apache.spark.SpecSparkInternals.withCheckpointDir(spark.sparkContext, dir.toString) {
+      spark.conf.set(flag, "true")
+      try {
+        val (admitted, newSigs) = NearDup.incrementalDedup(
+          NearDup.minhashSignatures(docs.limit(0), "doc_id", "text"), docs, "doc_id", "text")
+        assert(cut(admitted).isCheckpointed && cut(newSigs).isCheckpointed)
+        val (semAdmitted, semState) = graft.pipelines.CorpusPipeline.incrementalSemanticDedup(
+          graft.similarity.Ann.quantizeInt8(vecs.limit(0), "vec_id", "embedding"),
+          vecs, "vec_id", "embedding", threshold = 0.9)
+        assert(cut(semAdmitted).isCheckpointed && cut(semState).isCheckpointed)
+        assert(admitted.count() === 2 && semAdmitted.count() === 2)
+      } finally spark.conf.unset(flag)
+    }
   }
 
   test("exactDedupNfc: precomposed and combining-mark spellings collapse, " +

@@ -524,6 +524,66 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(stP).count() === 3)
   }
 
+  test("dedupBatch / semanticDedupBatch: one small micro-batch against a " +
+    "two-batch state runs in at most 20 Spark jobs per call") {
+    val dir = tempDir("admission_jobs").toFile
+    val sigP = new java.io.File(dir, "sigs").getPath
+    val docP = new java.io.File(dir, "docs").getPath
+    val stP  = new java.io.File(dir, "state").getPath
+    val vecP = new java.io.File(dir, "vecs").getPath
+    val words = (0 until 400).map(i => s"w$i")
+    val rnd = new scala.util.Random(7)
+    // 12 docs and vectors per batch; each later batch repeats two of
+    // the previous batch's rows verbatim and carries one in-batch copy
+    var prevDocs = Seq.empty[String]
+    var prevVecs = Seq.empty[Array[Float]]
+    val batches = (0 until 3).map { b =>
+      val fresh = (0 until 9).map(_ => Seq.fill(12)(words(rnd.nextInt(words.size))).mkString(" "))
+      val docs = prevDocs.take(2) ++ fresh ++ fresh.take(1)
+      val vfresh = (0 until 9).map(_ => Array.fill(8)(rnd.nextGaussian().toFloat))
+      val vecs = prevVecs.take(2) ++ vfresh ++ vfresh.take(1)
+      prevDocs = fresh; prevVecs = vfresh
+      val ids = docs.indices.map(i => b * 100L + i)
+      (ids.zip(docs).toDF("doc_id", "text"), ids.zip(vecs).toDF("vec_id", "embedding"))
+    }
+    val key = "graft.spec.call"
+    def jobsOf(body: => Unit): Int = {
+      val sc = spark.sparkContext
+      val tag = s"admission-${System.nanoTime}"
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty(key) == tag)) n.incrementAndGet()
+      }
+      org.apache.spark.SpecSparkInternals.drainListenerBus(sc)
+      sc.addSparkListener(l)
+      sc.setLocalProperty(key, tag)
+      try body
+      finally {
+        sc.setLocalProperty(key, null)
+        org.apache.spark.SpecSparkInternals.drainListenerBus(sc)
+        sc.removeSparkListener(l)
+      }
+      n.get
+    }
+    val counts = batches.zipWithIndex.map { case ((docs, vecs), b) =>
+      (jobsOf(StreamingOps.dedupBatch(docs, b.toLong, "doc_id", "text", sigP, docP, 0.7)),
+        jobsOf(StreamingOps.semanticDedupBatch(vecs, b.toLong, "vec_id", "embedding",
+          stP, vecP, 0.9)))
+    }
+    // the repeats are rejected: the measured batch did real admission work
+    val admitted = spark.read.parquet(docP).filter(col("batch") === 2)
+      .select("doc_id").as[Long].collect().toSet
+    assert(admitted === (202L to 210L).toSet, s"got $admitted")
+    val admittedVecs = spark.read.parquet(vecP).filter(col("batch") === 2)
+      .select("vec_id").as[Long].collect().toSet
+    assert(admittedVecs === (202L to 210L).toSet, s"got $admittedVecs")
+    info(s"jobs per (dedupBatch, semanticDedupBatch) call, batches 0-2: $counts")
+    val (minhashJobs, semanticJobs) = counts.last
+    assert(minhashJobs <= 20, s"dedupBatch ran $minhashJobs jobs (all calls: $counts)")
+    assert(semanticJobs <= 20, s"semanticDedupBatch ran $semanticJobs jobs (all calls: $counts)")
+  }
+
   test("cusumStreaming ≡ the fixed-mean CUSUM recurrence: day-close " +
     "emission, skipped days contribute genuine zeros, integer alarm " +
     "test, stragglers for closed days dropped") {
