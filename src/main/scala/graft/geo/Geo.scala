@@ -2,6 +2,7 @@ package graft.geo
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** Planar geometry over WKT — replaces the reference's BigQuery
   * GEOGRAPHY surface (`ST_CONTAINS`, `ST_COVERS`, `ST_GEOGPOINT`,
@@ -184,7 +185,15 @@ object Geo {
       points: DataFrame, zones: Seq[(String, String, Long, Option[Long])],
       outCol: String,
       latCol: String = "lat", longCol: String = "long",
-      eventUnixCol: String = "create_date_unix"): DataFrame = {
+      eventUnixCol: String = "create_date_unix"): DataFrame =
+    points.withColumn(outCol, revGeoZoneColumn(zones, latCol, longCol, eventUnixCol))
+
+  /** The value [[revGeoZone]] writes: the name of the first zone whose
+    * polygon contains the point and whose window covers the event time.
+    */
+  private def revGeoZoneColumn(
+      zones: Seq[(String, String, Long, Option[Long])],
+      latCol: String, longCol: String, eventUnixCol: String): Column = {
     val parsed: Seq[(String, Seq[Polygon], Long, Long)] = zones.map {
       case (name, wkt, start, end) =>
         (name, parseGeoWkt(wkt, s"revGeoZone($name)"), start, end.getOrElse(Long.MaxValue))
@@ -198,21 +207,22 @@ object Geo {
         }.orNull
       }
     })
-    points.withColumn(outCol, f(col(longCol), col(latCol), col(eventUnixCol)))
+    f(col(longCol), col(latCol), col(eventUnixCol))
   }
 
   /** Full 8-zone-family enrichment (geo_queries.py:35-108): apply
     * `revGeoZone` per zone family — neighborhoods, council districts,
-    * wards, fire/police/DPW zones.
+    * wards, fire/police/DPW zones — as one projection, a column per
+    * family in the map's order.
     */
   def revGeoTimeBound(
       points: DataFrame,
       zoneFamilies: Map[String, Seq[(String, String, Long, Option[Long])]],
       latCol: String = "lat", longCol: String = "long",
       eventUnixCol: String = "create_date_unix"): DataFrame =
-    zoneFamilies.foldLeft(points) { case (df, (family, zones)) =>
-      revGeoZone(df, zones, family, latCol, longCol, eventUnixCol)
-    }
+    points.withColumns(ListMap(zoneFamilies.toSeq.map { case (family, zones) =>
+      family -> revGeoZoneColumn(zones, latCol, longCol, eventUnixCol)
+    }: _*))
 
   /** Distributed grid-bucketed spatial join — the scale path for when
     * the polygon table does NOT fit a broadcast (national-scale parcel

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.collection.immutable.ListMap
 
 /** Address formatting + classification
   * (FormatAndClassifyAddress / id_underspecified_addresses,
@@ -63,10 +64,8 @@ object AddressOps {
           .otherwise(lineAddr))
         .otherwise(lit(null).cast(StringType))
 
-    df.withColumn(lat, latC)
-      .withColumn(long, longC)
-      .withColumn("address_type", addrType)
-      .withColumn(inputName, addr)
+    df.withColumns(ListMap(lat -> latC, long -> longC, "address_type" -> addrType,
+      inputName -> addr))
   }
 
   /** Geocode against an offline lookup table (replaces

@@ -2225,7 +2225,7 @@ object AnalyticsOps {
       // them only after the RDDs go weakly unreachable AND a GC runs,
       // which GC-quiet library callers may never trigger); rows is
       // the one remaining lazy persist
-      Seq(flagged, sims).filter(_ != null).foreach(releaseCheckpoint)
+      Seq(flagged, sims).filter(_ != null).foreach(graft.state.Checkpoints.release(_))
       rows.unpersist(blocking = false)
     }
   }
@@ -3071,27 +3071,6 @@ object AnalyticsOps {
     itemSimilarityImpl(df, userCol, itemCol, k, maxBasket, minCooc,
       assumeDistinct, dupCheckMod = 64)
 
-  /** The persisted block-holding RDD behind an eagerly
-    * `localCheckpoint(true)`'ed Dataset — the checkpointed plan is a
-    * single [[org.apache.spark.sql.execution.LogicalRDD]] leaf whose
-    * `rdd` carries the storage; `ds.rdd` would wrap it in a fresh
-    * (unpersisted) deserializer RDD, so unpersisting THAT is a no-op.
-    */
-  private def checkpointRdd(ds: org.apache.spark.sql.Dataset[_])
-      : Option[org.apache.spark.rdd.RDD[_]] =
-    ds.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-
-  /** Deterministically release an eager localCheckpoint's blocks
-    * (ADVICE r13: waiting on the weak-ref ContextCleaner lets
-    * MEMORY_AND_DISK blocks pile up in GC-quiet driver programs,
-    * including on exception paths — `RDD.unpersist` works on
-    * localCheckpoint storage).
-    */
-  private def releaseCheckpoint(ds: org.apache.spark.sql.Dataset[_]): Unit =
-    checkpointRdd(ds).foreach(_.unpersist(blocking = false))
-
   private[graft] def itemSimilarityImpl(
       df: DataFrame, userCol: String, itemCol: String,
       k: Int, maxBasket: Int, minCooc: Long,
@@ -3233,8 +3212,8 @@ object AnalyticsOps {
       // the result is eagerly checkpointed above, so by the time this
       // runs nothing downstream reads ui/kept — release their blocks
       // deterministically rather than waiting on ContextCleaner
-      releaseCheckpoint(kept)
-      if (!assumeDistinct) releaseCheckpoint(ui)
+      graft.state.Checkpoints.release(kept)
+      if (!assumeDistinct) graft.state.Checkpoints.release(ui)
     }
   }
   /** Order-statistic histogram scaffold shared by [[trimmedMean]],

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.collection.immutable.ListMap
 
 /** The reference's per-record transform vocabulary (Beam DoFn library,
   * `af2_dags/dependencies/dataflow_scripts/dataflow_utils/dataflow_utils.py`)
@@ -18,16 +19,33 @@ object ColumnOps {
     * pairs; an absent old column yields a NULL new column (the reference
     * warns + emits None).
     */
-  def renameFields(df: DataFrame, pairs: Seq[(String, String)]): DataFrame =
-    // membership is checked against the CURRENT step's columns, so a
+  def renameFields(df: DataFrame, pairs: Seq[(String, String)]): DataFrame = {
+    // the pairs apply in order to the CURRENT step's names, so a
     // chained rename (a->b, b->c) sees the intermediate name — a
     // snapshot of the original columns would emit a NULL column
     // instead (the reference DoFn mutates the record dict
-    // sequentially, so chains work there)
-    pairs.foldLeft(df) { case (d, (oldName, newName)) =>
-      if (d.columns.contains(oldName)) d.withColumnRenamed(oldName, newName)
-      else d.withColumn(newName, lit(null).cast(StringType))
+    // sequentially, so chains work there). The steps run on
+    // (name, source column or None for NULL) pairs and emit one
+    // projection; names match as `withColumnRenamed` and `withColumn`
+    // match them, so a NULL column whose name is taken replaces it.
+    val same: (String, String) => Boolean =
+      if (df.sparkSession.conf.get("spark.sql.caseSensitive", "false").toBoolean) _ == _
+      else _.equalsIgnoreCase(_)
+    val out = pairs.foldLeft(df.columns.toVector.map(c => c -> Option(c))) {
+      case (cols, (oldName, newName)) =>
+        if (cols.exists(_._1 == oldName))
+          cols.map { case (n, src) => (if (same(n, oldName)) newName else n) -> src }
+        else if (cols.exists(c => same(c._1, newName)))
+          cols.map { case (n, src) => if (same(n, newName)) newName -> None else n -> src }
+        else cols :+ (newName -> None)
     }
+    df.select(out.map {
+      case (n, Some(src)) => df.col(quoted(src)).as(n)
+      case (n, None)      => lit(null).cast(StringType).as(n)
+    }: _*)
+  }
+
+  private def quoted(name: String): String = "`" + name.replace("`", "``") + "`"
 
   /** camel_to_snake_case (dataflow_utils.py:844-848). Pure name mapping,
     * zero execution cost (driver-side projection).
@@ -73,8 +91,10 @@ object ColumnOps {
     * nullstr empty-string nulling.
     */
   def changeTypes(df: DataFrame, specs: Seq[(String, RefType)]): DataFrame =
-    specs.foldLeft(df) { case (d, (f, t)) =>
-      val c = col(f)
+    // one projection; a field listed twice converts the first
+    // conversion's result, as a chain of withColumn calls would
+    df.withColumns(specs.foldLeft(ListMap.empty[String, Column]) { case (done, (f, t)) =>
+      val c = done.getOrElse(f, col(f))
       val converted: Column = t match {
         case RStr     => c.cast(StringType)
         case RNullStr => when(c.cast(StringType) === "", lit(null)).otherwise(c.cast(StringType))
@@ -87,8 +107,8 @@ object ColumnOps {
           when(isnan(coalesce(v, lit(0.0))), lit(null)).otherwise(v)
         case RBool    => lower(trim(c.cast(StringType))).try_cast(BooleanType)
       }
-      d.withColumn(f, converted)
-    }
+      done.updated(f, converted)
+    })
 
   /** ConvertBooleans (dataflow_utils.py:226-263): token-vocabulary boolean
     * parse with per-field true/false token lists and a default for

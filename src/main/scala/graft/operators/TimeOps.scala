@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.collection.immutable.ListMap
 
 /** Time standardisation operators.
   *
@@ -20,7 +21,13 @@ object TimeOps {
     * unix_to_date_strings :884-894): unix seconds → `_utc` and `_est`
     * formatted strings. Pure expressions, codegen'd.
     */
-  def dateStringsFromUnix(df: DataFrame, field: String): DataFrame = {
+  def dateStringsFromUnix(df: DataFrame, field: String): DataFrame =
+    df.withColumns(ListMap(dateStringColumns(field): _*))
+
+  /** The `_utc` and `_est` columns of [[dateStringsFromUnix]], named,
+    * so that several fields can be added in one projection.
+    */
+  def dateStringColumns(field: String): Seq[(String, Column)] = {
     val ts = timestamp_seconds(col(field).cast(LongType))
     // date_format renders in the SESSION time zone; routing through
     // convert_timezone(current_timezone(), target, ts) pins the wall
@@ -29,8 +36,8 @@ object TimeOps {
     // set)
     def wallIn(zone: String) =
       convert_timezone(expr("current_timezone()"), lit(zone), ts)
-    df.withColumn(s"${field}_utc", date_format(wallIn("UTC"), UtcFmt))
-      .withColumn(s"${field}_est", date_format(wallIn(EstZone), UtcFmt))
+    Seq(s"${field}_utc" -> date_format(wallIn("UTC"), UtcFmt),
+      s"${field}_est" -> date_format(wallIn(EstZone), UtcFmt))
   }
 
   /** Formats accepted by the reference's fuzzy `dateutil.parser.parse`

@@ -1,12 +1,17 @@
 package graft.pipelines
 
+import graft.Trace
 import graft.functions.RefFunctions
 import graft.geo.Geo
 import graft.operators.{AddressOps, ColumnOps, DedupOps, TimeOps}
+import graft.state.Checkpoints
 import graft.tables.MasterTables
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.collection.immutable.ListMap
 
 /** The flagship 311-requests pipeline — the Spark rebuild of the
   * hourly `qalert_requests` DAG (SURVEY §3.1; af2_dags/qalert_airflow
@@ -59,7 +64,8 @@ object QalertPipeline {
     "priorityToDisplay", "aggregatorInfo", "resumeDate", "cityId")
 
   /** Stage 2 — the record-transform chain
-    * (qalert_requests_dataflow.py:126-146, DoFn-for-DoFn).
+    * (qalert_requests_dataflow.py:126-146, DoFn-for-DoFn). Each
+    * multi-column step is one projection.
     */
   def transform(raw: DataFrame): DataFrame = {
     // ReplacePII on comments (retain location), before any other use
@@ -69,45 +75,42 @@ object QalertPipeline {
     // GetDateStringsFromUnix
     val renamed = ColumnOps.filterFields(
       ColumnOps.renameFields(redacted, fieldNameSwaps), dropFields)
-    val dated = Seq("create_date_unix", "last_action_unix")
-      .foldLeft(renamed)((d, f) => TimeOps.dateStringsFromUnix(d, f))
+    val dated = renamed.withColumns(ListMap(
+      Seq("create_date_unix", "last_action_unix").flatMap(TimeOps.dateStringColumns): _*))
     // ChangeDataTypes: ids → strings (qalert_requests_dataflow.py:103-104)
     val typed = ColumnOps.changeTypes(dated, Seq(
       "id" -> ColumnOps.RStr, "parent_ticket_id" -> ColumnOps.RStr,
       "status_code" -> ColumnOps.RStr, "streetId" -> ColumnOps.RStr,
       "crossStreetId" -> ColumnOps.RStr, "request_type_id" -> ColumnOps.RStr))
     // GetStatus / GetClosedDate / DetectChildTicketStatus
-    val statused = typed
-      .withColumn("status_name",
-        when(col("status_code") === "0", "open")
-          .when(col("status_code") === "1", "closed")
-          .when(col("status_code") === "3", "in progress")
-          .when(col("status_code") === "4", "on hold"))
-      .withColumn("closed_date_unix",
-        when(col("status_name") === "closed", col("last_action_unix")))
-      .withColumn("closed_date_utc",
-        when(col("status_name") === "closed", col("last_action_unix_utc")))
-      .withColumn("closed_date_est",
-        when(col("status_name") === "closed", col("last_action_unix_est")))
+    val statusName =
+      when(col("status_code") === "0", "open")
+        .when(col("status_code") === "1", "closed")
+        .when(col("status_code") === "3", "in progress")
+        .when(col("status_code") === "4", "on hold")
+    val closed = statusName === "closed"
+    val statused = typed.withColumns(ListMap(
+        "status_name" -> statusName,
+        "closed_date_unix" -> when(closed, col("last_action_unix")),
+        "closed_date_utc" -> when(closed, col("last_action_unix_utc")),
+        "closed_date_est" -> when(closed, col("last_action_unix_est")),
+        // DetectChildTicketStatus (qalert_requests_dataflow.py:57-62) is
+        // `parent == "0" ? False : True` in Python, where a missing/None
+        // parent is != "0" — so a NULL parent_ticket_id is a CHILD. A
+        // bare =!= would leave it NULL, and the row would satisfy
+        // NEITHER integrate() branch and silently vanish from the
+        // linked-requests master
+        "child_ticket" -> coalesce(col("parent_ticket_id") =!= "0", lit(true))))
       .drop("closeDate")
-      // DetectChildTicketStatus (qalert_requests_dataflow.py:57-62) is
-      // `parent == "0" ? False : True` in Python, where a missing/None
-      // parent is != "0" — so a NULL parent_ticket_id is a CHILD. A
-      // bare =!= would leave it NULL, and the row would satisfy
-      // NEITHER integrate() branch and silently vanish from the
-      // linked-requests master
-      .withColumn("child_ticket",
-        coalesce(col("parent_ticket_id") =!= "0", lit(true)))
     // FormatAndClassifyAddress (+ anonymization twins)
     val classified = AddressOps.formatAndClassifyAddress(statused,
       streetNum = "pii_street_num", streetName = "street",
       crossStreet = "cross_street", city = "city",
       lat = "pii_lat", long = "pii_long", containsPii = true)
-    classified
-      .withColumn("anon_lat", RefFunctions.anonymizeCoord(col("pii_lat"), 200))
-      .withColumn("anon_long", RefFunctions.anonymizeCoord(col("pii_long"), 200))
-      .withColumn("anon_input_address",
-        RefFunctions.anonymizeBlockUdf(100)(col("pii_input_address")))
+    classified.withColumns(ListMap(
+      "anon_lat" -> RefFunctions.anonymizeCoord(col("pii_lat"), 200),
+      "anon_long" -> RefFunctions.anonymizeCoord(col("pii_long"), 200),
+      "anon_input_address" -> RefFunctions.anonymizeBlockUdf(100)(col("pii_input_address"))))
   }
 
   /** Stage 4 — format/dedupe (format_incoming_data_types,
@@ -115,9 +118,9 @@ object QalertPipeline {
     * time/coord columns.
     */
   def formatDedupe(df: DataFrame): DataFrame =
-    DedupOps.distinctRows(df)
-      .withColumn("pii_lat", col("pii_lat").cast(DoubleType))
-      .withColumn("pii_long", col("pii_long").cast(DoubleType))
+    DedupOps.distinctRows(df).withColumns(ListMap(
+      "pii_lat" -> col("pii_lat").cast(DoubleType),
+      "pii_long" -> col("pii_long").cast(DoubleType)))
 
   /** Stages 5-6 — city-limits reclassification + 8-family time-bounded
     * reverse geocode (geo_queries.py:123-154, :35-108).
@@ -142,58 +145,97 @@ object QalertPipeline {
   final case class Masters(allLinked: DataFrame, currentStatus: DataFrame)
 
   /** Stages 7-11 — integrate a batch into the master tables
-    * (integrate_new_requests.py + qalert_airflow.py:148-217):
-    *  7. insert never-seen parents into `all_linked_requests`
-    *  8. remove false parents (tickets that re-arrive as children)
-    *  9. aggregate new children onto their parents (ARRAY_AGG append)
-    * 10. replace last-update fields of previously-seen parents
+    * (integrate_new_requests.py + qalert_airflow.py:148-217), with the
+    * effect of running, in this order (numbered as the reference's
+    * stages):
+    *  8. remove false parents: master parents whose id re-arrives as a
+    *     child are deleted
+    *  7. insert the batch parents whose id is absent after that delete,
+    *     with an empty child array
+    *  9. append the batch's children to their parents, new and old (a
+    *     re-arriving child replaces its struct; a child whose parent is
+    *     in neither table is dropped)
+    * 10. set the status/close/last-action fields of every parent the
+    *     batch carries from its batch row, NULL included
     * 11. delete+insert snapshot upsert of `all_tickets_current_status`
+    *
+    * Steps 7-10 are one keyed merge: the batch becomes one delta row
+    * per id it touches (is a child deleted under it, its parent rows,
+    * the children to append under it), and one full outer join against
+    * `all_linked_requests` applies it.
     */
-  def integrate(masters: Masters, enriched: DataFrame): Masters = {
-    val parents  = enriched.filter(!col("child_ticket"))
-    val children = enriched.filter(col("child_ticket"))
+  def integrate(masters: Masters, batch: DataFrame): Masters = {
+    val master = masters.allLinked
+    val isChild = col("child_ticket")
+    val body = master.columns.filterNot(Set("child_tickets", "num_requests"))
+    // every batch row under its own id; each child once more under its
+    // parent's id, struct shape (child_id, child_comments, child_notes)
+    // per integrate_new_requests.py:213-216
+    val keyed = batch
+      .select(col("id").as("__k"), isChild.as("__del"),
+        when(!isChild, struct(body.map(col).toIndexedSeq: _*)).as("__p"))
+      .unionByName(batch.filter(isChild).select(col("parent_ticket_id").as("__k"),
+        struct(col("id").as("child_id"), col("anon_comments").as("child_comments"),
+          col("pii_private_notes").as("child_notes")).as("__kid")),
+        allowMissingColumns = true)
+    val grouped = keyed.groupBy("__k").agg(bool_or(col("__del")).as("__del"),
+      collect_list("__p").as("__ins"), collect_list("__kid").as("__kids"))
+    // a NULL key matches no master row: it deletes nothing, takes no
+    // children (they are orphans) and updates nothing; the parents
+    // under it are still inserted, as the reference's anti-join keeps
+    // them. The update row is any one of the key's parents, as the
+    // reference's dropDuplicates picks one.
+    val keyedOn = col("__k").isNotNull
+    val delta = grouped.select(col("__k"),
+      coalesce(col("__del"), lit(false)).as("__del"),
+      when(size(col("__ins")) > 0, col("__ins")).as("__ins"),
+      when(keyedOn, try_element_at(col("__ins"), lit(1))).as("__upd"),
+      when(keyedOn && size(col("__kids")) > 0, col("__kids")).as("__kids"))
+    // per joined row: a master row of a deleted id goes, any other
+    // master row stays, and a key no master row holds becomes its
+    // batch parents (children alone under it are orphans). A deleted
+    // id's batch parents are inserted after the delete: they are taken
+    // from the delta beside the join, so they come out once however
+    // many master rows the id held. Both branches read one delta
+    // aggregate (the filter on its output cannot be pushed below it).
+    val joined = master.withColumn("__m", lit(true))
+      .join(delta, col("id") === col("__k"), "full_outer")
+      .filter(!coalesce(col("__del"), lit(false)))
+      .withColumn("__p", explode_outer(when(col("__m").isNull, col("__ins"))))
+      .filter(col("__m").isNotNull || col("__p").isNotNull)
+    val merged = joined.unionByName(
+      delta.filter(col("__del")).withColumn("__p", explode(col("__ins"))),
+      allowMissingColumns = true)
 
-    // 8: previously-parent tickets that now arrive as children — one
-    // anti-join against the children's ids (a semi-join intermediate
-    // would re-scan the master's key set for no semantic difference)
-    val cleaned = MasterTables.deleteMatching(masters.allLinked,
-      children.select(col("id")), Seq("id"))
-
-    // 7: new parents, initialised with an empty child array
-    val newParents = parents
-      .join(cleaned.select(col("id")), Seq("id"), "left_anti")
-      .withColumn("child_tickets",
-        array().cast(ArrayType(childStruct)))
-      .withColumn("num_requests", lit(1L))
-    val withNew = cleaned.unionByName(newParents.select(cleaned.columns.map(col).toIndexedSeq: _*))
-
-    // 9: append this batch's children to their parents — struct shape
-    // (child_id, child_comments, child_notes) per
-    // integrate_new_requests.py:213-216
-    val childShaped = children.select(
-      col("parent_ticket_id"),
-      col("id").as("child_id"),
-      col("anon_comments").as("child_comments"),
-      col("pii_private_notes").as("child_notes"))
-    val withChildren = MasterTables.integrateChildren(
-      withNew, childShaped,
-      parentKey = "id", childParentKey = "parent_ticket_id",
-      childCols = Seq("child_id", "child_comments", "child_notes"))
-
-    // 10: refresh status/close/last-action fields from re-arriving parents
-    val updated = MasterTables.syncUpdate(withChildren, parents,
-      keys = Seq("id"),
-      updateCols = Seq("status_code", "status_name",
-        "last_action_unix", "last_action_unix_utc", "last_action_unix_est",
-        "closed_date_unix", "closed_date_utc", "closed_date_est"))
+    val fromMaster = col("__m").isNotNull
+    val kids = MasterTables.appendChildren(
+      when(fromMaster, col("child_tickets")).otherwise(array().cast(ArrayType(childStruct))),
+      col("__kids"), "child_id")
+    val updated = updateCols.toSet
+    val linked = merged.select(master.columns.toIndexedSeq.map {
+      case "child_tickets" => kids.as("child_tickets")
+      case "num_requests"  => MasterTables.numRequests(kids).as("num_requests")
+      case c =>
+        val v = when(fromMaster, col(c)).otherwise(col("__p")(c))
+        if (updated(c)) when(col("__upd").isNotNull, col("__upd")(c)).otherwise(v).as(c)
+        // the outer join makes every master column nullable; a column
+        // both sides declare non-null stays non-null, as in a union
+        else if (master.schema(c).nullable || batch.schema(c).nullable) v.as(c)
+        else ColumnBridge.toColumn(AssertNotNull(ColumnBridge.toExpression(v))).as(c)
+    }: _*)
 
     // 11: snapshot upsert of the current-status table (all tickets,
     // parent or child)
     val current = MasterTables.deleteOldInsertNew(
-      masters.currentStatus, enriched, keys = Seq("id"))
+      masters.currentStatus, batch, keys = Seq("id"))
 
-    Masters(updated, current)
+    Masters(linked, current)
   }
+
+  /** Fields step 10 refreshes from a re-arriving parent. */
+  private val updateCols = Seq("status_code", "status_name",
+    "last_action_unix", "last_action_unix_utc", "last_action_unix_est",
+    "closed_date_unix", "closed_date_utc", "closed_date_est")
 
   private val childStruct = StructType(Seq(
     StructField("child_id", StringType), StructField("child_comments", StringType),
@@ -234,22 +276,25 @@ object QalertPipeline {
       zoneFamilies: Map[String, Seq[(String, String, Long, Option[Long])]],
       privateTypes: Seq[String] = Seq("Private Violation")): (Masters, DataFrame, DataFrame) = {
     val (raw, quarantine) = graft.sources.JsonSource.readRepaired(spark, rawPath, rawSchema)
-    // enriched feeds four-plus lineage branches inside integrate()
-    // (parents, children twice, the current-status upsert): persist so
-    // the JSON repair-parse, PII redaction, and revgeo run once per
-    // batch, not once per branch. The returned masters are eagerly
-    // localCheckpointed — truncating lineage so chaining hourly
-    // runBatch calls keeps O(1) plans instead of growing the DAG per
-    // run (iterative-Spark rule) — after which the batch cache is
-    // released.
-    val enriched = enrich(formatDedupe(transform(raw)), cityWkt, enclaveWkt, zoneFamilies)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sc = spark.sparkContext
+    // One eager cut of the drop: the JSON repair-parse, PII redaction
+    // and revgeo run once, and integrate() plans against a one-node
+    // leaf. (A persist would leave the whole subtree in each of its
+    // uses in both master plans, for the analyzer to deduplicate and
+    // AQE to re-plan stage by stage.) Both masters are cut eagerly as
+    // well, truncating lineage so chaining hourly runBatch calls keeps
+    // O(1) plans instead of growing the DAG per run (iterative-Spark
+    // rule); they exist before the batch's blocks are released, in
+    // either checkpoint mode.
+    val batch = Trace.span(sc, "qalert.batch")(Checkpoints.stable(
+      enrich(formatDedupe(transform(raw)), cityWkt, enclaveWkt, zoneFamilies)))
     try {
-      val next0 = integrate(masters, enriched)
-      val next = Masters(next0.allLinked.transform(graft.state.Checkpoints.stableLazy),
-        next0.currentStatus.transform(graft.state.Checkpoints.stableLazy))
+      val merged = integrate(masters, batch)
+      val next = Masters(
+        Trace.span(sc, "qalert.all_linked")(Checkpoints.stable(merged.allLinked)),
+        Trace.span(sc, "qalert.current_status")(Checkpoints.stable(merged.currentStatus)))
       (next, dropPiiForExport(next.allLinked, privateTypes), quarantine)
-    } finally enriched.unpersist(blocking = false)
+    } finally Checkpoints.release(batch)
   }
 
   /** Submitter-field column order shared by the 311_utilizers ledger

@@ -86,6 +86,20 @@ object Checkpoints {
     if (!isReliable(ds.sparkSession)) ds.localCheckpoint()
     else { requireDir(ds); ds.checkpoint(eager = false) }
 
+  /** Releases the blocks of a cut made by [[stable]] or [[stableLazy]]
+    * now rather than when the ContextCleaner gets to it (ADVICE r13:
+    * waiting on the weak-ref cleaner lets MEMORY_AND_DISK blocks pile
+    * up in GC-quiet long-running programs, including on exception
+    * paths). A no-op on a frame that is not a cut. The blocks belong
+    * to the plan's single [[org.apache.spark.sql.execution.LogicalRDD]]
+    * leaf; `ds.rdd` would wrap it in a fresh, unpersisted deserializer
+    * RDD, so unpersisting THAT is a no-op.
+    */
+  def release[T](ds: Dataset[T]): Unit =
+    ds.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }.foreach(_.unpersist(blocking = false))
+
   /** Fail fast: reliable mode without a checkpoint dir dies with an
     * actionable message, not deep inside the first job.
     */

@@ -2,6 +2,7 @@ package graft.tables
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** Master/incremental table semantics.
   *
@@ -36,11 +37,10 @@ object MasterTables {
       .select((keys.map(col) ++ updateCols.map(c => col(c).as(s"__u_$c"))): _*)
       .dropDuplicates(keys)
       .withColumn("__matched", lit(true))
-    val joined = master.join(u, keys, "left")
-    val merged = updateCols.foldLeft(joined) { (d, c) =>
-      d.withColumn(c, when(col("__matched"), col(s"__u_$c")).otherwise(col(c)))
-    }
-    merged.drop(updateCols.map(c => s"__u_$c") :+ "__matched": _*)
+    master.join(u, keys, "left")
+      .withColumns(ListMap(updateCols.map(c =>
+        c -> when(col("__matched"), col(s"__u_$c")).otherwise(col(c))): _*))
+      .drop(updateCols.map(c => s"__u_$c") :+ "__matched": _*)
   }
 
   /** build_sync_staging_table_query (general_queries.py:101-129):
@@ -164,32 +164,40 @@ object MasterTables {
       master: DataFrame, children: DataFrame,
       parentKey: String, childParentKey: String,
       childCols: Seq[String]): DataFrame = {
-    // childCols.head is the child's id: a re-arriving child replaces
-    // its previous struct instead of appending a duplicate, so
-    // re-running the same batch is a no-op (the reference's re-run
-    // semantics, SURVEY §7 hard part 2)
-    val childId = childCols.head
     val agg = children
       .groupBy(col(childParentKey).as(parentKey))
       .agg(collect_list(struct(childCols.map(col): _*)).as("__new_children"))
+    val kids = appendChildren(col("child_tickets"), col("__new_children"), childCols.head)
     master.join(agg, Seq(parentKey), "left")
-      .withColumn("child_tickets",
-        when(col("__new_children").isNotNull,
-          concat(
-            // null-safe membership: array_contains is NULL (not false)
-            // for a NULL child id, and a bare `!NULL` predicate would
-            // silently DROP that existing struct from the array — keep
-            // any element not provably replaced by this batch
-            filter(coalesce(col("child_tickets"), array()),
-              c => !coalesce(array_contains(
-                transform(col("__new_children"), n => n(childId)), c(childId)),
-                lit(false))),
-            col("__new_children")))
-          .otherwise(col("child_tickets")))
-      .withColumn("num_requests",
-        (size(coalesce(col("child_tickets"), array())) + 1).cast("long"))
+      .withColumns(ListMap("child_tickets" -> kids, "num_requests" -> numRequests(kids)))
       .drop("__new_children")
   }
+
+  /** The `child_tickets` value of [[integrateChildren]]: `existing`
+    * with `incoming` appended, or `existing` unchanged where
+    * `incoming` is NULL. `childId` is the structs' id field: a
+    * re-arriving child replaces its previous struct instead of
+    * appending a duplicate, so re-running the same batch is a no-op
+    * (the reference's re-run semantics, SURVEY §7 hard part 2).
+    */
+  def appendChildren(existing: Column, incoming: Column, childId: String): Column =
+    when(incoming.isNotNull,
+      concat(
+        // null-safe membership: array_contains is NULL (not false)
+        // for a NULL child id, and a bare `!NULL` predicate would
+        // silently DROP that existing struct from the array — keep
+        // any element not provably replaced by this batch
+        filter(coalesce(existing, array()),
+          c => !coalesce(array_contains(transform(incoming, n => n(childId)), c(childId)),
+            lit(false))),
+        incoming))
+      .otherwise(existing)
+
+  /** `num_requests` of a parent whose children are `childTickets`:
+    * the parent itself plus each child (ARRAY_LENGTH + 1).
+    */
+  def numRequests(childTickets: Column): Column =
+    (size(coalesce(childTickets, array())) + 1).cast("long")
 
   /** perform_data_quality_check (general_queries.py:4-28 +
     * airflow_utils.py:354-391): distinct-values snapshot of watched

@@ -1,14 +1,14 @@
 package graft.tools
 
 import graft.pipelines.QalertPipeline
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Row, SparkSession}
 import java.nio.file.Files
 
 /** Consumer-style driver: runs the flagship 311 pipeline end-to-end on
-  * a generated raw ndjson drop (with a deliberately dirty line) and
-  * prints the integrated master + scrubbed export. The executable
-  * "sample code through the public API".
+  * a generated raw ndjson drop (with a deliberately dirty line) through
+  * `QalertPipeline.runBatch`, the path the hourly DAG runs, and prints
+  * the quarantine count, the integrated master and the scrubbed export.
+  * The executable "sample code through the public API".
   */
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
@@ -39,12 +39,15 @@ object PipelineDemo {
       Seq(line(4, 0, 0, "dirty pair A") + line(5, 0, 3, "dirty pair B"))
     ).mkString("\n").getBytes)
 
-    val (raw, _) = graft.sources.JsonSource.readRepaired(spark, f.getPath, QalertPipeline.rawSchema)
-    val shaped = QalertPipeline.enrich(
-      QalertPipeline.formatDedupe(QalertPipeline.transform(raw)), city, enclave, zones)
-    val masters = QalertPipeline.integrate(QalertPipeline.emptyMasters(spark, shaped), shaped)
-    val export  = QalertPipeline.dropPiiForExport(masters.allLinked, Seq("Private Violation"))
+    // empty masters take their schema from an empty drop run through
+    // the same stages
+    val none = spark.createDataFrame(java.util.Collections.emptyList[Row](), QalertPipeline.rawSchema)
+    val empty = QalertPipeline.emptyMasters(spark, QalertPipeline.enrich(
+      QalertPipeline.formatDedupe(QalertPipeline.transform(none)), city, enclave, zones))
+    val (masters, export, quarantine) =
+      QalertPipeline.runBatch(spark, f.getPath, empty, city, enclave, zones)
 
+    println(s"quarantined lines: ${quarantine.count()}")
     println("=== all_linked_requests (masters) ===")
     masters.allLinked.select("id", "status_name", "address_type", "neighborhood",
       "num_requests", "anon_comments").orderBy("id").show(false)
