@@ -24,7 +24,7 @@ import pyarrow.parquet as pq
 # round 14: the uncast ln probe (the one entry) settled its question
 # in the r13 driver artifact (uncast red + _cast green => the driver
 # hash is type-sensitive; no libm skew) and retired to
-# tools/LnLatticeProbe.scala.
+# tools/LnLatticeProbe.scala (see git rev e766bb7).
 KNOWN_TYPE_SKEW = set()
 
 def norm_type(t):

@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs the headline query set on
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line
-  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
+  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"failed":[...],"sf":...}`.
+  * A query with any thrown rep is listed in `failed` and left out of
+  * every per-query map and total.
   *
   * Queries are evaluated through the `noop` sink so every output column
   * is materialised (a bare `count()` would let Catalyst prune the
@@ -138,6 +140,13 @@ object Bench {
     (mins, medians(sweeps.toSeq), sweeps.size)
   }
 
+  /** A query's reported wall from its timed reps (None = that rep
+    * threw): the min, or None when any rep failed. A thrown rep stops
+    * early, so its elapsed time in the min would read as a fast run.
+    */
+  private[graft] def repsMin(reps: Seq[Option[Double]]): Option[Double] =
+    if (reps.isEmpty || reps.exists(_.isEmpty)) None else Some(reps.flatten.min)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default matches the documented environment (local[32], 32 shuffle
@@ -180,14 +189,16 @@ object Bench {
     // guards against multi-second CPU-steal windows on virtualized
     // hosts (observed: a 0.5 s query reading 36 s across two
     // consecutive runs) that min-of-two cannot ride out
-    def runOnce(name: String): Double = {
+    def runOnce(name: String): Option[Double] = {
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      catch { case e: Throwable =>
+      try {
+        SparkEntry.queries(name)(spark, sfDir)
+          .write.mode("overwrite").format("noop").save()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        None
       }
-      (System.nanoTime() - t0) / 1e9
     }
     // Per-query isolation (the r11 2-3x same-code swing fix): every
     // query's localCheckpoint/persist blocks release only via the
@@ -208,7 +219,7 @@ object Bench {
     val stageLines = scala.collection.mutable.ArrayBuffer.empty[String]
     val coll = new StageCollector
     spark.sparkContext.addSparkListener(coll)
-    val results = names.map { name =>
+    val settled = names.map { name =>
       // Deterministic block release between queries (ADVICE r13): the
       // forced GC alone frees localCheckpoint/persist blocks only via
       // the ASYNC weak-ref ContextCleaner, so blocks from queries that
@@ -231,19 +242,26 @@ object Bench {
           .drain(spark.sparkContext)
         (rep, w, coll.snapshot())
       }
-      val t = reps.map(_._2).min
-      if (t > profileThresholdSec) {
+      val t = repsMin(reps.map(_._2))
+      if (t.exists(_ > profileThresholdSec)) {
+        // t is defined only when every rep has a wall
         val repJson = reps.map { case (rep, w, st) =>
           val top = st.sortBy(-_.runMs).take(8).map(s =>
             s"""{"stage":${s.id},"name":"${s.name.replace("\"", "'")}","tasks":${s.tasks},"wall_ms":${s.wallMs},"run_ms":${s.runMs},"cpu_ms":${s.cpuMs},"gc_ms":${s.gcMs},"in_mb":${f"${s.inMB}%.1f"},"sh_read_mb":${f"${s.shReadMB}%.1f"},"sh_write_mb":${f"${s.shWriteMB}%.1f"}}""")
             .mkString("[", ",", "]")
-          s"""{"rep":$rep,"wall_sec":$w,"n_stages":${st.size},"run_ms":${st.map(_.runMs).sum},"cpu_ms":${st.map(_.cpuMs).sum},"gc_ms":${st.map(_.gcMs).sum},"sh_read_mb":${f"${st.map(_.shReadMB).sum}%.1f"},"top_stages":$top}"""
+          s"""{"rep":$rep,"wall_sec":${w.get},"n_stages":${st.size},"run_ms":${st.map(_.runMs).sum},"cpu_ms":${st.map(_.cpuMs).sum},"gc_ms":${st.map(_.gcMs).sum},"sh_read_mb":${f"${st.map(_.shReadMB).sum}%.1f"},"top_stages":$top}"""
         }.mkString("[", ",", "]")
         stageLines += s""""$name":$repJson"""
       }
       (name, t, (gcMillis() - g0) / 1000.0)
     }
     spark.sparkContext.removeSparkListener(coll)
+    // a query with a failed rep is listed, never timed: it stays out
+    // of every map and total, and the changed key set keeps this sweep
+    // out of later merges
+    val failed = settled.collect { case (k, None, _) => "\"" + k + "\"" }
+      .mkString("[", ",", "]")
+    val results = settled.collect { case (k, Some(t), g) => (k, t, g) }
 
     // ----- cross-sweep minimum merge (VERDICT r14 task #1) -----
     // The round-14 adjudication showed the binding noise source is the
@@ -295,12 +313,12 @@ object Bench {
     // the kept tail); the full queries_min map rides bench_full.jsonl,
     // which is where per-query numbers are read from anyway.
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_runs":3,"gc_sec":$gcTotal,"queries":$qs,"sf":"$sfDir","value_median":$totalMed,"value_min":$totalMin,"sweeps_merged":$sweepsMerged}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_runs":3,"gc_sec":$gcTotal,"queries":$qs,"failed":$failed,"sf":"$sfDir","value_median":$totalMed,"value_min":$totalMin,"sweeps_merged":$sweepsMerged}"""
     val stagesJson =
       if (stageLines.isEmpty) ""
       else s""","stage_profiles":${stageLines.mkString("{", ",", "}")}"""
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_runs":3,"gc_sec":$gcTotal,"value_min":$totalMin,"value_median":$totalMed,"sweeps_merged":$sweepsMerged,"queries_min":$qsMin,"queries_median":$qsMed,"queries":$qs,"gc_queries":$gcs$stagesJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_runs":3,"gc_sec":$gcTotal,"value_min":$totalMin,"value_median":$totalMed,"sweeps_merged":$sweepsMerged,"queries_min":$qsMin,"queries_median":$qsMed,"queries":$qs,"gc_queries":$gcs,"failed":$failed$stagesJson,"sf":"$sfDir"}"""
     println(line)
     // defend against the driver's 2000-char stdout-tail truncation
     // (BENCH_r6/r7 lost per-query history for a third of the set): the

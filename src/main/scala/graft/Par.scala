@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Build independent query branches in concurrent driver threads
   * (optimization guide §2.6 "overlap independent jobs": actions are
   * only sequential because driver code calls them sequentially).
@@ -19,13 +17,10 @@ import org.apache.spark.sql.SparkSession
   *
   * FIFO scheduling back-fills exactly as the guide describes; the
   * thread count is the branch count (2–5 at the call sites), far below
-  * any pool concern. `spark.graft.parBranches=false` restores strictly
-  * serial construction (the tools.AbProbe escape hatch).
+  * any pool concern.
   */
 object Par {
-  def build[A](spark: SparkSession)(thunks: (() => A)*): Seq[A] = {
-    if (!spark.conf.get("spark.graft.parBranches", "true").toBoolean)
-      return thunks.map(_())
+  def build[A](thunks: (() => A)*): Seq[A] = {
     if (thunks.sizeIs <= 1) return thunks.map(_())
     // small-branch-count contract (ADVICE r16): call sites pass 2-5
     // independent branches; cap the pool so a future large thunk list

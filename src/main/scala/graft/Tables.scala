@@ -40,12 +40,9 @@ object Tables {
     * "accidental repartition" anti-pattern. Catalyst pushes filters
     * and prunes columns THROUGH a Repartition node, so
     * PushedFilters/ReadSchema at the parquet scan are unchanged.
-    *
-    * `spark.graft.scanFanOut=false` disables the rewrite entirely.
     */
   def fanOut(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.conf.get("spark.graft.scanFanOut", "true").toBoolean) return df
     // plan-shape gate (ADVICE r16): `df.rdd` is only a cheap planning
     // call for SHUFFLE-FREE frames — under AQE, Dataset.rdd on a frame
     // containing an exchange materializes all upstream query stages
@@ -96,10 +93,7 @@ object Tables {
     */
   def pinnedRepartition(df: DataFrame,
                         cols: org.apache.spark.sql.Column*): DataFrame =
-    if (!df.sparkSession.conf
-        .get("spark.graft.pinnedWidth", "true").toBoolean)
-      df.repartition(cols: _*) // A/B escape hatch (tools.AbProbe)
-    else df.repartition(
+    df.repartition(
       df.sparkSession.sessionState.conf.numShufflePartitions, cols: _*)
 
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")

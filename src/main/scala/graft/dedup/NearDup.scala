@@ -871,7 +871,7 @@ object NearDup {
     val r = bandRows.select(col("__band"), col(idCol).as("id_b"))
     // Where to deduplicate candidates is a CORPUS-SHAPE knob (both
     // orders produce identical pair sets — A/B'd in
-    // tools.CosineLshProbe):
+    // tools.CosineLshProbe, see git rev e766bb7):
     //  - dedupBeforeVerify = true (default, scale-safe): distinct the
     //    candidate multiset before fetching vectors. On a dup-DENSE
     //    corpus a duplicate cluster collides in nearly every band, so

@@ -2197,7 +2197,7 @@ object AnalyticsOps {
       // ONE pass over the candidate chain for BOTH tallies (hit users
       // and candidate count) — the two-consumer form recomputed the
       // whole train⋈sims→distinct→anti-join chain twice per call
-      // (CfProbe2: the q246 overhang). test is distinct, so the left
+      // (CfProbe2, see git rev e766bb7: the q246 overhang). test is distinct, so the left
       // join cannot fan out and count(*) stays the candidate count.
       val ceAgg = candOfEval
         .join(test.select(col("__u"), col("__i").as("__c"),
@@ -3077,7 +3077,7 @@ object AnalyticsOps {
       assumeDistinct: Boolean, dupCheckMod: Int): DataFrame = {
     // persist the incidence: both the basket-size aggregate and the
     // cap semi-join consume it — unpersisted, the upstream scan +
-    // distinct (the most expensive input stage, CfProbe) runs twice.
+    // distinct (the most expensive input stage, CfProbe, see git rev e766bb7) runs twice.
     // assumeDistinct skips the dedup shuffle when the CALLER already
     // holds a distinct (user, item) incidence (itemRecHoldout's train
     // half) — duplicate rows would inflate cooc counts, so it is the
@@ -3145,7 +3145,7 @@ object AnalyticsOps {
       // Spark 4 default) casting a STRING item id like "checkout"
       // would THROW inside the probe action — non-integral ids must
       // skip the range probe entirely, not fail it loudly (round-15
-      // CheckpointKnobProbe found this with event_type ids)
+      // CheckpointKnobProbe (see git rev e766bb7) found this with event_type ids)
       val mm =
         if (integral)
           kept.agg(min(col("__i").cast(LongType)).as("__mn"),

@@ -54,14 +54,6 @@ object CorpusPipeline {
     *
     * `nodes`: one column `node`; `pairs`: columns `id_a`, `id_b`.
     * Returns (node, label) with label = min id of the component.
-    */
-  def minLabelComponents(nodes: DataFrame, pairs: DataFrame, maxIter: Int = 50,
-                         smallEdgeLimit: Long = 100000L): DataFrame =
-    minLabelComponentsWithRounds(nodes, pairs, maxIter, smallEdgeLimit)._1
-
-  /** [[minLabelComponents]] plus the number of distributed fixpoint
-    * rounds executed (0 when the size gate routed to the driver-side
-    * union-find) — the observable the CC scaling probe tables.
     *
     * CONCURRENCY CONTRACT: the AQE cached-plan toggle below mutates a
     * SESSION-global conf with save/restore, so this operator assumes no
@@ -72,19 +64,18 @@ object CorpusPipeline {
     * parallel actions should run it on `spark.newSession()` (shared
     * SparkContext and cache, isolated conf).
     */
-  def minLabelComponentsWithRounds(
-      nodes: DataFrame, pairs: DataFrame, maxIter: Int = 50,
-      smallEdgeLimit: Long = 100000L): (DataFrame, Int) = {
+  def minLabelComponents(nodes: DataFrame, pairs: DataFrame, maxIter: Int = 50,
+                         smallEdgeLimit: Long = 100000L): DataFrame = {
     // The fixpoint hand-partitions its cache on purpose, so AQE must
     // not re-plan cached output INSIDE this operator: with
     // canChangeCachedPlanOutputPartitioning=true (the engine-wide
     // session default, right for one-shot KB-sized caches) AQE
     // coalesces the cached edge list by BYTES, and a row-heavy but
     // byte-light edge set serializes every round's join — measured 2×
-    // on the 262k-edge long-chain CcProbe graph (19 rounds). Scoped
-    // save/restore: the loop's checkpoints and convergence counts all
-    // execute inside this method, so the toggle covers every action
-    // that touches the edges cache.
+    // on the 262k-edge long-chain CcProbe graph (19 rounds; see git
+    // rev e766bb7). Scoped save/restore: the loop's checkpoints and
+    // convergence counts all execute inside this method, so the toggle
+    // covers every action that touches the edges cache.
     val sess = nodes.sparkSession
     val AqeCachedKey = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
     val prevAqeCached = sess.conf.getOption(AqeCachedKey)
@@ -98,7 +89,7 @@ object CorpusPipeline {
 
   private def minLabelComponentsBody(
       nodes: DataFrame, pairs: DataFrame, maxIter: Int,
-      smallEdgeLimit: Long): (DataFrame, Int) = {
+      smallEdgeLimit: Long): DataFrame = {
     // undirected edges both ways, hash-partitioned on the propagation
     // join key: the cached InMemoryRelation then reports
     // hashpartitioning(id_b) and the per-round join reuses it with NO
@@ -139,9 +130,9 @@ object CorpusPipeline {
       mappingDf match {
         case Some(mapping) =>
           edges.unpersist()
-          return (nodes.join(broadcast(mapping), Seq("node"), "left")
+          return nodes.join(broadcast(mapping), Seq("node"), "left")
             .select(col("node"),
-              coalesce(col("__cc_label"), col("node")).as("label")), 0)
+              coalesce(col("__cc_label"), col("node")).as("label"))
         case None => () // unsupported id type: distributed path below
       }
     }
@@ -174,7 +165,7 @@ object CorpusPipeline {
       org.apache.log4j.Logger.getLogger(getClass)
         .warn(s"minLabelComponents hit maxIter=$maxIter before fixpoint; labels may under-merge")
     edges.unpersist()
-    (labels, i)
+    labels
   }
 
   /** Widen any integral id to Long for the driver union-find (the

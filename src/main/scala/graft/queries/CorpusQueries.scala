@@ -227,7 +227,7 @@ object CorpusQueries {
     // empirical for the CURRENT embeddings distribution; if the driver
     // ever regenerates embeddings.parquet (as it does events.parquet),
     // a recall miss here is a parameter-tuning signal (re-run
-    // tools.CosineLshProbe), not a code bug.
+    // tools.CosineLshProbe, see git rev e766bb7), not a code bug.
     "q88_semantic_dedup" -> ((s, d) => {
       CorpusPipeline.semanticDedupLabels(Tables.embeddings(s, d),
         "vec_id", "embedding", threshold = 0.45)

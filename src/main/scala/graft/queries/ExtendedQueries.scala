@@ -1844,7 +1844,7 @@ object ExtendedQueries {
       // the two models' train-time actions (persist counts, eager
       // checkpoints) are independent — build them concurrently
       // (guide §2.6 via graft.Par); plans and results unchanged
-      val Seq(kn, sbo) = graft.Par.build(s)(
+      val Seq(kn, sbo) = graft.Par.build(
         () => graft.text.NgramLm.scoreKneserNey(docs, "doc_id", "text",
             graft.text.NgramLm.trainKneserNey(docs, "text"))
           .select(col("doc_id"),
@@ -1978,7 +1978,7 @@ object ExtendedQueries {
       // realized-catch deficit vs the independent-perm S-curve and a
       // candidate load far above the ideal sketch's (sf0.1: 253/256
       // caught vs 255.94e9 predicted; 19.8k candidates vs 256 true)
-      val Seq(truth, mins) = graft.Par.build(s)(
+      val Seq(truth, mins) = graft.Par.build(
         () => truthThunk(),
         () => graft.dedup.NearDup
           .kmMinhashMins(docs, "doc_id", "text", shingleLen = 3,
@@ -2012,7 +2012,7 @@ object ExtendedQueries {
       }
       // the two band configs are independent branches, each with one
       // eager cand checkpoint — overlap them too (§2.6)
-      graft.Par.build(s)(
+      graft.Par.build(
         () => config(8, 3, 16, 4),
         () => config(16, 4, 8, 3)).reduce(_.unionAll(_))
     }),
@@ -2226,7 +2226,7 @@ object ExtendedQueries {
           .cast(DoubleType)
       // truth ∥ sketch, then the two configs concurrently — the q324
       // overlap (round-17 opt, guide §2.6); values byte-identical
-      val Seq(truth, mins) = graft.Par.build(s)(
+      val Seq(truth, mins) = graft.Par.build(
         () => graft.dedup.NearDup.prefixJaccardPairs(
             docs, "doc_id", "text", n = 3, threshold = 0.25)
           .select(col("id_a"), col("id_b"), jac.as("__jac"))
@@ -2261,7 +2261,7 @@ object ExtendedQueries {
             col("n_pairs_ge50"), col("exp_caught_ge50_e9"),
             col("actual_caught_ge50"), col("n_band_candidates"))
       }
-      graft.Par.build(s)(
+      graft.Par.build(
         () => config(8, 3, 16, 4),
         () => config(16, 4, 8, 3)).reduce(_.unionAll(_))
     }),
@@ -3521,7 +3521,7 @@ object ExtendedQueries {
       // fold trains run ~5 eager actions each (persist counts +
       // checkpoints); building the three folds concurrently overlaps
       // them (guide §2.6 via graft.Par) — plans and results unchanged
-      graft.Par.build(s)((0 until 3).map { f => () =>
+      graft.Par.build((0 until 3).map { f => () =>
         val train = docs.filter(col("__fold") =!= f)
         val test = docs.filter(col("__fold") === f)
         val model = graft.text.Classify.trainNaiveBayes(train, "lang", "text")

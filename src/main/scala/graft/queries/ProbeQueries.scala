@@ -36,7 +36,7 @@ import org.apache.spark.sql.types._
   *     q221/q287/q296; no libm/value skew exists). A permanently-red
   *     row would cost the clean N/N headline and could mask a future
   *     genuine red, so the uncast probe retired to
-  *     [[graft.tools.LnLatticeProbe]] (VERDICT r13 task #2).
+  *     `tools.LnLatticeProbe` (VERDICT r13 task #2; see git rev e766bb7).
   *   - `zz_probe_regex_c1` — the exact C0/C1 regex character classes
   *     the q221 oracle previously used, applied to a fixed 11-char
   *     string built with chr(). Red ⇒ DuckDB's regex class semantics

@@ -258,7 +258,7 @@ object TextQueries {
     // exact quadratic SQL — a green row asserts recall 1.0 AND zero
     // false positives at these parameters on this corpus (the banding
     // is deterministic, fixed-seed). Cross-scale-probed at
-    // sf0.001/0.01/0.1 (tools.LshTune): full recall at B=64 already;
+    // sf0.001/0.01/0.1 (tools.LshTune, see git rev e766bb7): full recall at B=64 already;
     // B=96 is margin.
     "q51_lsh_cosine_pairs" -> ((s, d) => {
       // verify-first: the synthetic embeddings are near-uniform, so
@@ -271,7 +271,7 @@ object TextQueries {
     // the SCALE path for ANN: trained-IVF recall@10 against the
     // brute-force oracle, emitted as a checkable scalar row. KMeans is
     // seeded and deterministic; bounds probed cross-scale
-    // (tools.IvfTune: min per-query recall 0.40, mean 0.79-0.82 at
+    // (tools.IvfTune, see git rev e766bb7: min per-query recall 0.40, mean 0.79-0.82 at
     // nProbe=8/16 cells on sf0.001/0.01/0.1).
     "q52_ivf_recall" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)

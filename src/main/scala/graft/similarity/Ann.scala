@@ -236,7 +236,7 @@ object Ann {
     // random init + few iterations: a coarse quantizer only has to
     // partition space roughly — k-means|| init plus 10 Lloyd rounds
     // costs ~20 scheduled jobs for centroids that probe-recall can't
-    // tell apart (recall bounds re-probed per SF via tools.IvfTune)
+    // tell apart (recall bounds re-probed per SF via tools.IvfTune, see git rev e766bb7)
     val model = new KMeans().setK(nCells).setSeed(seed).setMaxIter(5)
       .setInitMode("random")
       .fit(corpusFeat.select("features"))

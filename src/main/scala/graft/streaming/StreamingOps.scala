@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.tables.MasterTables
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -566,7 +566,7 @@ object StreamingOps {
     * admission through the int8 state partitions. Per-batch cost is
     * batch-sized at selective band parameters — the growing corpus
     * contributes only its band keys and (for verified candidates) its
-    * code rows; the SemIncProbe table in SCALE.md prices the
+    * code rows; the SemIncProbe (see git rev e766bb7) table in SCALE.md prices the
     * parameterization. Readers of `outPath`/`statePath` see an extra
     * `batch` partition column (drop it if unwanted).
     */
@@ -585,44 +585,6 @@ object StreamingOps {
       }
   }
 
-  /** State COMPACTION for the incremental admission paths: drop the
-    * state rows of documents that were later REMOVED by curation, so a
-    * near-dup of a removed document is once again admissible and the
-    * state store stops growing monotonically. Works on both stores —
-    * the MinHash signature state ([[dedupBatch]]'s `sigPath`) and the
-    * int8 semantic code state ([[semanticDedupBatch]]'s `statePath`)
-    * — because both are parquet directories keyed by `idCol` with a
-    * `batch=<id>` partition layout, which compaction PRESERVES (the
-    * retry-exclusion filter in both batch runners keys on that
-    * column).
-    *
-    * Admission is a pure function of the stored state (the q75/q92
-    * audits), so after compaction the system behaves exactly as if
-    * the removed documents had never been admitted — the
-    * StreamingSpec cross-check. Months of daily increments then hold
-    * state proportional to the LIVE corpus, not the all-time admitted
-    * set.
-    *
-    * Write-new-then-swap with the [[foreachBatchMerge]] crash
-    * discipline: the state stays readable throughout, a crash between
-    * the rotation renames leaves `.old` as the recoverable
-    * pre-compaction state, and every rename is checked. After the
-    * swap each surviving `batch=<id>` partition gets its `_SUCCESS`
-    * marker re-created so the batch runners' committed-batch check
-    * still holds for already-processed batch ids. No-op (state left
-    * byte-identical) when the store does not exist yet.
-    */
-  /** One micro-batch of streaming HLL register maintenance — the
-    * incremental twin of [[graft.operators.SketchOps.hllRollup]]:
-    * the batch collapses to its (group, bucket, max-rho) registers
-    * and lands in its own `statePath/batch=<id>` partition
-    * (idempotent: a retry overwrites exactly its own partition, and
-    * register MAX-merge makes double-processing harmless by algebra,
-    * not just by bookkeeping). Estimates come from
-    * [[hllEstimateFromState]], which max-merges all partitions at
-    * read; `compactState` can fold old partitions without changing
-    * any answer — the mergeability contract, incrementally.
-    */
   /** Incremental sibling of
     * [[graft.operators.AnalyticsOps.slidingDau]]: each micro-batch
     * appends its DAILY-deduped (user, active day) pairs as one state
@@ -1085,7 +1047,6 @@ object StreamingOps {
                      textCol: String, statePath: String,
                      windowTokens: Int = 16): Unit = {
     require(windowTokens > 0, s"windowTokens must be positive, got $windowTokens")
-    val spark = batch.sparkSession
     val w = windowTokens
     val sigs = batch.filter(col(textCol).isNotNull)
       .select(col(idCol).as("doc_id"),
@@ -1098,12 +1059,7 @@ object StreamingOps {
           .otherwise(array().cast("array<bigint>")).as("__hs"))
       .select(col("doc_id"), explode_outer(col("__hs")).as("h"))
       .transform(graft.state.Checkpoints.stable) // one deterministic frame for state + verdict
-    val sigsDir = new HPath(s"$statePath/sigs")
-    val fs = sigsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior =
-      if (fs.exists(sigsDir) && fs.listStatus(sigsDir).nonEmpty)
-        spark.read.parquet(s"$statePath/sigs").select("doc_id", "h")
-      else sigs.limit(0)
+    val prior = priorSigs(sigs, statePath, "doc_id", "h")
     // directed against the state (the hammingPairsAgainst discipline):
     // only PRIOR rows whose hash the batch carries enter the shuffle —
     // the state parquet is scanned, never bulk-reshuffled, so per-batch
@@ -1122,9 +1078,7 @@ object StreamingOps {
       .select(col("doc_id"),
         (col("__mfo").isNull || col("__mfo") >= col("doc_id"))
           .as("is_novel"))
-    writeVerdictsAndState(spark, verdicts, sigs,
-      s"$statePath/verdicts/batch=$batchId",
-      s"$statePath/sigs/batch=$batchId")
+    writeVerdictsAndState(verdicts, sigs, statePath, batchId)
   }
 
   /** The verdict table [[spanDedupBatch]] maintains. */
@@ -1133,34 +1087,54 @@ object StreamingOps {
     spark.read.parquet(s"$statePath/verdicts")
       .select("doc_id", "is_novel")
 
-  /** Incremental TEMPLATE novelty admission — the crawl-gate form of
-    * the q331 layout-cluster audit, completing the incremental
-    * admission family (exact digest → MinHash → semantic → SimHash →
-    * span → TEMPLATE): a document is novel iff its
-    * [[graft.text.TextOps.layoutShape]] md5 digest is owned by no
-    * SMALLER-id document — the order-free any-earlier rule shared by
-    * the whole family, so verdicts replay from the signature state
-    * alone and batching is invisible to the semantics. Batch contract
-    * (the SHARED family convention, matching the q339 driver's id-cut
-    * batching; ADVICE r14): batches must arrive in non-decreasing
-    * doc_id order — under that ordering a retried batch (even after
-    * later batches landed) rewrites byte-identical rows, because no
-    * later batch can introduce a smaller-id owner of a digest this
-    * batch already judged. An out-of-order feed keeps the FINAL state
-    * correct (min() is order-free) but a replayed early batch would
-    * re-judge against owners it hadn't seen, flipping verdict rows vs
-    * the original run. This is the gate that refuses the ten-thousandth
-    * boilerplate-varied mirror of a template the word-level digests
-    * admit as "new".
-    *
-    * State is ONE row per document (doc_id, template md5) — strictly
-    * smaller than the document table. Per batch: the batch's digests
-    * shuffle once for the min-owner aggregate over (matched prior ∪
-    * batch); the prior state is scanned and semi-join-filtered on the
-    * batch's digests ([[spanDedupBatch]]'s directed discipline),
-    * never bulk-reshuffled — per-batch shuffle volume is O(batch +
-    * matched keys), flat in corpus size.
+  /** The prior signature state under `statePath/sigs` (the given
+    * columns), or an empty frame shaped like `sigs` before the first
+    * batch lands.
     */
+  private def priorSigs(sigs: DataFrame, statePath: String,
+                        cols: String*): DataFrame = {
+    val spark = sigs.sparkSession
+    val sigsDir = new HPath(s"$statePath/sigs")
+    val fs = sigsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(sigsDir) && fs.listStatus(sigsDir).nonEmpty)
+      spark.read.parquet(s"$statePath/sigs").select(cols.map(col): _*)
+    else sigs.limit(0)
+  }
+
+  /** Land a batch's verdicts, then its signature state. The verdict
+    * frame lazily re-reads the sigs STATE, which on a replay holds
+    * this batch's own earlier files, so it is written before that
+    * state is overwritten. Either crash window between the two writes
+    * (state missing for this batch, or verdicts missing) re-judges to
+    * the same rows: an own earlier signature never lowers a min-owner
+    * (the StreamingSpec crash-window cases). A retry overwrites both
+    * batch dirs.
+    */
+  private def writeVerdictsAndState(verdicts: DataFrame, sigs: DataFrame,
+                                    statePath: String, batchId: Long): Unit = {
+    verdicts.write.mode("overwrite").parquet(s"$statePath/verdicts/batch=$batchId")
+    sigs.write.mode("overwrite").parquet(s"$statePath/sigs/batch=$batchId")
+  }
+
+  /** The one-md5-per-document gate shared by [[digestDedupBatch]] and
+    * [[templateDedupBatch]]: a document is novel iff the md5 of
+    * `signature` is owned by no smaller-id document.
+    */
+  private def md5DedupBatch(batch: DataFrame, batchId: Long, idCol: String,
+                            textCol: String, signature: Column,
+                            statePath: String): Unit = {
+    val sigs = batch.filter(col(textCol).isNotNull)
+      .select(col(idCol).as("doc_id"), md5(signature).as("h"))
+      .transform(graft.state.Checkpoints.stable) // one frame, state + verdict
+    val priorMatched = priorSigs(sigs, statePath, "doc_id", "h")
+      .join(sigs.select("h").distinct(), Seq("h"), "left_semi")
+    val firstOwner = priorMatched.unionByName(sigs)
+      .groupBy("h").agg(min("doc_id").as("__fo"))
+    val verdicts = sigs.join(firstOwner, "h")
+      .select(col("doc_id"), (col("__fo") >= col("doc_id")).as("is_novel"))
+    writeVerdictsAndState(verdicts, sigs, statePath, batchId)
+  }
+
   /** Incremental EXACT-DIGEST novelty admission — the first (and
     * cheapest) gate of the incremental family, previously present
     * only in batch form (q80's normalized keep-first): a document is
@@ -1172,62 +1146,10 @@ object StreamingOps {
     * discipline as [[templateDedupBatch]] — per-batch shuffle volume
     * is O(batch + matched keys), flat in corpus size.
     */
-
-  /** Land a batch's verdict and state outputs. Default: the verdict
-    * frame is EAGERLY checkpointed (it lazily re-reads the sigs STATE,
-    * which on a replay includes this batch's own previous files — a
-    * concurrent overwrite would race the read against the delete, the
-    * StreamingSpec replay tests catch it), then the two writes overlap
-    * as independent jobs (round-17 opt, guide §2.6).
-    * `spark.graft.parStateWrites=false` restores the original lazy
-    * serial writes (tools.AbProbe escape hatch); replay is idempotent
-    * either way (both modes overwrite the batch dirs).
-    */
-  private def writeVerdictsAndState(
-      spark: SparkSession, verdicts: DataFrame, sigs: DataFrame,
-      verdictsPath: String, sigsPath: String): Unit =
-    if (spark.conf.get("spark.graft.parStateWrites", "true").toBoolean) {
-      val v = verdicts.transform(graft.state.Checkpoints.stable)
-      try graft.Par.build(spark)(
-        () => v.write.mode("overwrite").parquet(verdictsPath),
-        () => sigs.write.mode("overwrite").parquet(sigsPath))
-      finally
-        // deterministic release of the barrier's blocks (ADVICE r13
-        // discipline): a long-lived streaming driver runs many
-        // batches, and waiting on the weak-ref ContextCleaner would
-        // stack one verdict-sized block set per batch
-        v.queryExecution.analyzed.collectFirst {
-          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-        }.foreach(_.unpersist(blocking = false))
-      ()
-    } else {
-      verdicts.write.mode("overwrite").parquet(verdictsPath)
-      sigs.write.mode("overwrite").parquet(sigsPath)
-    }
-
   def digestDedupBatch(batch: DataFrame, batchId: Long, idCol: String,
-                       textCol: String, statePath: String): Unit = {
-    val spark = batch.sparkSession
-    val sigs = batch.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("doc_id"),
-        md5(graft.text.TextOps.normalizeText(col(textCol))).as("h"))
-      .transform(graft.state.Checkpoints.stable) // one frame, state + verdict
-    val sigsDir = new HPath(s"$statePath/sigs")
-    val fs = sigsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior =
-      if (fs.exists(sigsDir) && fs.listStatus(sigsDir).nonEmpty)
-        spark.read.parquet(s"$statePath/sigs").select("doc_id", "h")
-      else sigs.limit(0)
-    val priorMatched = prior
-      .join(sigs.select("h").distinct(), Seq("h"), "left_semi")
-    val firstOwner = priorMatched.unionByName(sigs)
-      .groupBy("h").agg(min("doc_id").as("__fo"))
-    val verdicts = sigs.join(firstOwner, "h")
-      .select(col("doc_id"), (col("__fo") >= col("doc_id")).as("is_novel"))
-    writeVerdictsAndState(spark, verdicts, sigs,
-      s"$statePath/verdicts/batch=$batchId",
-      s"$statePath/sigs/batch=$batchId")
-  }
+                       textCol: String, statePath: String): Unit =
+    md5DedupBatch(batch, batchId, idCol, textCol,
+      graft.text.TextOps.normalizeText(col(textCol)), statePath)
 
   /** The verdict table [[digestDedupBatch]] maintains. */
   def noveltyFromDigestState(spark: SparkSession,
@@ -1284,29 +1206,38 @@ object StreamingOps {
         .as("is_novel"))
   }
 
+  /** Incremental TEMPLATE novelty admission — the crawl-gate form of
+    * the q331 layout-cluster audit, completing the incremental
+    * admission family (exact digest → MinHash → semantic → SimHash →
+    * span → TEMPLATE): a document is novel iff its
+    * [[graft.text.TextOps.layoutShape]] md5 digest is owned by no
+    * SMALLER-id document — the order-free any-earlier rule shared by
+    * the whole family, so verdicts replay from the signature state
+    * alone and batching is invisible to the semantics. Batch contract
+    * (the SHARED family convention, matching the q339 driver's id-cut
+    * batching; ADVICE r14): batches must arrive in non-decreasing
+    * doc_id order — under that ordering a retried batch (even after
+    * later batches landed) rewrites byte-identical rows, because no
+    * later batch can introduce a smaller-id owner of a digest this
+    * batch already judged. An out-of-order feed keeps the FINAL state
+    * correct (min() is order-free) but a replayed early batch would
+    * re-judge against owners it hadn't seen, flipping verdict rows vs
+    * the original run. This is the gate that refuses the ten-thousandth
+    * boilerplate-varied mirror of a template the word-level digests
+    * admit as "new".
+    *
+    * State is ONE row per document (doc_id, template md5) — strictly
+    * smaller than the document table. Per batch: the batch's digests
+    * shuffle once for the min-owner aggregate over (matched prior ∪
+    * batch); the prior state is scanned and semi-join-filtered on the
+    * batch's digests ([[spanDedupBatch]]'s directed discipline),
+    * never bulk-reshuffled — per-batch shuffle volume is O(batch +
+    * matched keys), flat in corpus size.
+    */
   def templateDedupBatch(batch: DataFrame, batchId: Long, idCol: String,
-                         textCol: String, statePath: String): Unit = {
-    val spark = batch.sparkSession
-    val sigs = batch.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("doc_id"),
-        md5(graft.text.TextOps.layoutShape(col(textCol))).as("h"))
-      .transform(graft.state.Checkpoints.stable) // one deterministic frame, state + verdict
-    val sigsDir = new HPath(s"$statePath/sigs")
-    val fs = sigsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior =
-      if (fs.exists(sigsDir) && fs.listStatus(sigsDir).nonEmpty)
-        spark.read.parquet(s"$statePath/sigs").select("doc_id", "h")
-      else sigs.limit(0)
-    val priorMatched = prior
-      .join(sigs.select("h").distinct(), Seq("h"), "left_semi")
-    val firstOwner = priorMatched.unionByName(sigs)
-      .groupBy("h").agg(min("doc_id").as("__fo"))
-    val verdicts = sigs.join(firstOwner, "h")
-      .select(col("doc_id"), (col("__fo") >= col("doc_id")).as("is_novel"))
-    writeVerdictsAndState(spark, verdicts, sigs,
-      s"$statePath/verdicts/batch=$batchId",
-      s"$statePath/sigs/batch=$batchId")
-  }
+                         textCol: String, statePath: String): Unit =
+    md5DedupBatch(batch, batchId, idCol, textCol,
+      graft.text.TextOps.layoutShape(col(textCol)), statePath)
 
   /** The verdict table [[templateDedupBatch]] maintains. */
   def noveltyFromTemplateState(spark: SparkSession,
@@ -1341,21 +1272,13 @@ object StreamingOps {
   def chunkDedupBatch(batch: DataFrame, batchId: Long, idCol: String,
                       textCol: String, statePath: String,
                       chunkTokens: Int, overlap: Int = 0): Unit = {
-    val spark = batch.sparkSession
     val sigs = graft.pipelines.CorpusPipeline
       .chunkDocuments(batch.filter(col(textCol).isNotNull),
         idCol, textCol, chunkTokens, overlap)
       .select(col(idCol).as("doc_id"), col("chunk_id"),
         md5(col("chunk_text")).as("h"))
       .transform(graft.state.Checkpoints.stable) // one frame, state + verdict
-    val sigsDir = new HPath(s"$statePath/sigs")
-    val fs = sigsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior =
-      if (fs.exists(sigsDir) && fs.listStatus(sigsDir).nonEmpty)
-        spark.read.parquet(s"$statePath/sigs")
-          .select("doc_id", "chunk_id", "h")
-      else sigs.limit(0)
-    val priorMatched = prior
+    val priorMatched = priorSigs(sigs, statePath, "doc_id", "chunk_id", "h")
       .join(sigs.select("h").distinct(), Seq("h"), "left_semi")
     // min over the PAIR key: struct ordering is (doc_id, chunk_id)
     // lexicographic — the q334 keeper rule
@@ -1366,9 +1289,7 @@ object StreamingOps {
       .select(col("doc_id"), col("chunk_id"),
         (col("__fo") >= struct(col("doc_id"), col("chunk_id")))
           .as("is_novel"))
-    writeVerdictsAndState(spark, verdicts, sigs,
-      s"$statePath/verdicts/batch=$batchId",
-      s"$statePath/sigs/batch=$batchId")
+    writeVerdictsAndState(verdicts, sigs, statePath, batchId)
   }
 
   /** The verdict table [[chunkDedupBatch]] maintains: one row per
@@ -1401,6 +1322,17 @@ object StreamingOps {
     graft.operators.AnalyticsOps.itemSimilarity(
       spark.read.parquet(statePath), "user_id", "item", k, maxBasket)
 
+  /** One micro-batch of streaming HLL register maintenance — the
+    * incremental twin of [[graft.operators.SketchOps.hllRollup]]:
+    * the batch collapses to its (group, bucket, max-rho) registers
+    * and lands in its own `statePath/batch=<id>` partition
+    * (idempotent: a retry overwrites exactly its own partition, and
+    * register MAX-merge makes double-processing harmless by algebra,
+    * not just by bookkeeping). Estimates come from
+    * [[hllEstimateFromState]], which max-merges all partitions at
+    * read; `compactState` can fold old partitions without changing
+    * any answer — the mergeability contract, incrementally.
+    */
   def hllBatch(batch: DataFrame, batchId: Long, groupCol: String,
                valueCol: String, statePath: String): Unit = {
     val regs = graft.operators.SketchOps.hllRegisters(
@@ -1421,6 +1353,33 @@ object StreamingOps {
         col("est_distinct"))
   }
 
+  /** State COMPACTION for the incremental admission paths: drop the
+    * state rows of documents that were later REMOVED by curation, so a
+    * near-dup of a removed document is once again admissible and the
+    * state store stops growing monotonically. Works on both stores —
+    * the MinHash signature state ([[dedupBatch]]'s `sigPath`) and the
+    * int8 semantic code state ([[semanticDedupBatch]]'s `statePath`)
+    * — because both are parquet directories keyed by `idCol` with a
+    * `batch=<id>` partition layout, which compaction PRESERVES (the
+    * retry-exclusion filter in both batch runners keys on that
+    * column).
+    *
+    * Admission is a pure function of the stored state (the q75/q92
+    * audits), so after compaction the system behaves exactly as if
+    * the removed documents had never been admitted — the
+    * StreamingSpec cross-check. Months of daily increments then hold
+    * state proportional to the LIVE corpus, not the all-time admitted
+    * set.
+    *
+    * Write-new-then-swap with the [[foreachBatchMerge]] crash
+    * discipline: the state stays readable throughout, a crash between
+    * the rotation renames leaves `.old` as the recoverable
+    * pre-compaction state, and every rename is checked. After the
+    * swap each surviving `batch=<id>` partition gets its `_SUCCESS`
+    * marker re-created so the batch runners' committed-batch check
+    * still holds for already-processed batch ids. No-op (state left
+    * byte-identical) when the store does not exist yet.
+    */
   def compactState(spark: SparkSession, statePath: String,
                    removedIds: DataFrame, idCol: String): Unit = {
     val master = new HPath(statePath)

@@ -152,12 +152,7 @@ object Bpe {
     // per-iteration barrier cost 16x. Merge DECISIONS are unchanged:
     // each argmax still sees exactly the post-replace values — the
     // chain is value-identical to materializing every generation.
-    // `spark.graft.bpeIntervalBarrier=false` restores the
-    // barrier-per-merge behavior (tools.AbProbe escape hatch).
-    val barrierEvery =
-      if (spark.conf.get("spark.graft.bpeIntervalBarrier", "true").toBoolean)
-        16
-      else 1
+    val barrierEvery = 16
     var sinceBarrier = 0
 
     val merges = Seq.newBuilder[(Int, String, String, Long)]

@@ -257,7 +257,7 @@ object NgramLm {
     // build them as concurrent branches (round-17 opt, guide §2.6 /
     // the q261∥q327 precedent): plans and values byte-identical,
     // their three back-to-back jobs overlap on the idle scheduler
-    val Seq(heads, cont, bigrams) = graft.Par.build(ref.sparkSession)(
+    val Seq(heads, cont, bigrams) = graft.Par.build(
       () => bic.groupBy("w1")
         .agg(sum("c12").as("c1b"), count(lit(1)).as("n1from"))
         .select(xxhash64(col("w1")).as("h_hash"), col("c1b"), col("n1from"))

@@ -3,16 +3,22 @@ package graft.tools
 import graft.SparkEntry
 import org.apache.spark.sql.SparkSession
 
-/** Interleaved same-JVM A/B for a boolean session conf (round-16 perf
-  * protocol): the container's wall-clock drift is ±20% ACROSS JVMs
-  * (NoiseProbe; the r14 sweep adjudication), far above the effects
-  * being measured, so variant comparisons must alternate INSIDE one
-  * session. For each query, runs `reps` alternating (conf=true,
-  * conf=false) pairs and reports each variant's min — the Bench
-  * statistic — plus the delta.
+/** Interleaved same-JVM A/B for one of Spark's own boolean session
+  * confs, e.g. `spark.sql.adaptive.coalescePartitions.enabled`
+  * (round-16 perf protocol): the container's wall-clock drift is ±20%
+  * ACROSS JVMs (NoiseProbe, see git rev e766bb7; the r14 sweep
+  * adjudication), far above the effects being measured, so variant
+  * comparisons must alternate INSIDE one session. For each query,
+  * runs `reps` alternating (conf=true, conf=false) pairs and reports
+  * each variant's min — the Bench statistic — plus the delta.
+  *
+  * graft's own code paths are not conf-gated: a code change is A/B'd
+  * parent-vs-change with `perfbench` (`python3 perfbench/run.py`) or
+  * against a git worktree of the parent revision.
   *
   * Usage: runMain graft.tools.AbProbe <confKey> q188_bootstrap_ci ...
-  * (SPARK_GRAFT_SF_DIR selects the scale dir, default sf0.1.)
+  * (SPARK_GRAFT_SF_DIR selects the scale dir, default sf0.1;
+  * SPARK_GRAFT_AB_REPS the pair count, default 3.)
   */
 object AbProbe {
   def main(args: Array[String]): Unit = {

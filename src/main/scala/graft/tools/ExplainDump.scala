@@ -16,9 +16,9 @@ object ExplainDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_CONF="k=v;k2=v2" sets session confs before planning —
-    // used to dump BEFORE plans through the opt escape hatches
-    // (spark.graft.mergeIntersect=false etc.)
+    // SPARK_GRAFT_CONF="k=v;k2=v2" sets session confs before planning
+    // (e.g. spark.sql.autoBroadcastJoinThreshold=-1 to see the plan
+    // without broadcast joins)
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.nonEmpty)
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2)

@@ -92,4 +92,31 @@ class BenchMergeSpec extends AnyFunSuite {
       assert(meds === Map("q1" -> 4.0, "q2" -> 0.5))
     }
   }
+
+  test("repsMin: the min over clean reps; any thrown rep makes the " +
+    "query a failure, never a fast run") {
+    assert(Bench.repsMin(Seq(Some(3.0), Some(1.5), Some(2.0))) === Some(1.5))
+    // a crash stops early: its elapsed time must not become the min
+    assert(Bench.repsMin(Seq(Some(3.0), None, Some(2.0))) === None)
+    assert(Bench.repsMin(Seq(None, None, None)) === None)
+    assert(Bench.repsMin(Seq.empty) === None)
+  }
+
+  test("a sweep that failed a query merges with no full sweep, in " +
+    "either direction") {
+    val full = Map("q1" -> 5.0, "q2" -> 1.0)
+    // the earlier sweep failed q2, so it recorded only q1 (a fast 0.1)
+    withHistory(Seq(
+      entry("2026-08-16T09:00:00Z", sf, Map("q1" -> 0.1)),
+      entry("2026-08-16T10:00:00Z", sf, Map("q1" -> 4.0, "q2" -> 2.0)))) { p =>
+      val (mins, meds, n) = Bench.mergedStats(p, sf, full, now)
+      assert(n === 2)
+      assert(mins === Map("q1" -> 4.0, "q2" -> 1.0))
+      assert(meds === Map("q1" -> 4.0, "q2" -> 1.0))
+      // this sweep failed q2: it merges with no full sweep
+      val (mins1, _, n1) = Bench.mergedStats(p, sf, Map("q1" -> 3.0), now)
+      assert(n1 === 2) // only the other q2-failed sweep shares its key set
+      assert(mins1 === Map("q1" -> 0.1))
+    }
+  }
 }

@@ -8,6 +8,26 @@ import org.apache.spark.sql.streaming.Trigger
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The two crash windows of a verdict-state family's per-batch
+    * writes: after batch `b` landed, lose its `sigs/batch=b` (a crash
+    * between the verdict write and the state write), re-run it; then
+    * lose its `verdicts/batch=b` instead (a crash after the state
+    * write), re-run it. Each time the verdicts and the state must
+    * equal the clean run's, row for row.
+    */
+  private def assertCrashWindowsHeal(dir: String, b: Long)(
+      rerun: => Unit): Unit = {
+    def rows(sub: String) = spark.read.parquet(s"$dir/$sub")
+      .collect().map(_.toString).sorted.toSeq
+    val clean = (rows("verdicts"), rows("sigs"))
+    for (lost <- Seq("sigs", "verdicts")) {
+      TempTrees.deleteQuietly(java.nio.file.Paths.get(s"$dir/$lost/batch=$b"))
+      rerun
+      assert((rows("verdicts"), rows("sigs")) === clean,
+        s"re-run of batch $b after losing $lost/batch=$b")
+    }
+  }
+
   test("windowedCounts: streaming tumbling-window agg over events parquet (memory sink)") {
     // file-stream sources need a directory: stage the events parquet
     val dir = tempDir("events_stream")
@@ -860,6 +880,7 @@ class StreamingSpec extends SparkSpec {
     // replay batch 1 AFTER batch 2 landed: verdicts unchanged
     run(1L, 3L, 4L)
     assert(verdicts() === expected)
+    assertCrashWindowsHeal(dir, 1L)(run(1L, 3L, 4L))
   }
 
   test("templateDedupBatch: incremental verdicts equal the global " +
@@ -900,6 +921,7 @@ class StreamingSpec extends SparkSpec {
     // replay batch 1 AFTER batch 2 landed: verdicts unchanged
     run(1L, 3L, 4L)
     assert(verdicts() === expected)
+    assertCrashWindowsHeal(dir, 1L)(run(1L, 3L, 4L))
   }
 
   test("digestDedupBatch + admissionFunnel: one funnel row per " +
@@ -940,6 +962,10 @@ class StreamingSpec extends SparkSpec {
     // replay idempotence: re-run batch 0 AFTER batch 1 landed
     run(0L, 1L, 2L, 3L)
     assert(funnel() === f1)
+    assertCrashWindowsHeal(root + "/digest", 0L)(
+      graft.streaming.StreamingOps.digestDedupBatch(
+        docs.filter(col("doc_id").isin(1L, 2L, 3L)), 0L, "doc_id", "text",
+        root + "/digest"))
   }
 
   test("funnelFromAdmitted: the MinHash admitted-output state rides " +
@@ -1006,6 +1032,7 @@ class StreamingSpec extends SparkSpec {
     // replay batch 1 AFTER batch 2 landed: verdicts unchanged
     run(1L, 3L, 4L)
     assert(verdicts() === expected)
+    assertCrashWindowsHeal(dir, 1L)(run(1L, 3L, 4L))
   }
 
   test("q309 decontaminated split: eval never quarantined, every " +
