@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the headline query set on
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"failed":[...],"sf":...}`.
@@ -149,29 +147,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default matches the documented environment (local[32], 32 shuffle
-    // partitions); SPARK_GRAFT_CPUS overrides for constrained hosts
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // AQE may right-size CACHED plan output too (default false):
-      // without this every cached intermediate materializes at the
-      // static shuffle partition count — q75's KB-sized admission
-      // frames each cost 32-64 near-empty task launches per consumer
-      // stage, which amplified occasional JIT-cold windows into
-      // 15-40 s outliers (round-7 table in SCALE.md; probe: see git rev e579ea9)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // the measured host is local[32] with RAM far beyond the sf0.1
-      // working set: columnar-cache compression only burns CPU inside
-      // the persist builds the CF/holdout chains pay per run
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     // SPARK_GRAFT_ONLY=q145,q264 times a comma-separated prefix subset
     // (the Verify convention) — for profiling single queries without

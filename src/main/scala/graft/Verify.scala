@@ -1,25 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE may right-size CACHED plan output too: without this every
-      // cached intermediate materializes at the static shuffle
-      // partition count and downstream stages pay near-empty tasks
-      // (measured: q75's 32-partition KB-frames cost 32-64 task
-      // launches per stage and amplified JIT-cold windows 10-40x)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q177,q179 restricts the dump to a comma-separated
     // name-prefix list — a local iteration aid; the driver never sets it,
@@ -34,9 +20,17 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
     }
+    writeOracleSql(outDir, selected)
+    spark.stop()
+  }
+
+  /** `oracle_sql.json` in `outDir`: the oracle SQL of every selected
+    * query, keyed by name.
+    */
+  private[graft] def writeOracleSql(outDir: String, selected: String => Boolean): Unit = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    // — a tab or CR in an oracle's SQL would otherwise make the file
+    // unparseable and silently zero the correctness check.
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -50,6 +44,5 @@ object Verify {
       .filter { case (k, _) => selected(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

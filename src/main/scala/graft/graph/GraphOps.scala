@@ -131,7 +131,7 @@ object GraphOps {
       val nodes = edges.select(col("a").as("node"))
         .unionAll(edges.select(col("b").as("node"))).distinct()
       var labels = nodes.select(col("node"), col("node").as("label"))
-        .transform(graft.state.Checkpoints.stableLazy)
+        .transform(graft.state.Checkpoints.stable)
       for (_ <- 1 to iters) {
         val counted = both
           .join(labels.select(col("node").as("dst"), col("label")), "dst")
@@ -146,13 +146,16 @@ object GraphOps {
         val next = labels.join(best, Seq("node"), "left")
           .select(col("node"),
             coalesce(col("__newLabel"), col("label")).as("label"))
-          .transform(graft.state.Checkpoints.stableLazy)
+          .transform(graft.state.Checkpoints.stable)
+        graft.state.Checkpoints.release(labels)
         labels = next
       }
       val sizes = labels.groupBy("label").agg(count(lit(1)).as("community_size"))
-      labels.join(sizes, "label")
+      val out = labels.join(sizes, "label")
         .select(col("node"), col("label"), col("community_size"))
         .transform(graft.state.Checkpoints.stable)
+      graft.state.Checkpoints.release(labels)
+      out
     } finally edges.unpersist(blocking = false)
   }
 
@@ -265,7 +268,7 @@ object GraphOps {
       .select(least(col(aCol), col(bCol)).as("a"),
         greatest(col(aCol), col(bCol)).as("b"))
       .distinct()
-      .transform(graft.state.Checkpoints.stableLazy)
+      .transform(graft.state.Checkpoints.stable)
     for (_ <- 1 to iters) {
       val deg = edges.select(col("a").as("v"))
         .unionAll(edges.select(col("b").as("v")))
@@ -274,8 +277,8 @@ object GraphOps {
       val next = edges
         .join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
-        .transform(graft.state.Checkpoints.stableLazy)
-      edges.unpersist(blocking = false)
+        .transform(graft.state.Checkpoints.stable)
+      graft.state.Checkpoints.release(edges)
       edges = next
     }
     val out = edges.select(col("a").as("v"))
@@ -283,7 +286,7 @@ object GraphOps {
       .groupBy("v").agg(count(lit(1)).as("core_degree"))
       .select(col("v").as("node"), col("core_degree"))
       .transform(graft.state.Checkpoints.stable)
-    edges.unpersist(blocking = false)
+    graft.state.Checkpoints.release(edges)
     out
   }
 
@@ -318,7 +321,7 @@ object GraphOps {
         .unionAll(edges.select(col("b").as("src"), col("a").as("dst")))
       var reached = seeds.select(col(seedCol).as("node")).distinct()
         .withColumn("dist", lit(0))
-        .transform(graft.state.Checkpoints.stableLazy)
+        .transform(graft.state.Checkpoints.stable)
       var frontier = reached
       for (h <- 1 to maxHops) {
         val next = frontier
@@ -326,13 +329,14 @@ object GraphOps {
           .select(col("dst").as("node")).distinct()
           .join(reached, Seq("node"), "left_anti")
           .withColumn("dist", lit(h))
-          .transform(graft.state.Checkpoints.stableLazy)
-        val grown = reached.unionByName(next).transform(graft.state.Checkpoints.stableLazy)
-        frontier.unpersist(blocking = false)
-        reached.unpersist(blocking = false)
+          .transform(graft.state.Checkpoints.stable)
+        val grown = reached.unionByName(next).transform(graft.state.Checkpoints.stable)
+        graft.state.Checkpoints.release(frontier)
+        graft.state.Checkpoints.release(reached)
         frontier = next
         reached = grown
       }
+      graft.state.Checkpoints.release(frontier)
       reached
     } finally edges.unpersist(blocking = false)
   }
@@ -375,7 +379,7 @@ object GraphOps {
         .unionAll(edges.select(col("b").as("node")))
         .distinct()
         .withColumn("lab", col("node"))
-        .transform(graft.state.Checkpoints.stableLazy)
+        .transform(graft.state.Checkpoints.stable)
       for (_ <- 1 to iters) {
         val nbrMin = labels.join(both, col("node") === col("src"))
           .groupBy(col("dst").as("node")).agg(min("lab").as("__nb"))
@@ -387,13 +391,13 @@ object GraphOps {
             .as("y"), Seq("lab"), "left")
           .select(col("node"),
             least(col("lab"), coalesce(col("__ll"), col("lab"))).as("lab"))
-          .transform(graft.state.Checkpoints.stableLazy)
-        labels.unpersist(blocking = false)
+          .transform(graft.state.Checkpoints.stable)
+        graft.state.Checkpoints.release(labels)
         labels = next
       }
       val out = labels.select(col("node"), col("lab").as("component"))
         .transform(graft.state.Checkpoints.stable)
-      labels.unpersist(blocking = false)
+      graft.state.Checkpoints.release(labels)
       out
     } finally edges.unpersist(blocking = false)
   }
@@ -436,22 +440,22 @@ object GraphOps {
         .unionAll(und.select(col("b").as("src"), col("a").as("dst"), col("w")))
       var reached = seeds.select(col(seedCol).as("node")).distinct()
         .withColumn("dist", lit(0L))
-        .transform(graft.state.Checkpoints.stableLazy)
+        .transform(graft.state.Checkpoints.stable)
       var frontier = reached
       for (_ <- 1 to maxRounds) {
         val relaxed = frontier.join(both, col("node") === col("src"))
           .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
         val next = reached.unionByName(relaxed)
           .groupBy("node").agg(min("dist").as("dist"))
-          .transform(graft.state.Checkpoints.stableLazy)
+          .transform(graft.state.Checkpoints.stable)
         val nextFrontier = next.join(reached, Seq("node", "dist"), "left_anti")
-          .transform(graft.state.Checkpoints.stableLazy)
-        frontier.unpersist(blocking = false)
-        reached.unpersist(blocking = false)
+          .transform(graft.state.Checkpoints.stable)
+        graft.state.Checkpoints.release(frontier)
+        graft.state.Checkpoints.release(reached)
         reached = next
         frontier = nextFrontier
       }
-      frontier.unpersist(blocking = false)
+      graft.state.Checkpoints.release(frontier)
       reached
     } finally und.unpersist(blocking = false)
   }

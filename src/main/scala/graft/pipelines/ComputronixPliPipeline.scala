@@ -137,7 +137,7 @@ object ComputronixPliPipeline {
           cde("create_date_UNIX") === maxVals("__max_date"))
       .drop(maxVals("parc_num")).drop("__max_date")
       .where(col("insp_status") === "Active")
-      .transform(graft.state.Checkpoints.stableLazy)
+      .transform(graft.state.Checkpoints.stable)
     graft.operators.DedupOps.globalSurrogateId(
       latest, "create_date_UNIX", Seq("parc_num"), "parc_unique_id")
   }

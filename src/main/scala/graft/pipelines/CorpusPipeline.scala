@@ -136,7 +136,7 @@ object CorpusPipeline {
         case None => () // unsupported id type: distributed path below
       }
     }
-    var labels = nodes.select(col("node"), col("node").as("label")).transform(graft.state.Checkpoints.stableLazy)
+    var labels = nodes.select(col("node"), col("node").as("label")).transform(graft.state.Checkpoints.stable)
     var changed = 1L
     var i = 0
     while (changed > 0 && i < maxIter) {
@@ -155,7 +155,7 @@ object CorpusPipeline {
       val jumped = l1.join(l2, col("l1.label") === col("l2.node"))
         .select(col("l1.node").as("node"), col("l1.old_label").as("old_label"),
           least(col("l1.label"), col("l2.label")).as("label"))
-        .transform(graft.state.Checkpoints.stableLazy)
+        .transform(graft.state.Checkpoints.stable)
       // labels only ever decrease, so "changed" = any strict decrease
       changed = jumped.filter(col("label") < col("old_label")).count()
       labels = jumped.select("node", "label")
@@ -184,7 +184,7 @@ object CorpusPipeline {
     * so every root IS the minimum of its component under `ord`.
     * Returns node -> component-min for every node seen in an edge.
     */
-  private def driverUnionFind[T](edgeList: Array[(T, T)])(
+  private[graft] def driverUnionFind[T](edgeList: Array[(T, T)])(
       implicit ord: Ordering[T]): Seq[(T, T)] = {
     val parent = scala.collection.mutable.Map.empty[T, T]
     def find(x: T): T = {
@@ -230,7 +230,7 @@ object CorpusPipeline {
     */
   def dropByPairs(df: DataFrame, idCol: String, pairs: DataFrame,
                   maxIter: Int = 50): DataFrame = {
-    val p = pairs.select(col("id_a"), col("id_b")).transform(graft.state.Checkpoints.stableLazy)
+    val p = pairs.select(col("id_a"), col("id_b")).transform(graft.state.Checkpoints.stable)
     val nodes = p.select(col("id_a").as("node"))
       .unionByName(p.select(col("id_b").as("node"))).distinct()
     val labels = minLabelComponents(nodes, p, maxIter)
@@ -257,7 +257,7 @@ object CorpusPipeline {
   def nearDupClusterSizes(docs: DataFrame, idCol: String, textCol: String,
                           threshold: Double = 0.8, maxIter: Int = 50): DataFrame = {
     val labels = nearDupLabels(docs, idCol, textCol, threshold, maxIter)
-      .transform(graft.state.Checkpoints.stableLazy)
+      .transform(graft.state.Checkpoints.stable)
     val total = docs.select(col(idCol)).count()
     val clustered = labels.count()
     val spark = docs.sparkSession
@@ -282,7 +282,7 @@ object CorpusPipeline {
   private def nearDupLabels(docs: DataFrame, idCol: String, textCol: String,
                             threshold: Double, maxIter: Int): DataFrame = {
     val pairs = NearDup.minhashLshPairs(docs, idCol, textCol, threshold = threshold)
-      .select(col("id_a"), col("id_b")).transform(graft.state.Checkpoints.stableLazy)
+      .select(col("id_a"), col("id_b")).transform(graft.state.Checkpoints.stable)
     val pairNodes = pairs.select(col("id_a").as("node"))
       .unionByName(pairs.select(col("id_b").as("node"))).distinct()
     minLabelComponents(pairNodes, pairs, maxIter)
@@ -338,7 +338,7 @@ object CorpusPipeline {
                           bitsPerBand: Int = 6, maxIter: Int = 50): DataFrame = {
     val pairs = NearDup.lshCosinePairsBanded(embs, idCol, vecCol, threshold,
         bands, bitsPerBand, dedupBeforeVerify = false)
-      .select(col("id_a"), col("id_b")).transform(graft.state.Checkpoints.stableLazy)
+      .select(col("id_a"), col("id_b")).transform(graft.state.Checkpoints.stable)
     val nodes = pairs.select(col("id_a").as("node"))
       .unionByName(pairs.select(col("id_b").as("node"))).distinct()
     minLabelComponents(nodes, pairs, maxIter)
@@ -730,7 +730,7 @@ object CorpusPipeline {
                         middleFrac: Double = 2.0 / 3.0): DataFrame = {
     val (out, release) =
       perplexityBucketsManaged(docs, idCol, textCol, groupCol, lm, headFrac, middleFrac)
-    val materialized = out.transform(graft.state.Checkpoints.stableLazy)
+    val materialized = out.transform(graft.state.Checkpoints.stable)
     release()
     materialized
   }

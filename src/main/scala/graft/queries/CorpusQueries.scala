@@ -52,7 +52,7 @@ object CorpusQueries {
         lineDocs.toDF("doc_id", "text"), "doc_id", "text", maxDocs = 2)
       val out = cleaned
         .select(col("doc_id"), col("text").as("clean_text"))
-        .transform(graft.state.Checkpoints.stableLazy)
+        .transform(graft.state.Checkpoints.stable)
       linesCache.unpersist(blocking = false)
       out
     }),
@@ -182,7 +182,7 @@ object CorpusQueries {
       val (out, release) = CorpusPipeline.duplicateSpanFractionManaged(
         Tables.documents(s, d), "doc_id", "text",
         windowTokens = 8, minDocs = 2)
-      val materialized = out.transform(graft.state.Checkpoints.stableLazy)
+      val materialized = out.transform(graft.state.Checkpoints.stable)
       release()
       materialized
     }),
@@ -201,7 +201,7 @@ object CorpusQueries {
       val (out, release) = CorpusPipeline.decontaminateBloomManaged(
         Tables.documents(s, d), "doc_id", "text",
         benchTexts.toDF("btext"), "btext", n = 3, fpp = 1e-9)
-      val materialized = out.transform(graft.state.Checkpoints.stableLazy)
+      val materialized = out.transform(graft.state.Checkpoints.stable)
       release()
       materialized
     }),
@@ -333,7 +333,7 @@ object CorpusQueries {
       import s.implicits._
       val pairs = graft.dedup.NearDup.minhashLshPairs(
           Tables.documents(s, d), "doc_id", "text", threshold = 0.8)
-        .select(col("id_a"), col("id_b")).transform(graft.state.Checkpoints.stableLazy)
+        .select(col("id_a"), col("id_b")).transform(graft.state.Checkpoints.stable)
       Seq((pairs.count(), graft.graph.GraphOps.triangleCount(pairs)))
         .toDF("n_edges", "n_triangles")
     }),
@@ -501,7 +501,7 @@ object CorpusQueries {
       val materialized = out
         .select(col("doc_id"), col("text").as("clean_text"),
           col("n_removed_paragraphs"))
-        .transform(graft.state.Checkpoints.stableLazy)
+        .transform(graft.state.Checkpoints.stable)
       parasCache.unpersist(blocking = false)
       materialized
     }),

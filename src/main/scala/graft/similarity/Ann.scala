@@ -1008,18 +1008,18 @@ object Ann {
       graft.expressions.SimilarityExpressions.int_sq_dist(a, b)
     val codes = quantizeInt8(corpus, idCol, vecCol)
       .select(col(idCol).as("__id"), col("qvec").as("__v"))
-      .transform(graft.state.Checkpoints.stableLazy)
+      .transform(graft.state.Checkpoints.stable)
     val seed = codes.orderBy(col("__id").asc).limit(1)
       .select(col("__id").as("__sid"), col("__v").as("__sv"))
     var selected = seed.select(col("__sid").as("selected_id"),
       lit(1).cast(IntegerType).as("rank"),
       lit(null).cast(LongType).as("min_dist_sq"))
-      .transform(graft.state.Checkpoints.stableLazy)
+      .transform(graft.state.Checkpoints.stable)
     var remaining = codes.crossJoin(broadcast(seed))
       .filter(col("__id") =!= col("__sid"))
       .select(col("__id"), col("__v"),
         sqDist(col("__v"), col("__sv")).as("__md"))
-      .transform(graft.state.Checkpoints.stableLazy)
+      .transform(graft.state.Checkpoints.stable)
     for (r <- 2 to k) {
       val pick = remaining
         .agg(max(struct(col("__md"), (-col("__id")).as("__ni"))).as("__p"))
@@ -1030,17 +1030,17 @@ object Ann {
           lit(r).cast(IntegerType).as("rank"),
           col("__pd").as("min_dist_sq"),
           col("__v").as("__pv"))
-        .transform(graft.state.Checkpoints.stableLazy)
+        .transform(graft.state.Checkpoints.stable)
       selected = selected.unionByName(
         pickRow.select("selected_id", "rank", "min_dist_sq"))
-        .transform(graft.state.Checkpoints.stableLazy)
+        .transform(graft.state.Checkpoints.stable)
       remaining = remaining
         .crossJoin(broadcast(pickRow.select(col("selected_id").as("__pid"),
           col("__pv"))))
         .filter(col("__id") =!= col("__pid"))
         .select(col("__id"), col("__v"),
           least(col("__md"), sqDist(col("__v"), col("__pv"))).as("__md"))
-        .transform(graft.state.Checkpoints.stableLazy)
+        .transform(graft.state.Checkpoints.stable)
     }
     selected
   }
@@ -1084,7 +1084,7 @@ object Ann {
       col("score")), corpus.schema(cId).dataType, poolK)
       .select(col("query_id"), col("neighbor_id").as("__c"),
         col("score").as("__rel"))
-      .transform(graft.state.Checkpoints.stableLazy)
+      .transform(graft.state.Checkpoints.stable)
     val vecs = corpus.select(col(cId).as("__id"), col(cVec).as("__v"))
     val pairSim = pool.select(col("query_id"), col("__c").as("__a"))
       .join(pool.select(col("query_id"), col("__c").as("__b")), "query_id")
@@ -1093,8 +1093,8 @@ object Ann {
       .join(vecs.select(col("__id").as("__b"), col("__v").as("__vb")), "__b")
       .select(col("query_id"), col("__a"), col("__b"),
         round(NearDup.cosine(col("__va"), col("__vb")), 4).as("__sim"))
-      .transform(graft.state.Checkpoints.stableLazy)
-    var remaining = pool.withColumn("__ms", lit(0.0)).transform(graft.state.Checkpoints.stableLazy)
+      .transform(graft.state.Checkpoints.stable)
+    var remaining = pool.withColumn("__ms", lit(0.0)).transform(graft.state.Checkpoints.stable)
     var selected: DataFrame = null
     for (r <- 1 to selectK) {
       val scored = remaining.withColumn("__mmr",
@@ -1109,7 +1109,7 @@ object Ann {
         .select(pick("query_id"), col("__pick").as("selected_id"),
           lit(r).cast(IntegerType).as("rank"), col("__rel").as("rel"),
           col("__pmmr").as("mmr"))
-        .transform(graft.state.Checkpoints.stableLazy)
+        .transform(graft.state.Checkpoints.stable)
       selected = if (selected == null) pickRow
         else selected.unionByName(pickRow)
       val nextRemaining = remaining
@@ -1120,7 +1120,7 @@ object Ann {
           Seq("query_id", "__c", "__pick"))
         .select(col("query_id"), col("__c"), col("__rel"),
           greatest(col("__ms"), col("__sim")).as("__ms"))
-        .transform(graft.state.Checkpoints.stableLazy)
+        .transform(graft.state.Checkpoints.stable)
       remaining = nextRemaining
     }
     selected.select(col("query_id"), col("rank"), col("selected_id"),

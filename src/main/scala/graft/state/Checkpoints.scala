@@ -10,7 +10,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * consumer stages recompute the full upstream chain (the measured
   * q239 bimodality), and iterative algorithms (PageRank, LPA) double
   * their LOGICAL plan every round until driver plan-stringification
-  * alone OOMs. Two mechanisms implement that contract:
+  * alone OOMs. Every cut is eager, whichever mechanism implements it;
+  * the flag below picks one of two:
   *
   *  - `localCheckpoint(eager = true)` (the default): blocks live in
   *    executor storage (MEMORY_AND_DISK), zero external I/O — right
@@ -63,37 +64,25 @@ object Checkpoints {
     spark.conf.get(ReliableFlag, "false").toBoolean
 
   /** Eagerly materialize `ds` and sever its lineage via the
-    * session-configured mechanism. Use exactly where an eager
-    * `localCheckpoint(true)` was the right call.
+    * session-configured mechanism. Every engine cut goes through here,
+    * the iterative loops' per-round cuts included: the cut is always
+    * eager (Spark 4's `localCheckpoint()` is already
+    * `checkpoint(eager = true, reliableCheckpoint = false)`), so a
+    * caller may release the cut's parent right after this returns, and
+    * only the mechanism depends on [[ReliableFlag]].
     */
   def stable[T](ds: Dataset[T]): Dataset[T] =
     if (!isReliable(ds.sparkSession)) ds.localCheckpoint(eager = true)
     else { requireDir(ds); ds.checkpoint(eager = true) }
 
-  /** Lazy (deferred) lineage cut via the session-configured
-    * mechanism — materializes on the consumer's first action. Use
-    * exactly where a lazy `.localCheckpoint()` was the right call:
-    * the iterative loops (LPA, k-core, SSSP, k-means/IVF, the
-    * connected-components and incremental-admission rounds), whose
-    * per-round frontier is consumed once immediately after, so eager
-    * materialization would only add a synchronization barrier.
-    * Routing these through the knob matters MOST of all the cut
-    * sites: lineage truncation in an iterative loop is exactly where
-    * a lost executor makes local-only blocks unrecoverable N rounds
-    * deep (ADVICE r15).
-    */
-  def stableLazy[T](ds: Dataset[T]): Dataset[T] =
-    if (!isReliable(ds.sparkSession)) ds.localCheckpoint()
-    else { requireDir(ds); ds.checkpoint(eager = false) }
-
-  /** Releases the blocks of a cut made by [[stable]] or [[stableLazy]]
-    * now rather than when the ContextCleaner gets to it (ADVICE r13:
-    * waiting on the weak-ref cleaner lets MEMORY_AND_DISK blocks pile
-    * up in GC-quiet long-running programs, including on exception
-    * paths). A no-op on a frame that is not a cut. The blocks belong
-    * to the plan's single [[org.apache.spark.sql.execution.LogicalRDD]]
-    * leaf; `ds.rdd` would wrap it in a fresh, unpersisted deserializer
-    * RDD, so unpersisting THAT is a no-op.
+  /** Releases the blocks of a cut made by [[stable]] now rather than
+    * when the ContextCleaner gets to it (ADVICE r13: waiting on the
+    * weak-ref cleaner lets MEMORY_AND_DISK blocks pile up in GC-quiet
+    * long-running programs, including on exception paths). A no-op on
+    * a frame that is not a cut. The blocks belong to the plan's single
+    * [[org.apache.spark.sql.execution.LogicalRDD]] leaf; `ds.rdd` would
+    * wrap it in a fresh, unpersisted deserializer RDD, so unpersisting
+    * THAT is a no-op.
     */
   def release[T](ds: Dataset[T]): Unit =
     ds.queryExecution.analyzed.collectFirst {

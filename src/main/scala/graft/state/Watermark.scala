@@ -1,7 +1,7 @@
 package graft.state
 
 import java.nio.charset.StandardCharsets
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 
 /** Incremental-ingest watermark state.
   *
@@ -13,12 +13,12 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   * window — at-least-once with downstream dedup.
   *
   * Batch-incremental Spark analog: a tiny JSON state file read at job
-  * start and replaced at job end through the Hadoop `FileSystem` of
-  * the path — the production watermark lives on shared storage
-  * (HDFS/object store), not an executor-local disk. Replacement is
-  * write-temp → current-to-`.old` → temp-to-current; a crash between
-  * the renames leaves `.old`, which the reader falls back to, so the
-  * previous watermark is never lost (the reference's own contract).
+  * start and replaced at job end through [[StateDirs]], the crash-safe
+  * replace-and-read protocol every rotated state in graft uses — so
+  * the previous watermark survives any single crash point (the
+  * reference's own contract), on whatever Hadoop `FileSystem` the path
+  * names (the production watermark lives on shared storage, not an
+  * executor-local disk).
   */
 object Watermark {
 
@@ -32,66 +32,42 @@ object Watermark {
   // silently read the count as 0, and write the generic form
   private val CountRe   = "\"[A-Za-z_]*retrieved\"\\s*:\\s*(\\d+)".r
 
-  private def fsFor(path: String): FileSystem = {
-    val conf = org.apache.spark.sql.SparkSession.getActiveSession
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    new HPath(path).getFileSystem(conf)
-  }
-
-  private def readAll(fs: FileSystem, p: HPath): String = {
-    val in = fs.open(p)
+  private def readAll(path: String): String = {
+    val in = StateDirs.fsFor(path).open(new HPath(path))
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
   }
 
   /** Read the last successful run's watermark; `default` (e.g. the
     * backfill epoch) when no log exists — the reference's
-    * `find_backfill_date` fallback (airflow_utils.py:250-308). Falls
-    * back to the `.old` snapshot if a crashed replace left no current
-    * file.
+    * `find_backfill_date` fallback (airflow_utils.py:250-308). Reads
+    * through [[StateDirs.current]], so a crashed replace's `.old`
+    * snapshot still answers.
     */
-  def lastSuccessfulRun(path: String, default: Long = 0L): RunLog = {
-    val fs = fsFor(path)
-    Seq(new HPath(path), new HPath(path + ".old")).find(fs.exists) match {
+  def lastSuccessfulRun(path: String, default: Long = 0L): RunLog =
+    StateDirs.current(path) match {
       case None => RunLog(default, default, 0L)
       case Some(p) =>
-        val s = readAll(fs, p)
+        val s = readAll(p)
         RunLog(
           SinceRe.findFirstMatchIn(s).map(_.group(1).toLong).getOrElse(default),
           CurrentRe.findFirstMatchIn(s).map(_.group(1).toLong).getOrElse(default),
           CountRe.findFirstMatchIn(s).map(_.group(1).toLong).getOrElse(0L))
     }
-  }
 
   /** Record a successful run: the next run's `since` is this run's
-    * `current_run`. Write-temp + two renames; the previous watermark
-    * survives any single crash point (as current or as `.old`).
+    * `current_run`. One [[StateDirs.replace]]; a failed step throws, so
+    * the run is not recorded successful without its watermark.
     */
   def recordSuccess(path: String, currentRun: Long, recordsRetrieved: Long): Unit = {
     val prev = lastSuccessfulRun(path)
     val json =
       s"""{"since": ${prev.currentRun}, "current_run": $currentRun, "records_retrieved": $recordsRetrieved}"""
-    val fs  = fsFor(path)
-    val p   = new HPath(path)
-    val tmp = new HPath(path + ".tmp")
-    val old = new HPath(path + ".old")
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    // Hadoop rename/delete signal failure by RETURNING false; an
-    // unchecked false here would silently drop the watermark update
-    // (java.nio Files.move threw at the same point) — fail loudly so
-    // the run is not recorded successful without its watermark
-    def mustRename(src: HPath, dst: HPath): Unit =
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(s"watermark rename $src -> $dst failed")
-    if (fs.exists(p)) {
-      if (fs.exists(old) && !fs.delete(old, false))
-        throw new java.io.IOException(s"watermark delete $old failed")
-      mustRename(p, old)
+    StateDirs.replace(path) { next =>
+      val out = StateDirs.fsFor(next).create(new HPath(next), true)
+      try out.write(json.getBytes(StandardCharsets.UTF_8))
+      finally out.close()
     }
-    mustRename(tmp, p)
   }
 
   /** Listing-based backfill-date inference — the reference's
@@ -113,7 +89,7 @@ object Watermark {
     */
   def findBackfillDate(dirPath: String, asOf: java.time.LocalDate,
                        earliestYear: Int = 2017): java.time.LocalDate = {
-    val fs = fsFor(dirPath)
+    val fs = StateDirs.fsFor(dirPath)
     var ym = java.time.YearMonth.from(asOf)
     while (ym.getYear > earliestYear) {
       val prefix = new HPath(

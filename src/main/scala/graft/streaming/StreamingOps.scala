@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.state.StateDirs
 import graft.tables.MasterTables
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
@@ -373,17 +374,14 @@ object StreamingOps {
     * each hourly DAG run merges `incoming_*` into `all_*`
     * (qalert_airflow.py:113-217).
     *
-    * All path checks and the write-new-then-swap go through the Hadoop
-    * `FileSystem` resolved from the master path, so the same code runs
-    * against HDFS/S3A, not only the local FS. A retried micro-batch
-    * re-runs `deleteOldInsertNew` with the same rows against the same
-    * keys — the merge is idempotent, so no batch marker is needed here.
-    * If a crash lands between the two rotation renames (master moved to
-    * `.old`, `.next` not yet promoted), the retry merges against `.old`
-    * instead of an empty base, so no history is lost.
-    * (On stores without atomic rename — S3 — the swap is
-    * last-writer-wins rather than atomic; the `.old` copy still makes
-    * the previous master recoverable.)
+    * The master is read and replaced through [[graft.state.StateDirs]]:
+    * a failed rotation step fails the BATCH (foreachBatch retries it)
+    * instead of committing the checkpoint over a half-rotated master,
+    * and a retry after a crash between the rotation renames merges
+    * against the `.old` copy rather than an empty base, so no history
+    * is lost. A retried micro-batch re-runs `deleteOldInsertNew` with
+    * the same rows against the same keys — the merge is idempotent, so
+    * no batch marker is needed here.
     */
   def foreachBatchMerge(
       incoming: DataFrame, masterPath: String, keys: Seq[String],
@@ -394,41 +392,12 @@ object StreamingOps {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val master = new HPath(masterPath)
-        val fs     = master.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // Hadoop rename returns false instead of throwing (and renames
-        // INTO an existing destination dir rather than replacing it) —
-        // every step must be checked so a failed swap fails the BATCH
-        // (foreachBatch retries it) instead of committing the
-        // checkpoint over a half-rotated master
-        def mustRename(src: HPath, dst: HPath): Unit =
-          if (!fs.rename(src, dst))
-            throw new java.io.IOException(s"rename $src -> $dst failed")
-        def nonEmptyDir(p: HPath) = fs.exists(p) && fs.listStatus(p).nonEmpty
-        // A crash between rename(master -> .old) and rename(.next ->
-        // master) leaves no master at all. The retry must NOT treat that
-        // as "first batch ever" (an empty base would commit a master
-        // holding only the current batch, silently dropping all history):
-        // `.old` is exactly the pre-rotation master, and the merge is
-        // deterministic, so re-merging the same batch against `.old`
-        // reproduces the lost result. Only when neither master nor `.old`
-        // exists is this genuinely the first batch.
-        val old  = new HPath(masterPath + ".old")
-        val base =
-          if (nonEmptyDir(master)) spark.read.parquet(masterPath)
-          else if (nonEmptyDir(old)) spark.read.parquet(old.toString)
-          else batch.limit(0)
+        // only when neither the master nor its `.old` copy exists is
+        // this genuinely the first batch
+        val base = StateDirs.current(masterPath)
+          .fold(batch.limit(0))(spark.read.parquet(_))
         val merged = MasterTables.deleteOldInsertNew(base, batch, keys)
-        // write-new-then-swap keeps the master readable on failure
-        val tmp = new HPath(masterPath + ".next")
-        merged.write.mode("overwrite").parquet(tmp.toString)
-        if (fs.exists(master)) {
-          if (fs.exists(old) && !fs.delete(old, true))
-            throw new java.io.IOException(s"delete $old failed")
-          mustRename(master, old)
-        }
-        mustRename(tmp, master)
-        ()
+        StateDirs.replace(masterPath)(merged.write.mode("overwrite").parquet(_))
       }
   }
 
@@ -463,31 +432,44 @@ object StreamingOps {
     */
   def dedupBatch(batch: DataFrame, batchId: Long, idCol: String, textCol: String,
                  sigPath: String, outPath: String, threshold: Double,
-                 cleanupCaches: Boolean = true): Unit = {
-    val spark  = batch.sparkSession
-    val hconf  = spark.sparkContext.hadoopConfiguration
-    val sigDir = new HPath(new HPath(sigPath), s"batch=$batchId")
-    val outDir = new HPath(new HPath(outPath), s"batch=$batchId")
-    val sigFs  = sigDir.getFileSystem(hconf)
-    val outFs  = outDir.getFileSystem(hconf)
-    val committed = sigFs.exists(new HPath(sigDir, "_SUCCESS")) &&
-      outFs.exists(new HPath(outDir, "_SUCCESS"))
-    if (!committed) {
-      val empty = graft.dedup.NearDup.minhashSignatures(batch.limit(0), idCol, textCol)
-      val sigs =
+                 cleanupCaches: Boolean = true): Unit =
+    runAdmissionBatch(batch, batchId, sigPath, outPath, cleanupCaches,
+      graft.dedup.NearDup.minhashSignatures(batch.limit(0), idCol, textCol)) {
+      graft.dedup.NearDup.incrementalDedupManaged(_, batch, idCol, textCol,
+        threshold = threshold)
+    }
+
+  /** The runner [[dedupBatch]] and [[semanticDedupBatch]] share: skip a
+    * fully-committed batch (both `_SUCCESS` markers), read the corpus
+    * state without this batch's own `batch=<id>` partition (`empty`
+    * when the store holds no readable footers yet), `admit` the batch
+    * against it, overwrite both batch partitions, then release the
+    * admission's cache.
+    */
+  private def runAdmissionBatch(batch: DataFrame, batchId: Long,
+      statePath: String, outPath: String, cleanupCaches: Boolean,
+      empty: => DataFrame)(
+      admit: DataFrame => (DataFrame, DataFrame, () => Unit)): Unit = {
+    val spark    = batch.sparkSession
+    val hconf    = spark.sparkContext.hadoopConfiguration
+    val stateDir = new HPath(new HPath(statePath), s"batch=$batchId")
+    val outDir   = new HPath(new HPath(outPath), s"batch=$batchId")
+    def committed(dir: HPath) =
+      dir.getFileSystem(hconf).exists(new HPath(dir, "_SUCCESS"))
+    if (!(committed(stateDir) && committed(outDir))) {
+      val state =
         try {
-          val all = spark.read.parquet(sigPath)
+          val all = spark.read.parquet(statePath)
           // `batch` is the partition-discovery column; a retry must not
-          // see its own half-written signatures as "the corpus"
+          // see its own half-written state as "the corpus"
           if (all.columns.contains("batch"))
             all.filter(col("batch") =!= batchId).drop("batch")
           else all
         } catch { case _: org.apache.spark.sql.AnalysisException => empty }
-      val (admitted, newSigs, release) = graft.dedup.NearDup.incrementalDedupManaged(
-        sigs, batch, idCol, textCol, threshold = threshold)
+      val (admitted, newState, release) = admit(state)
       try {
         admitted.write.mode("overwrite").parquet(outDir.toString)
-        newSigs.write.mode("overwrite").parquet(sigDir.toString)
+        newState.write.mode("overwrite").parquet(stateDir.toString)
       } finally if (cleanupCaches) release()
     }
   }
@@ -520,46 +502,19 @@ object StreamingOps {
     * admitted rows land in `outPath/batch=<id>` and their quantized
     * state in `statePath/batch=<id>`.
     *
-    * Same idempotency protocol as [[dedupBatch]], and for the same
-    * crash windows: both writes overwrite the batch's own partition, a
-    * fully-committed batch (both `_SUCCESS` markers) is skipped, and a
-    * half-written retry excludes its own partial `batch=<id>` state
-    * from the corpus before re-deciding — a crash between the writes
-    * can neither double-admit nor leak state for rows never admitted.
-    * Same cache hygiene: the one cached batch frame is released at
-    * the Dataset level once the writes land.
+    * It runs through [[dedupBatch]]'s runner, so the same idempotency
+    * protocol, crash windows and cache hygiene hold.
     */
   def semanticDedupBatch(batch: DataFrame, batchId: Long, idCol: String,
                          vecCol: String, statePath: String, outPath: String,
                          threshold: Double, bands: Int = 96,
                          bitsPerBand: Int = 6,
-                         cleanupCaches: Boolean = true): Unit = {
-    val spark    = batch.sparkSession
-    val hconf    = spark.sparkContext.hadoopConfiguration
-    val stateDir = new HPath(new HPath(statePath), s"batch=$batchId")
-    val outDir   = new HPath(new HPath(outPath), s"batch=$batchId")
-    val stateFs  = stateDir.getFileSystem(hconf)
-    val outFs    = outDir.getFileSystem(hconf)
-    val committed = stateFs.exists(new HPath(stateDir, "_SUCCESS")) &&
-      outFs.exists(new HPath(outDir, "_SUCCESS"))
-    if (!committed) {
-      val empty = graft.similarity.Ann.quantizeInt8(batch.limit(0), idCol, vecCol)
-      val state =
-        try {
-          val all = spark.read.parquet(statePath)
-          if (all.columns.contains("batch"))
-            all.filter(col("batch") =!= batchId).drop("batch")
-          else all
-        } catch { case _: org.apache.spark.sql.AnalysisException => empty }
-      val (admitted, newState, release) =
-        graft.pipelines.CorpusPipeline.incrementalSemanticDedupManaged(
-          state, batch, idCol, vecCol, threshold, bands, bitsPerBand)
-      try {
-        admitted.write.mode("overwrite").parquet(outDir.toString)
-        newState.write.mode("overwrite").parquet(stateDir.toString)
-      } finally if (cleanupCaches) release()
+                         cleanupCaches: Boolean = true): Unit =
+    runAdmissionBatch(batch, batchId, statePath, outPath, cleanupCaches,
+      graft.similarity.Ann.quantizeInt8(batch.limit(0), idCol, vecCol)) {
+      graft.pipelines.CorpusPipeline.incrementalSemanticDedupManaged(
+        _, batch, idCol, vecCol, threshold, bands, bitsPerBand)
     }
-  }
 
   /** Streaming semantic corpus admission: each micro-batch runs
     * [[semanticDedupBatch]], so later batches see every earlier
@@ -675,31 +630,22 @@ object StreamingOps {
     * bridge. Deletions are out of contract, exactly as for the
     * recompute-on-read twin.
     *
-    * Crash discipline: write-new-then-swap with the checked renames
-    * every state writer here uses; a crash between the rotation
-    * renames leaves `.old` as the recoverable pre-batch label table.
+    * The label table is read and replaced through
+    * [[graft.state.StateDirs]], so a crash mid-replace leaves the
+    * pre-batch table recoverable.
     */
   def ccLabelBatch(batch: DataFrame, aCol: String, bCol: String,
                    labelPath: String, iters: Int = 8): Unit = {
     val spark = batch.sparkSession
-    val master = new HPath(labelPath)
-    val fs = master.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def nonEmptyDir(p: HPath) = fs.exists(p) && fs.listStatus(p).nonEmpty
-    def mustRename(src: HPath, dst: HPath): Unit =
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(s"rename $src -> $dst failed")
-    val old = new HPath(labelPath + ".old")
     val edges = batch
       .filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .select(col(aCol).as("id_a"), col(bCol).as("id_b"))
       .filter(col("id_a") =!= col("id_b"))
       .distinct()
       .transform(graft.state.Checkpoints.stable)
-    val labels =
-      if (nonEmptyDir(master)) spark.read.parquet(labelPath)
-      else if (nonEmptyDir(old)) spark.read.parquet(old.toString)
-      else edges.select(col("id_a").as("node"), col("id_a").as("component"))
-        .limit(0)
+    val labels = StateDirs.current(labelPath).fold(
+      edges.select(col("id_a").as("node"), col("id_a").as("component"))
+        .limit(0))(spark.read.parquet(_))
     // contract: endpoint -> current component, unseen -> itself
     val contracted = edges
       .join(labels.select(col("node").as("id_a"),
@@ -778,53 +724,27 @@ object StreamingOps {
       .select(newNodes("node"),
         coalesce(col("__new"), newNodes("node")).as("component"))
     val next = updatedOld.unionByName(newRows).transform(graft.state.Checkpoints.stable)
-    val tmp = new HPath(labelPath + ".next")
-    next.write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(master)) {
-      if (fs.exists(old) && !fs.delete(old, true))
-        throw new java.io.IOException(s"delete $old failed")
-      mustRename(master, old)
-    }
-    mustRename(tmp, master)
+    StateDirs.replace(labelPath)(next.write.mode("overwrite").parquet(_))
   }
 
-  /** Driver-side min-label union-find over a SMALL (batch-bounded)
-    * edge frame: roots are always the component MINIMUM (union keeps
-    * the smaller root as parent), so the result is identical to the
-    * distributed min-label CC fixpoint. Returns only changed nodes
-    * (__o -> __n), id-type-generic via the frame's own schema.
+  /** [[graft.pipelines.CorpusPipeline.driverUnionFind]] over a SMALL
+    * (batch-bounded) edge frame, ids compared in the frame's own id
+    * type: roots are the component MINIMUM, so the result is identical
+    * to the distributed min-label CC fixpoint. Returns only changed
+    * nodes (__o -> __n).
     */
   private def unionFindLabels(g: DataFrame): DataFrame = {
     val spark = g.sparkSession
     val idType = g.schema("id_a").dataType
-    def lt(a: Any, b: Any): Boolean =
-      a.asInstanceOf[java.lang.Comparable[Any]].compareTo(b) < 0
-    val parent = new java.util.HashMap[Any, Any]()
-    def find(x: Any): Any = {
-      var r = x
-      while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-      var c = x // path compression
-      while (parent.getOrDefault(c, c) != c) {
-        val nxt = parent.get(c); parent.put(c, r); c = nxt
-      }
-      r
-    }
-    g.collect().foreach { row =>
-      val (ra, rb) = (find(row.get(0)), find(row.get(1)))
-      if (ra != rb) {
-        if (lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
-      }
-    }
-    val out = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
-    parent.keySet().forEach { k =>
-      val r = find(k)
-      if (r != k) out += org.apache.spark.sql.Row(k, r)
-    }
+    implicit val byId: Ordering[Any] = (a: Any, b: Any) =>
+      a.asInstanceOf[java.lang.Comparable[Any]].compareTo(b)
+    val out = graft.pipelines.CorpusPipeline
+      .driverUnionFind(g.collect().map(r => (r.get(0), r.get(1))))
+      .collect { case (n, root) if n != root => org.apache.spark.sql.Row(n, root) }
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("__o", idType),
       org.apache.spark.sql.types.StructField("__n", idType)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toSeq, 1), schema)
+    spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
   }
 
   /** The label table [[ccLabelBatch]] maintains — already the
@@ -860,7 +780,8 @@ object StreamingOps {
     * all admitted edges (spec-pinned across multi-batch replays).
     * Seeds are passed on every call and min-merged at dist 0
     * (idempotent); unreached nodes are absent, matching the batch
-    * operator. Same write-new-then-swap crash discipline.
+    * operator. The distance table is read and replaced through
+    * [[graft.state.StateDirs]].
     */
   def spIncrementBatch(batch: DataFrame, batchId: Long, aCol: String,
                        bCol: String, wCol: String, seeds: DataFrame,
@@ -869,13 +790,6 @@ object StreamingOps {
     require(rounds >= 1 && rounds <= 64, s"rounds out of range: $rounds")
     val spark = batch.sparkSession
     edgeBatch(batch, batchId, aCol, bCol, edgePath, wCol = Some(wCol))
-    val master = new HPath(distPath)
-    val fs = master.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def nonEmptyDir(p: HPath) = fs.exists(p) && fs.listStatus(p).nonEmpty
-    def mustRename(src: HPath, dst: HPath): Unit =
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(s"rename $src -> $dst failed")
-    val old = new HPath(distPath + ".old")
     // the weightedDistances normalization, applied identically to the
     // batch's own edges and to the admitted set read back for
     // propagation: undirected, nonneg weights, min parallel edge
@@ -898,10 +812,8 @@ object StreamingOps {
     try {
       val seed0 = seeds.select(col(seedCol).as("node")).distinct()
         .withColumn("dist", lit(0L))
-      val prior =
-        if (nonEmptyDir(master)) spark.read.parquet(distPath)
-        else if (nonEmptyDir(old)) spark.read.parquet(old.toString)
-        else seed0.limit(0)
+      val prior = StateDirs.current(distPath)
+        .fold(seed0.limit(0))(spark.read.parquet(_))
       var reached = prior.unionByName(seed0)
         .groupBy("node").agg(min("dist").as("dist"))
         .transform(graft.state.Checkpoints.stable)
@@ -950,14 +862,7 @@ object StreamingOps {
           s"spIncrementBatch: frontier not drained after $rounds rounds " +
             s"($frontierCount nodes still improving); state left " +
             "untouched - rerun the batch with a higher rounds cap")
-      val tmp = new HPath(distPath + ".next")
-      reached.write.mode("overwrite").parquet(tmp.toString)
-      if (fs.exists(master)) {
-        if (fs.exists(old) && !fs.delete(old, true))
-          throw new java.io.IOException(s"delete $old failed")
-        mustRename(master, old)
-      }
-      mustRename(tmp, master)
+      StateDirs.replace(distPath)(reached.write.mode("overwrite").parquet(_))
     } finally allEdges.unpersist(blocking = false)
   }
 
@@ -993,10 +898,8 @@ object StreamingOps {
     val sigs = graft.dedup.NearDup.md5SimhashSigs(batch, idCol, textCol)
       .select(col(idCol).as("doc_id"), col("simhash"))
       .transform(graft.state.Checkpoints.stable)
-    val master = new HPath(statePath)
-    val fs = master.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val prior =
-      if (fs.exists(master) && fs.listStatus(master).nonEmpty)
+      if (StateDirs.present(statePath))
         spark.read.parquet(statePath).select("doc_id", "simhash")
       else sigs.limit(0)
     val all = prior.unionByName(sigs).groupBy("doc_id")
@@ -1005,10 +908,11 @@ object StreamingOps {
         sigs, all, "doc_id", "simhash", maxHamming)
       .select(col("id_probe").as("doc_id")).distinct()
       .withColumn("__dup", lit(true))
-    sigs.join(dupIds, Seq("doc_id"), "left")
+    try sigs.join(dupIds, Seq("doc_id"), "left")
       .select(col("doc_id"), col("simhash"),
         coalesce(!col("__dup"), lit(true)).as("is_novel"))
       .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
+    finally graft.state.Checkpoints.release(sigs)
   }
 
   /** The verdict table [[simhashDedupBatch]] maintains:
@@ -1092,16 +996,13 @@ object StreamingOps {
     * batch lands.
     */
   private def priorSigs(sigs: DataFrame, statePath: String,
-                        cols: String*): DataFrame = {
-    val spark = sigs.sparkSession
-    val sigsDir = new HPath(s"$statePath/sigs")
-    val fs = sigsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(sigsDir) && fs.listStatus(sigsDir).nonEmpty)
-      spark.read.parquet(s"$statePath/sigs").select(cols.map(col): _*)
+                        cols: String*): DataFrame =
+    if (StateDirs.present(s"$statePath/sigs"))
+      sigs.sparkSession.read.parquet(s"$statePath/sigs").select(cols.map(col): _*)
     else sigs.limit(0)
-  }
 
-  /** Land a batch's verdicts, then its signature state. The verdict
+  /** Land a batch's verdicts, then its signature state, then release
+    * the `sigs` cut (also when a write fails). The verdict
     * frame lazily re-reads the sigs STATE, which on a replay holds
     * this batch's own earlier files, so it is written before that
     * state is overwritten. Either crash window between the two writes
@@ -1111,10 +1012,11 @@ object StreamingOps {
     * batch dirs.
     */
   private def writeVerdictsAndState(verdicts: DataFrame, sigs: DataFrame,
-                                    statePath: String, batchId: Long): Unit = {
-    verdicts.write.mode("overwrite").parquet(s"$statePath/verdicts/batch=$batchId")
-    sigs.write.mode("overwrite").parquet(s"$statePath/sigs/batch=$batchId")
-  }
+                                    statePath: String, batchId: Long): Unit =
+    try {
+      verdicts.write.mode("overwrite").parquet(s"$statePath/verdicts/batch=$batchId")
+      sigs.write.mode("overwrite").parquet(s"$statePath/sigs/batch=$batchId")
+    } finally graft.state.Checkpoints.release(sigs)
 
   /** The one-md5-per-document gate shared by [[digestDedupBatch]] and
     * [[templateDedupBatch]]: a document is novel iff the md5 of
@@ -1371,10 +1273,9 @@ object StreamingOps {
     * state proportional to the LIVE corpus, not the all-time admitted
     * set.
     *
-    * Write-new-then-swap with the [[foreachBatchMerge]] crash
-    * discipline: the state stays readable throughout, a crash between
-    * the rotation renames leaves `.old` as the recoverable
-    * pre-compaction state, and every rename is checked. After the
+    * The state is read and replaced through [[graft.state.StateDirs]],
+    * so it stays readable throughout and a crash mid-replace leaves the
+    * pre-compaction state recoverable. After the
     * swap each surviving `batch=<id>` partition gets its `_SUCCESS`
     * marker re-created so the batch runners' committed-batch check
     * still holds for already-processed batch ids. No-op (state left
@@ -1382,34 +1283,22 @@ object StreamingOps {
     */
   def compactState(spark: SparkSession, statePath: String,
                    removedIds: DataFrame, idCol: String): Unit = {
-    val master = new HPath(statePath)
-    val fs = master.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def nonEmptyDir(p: HPath) = fs.exists(p) && fs.listStatus(p).nonEmpty
-    def mustRename(src: HPath, dst: HPath): Unit =
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(s"rename $src -> $dst failed")
-    val old = new HPath(statePath + ".old")
-    val base =
-      if (nonEmptyDir(master)) spark.read.parquet(statePath)
-      else if (nonEmptyDir(old)) spark.read.parquet(old.toString)
-      else return
+    val base = StateDirs.current(statePath) match {
+      case Some(p) => spark.read.parquet(p)
+      case None    => return // no store yet: nothing to compact
+    }
     val kept = base.join(removedIds.select(col(idCol)).distinct(),
       Seq(idCol), "left_anti")
     val partitioned = base.columns.contains("batch")
-    val tmp = new HPath(statePath + ".next")
     val w = kept.write.mode("overwrite")
-    (if (partitioned) w.partitionBy("batch") else w).parquet(tmp.toString)
-    if (fs.exists(master)) {
-      if (fs.exists(old) && !fs.delete(old, true))
-        throw new java.io.IOException(s"delete $old failed")
-      mustRename(master, old)
-    }
-    mustRename(tmp, master)
+    StateDirs.replace(statePath)(
+      (if (partitioned) w.partitionBy("batch") else w).parquet(_))
     if (partitioned) {
+      val fs = StateDirs.fsFor(statePath)
       // partitionBy leaves one top-level _SUCCESS; the batch runners
       // check per-partition markers, so restore them for the batches
       // that still hold rows
-      fs.listStatus(master).filter(_.isDirectory)
+      fs.listStatus(new HPath(statePath)).filter(_.isDirectory)
         .filter(_.getPath.getName.startsWith("batch="))
         .foreach(s => fs.create(new HPath(s.getPath, "_SUCCESS"), true).close())
     }

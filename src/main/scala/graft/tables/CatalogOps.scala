@@ -10,13 +10,12 @@ object CatalogOps {
 
   /** ShortCircuitOperator + check_blob_exists
     * (qalert_monthly_backfill_airflow.py:63-68, airflow_utils.py:
-    * 244-247): gate a pipeline stage on input presence.
+    * 244-247): gate a pipeline stage on input presence — a file or a
+    * non-empty dir ([[graft.state.StateDirs.present]]), resolved under
+    * `spark`'s Hadoop conf.
     */
-  def inputPresent(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && (fs.getFileStatus(p).isFile || fs.listStatus(p).nonEmpty)
-  }
+  def inputPresent(spark: SparkSession, path: String): Boolean =
+    spark.withActive(graft.state.StateDirs.present(path))
 
   /** delete_table_group (transform_enrich_requests.py:71-85): the
     * FORMAT + EXECUTE IMMEDIATE dynamic DROP loop becomes a driver-side

@@ -521,7 +521,7 @@ object TextOps {
         coalesce(sum(when(col("__cum") - col("c") < needed, col("c"))), lit(0L))
           .as("covered_occurrences"),
         lit(total).as("total_occurrences"))
-      .transform(graft.state.Checkpoints.stableLazy)
+      .transform(graft.state.Checkpoints.stable)
     tokCounts.unpersist(blocking = false)
     out
   }

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Interleaved same-JVM A/B for one of Spark's own boolean session
   * confs, e.g. `spark.sql.adaptive.coalescePartitions.enabled`
@@ -18,7 +17,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: runMain graft.tools.AbProbe <confKey> q188_bootstrap_ci ...
   * (SPARK_GRAFT_SF_DIR selects the scale dir, default sf0.1;
-  * SPARK_GRAFT_AB_REPS the pair count, default 3.)
+  * SPARK_GRAFT_AB_REPS the pair count, default 3; SPARK_GRAFT_CPUS the
+  * session width, see [[graft.LocalSession]].)
   */
 object AbProbe {
   def main(args: Array[String]): Unit = {
@@ -27,16 +27,7 @@ object AbProbe {
     val names = args.tail.toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_AB_REPS", "3").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     try SparkEntry.entry(spark).write.mode("overwrite").format("noop").save()
     catch { case _: Throwable => () }
     for (name <- names) {

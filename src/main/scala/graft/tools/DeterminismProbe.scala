@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Whole-surface determinism audit: run EVERY SparkEntry query twice
   * at the given scale factor and compare results as row multisets. A
@@ -16,13 +15,7 @@ import org.apache.spark.sql.SparkSession
 object DeterminismProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession(logLevel = "ERROR")
 
     var bad = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

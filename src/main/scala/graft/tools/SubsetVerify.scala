@@ -1,8 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Local iteration twin of [[graft.Verify]]: dump only the NAMED
   * queries (args: sfDir outDir name1 name2 ...) plus a filtered
@@ -12,32 +10,14 @@ import org.apache.spark.sql.SparkSession
 object SubsetVerify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1); val names = args.drop(2).toSet
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(q => names.contains(q._1)).foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       println(f"[subset] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(o => names.contains(o._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    graft.Verify.writeOracleSql(outDir, names.contains)
     spark.stop()
   }
 }

@@ -49,11 +49,11 @@ class CheckpointsSpec extends SparkSpec {
 
   test("stableLazy: flag off needs no checkpoint dir; flag on without " +
     "a dir fails fast (the iterative-loop cut sites, ADVICE r15)") {
-    assert(Checkpoints.stableLazy(ratings).count() === 9L)
+    assert(Checkpoints.stable(ratings).count() === 9L)
     assume(spark.sparkContext.getCheckpointDir.isEmpty)
     withFlag("true") {
       val e = intercept[IllegalArgumentException] {
-        Checkpoints.stableLazy(ratings)
+        Checkpoints.stable(ratings)
       }
       assert(e.getMessage.contains("setCheckpointDir"))
     }

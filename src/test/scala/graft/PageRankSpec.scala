@@ -274,9 +274,12 @@ class PageRankSpec extends SparkSpec {
     import spark.implicits._
     val g = (1L to 8L).map(i => (i, i + 1)) ++ // path 1..9, diameter 8
       Seq((20L, 21L), (21L, 22L), (20L, 22L)) // triangle
-    val full = graft.graph.GraphOps.connectedComponents(
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val cc = graft.graph.GraphOps.connectedComponents(
       g.toDF("id_a", "id_b"), iters = 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(persistedSince(before, cc).isEmpty,
+      "per-round label cuts must be released; only the returned cut stays")
+    val full = cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((1L to 9L).forall(full(_) === 1L))
     assert(Seq(20L, 21L, 22L).forall(full(_) === 20L))
     // one round cannot span the whole path; but every label must
@@ -294,8 +297,11 @@ class PageRankSpec extends SparkSpec {
     // triangle {1,2,3} + chain 3-4-5: round 1 drops 5, round 2 drops 4
     val g = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L))
       .toDF("id_a", "id_b")
-    val core = graft.graph.GraphOps.kCore(g, coreK = 2, iters = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val kc = graft.graph.GraphOps.kCore(g, coreK = 2, iters = 3)
+    assert(persistedSince(before, kc).isEmpty,
+      "per-round edge cuts must be released; only the returned cut stays")
+    val core = kc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(core === Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
     // chain 1-2-3-4: endpoint peel cascades to empty
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b")

@@ -24,6 +24,18 @@ trait SparkSpec extends AnyFunSuite
     tmpRoots += p
     p
   }
+  /** The ids of the RDDs persisted now that were not in `before`,
+    * less the blocks of the lineage cuts in `handedBack` (the frames a
+    * call returns, which its caller owns).
+    */
+  def persistedSince(before: scala.collection.Set[Int],
+                     handedBack: org.apache.spark.sql.Dataset[_]*): Set[Int] = {
+    val owned = handedBack.flatMap(_.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }).toSet
+    spark.sparkContext.getPersistentRDDs.keySet.toSet -- before -- owned
+  }
+
   override protected def afterAll(): Unit = {
     synchronized {
       tmpRoots.foreach(TempTrees.deleteQuietly)

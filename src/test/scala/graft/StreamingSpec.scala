@@ -8,6 +8,31 @@ import org.apache.spark.sql.streaming.Trigger
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The crash window of a rotated state's replace: the current copy
+    * was renamed to `.old`, and the new copy, partly written to
+    * `.next`, was never promoted.
+    */
+  private def crashMidReplace(path: String): Unit = {
+    val cur = java.nio.file.Paths.get(path)
+    val old = java.nio.file.Paths.get(path + ".old")
+    TempTrees.deleteQuietly(old)
+    java.nio.file.Files.move(cur, old)
+    val next = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(path + ".next"))
+    java.nio.file.Files.write(next.resolve("part-00000-torn.parquet"),
+      "torn".getBytes)
+    assert(!java.nio.file.Files.exists(cur))
+  }
+
+  /** Runs one admission-gate call and asserts it left no persisted RDD
+    * behind (the gates return nothing, so they own every cut they make).
+    */
+  private def assertNoCutLeft(body: => Unit): Unit = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    body
+    assert(persistedSince(before).isEmpty, "the call left a cut persisted")
+  }
+
   /** The two crash windows of a verdict-state family's per-batch
     * writes: after batch `b` landed, lose its `sigs/batch=b` (a crash
     * between the verdict write and the state write), re-run it; then
@@ -443,7 +468,13 @@ class StreamingSpec extends SparkSpec {
       batchId = 1L, "doc_id", "vec", stP, soP, threshold = 0.9)
     assert(!spark.read.parquet(soP).select("doc_id").as[Long]
       .collect().contains(10L), "cosine near-dup of doc 2 must be rejected")
+    // the compaction is a retry after a crash mid-replace: it must
+    // compact the .old copy, not treat the state as absent
+    crashMidReplace(stP)
     StreamingOps.compactState(spark, stP, Seq(2L).toDF("doc_id"), "doc_id")
+    assert(spark.read.parquet(stP).select("doc_id").as[Long].collect().toSet
+      === Set(1L), "doc 1's state must survive the crash via .old")
+    assert(new java.io.File(stP, "batch=0/_SUCCESS").exists())
     StreamingOps.semanticDedupBatch(
       Seq((11L, vec(0.01, 1.0))).toDF("doc_id", "vec"),
       batchId = 2L, "doc_id", "vec", stP, soP, threshold = 0.9)
@@ -721,6 +752,9 @@ class StreamingSpec extends SparkSpec {
     graft.streaming.StreamingOps.ccLabelBatch(b1, "a", "b", dir)
     assert(labels() === Map(10L -> 10L, 20L -> 10L, 30L -> 30L,
       40L -> 30L, 50L -> 30L, 60L -> 60L, 70L -> 60L))
+    // batch 2 is a retry after a crash mid-replace of the label table:
+    // it must merge against the .old copy, so no label is lost
+    crashMidReplace(dir)
     graft.streaming.StreamingOps.ccLabelBatch(b2, "a", "b", dir)
     val expected = graft.graph.GraphOps.connectedComponents(
       b0.unionByName(b1).unionByName(b2)
@@ -754,6 +788,9 @@ class StreamingSpec extends SparkSpec {
     // then 5 (and a fresh tail 5-6-7) THROUGH OLD/state topology
     val b1 = Seq((1L, 4L, 5L), (5L, 6L, 1L), (6L, 7L, 1L))
       .toDF("a", "b", "w")
+    // batch 1 is a retry after a crash mid-replace of the distance
+    // table: it must relax against the .old copy, so no distance is lost
+    crashMidReplace(dp)
     graft.streaming.StreamingOps.spIncrementBatch(b1, 1L, "a", "b", "w",
       seeds, "node", ep, dp, rounds = 6)
     val expected = graft.graph.GraphOps.weightedDistances(
@@ -827,7 +864,7 @@ class StreamingSpec extends SparkSpec {
         dir, maxHamming = 3)
     run(0L, 1L, 2L)
     run(1L, 3L, 5L)
-    run(2L, 4L)
+    assertNoCutLeft(run(2L, 4L))
     val expected = Map(1L -> true, 2L -> true, 3L -> false,
       4L -> false, 5L -> true)
     assert(verdicts() === expected)
@@ -864,7 +901,7 @@ class StreamingSpec extends SparkSpec {
         dir, windowTokens = 16)
     run(0L, 1L, 2L)
     run(1L, 3L, 4L)
-    run(2L, 5L)
+    assertNoCutLeft(run(2L, 5L))
     val expected = Map(1L -> true, 2L -> true, 3L -> false,
       4L -> true, 5L -> false)
     assert(verdicts() === expected)
@@ -905,7 +942,7 @@ class StreamingSpec extends SparkSpec {
         dir)
     run(0L, 1L, 2L)
     run(1L, 3L, 4L)
-    run(2L, 5L)
+    assertNoCutLeft(run(2L, 5L))
     val expected = Map(1L -> true, 2L -> true, 3L -> false,
       4L -> true, 5L -> false)
     assert(verdicts() === expected)
@@ -1021,7 +1058,7 @@ class StreamingSpec extends SparkSpec {
         dir, chunkTokens = 4, overlap = 0)
     run(0L, 1L, 2L)
     run(1L, 3L, 4L)
-    run(2L, 5L)
+    assertNoCutLeft(run(2L, 5L))
     val expected = Map(
       (1L, 0L) -> true, (1L, 1L) -> true,
       (2L, 0L) -> true, (2L, 1L) -> false, // batch-internal earlier pair
