@@ -580,37 +580,16 @@ object NearDup {
     * (stderr ≈ 1/√numPerms), the standard incremental trade-off.
     *
     * Returns (admitted incoming rows, their signatures to append to
-    * the corpus state) — EAGERLY materialized (localCheckpoint), with
-    * the admission pipeline's cached intermediates released before
-    * returning: a one-shot call leaves only the two output-sized
-    * checkpointed results, owned by the caller (review r8: the
-    * earlier form silently discarded the release handle and leaked
-    * its persisted intermediate frames per call).
-    * Callers that want lazy outputs and control over release timing
-    * use [[incrementalDedupManaged]], as the streaming `dedupBatch`
-    * does.
-    */
-  def incrementalDedup(
-      corpusSigs: DataFrame, incoming: DataFrame, idCol: String,
-      textCol: String, shingleLen: Int = 3, numPerms: Int = 64,
-      bands: Int = 16, threshold: Double = 0.7): (DataFrame, DataFrame) = {
-    val (admitted, newSigs, release) = incrementalDedupManaged(
-      corpusSigs, incoming, idCol, textCol, shingleLen, numPerms, bands, threshold)
-    try (admitted.transform(graft.state.Checkpoints.stable),
-      newSigs.transform(graft.state.Checkpoints.stable))
-    finally release()
-  }
-
-  /** [[incrementalDedup]] plus a release handle that unpersists the
-    * one cached intermediate this call CREATED — the batch frame (rows
-    * plus signatures) — at the Dataset level, removing its
-    * CacheManager entry, not just the backing RDD blocks, so a
+    * the corpus state, release handle). Both outputs are lazy. The
+    * handle unpersists what this call CREATED — the batch frame (rows
+    * plus signatures), at the Dataset level so its CacheManager entry
+    * goes too, and the cut of verified candidate pairs — so a
     * long-running stream or batch loop does not accumulate
     * InMemoryRelations on the driver. The corpus signatures are never
     * cached here, so a caller-owned corpus cache is never touched.
-    * Call it only AFTER the admitted / newSigs outputs are
-    * materialized (written or checkpointed): releasing earlier makes
-    * the next action recompute the batch signatures.
+    * Call it only AFTER both outputs are materialized (written or cut,
+    * e.g. with [[graft.state.Checkpoints.stableThenRelease]]):
+    * releasing earlier makes the next action recompute the batch.
     *
     * Materialization strategy: one batch cache, one EAGER cut of the
     * verified candidate pairs (batch vs corpus and batch vs batch,
@@ -627,7 +606,7 @@ object NearDup {
     * NULL text) cannot be near-dups and are admitted unconditionally
     * (parity with the full path, which keeps them as pairless nodes).
     */
-  def incrementalDedupManaged(
+  def incrementalDedup(
       corpusSigs: DataFrame, incoming: DataFrame, idCol: String,
       textCol: String, shingleLen: Int = 3, numPerms: Int = 64,
       bands: Int = 16, threshold: Double = 0.7): (DataFrame, DataFrame, () => Unit) =
@@ -854,8 +833,7 @@ object NearDup {
     */
   def lshCosinePairsBanded(
       df: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      bands: Int = 64, bitsPerBand: Int = 6, seed: Long = 42L,
-      dedupBeforeVerify: Boolean = true): DataFrame = {
+      bands: Int = 64, bitsPerBand: Int = 6, seed: Long = 42L): DataFrame = {
     // materialization barrier shared by the banding and both verify
     // branches (same CollapseProject/ReuseExchange reasoning as
     // minhashLshPairs above); width-pinned so the bands×bits
@@ -869,30 +847,19 @@ object NearDup {
         .hyperplane_bands(col(vecCol), bands, bitsPerBand, seed)).as("__band"))
     val l = bandRows.select(col("__band"), col(idCol).as("id_a"))
     val r = bandRows.select(col("__band"), col(idCol).as("id_b"))
-    // Where to deduplicate candidates is a CORPUS-SHAPE knob (both
-    // orders produce identical pair sets — A/B'd in
-    // tools.CosineLshProbe, see git rev e766bb7):
-    //  - dedupBeforeVerify = true (default, scale-safe): distinct the
-    //    candidate multiset before fetching vectors. On a dup-DENSE
-    //    corpus a duplicate cluster collides in nearly every band, so
-    //    deduping first caps verify work at one cosine per pair
-    //    instead of up to `bands` per pair.
-    //  - dedupBeforeVerify = false: skip the full-multiset
-    //    shuffle+hash-aggregate and distinct only above-threshold
-    //    survivors. Wins when collisions are mostly non-duplicates
-    //    (expected extra cosines ~1.5× per colliding pair): measured
-    //    3.4 s → 2.3 s at sf0.1/96 bands on the near-uniform
-    //    synthetic embeddings.
-    val raw = l.join(r, "__band").filter(col("id_a") < col("id_b"))
+    // only verified pairs are distinct'ed, not the candidate
+    // multiset: collisions on near-uniform embeddings are mostly
+    // non-duplicates, so skipping that shuffle wins (q51 at sf0.1/96
+    // bands: 3.4 s → 2.3 s; see git rev e766bb7)
+    val cands = l.join(r, "__band").filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
-    val cands = if (dedupBeforeVerify) raw.distinct() else raw
     val a = tagged.select(col(idCol).as("id_a"), col(vecCol).as("__va"))
     val b = tagged.select(col(idCol).as("id_b"), col(vecCol).as("__vb"))
-    val verified = cands.join(a, "id_a").join(b, "id_b")
+    cands.join(a, "id_a").join(b, "id_b")
       .withColumn("cos", cosine(col("__va"), col("__vb")))
       .filter(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cos"), 4).as("cos"))
-    if (dedupBeforeVerify) verified else verified.distinct()
+      .distinct()
   }
 
   /** Signed-random-projection signature: bit j = sign(v · h_j) where

@@ -255,8 +255,11 @@ object Geo {
   /** One parsed payload per zone ROW: cells and rings both derive
     * from a single parse+domain-check (two separate UDFs would double
     * the regex parse on the path built for millions of polygons).
+    * Public, like [[RingRow]]: the UDF's generated serializer calls its
+    * accessors, and janino cannot call those of a private class (the
+    * stage then fell back to interpreted evaluation).
     */
-  private case class ZoneParse(cells: Array[Long], rings: Seq[RingRow])
+  final case class ZoneParse(cells: Array[Long], rings: Seq[RingRow])
 
   def gridRevGeoZone(
       points: DataFrame, zones: DataFrame, outCol: String, idCol: String,

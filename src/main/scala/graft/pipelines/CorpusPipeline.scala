@@ -337,7 +337,7 @@ object CorpusPipeline {
                           threshold: Double, bands: Int = 96,
                           bitsPerBand: Int = 6, maxIter: Int = 50): DataFrame = {
     val pairs = NearDup.lshCosinePairsBanded(embs, idCol, vecCol, threshold,
-        bands, bitsPerBand, dedupBeforeVerify = false)
+        bands, bitsPerBand)
       .select(col("id_a"), col("id_b")).transform(graft.state.Checkpoints.stable)
     val nodes = pairs.select(col("id_a").as("node"))
       .unionByName(pairs.select(col("id_b").as("node"))).distinct()
@@ -358,30 +358,8 @@ object CorpusPipeline {
         .select(col(idCol)),
       Seq(idCol), "left_anti")
 
-  /** One-shot form of [[incrementalSemanticDedupManaged]]: outputs are
-    * EAGERLY materialized (localCheckpoint) and the admission
-    * pipeline's cached intermediates are released before returning —
-    * only the two output-sized checkpointed results remain, owned by
-    * the caller (review r8: discarding the release handle leaked the
-    * persisted intermediates per invocation). Batch loops that want
-    * lazy outputs and release control use the managed form, as the
-    * streaming `semanticDedupBatch` does.
-    */
-  def incrementalSemanticDedup(
-      corpusState: DataFrame, incoming: DataFrame, idCol: String,
-      vecCol: String, threshold: Double, bands: Int = 96,
-      bitsPerBand: Int = 6, seed: Long = 42L,
-      maxIter: Int = 50): (DataFrame, DataFrame) = {
-    val (admitted, newState, release) = incrementalSemanticDedupManaged(
-      corpusState, incoming, idCol, vecCol, threshold, bands, bitsPerBand,
-      seed, maxIter)
-    try (admitted.transform(graft.state.Checkpoints.stable),
-      newState.transform(graft.state.Checkpoints.stable))
-    finally release()
-  }
-
   /** Incremental SemDeDup admission — the embedding-space twin of
-    * [[graft.dedup.NearDup.incrementalDedupManaged]]: an incoming batch
+    * [[graft.dedup.NearDup.incrementalDedup]]: an incoming batch
     * is admitted against an established corpus that participates ONLY
     * through stored int8-quantized embedding state
     * ([[graft.similarity.Ann.quantizeInt8]] output `(idCol, scale,
@@ -391,7 +369,9 @@ object CorpusPipeline {
     * against any corpus row reaches `threshold`, or (b) it is a
     * non-minimum-id member of a batch-internal near-dup component among
     * the corpus-survivors. Returns (admitted incoming rows, the
-    * admitted rows' quantized state to append, release handle).
+    * admitted rows' quantized state to append, release handle): both
+    * outputs are lazy, and the handle, called once both are written
+    * or cut, frees what the call cached (the MinHash twin's contract).
     *
     * Cosine is SCALE-INVARIANT, so similarity is verified directly on
     * the int8 code arrays — the per-vector `scale` never participates
@@ -408,15 +388,15 @@ object CorpusPipeline {
     * ([[admitBatch]]): candidates come from banded hyperplane LSH over
     * the codes — only (bandKey, id) rows shuffle, codes are fetched per
     * distinct candidate; the corpus contributes O(|state|), not
-    * O(corpus text/fp32), and is never cached; the release handle
-    * unpersists only the batch frame this call created. Rows with a
+    * O(corpus text/fp32), and is never cached, so the release handle
+    * never touches a caller-owned corpus cache. Rows with a
     * NULL/empty embedding cannot be near-dups — admitted
     * unconditionally, excluded from the new state (parity with the
     * MinHash path's short-row rule). Recall is the (bands, bitsPerBand)
     * OR-amplification envelope documented on
     * [[graft.dedup.NearDup.lshCosinePairsBanded]].
     */
-  def incrementalSemanticDedupManaged(
+  def incrementalSemanticDedup(
       corpusState: DataFrame, incoming: DataFrame, idCol: String,
       vecCol: String, threshold: Double, bands: Int = 96,
       bitsPerBand: Int = 6, seed: Long = 42L,
@@ -434,8 +414,8 @@ object CorpusPipeline {
   }
 
   /** The admission kernel shared by both incremental families
-    * ([[graft.dedup.NearDup.incrementalDedupManaged]],
-    * [[incrementalSemanticDedupManaged]]): admit the `incoming` rows
+    * ([[graft.dedup.NearDup.incrementalDedup]],
+    * [[incrementalSemanticDedup]]): admit the `incoming` rows
     * that are near-dups of neither the stored `corpus` state nor a
     * kept lower-id row of the same batch.
     *
@@ -472,6 +452,8 @@ object CorpusPipeline {
     *    id type without a driver ordering) the distributed fixpoint
     *    runs over the cut instead. The choice depends only on the pair
     *    count.
+    *
+    * The returned handle frees both, the batch cache and the pair cut.
     *
     * Output contract (the q75/q92 oracles and the specs pin it): an
     * eligible row is admitted iff its id is not rejected, and an
@@ -553,7 +535,10 @@ object CorpusPipeline {
     val admitted = batch.filter(!col("__elig")).unionByName(kept).select("__in.*")
     val newState = kept.filter(col("__elig"))
       .select((idCol +: state.map(_._1)).map(col): _*)
-    (admitted, newState, () => batch.unpersist(blocking = false))
+    (admitted, newState, () => {
+      batch.unpersist(blocking = false)
+      graft.state.Checkpoints.release(pairs)
+    })
   }
 
   /** [[admitBatch]]'s over-the-limit branch: the rejected ids `__r` of
@@ -721,25 +706,14 @@ object CorpusPipeline {
     * table. Documents with fewer than two normalized tokens carry no
     * LM score and are excluded, as in q93.
     *
-    * Returns (idCol, groupCol, ppl, bucket ∈ head|middle|tail). NULL
-    * group values form their own group (null-safe joins throughout).
+    * Returns ((idCol, groupCol, ppl, bucket ∈ head|middle|tail),
+    * release handle). NULL group values form their own group
+    * (null-safe joins throughout). The output is lazy; the handle
+    * unpersists the per-doc score frame (three consumers: histogram,
+    * totals, final assignment — without the cache the LM joins would
+    * run thrice), so call it once the output is materialized.
     */
-  def perplexityBuckets(docs: DataFrame, idCol: String, textCol: String,
-                        groupCol: String, lm: graft.text.NgramLm.BigramLm,
-                        headFrac: Double = 1.0 / 3.0,
-                        middleFrac: Double = 2.0 / 3.0): DataFrame = {
-    val (out, release) =
-      perplexityBucketsManaged(docs, idCol, textCol, groupCol, lm, headFrac, middleFrac)
-    val materialized = out.transform(graft.state.Checkpoints.stable)
-    release()
-    materialized
-  }
-
-  /** [[perplexityBuckets]] plus a release handle for the persisted
-    * per-doc score frame (three consumers: histogram, totals, final
-    * assignment — without the cache the LM joins would run thrice).
-    */
-  def perplexityBucketsManaged(
+  def perplexityBuckets(
       docs: DataFrame, idCol: String, textCol: String,
       groupCol: String, lm: graft.text.NgramLm.BigramLm,
       headFrac: Double = 1.0 / 3.0,
@@ -773,7 +747,7 @@ object CorpusPipeline {
           .when(col("ppl") <= col("__t2"), lit("middle"))
           .otherwise(lit("tail")))
       .select(col(idCol), col(groupCol), col("ppl"), col("bucket"))
-    (out, () => { scored.unpersist(blocking = false); () })
+    (out, () => scored.unpersist(blocking = false))
   }
 
   /** Corpus-level PII scrub: the reference's redaction rules
@@ -809,22 +783,15 @@ object CorpusPipeline {
     * sees its runtime size and picks broadcast when it is small
     * (normal) or a shuffle join when an aggressive `maxDocs` makes it
     * large — the driver is never the bottleneck. Returns the input
-    * columns with `textCol` rewritten (possibly to the empty string).
+    * columns with `textCol` rewritten (possibly to the empty string),
+    * lazily, and a release handle that unpersists the exploded-lines
+    * frame (one row per LINE of the corpus — the largest cache in the
+    * pipeline): call it as soon as the result is materialized, as
+    * `curate` does after its first stage count.
     */
   def dropBoilerplateLines(
       docs: DataFrame, idCol: String, textCol: String,
-      maxDocs: Int): DataFrame =
-    dropBoilerplateLinesManaged(docs, idCol, textCol, maxDocs)._1
-
-  /** [[dropBoilerplateLines]] plus the persisted exploded-lines frame,
-    * so pipeline compositions can release that cache (one row per LINE
-    * of the corpus — the largest cache in the pipeline) as soon as the
-    * result is materialized, instead of pinning it for the application
-    * lifetime. `curate` does exactly that after its first stage count.
-    */
-  def dropBoilerplateLinesManaged(
-      docs: DataFrame, idCol: String, textCol: String,
-      maxDocs: Int): (DataFrame, DataFrame) = {
+      maxDocs: Int): (DataFrame, () => Unit) = {
     val lines = docs.select(col(idCol),
         posexplode(split(col(textCol), "\n")).as(Seq("__pos", "__line")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -844,7 +811,7 @@ object CorpusPipeline {
           x => x.getField("__line")), "\n").as("__clean"))
     (docs.join(rebuilt, Seq(idCol), "left")
       .withColumn(textCol, coalesce(col("__clean"), lit("")))
-      .drop("__clean"), lines)
+      .drop("__clean"), () => lines.unpersist(blocking = false))
   }
 
   /** Paragraph-level exact dedup, C4/Dolma-style: every occurrence of
@@ -872,17 +839,13 @@ object CorpusPipeline {
     * as boilerplate removal).
     *
     * Returns the input columns with `textCol` rewritten (possibly to
-    * the empty string) plus `n_removed_paragraphs`.
+    * the empty string) plus `n_removed_paragraphs`, lazily, and a
+    * release handle that unpersists the exploded-paragraphs frame (one
+    * row per paragraph of the corpus — the stage's largest cache) once
+    * the result is materialized.
     */
-  def dedupParagraphs(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    dedupParagraphsManaged(docs, idCol, textCol)._1
-
-  /** [[dedupParagraphs]] plus the persisted exploded-paragraphs frame
-    * for caller-controlled release (one row per paragraph of the
-    * corpus — the stage's largest cache).
-    */
-  def dedupParagraphsManaged(
-      docs: DataFrame, idCol: String, textCol: String): (DataFrame, DataFrame) = {
+  def dedupParagraphs(
+      docs: DataFrame, idCol: String, textCol: String): (DataFrame, () => Unit) = {
     val paras = docs.select(col(idCol),
         posexplode(split(col(textCol), "\n")).as(Seq("__pos", "__para")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -907,7 +870,7 @@ object CorpusPipeline {
         col("__np") - coalesce(col("__nk"), lit(0L)))
       .withColumn(textCol, coalesce(col("__clean"), lit("")))
       .drop("__clean", "__nk", "__np")
-    (out, paras)
+    (out, () => paras.unpersist(blocking = false))
   }
 
   /** Benchmark decontamination: count, per document, the distinct word
@@ -1012,23 +975,14 @@ object CorpusPipeline {
     * `n_contaminated_grams`) to keep the exact and approximate
     * contracts distinct. Spark's Bloom hashes are fixed-seed, so the
     * output is deterministic for a given (data, fpp).
+    *
+    * Returns the lazy output and a release handle that destroys the
+    * broadcast bit array; call it once the output is materialized.
+    * Each call broadcasts a fresh filter (gigabytes at the 10^9-gram
+    * scale this path exists for) that is otherwise pinned until the
+    * ContextCleaner happens to run.
     */
   def decontaminateBloom(
-      docs: DataFrame, idCol: String, textCol: String,
-      reference: DataFrame, refTextCol: String, n: Int = 3,
-      fpp: Double = 0.001): DataFrame =
-    decontaminateBloomManaged(docs, idCol, textCol, reference, refTextCol,
-      n, fpp)._1
-
-  /** [[decontaminateBloom]] plus a release handle that destroys the
-    * broadcast bit array once the output is materialized — the same
-    * idiom as [[graft.dedup.NearDup.incrementalDedupManaged]].
-    * Repeated invocations on one SparkContext (a bench loop, a batch
-    * driver) MUST use this form: each call broadcasts a fresh filter
-    * (gigabytes at the 10^9-gram scale this path exists for) that is
-    * otherwise pinned until the ContextCleaner happens to run.
-    */
-  def decontaminateBloomManaged(
       docs: DataFrame, idCol: String, textCol: String,
       reference: DataFrame, refTextCol: String, n: Int = 3,
       fpp: Double = 0.001): (DataFrame, () => Unit) = {
@@ -1109,35 +1063,19 @@ object CorpusPipeline {
     * the document's windows. Documents shorter than `windowTokens`
     * tokens have no windows and yield no row.
     *
-    * The span frame is evaluated twice (dup-set aggregate + per-doc
-    * rollup); both passes are map-explode + one 8-byte-key shuffle.
-    * A driver at scale that also wants the span table should persist
+    * The span frame feeds two consumers (dup-set aggregate + per-doc
+    * rollup), each a map-explode + one 8-byte-key shuffle, so it is
+    * persisted: the explode otherwise runs twice per action. The
+    * output is lazy; the returned handle unpersists the span frame,
+    * so call it only after the output is materialized. A driver at
+    * scale that also wants the span table should persist
     * `duplicateSpans` output and reuse it rather than re-deriving.
     */
-  def duplicateSpanFraction(docs: DataFrame, idCol: String, textCol: String,
-                            windowTokens: Int = 8, minDocs: Long = 2): DataFrame =
-    duplicateSpanFractionBuild(docs, idCol, textCol, windowTokens, minDocs,
-      persistSpans = false)._1
-
-  /** [[duplicateSpanFraction]] with the span frame persisted across
-    * its two consumers (dup-set aggregate + per-doc rollup) and a
-    * release handle — the explode otherwise runs twice per action.
-    * Call release only after the output is materialized.
-    */
-  def duplicateSpanFractionManaged(
+  def duplicateSpanFraction(
       docs: DataFrame, idCol: String, textCol: String,
-      windowTokens: Int = 8, minDocs: Long = 2): (DataFrame, () => Unit) =
-    duplicateSpanFractionBuild(docs, idCol, textCol, windowTokens, minDocs,
-      persistSpans = true)
-
-  private def duplicateSpanFractionBuild(
-      docs: DataFrame, idCol: String, textCol: String,
-      windowTokens: Int, minDocs: Long,
-      persistSpans: Boolean): (DataFrame, () => Unit) = {
-    val raw = spanFrame(docs, idCol, textCol, windowTokens)
-    val sp = if (persistSpans)
-      raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else raw
+      windowTokens: Int = 8, minDocs: Long = 2): (DataFrame, () => Unit) = {
+    val sp = spanFrame(docs, idCol, textCol, windowTokens)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val dupHashes = sp.groupBy(col("__h"))
       .agg(countDistinct(col(idCol)).as("__nd"))
       .filter(col("__nd") >= minDocs)
@@ -1148,7 +1086,7 @@ object CorpusPipeline {
         sum(coalesce(col("__dup"), lit(0))).cast("long").as("n_dup_windows"))
       .withColumn("dup_fraction",
         round(col("n_dup_windows").cast("double") / col("n_windows"), 6))
-    (out, () => if (persistSpans) sp.unpersist(blocking = false))
+    (out, () => sp.unpersist(blocking = false))
   }
 
   /** Exact-substring span REMOVAL — the surgery step of "Deduplicating
@@ -1371,16 +1309,14 @@ object CorpusPipeline {
       (p, n)
     }
     val n0 = docs.count()
-    val (bp, bpCache) = boilerplateMaxDocs match {
-      case Some(k) =>
-        val (r, c) = dropBoilerplateLinesManaged(docs, idCol, textCol, k)
-        (r, Some(c))
-      case None => (docs, None)
+    val (bp, releaseLines) = boilerplateMaxDocs match {
+      case Some(k) => dropBoilerplateLines(docs, idCol, textCol, k)
+      case None => (docs, () => ())
     }
     val (q, n1)  = staged(qualityFilter(bp, gates), None)
     // q is materialized: the exploded-lines cache (bigger than the
     // corpus) is dead weight from here on
-    bpCache.foreach(_.unpersist(blocking = false))
+    releaseLines()
     val (l, n2)  = staged(langFilter(q.select(bp.columns.map(col): _*), langs), Some(q))
     // optional LM-perplexity gate (CCNet): train on the reference
     // corpus, drop alive docs scoring above the cap. Bigram-less docs
@@ -1430,8 +1366,7 @@ object CorpusPipeline {
     // embedding a verbatim paragraph of another)
     val (ds, n4b) = dupSpanOpt match {
       case Some((w, maxFrac)) =>
-        val (frac, releaseSpans) =
-          duplicateSpanFractionManaged(sd, idCol, textCol, w)
+        val (frac, releaseSpans) = duplicateSpanFraction(sd, idCol, textCol, w)
         val r = staged(sd.join(
           frac.filter(col("dup_fraction") > maxFrac)
             .select(col(idCol)), Seq(idCol), "left_anti"), Some(sd))
@@ -1675,8 +1610,7 @@ object CorpusPipeline {
                         threshold: Double = 0.45, bands: Int = 96,
                         bitsPerBand: Int = 6): DataFrame = {
     val pairs = graft.dedup.NearDup.lshCosinePairsBanded(
-      embs, vecIdCol, vecCol, threshold, bands, bitsPerBand,
-      dedupBeforeVerify = false)
+      embs, vecIdCol, vecCol, threshold, bands, bitsPerBand)
     val lang = langs.filter(col(langCol).isNotNull)
       .select(col(docIdCol).as("__lid"), col(langCol).as("__lang"))
     val tagged = pairs

@@ -44,17 +44,13 @@ object CorpusQueries {
   val queries: Map[String, Q] = Map(
     "q72_line_dedup" -> ((s, _) => {
       import s.implicits._
-      // managed form + eager materialization so the exploded per-line
-      // cache (the pipeline's largest) is released instead of pinned
-      // for the session lifetime; the checkpointed result is what the
-      // caller consumes
-      val (cleaned, linesCache) = CorpusPipeline.dropBoilerplateLinesManaged(
+      // cut eagerly, then release the exploded per-line cache (the
+      // pipeline's largest) instead of pinning it for the session
+      // lifetime; the cut is what the caller consumes
+      val (cleaned, release) = CorpusPipeline.dropBoilerplateLines(
         lineDocs.toDF("doc_id", "text"), "doc_id", "text", maxDocs = 2)
-      val out = cleaned
-        .select(col("doc_id"), col("text").as("clean_text"))
-        .transform(graft.state.Checkpoints.stable)
-      linesCache.unpersist(blocking = false)
-      out
+      graft.state.Checkpoints.stableThenRelease(
+        cleaned.select(col("doc_id"), col("text").as("clean_text")), release)
     }),
 
     "q73_decontaminate" -> ((s, d) => {
@@ -83,17 +79,14 @@ object CorpusQueries {
       val corpus = docs.filter(col("doc_id") < 250)
       val batch  = docs.filter(col("doc_id") >= 250)
       val sigs = graft.dedup.NearDup.minhashSignatures(corpus, "doc_id", "text")
-      val (admitted, _, release) = graft.dedup.NearDup.incrementalDedupManaged(
+      val (admitted, _, release) = graft.dedup.NearDup.incrementalDedup(
         sigs, batch, "doc_id", "text", threshold = 0.8)
       // materialize the (tiny) rejected-id answer eagerly, then release
       // the admission pipeline's cached batch frame — repeated
       // invocations (bench min-of-3, a batch loop) would otherwise
       // accumulate an InMemoryRelation per call
-      val out = batch.select("doc_id")
-        .join(admitted.select("doc_id"), Seq("doc_id"), "left_anti")
-        .transform(graft.state.Checkpoints.stable)
-      release()
-      out
+      graft.state.Checkpoints.stableThenRelease(batch.select("doc_id")
+        .join(admitted.select("doc_id"), Seq("doc_id"), "left_anti"), release)
     }),
 
     // deterministic per-source sampling (data mixing): membership is a
@@ -175,16 +168,14 @@ object CorpusQueries {
       CorpusPipeline.duplicateSpans(Tables.documents(s, d), "doc_id", "text",
         windowTokens = 8, minDocs = 2)),
 
-    // the per-document removal signal the span table feeds; managed
-    // form + eager materialization so the shared span frame is
-    // exploded once and released per invocation
+    // the per-document removal signal the span table feeds; cut
+    // eagerly so the shared span frame is exploded once and released
+    // per invocation
     "q85_dup_span_fraction" -> ((s, d) => {
-      val (out, release) = CorpusPipeline.duplicateSpanFractionManaged(
+      val (out, release) = CorpusPipeline.duplicateSpanFraction(
         Tables.documents(s, d), "doc_id", "text",
         windowTokens = 8, minDocs = 2)
-      val materialized = out.transform(graft.state.Checkpoints.stable)
-      release()
-      materialized
+      graft.state.Checkpoints.stableThenRelease(out, release)
     }),
 
     // Bloom-filter decontamination (the no-broadcast scale path).
@@ -196,14 +187,12 @@ object CorpusQueries {
     // at sf0.001 (spec), sf0.01, and sf0.1 (this oracle)
     "q86_bloom_decontaminate" -> ((s, d) => {
       import s.implicits._
-      // managed form + eager materialization so each invocation
-      // releases its broadcast bit array (bench runs this 3x)
-      val (out, release) = CorpusPipeline.decontaminateBloomManaged(
+      // cut eagerly so each invocation releases its broadcast bit
+      // array (bench runs this 3x)
+      val (out, release) = CorpusPipeline.decontaminateBloom(
         Tables.documents(s, d), "doc_id", "text",
         benchTexts.toDF("btext"), "btext", n = 3, fpp = 1e-9)
-      val materialized = out.transform(graft.state.Checkpoints.stable)
-      release()
-      materialized
+      graft.state.Checkpoints.stableThenRelease(out, release)
     }),
 
     // quality-aware near-dup resolution: per cluster keep the doc
@@ -263,15 +252,12 @@ object CorpusQueries {
       // it fetches codes through TWO joins per candidate row, so the
       // distinct pays for itself — measured 5.3 s vs 10.7 s at sf0.1
       // (see git rev e579ea9)
-      val (admitted, _, release) = CorpusPipeline.incrementalSemanticDedupManaged(
+      val (admitted, _, release) = CorpusPipeline.incrementalSemanticDedup(
         state, batch, "vec_id", "embedding", threshold = 0.45)
       // materialize the (tiny) rejected-id answer eagerly, then release
       // the admission pipeline's cached intermediates (bench min-of-3)
-      val out = batch.select("vec_id")
-        .join(admitted.select("vec_id"), Seq("vec_id"), "left_anti")
-        .transform(graft.state.Checkpoints.stable)
-      release()
-      out
+      graft.state.Checkpoints.stableThenRelease(batch.select("vec_id")
+        .join(admitted.select("vec_id"), Seq("vec_id"), "left_anti"), release)
     }),
 
     // deterministic global training-order shuffle: dense 1-based rank
@@ -496,14 +482,10 @@ object CorpusQueries {
         (4L, "body a\nbody a"),
         (5L, ""),
         (6L, "   \nsolo")).toDF("doc_id", "text")
-      val (out, parasCache) = CorpusPipeline.dedupParagraphsManaged(
-        docs, "doc_id", "text")
-      val materialized = out
+      val (out, release) = CorpusPipeline.dedupParagraphs(docs, "doc_id", "text")
+      graft.state.Checkpoints.stableThenRelease(out
         .select(col("doc_id"), col("text").as("clean_text"),
-          col("n_removed_paragraphs"))
-        .transform(graft.state.Checkpoints.stable)
-      parasCache.unpersist(blocking = false)
-      materialized
+          col("n_removed_paragraphs")), release)
     }),
 
     // CCNet head/middle/tail quality buckets per language: value-
@@ -516,7 +498,9 @@ object CorpusQueries {
     "q99_ppl_buckets" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val lm = graft.text.NgramLm.trainBigramLm(docs, "text")
-      CorpusPipeline.perplexityBuckets(docs, "doc_id", "text", "lang", lm)
+      val (out, release) =
+        CorpusPipeline.perplexityBuckets(docs, "doc_id", "text", "lang", lm)
+      graft.state.Checkpoints.stableThenRelease(out, release)
     }),
 
     // Unicode-canonical dedup: precomposed vs combining-mark spellings

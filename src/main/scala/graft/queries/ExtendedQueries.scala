@@ -419,15 +419,12 @@ object ExtendedQueries {
       val hv = s.read.parquet(s"$d/orders.parquet")
         .filter(col("o_totalprice") > 350000.0)
         .select(col("o_orderkey"), col("o_orderpriority"))
-      val (joined, release) = graft.tables.ScaleJoins.bloomPrunedJoinManaged(
+      val (joined, release) = graft.tables.ScaleJoins.bloomPrunedJoin(
         li, "l_orderkey", hv, "o_orderkey")
-      val out = joined.groupBy("o_orderpriority")
+      graft.state.Checkpoints.stableThenRelease(joined.groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n_lineitems"),
           round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-            .as("revenue"))
-        .transform(graft.state.Checkpoints.stable)
-      release()
-      out
+            .as("revenue")), release)
     }),
 
     // k-anonymity + l-diversity risk report over the release shape

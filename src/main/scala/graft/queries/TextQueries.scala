@@ -261,11 +261,8 @@ object TextQueries {
     // sf0.001/0.01/0.1 (tools.LshTune, see git rev e766bb7): full recall at B=64 already;
     // B=96 is margin.
     "q51_lsh_cosine_pairs" -> ((s, d) => {
-      // verify-first: the synthetic embeddings are near-uniform, so
-      // collisions are mostly non-duplicates and skipping the full
-      // candidate-multiset distinct wins (see the knob's doc)
       NearDup.lshCosinePairsBanded(Tables.embeddings(s, d), "vec_id", "embedding",
-        threshold = 0.45, bands = 96, bitsPerBand = 6, dedupBeforeVerify = false)
+        threshold = 0.45, bands = 96, bitsPerBand = 6)
     }),
 
     // the SCALE path for ANN: trained-IVF recall@10 against the

@@ -75,6 +75,15 @@ object Checkpoints {
     if (!isReliable(ds.sparkSession)) ds.localCheckpoint(eager = true)
     else { requireDir(ds); ds.checkpoint(eager = true) }
 
+  /** [[stable]] `ds`, then call `release` (the handle a cache-holding
+    * operator returns beside `ds`) even if the cut fails, and return
+    * the cut. The order is the contract: the cut is eager, so it has
+    * read the operator's caches before they are freed; releasing first
+    * would make the cut recompute everything they held.
+    */
+  def stableThenRelease[T](ds: Dataset[T], release: () => Unit): Dataset[T] =
+    try stable(ds) finally release()
+
   /** Releases the blocks of a cut made by [[stable]] now rather than
     * when the ContextCleaner gets to it (ADVICE r13: waiting on the
     * weak-ref cleaner lets MEMORY_AND_DISK blocks pile up in GC-quiet

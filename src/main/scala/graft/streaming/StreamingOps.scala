@@ -404,7 +404,7 @@ object StreamingOps {
   /** One micro-batch of streaming corpus admission, exposed for direct
     * testing and batch-mode replay. The batch is near-dup-checked
     * against the persisted signature state (NEVER the corpus text) via
-    * `NearDup.incrementalDedupManaged`; admitted rows and their signatures
+    * `NearDup.incrementalDedup`; admitted rows and their signatures
     * land in per-batch partitions `outPath/batch=<id>` and
     * `sigPath/batch=<id>`.
     *
@@ -422,20 +422,18 @@ object StreamingOps {
     * rows with their signatures, read by both writes — beside one
     * eager cut of the verified candidate pairs (see
     * `CorpusPipeline.admitBatch`); the stored signature state is read,
-    * never cached. By default the batch releases that cache (dead
-    * weight once the writes land) at the DATASET level via the handle
-    * `incrementalDedupManaged` returns — removing the CacheManager
-    * entry too, so a long-running stream does not accumulate
-    * InMemoryRelations on the driver. Caches owned by other queries on
-    * the same SparkContext are untouched. `cleanupCaches = false` opts
-    * out (e.g. to inspect the cached batch after a test run).
+    * never cached. Once the writes land (or fail), the batch frees
+    * both through the handle `incrementalDedup` returns — the cache at
+    * the DATASET level, so its CacheManager entry goes too and a
+    * long-running stream does not accumulate InMemoryRelations on the
+    * driver. Caches owned by other queries on the same SparkContext
+    * are untouched.
     */
   def dedupBatch(batch: DataFrame, batchId: Long, idCol: String, textCol: String,
-                 sigPath: String, outPath: String, threshold: Double,
-                 cleanupCaches: Boolean = true): Unit =
-    runAdmissionBatch(batch, batchId, sigPath, outPath, cleanupCaches,
+                 sigPath: String, outPath: String, threshold: Double): Unit =
+    runAdmissionBatch(batch, batchId, sigPath, outPath,
       graft.dedup.NearDup.minhashSignatures(batch.limit(0), idCol, textCol)) {
-      graft.dedup.NearDup.incrementalDedupManaged(_, batch, idCol, textCol,
+      graft.dedup.NearDup.incrementalDedup(_, batch, idCol, textCol,
         threshold = threshold)
     }
 
@@ -447,8 +445,7 @@ object StreamingOps {
     * admission's cache.
     */
   private def runAdmissionBatch(batch: DataFrame, batchId: Long,
-      statePath: String, outPath: String, cleanupCaches: Boolean,
-      empty: => DataFrame)(
+      statePath: String, outPath: String, empty: => DataFrame)(
       admit: DataFrame => (DataFrame, DataFrame, () => Unit)): Unit = {
     val spark    = batch.sparkSession
     val hconf    = spark.sparkContext.hadoopConfiguration
@@ -470,7 +467,7 @@ object StreamingOps {
       try {
         admitted.write.mode("overwrite").parquet(outDir.toString)
         newState.write.mode("overwrite").parquet(stateDir.toString)
-      } finally if (cleanupCaches) release()
+      } finally release()
     }
   }
 
@@ -498,7 +495,7 @@ object StreamingOps {
     * embedding twin of [[dedupBatch]]: the batch is cosine-checked
     * against the persisted int8-quantized state (NEVER the corpus
     * fp32 vectors) via
-    * [[graft.pipelines.CorpusPipeline.incrementalSemanticDedupManaged]];
+    * [[graft.pipelines.CorpusPipeline.incrementalSemanticDedup]];
     * admitted rows land in `outPath/batch=<id>` and their quantized
     * state in `statePath/batch=<id>`.
     *
@@ -508,11 +505,10 @@ object StreamingOps {
   def semanticDedupBatch(batch: DataFrame, batchId: Long, idCol: String,
                          vecCol: String, statePath: String, outPath: String,
                          threshold: Double, bands: Int = 96,
-                         bitsPerBand: Int = 6,
-                         cleanupCaches: Boolean = true): Unit =
-    runAdmissionBatch(batch, batchId, statePath, outPath, cleanupCaches,
+                         bitsPerBand: Int = 6): Unit =
+    runAdmissionBatch(batch, batchId, statePath, outPath,
       graft.similarity.Ann.quantizeInt8(batch.limit(0), idCol, vecCol)) {
-      graft.pipelines.CorpusPipeline.incrementalSemanticDedupManaged(
+      graft.pipelines.CorpusPipeline.incrementalSemanticDedup(
         _, batch, idCol, vecCol, threshold, bands, bitsPerBand)
     }
 
@@ -632,7 +628,10 @@ object StreamingOps {
     *
     * The label table is read and replaced through
     * [[graft.state.StateDirs]], so a crash mid-replace leaves the
-    * pre-batch table recoverable.
+    * pre-batch table recoverable. Each lineage cut is released once a
+    * later cut supersedes it or the table is written, so a long-running
+    * stream holds none of them between batches (a batch that throws
+    * leaves its cuts to the ContextCleaner).
     */
   def ccLabelBatch(batch: DataFrame, aCol: String, bCol: String,
                    labelPath: String, iters: Int = 8): Unit = {
@@ -678,21 +677,25 @@ object StreamingOps {
       // relabel joins, which stay fully distributed.
       val m: DataFrame =
         if (nEdges <= 1000000L) unionFindLabels(g)
-        else graft.graph.GraphOps.connectedComponents(g,
-          math.max(iters,
-            64 - java.lang.Long.numberOfLeadingZeros(nEdges + 2) + 3))
-          .select(col("node").as("__o"), col("component").as("__n"))
-          .filter(col("__o") =!= col("__n"))
-          .transform(graft.state.Checkpoints.stable)
+        else {
+          val cc = graft.graph.GraphOps.connectedComponents(g,
+            math.max(iters,
+              64 - java.lang.Long.numberOfLeadingZeros(nEdges + 2) + 3))
+          graft.state.Checkpoints.stableThenRelease(
+            cc.select(col("node").as("__o"), col("component").as("__n"))
+              .filter(col("__o") =!= col("__n")),
+            () => graft.state.Checkpoints.release(cc))
+        }
+      val (prevL, prevG) = (lmap, g)
       lmap =
-        if (lmap == null) m
-        else lmap
+        if (prevL == null) m
+        else prevL
           .join(m.select(col("__o").as("__n2"), col("__n").as("__nn")),
             col("__n") === col("__n2"), "left")
           .select(col("__o"), coalesce(col("__nn"), col("__n")).as("__n"))
-          .unionByName(m.join(lmap.select("__o"), Seq("__o"), "left_anti"))
+          .unionByName(m.join(prevL.select("__o"), Seq("__o"), "left_anti"))
           .transform(graft.state.Checkpoints.stable)
-      g = g
+      g = prevG
         .join(m.select(col("__o").as("id_a"), col("__n").as("__na")),
           Seq("id_a"), "left")
         .join(m.select(col("__o").as("id_b"), col("__n").as("__nb")),
@@ -701,6 +704,9 @@ object StreamingOps {
           coalesce(col("__nb"), col("id_b")).as("id_b"))
         .filter(col("id_a") =!= col("id_b")).distinct()
         .transform(graft.state.Checkpoints.stable)
+      // the superseded cuts; on the first pass `lmap` IS `m`
+      graft.state.Checkpoints.release(prevG)
+      if (prevL != null) Seq(prevL, m).foreach(graft.state.Checkpoints.release)
       guard += 1
     }
     if (!g.isEmpty)
@@ -724,7 +730,9 @@ object StreamingOps {
       .select(newNodes("node"),
         coalesce(col("__new"), newNodes("node")).as("component"))
     val next = updatedOld.unionByName(newRows).transform(graft.state.Checkpoints.stable)
-    StateDirs.replace(labelPath)(next.write.mode("overwrite").parquet(_))
+    Seq(edges, g, lmap).foreach(graft.state.Checkpoints.release)
+    try StateDirs.replace(labelPath)(next.write.mode("overwrite").parquet(_))
+    finally graft.state.Checkpoints.release(next)
   }
 
   /** [[graft.pipelines.CorpusPipeline.driverUnionFind]] over a SMALL
@@ -809,12 +817,16 @@ object StreamingOps {
         col(wCol).as("weight")))).transform(graft.state.Checkpoints.stable)
     val allEdges = bothDir(normalize(spark.read.parquet(edgePath)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // `reached` is always a cut; `spent` is the other cut the current
+    // frontier reads: the frontier itself on round 0, the previous
+    // round's `reached` after that. Both are released once superseded.
+    var reached, spent: DataFrame = null
     try {
       val seed0 = seeds.select(col(seedCol).as("node")).distinct()
         .withColumn("dist", lit(0L))
       val prior = StateDirs.current(distPath)
         .fold(seed0.limit(0))(spark.read.parquet(_))
-      var reached = prior.unionByName(seed0)
+      reached = prior.unionByName(seed0)
         .groupBy("node").agg(min("dist").as("dist"))
         .transform(graft.state.Checkpoints.stable)
       // frontier 0: new seeds (absent or improved vs prior) plus
@@ -830,9 +842,12 @@ object StreamingOps {
       var frontier = seedFront.unionByName(edgeFront)
         .groupBy("node").agg(min("dist").as("dist"))
         .transform(graft.state.Checkpoints.stable)
-      reached = reached.unionByName(frontier)
+      spent = frontier
+      val reached0 = reached
+      reached = reached0.unionByName(frontier)
         .groupBy("node").agg(min("dist").as("dist"))
         .transform(graft.state.Checkpoints.stable)
+      Seq(newEdges, reached0).foreach(graft.state.Checkpoints.release)
       // early-exit frontier loop: `rounds` is a CAP, convergence is
       // the frontier draining. The frontier stays un-checkpointed —
       // both parents are checkpointed, so its recompute is one cheap
@@ -845,6 +860,8 @@ object StreamingOps {
         val next = reached.unionByName(relaxed)
           .groupBy("node").agg(min("dist").as("dist"))
           .transform(graft.state.Checkpoints.stable)
+        graft.state.Checkpoints.release(spent)
+        spent = reached
         frontier = next.join(reached, Seq("node", "dist"), "left_anti")
         reached = next
         frontierCount = frontier.count()
@@ -863,7 +880,10 @@ object StreamingOps {
             s"($frontierCount nodes still improving); state left " +
             "untouched - rerun the batch with a higher rounds cap")
       StateDirs.replace(distPath)(reached.write.mode("overwrite").parquet(_))
-    } finally allEdges.unpersist(blocking = false)
+    } finally {
+      allEdges.unpersist(blocking = false)
+      Seq(spent, reached).filter(_ != null).foreach(graft.state.Checkpoints.release)
+    }
   }
 
   /** The distance table [[spIncrementBatch]] maintains: (node, dist). */

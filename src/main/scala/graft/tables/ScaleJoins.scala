@@ -52,14 +52,14 @@ object ScaleJoins {
     * Integral and string keys supported (the two
     * `BloomFilter.mightContain*` fast paths).
     *
-    * Returns the joined frame plus a release handle that destroys the
-    * broadcast bit array once the output is materialized — the
-    * [[graft.pipelines.CorpusPipeline.decontaminateBloomManaged]]
+    * Returns the lazy joined frame plus a release handle that
+    * destroys the broadcast bit array once the output is materialized
+    * — the [[graft.pipelines.CorpusPipeline.decontaminateBloom]]
     * idiom; loop callers MUST release.
     */
-  def bloomPrunedJoinManaged(probe: DataFrame, probeKey: String,
-                             build: DataFrame, buildKey: String,
-                             fpp: Double = 0.01): (DataFrame, () => Unit) = {
+  def bloomPrunedJoin(probe: DataFrame, probeKey: String,
+                      build: DataFrame, buildKey: String,
+                      fpp: Double = 0.01): (DataFrame, () => Unit) = {
     require(fpp > 0 && fpp < 1, s"fpp must be in (0,1): $fpp")
     val overlap = probe.columns.toSet.intersect(build.columns.toSet)
     require(overlap.isEmpty,

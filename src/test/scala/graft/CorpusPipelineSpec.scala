@@ -198,11 +198,14 @@ class CorpusPipelineSpec extends SparkSpec {
       (1L, "a b\nboiler\nkeep one"), (2L, "boiler\nc d"),
       (3L, "boiler"), (4L, "solo"))
       .toDF("doc_id", "text")
-    val out = graft.pipelines.CorpusPipeline
+    val before = persistedIds()
+    val (cleaned, release) = graft.pipelines.CorpusPipeline
       .dropBoilerplateLines(docs, "doc_id", "text", maxDocs = 2)
-      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getString(1)))
+    val cut = graft.state.Checkpoints.stableThenRelease(cleaned, release)
+    val out = cut.orderBy("doc_id").collect().map(r => (r.getLong(0), r.getString(1)))
     assert(out.toSeq === Seq(
       (1L, "a b\nkeep one"), (2L, "c d"), (3L, ""), (4L, "solo")))
+    assert(persistedSince(before, cut).isEmpty, "the lines cache outlived the release")
   }
 
   test("dropBoilerplateLines: blank separators survive even when corpus-" +
@@ -211,7 +214,7 @@ class CorpusPipelineSpec extends SparkSpec {
     val docs = Seq(
       (1L, "a\n\nboiler"), (2L, "b\n\nboiler"), (3L, "c\n\nboiler"))
       .toDF("doc_id", "text")
-    val out = graft.pipelines.CorpusPipeline
+    val (out, release) = graft.pipelines.CorpusPipeline
       .dropBoilerplateLines(docs, "doc_id", "text", maxDocs = 2)
     val got = out.orderBy("doc_id").collect().map(r => (r.getLong(0), r.getString(1)))
     assert(got.toSeq === Seq((1L, "a\n"), (2L, "b\n"), (3L, "c\n")),
@@ -219,6 +222,7 @@ class CorpusPipelineSpec extends SparkSpec {
     val plan = out.queryExecution.executedPlan.toString()
     assert("InMemoryTableScan".r.findAllIn(plan).size >= 2,
       s"frequency count and rebuild must share the cached exploded scan:\n$plan")
+    release()
   }
 
   test("dedupParagraphs: keep-first semantics — cross-doc dups removed, " +
@@ -232,9 +236,11 @@ class CorpusPipelineSpec extends SparkSpec {
       (4L, "body a\nbody a"),
       (5L, ""),
       (6L, "   \nsolo")).toDF("doc_id", "text")
-    val out = graft.pipelines.CorpusPipeline
+    val before = persistedIds()
+    val (deduped, release) = graft.pipelines.CorpusPipeline
       .dedupParagraphs(docs, "doc_id", "text")
-      .orderBy("doc_id").collect()
+    val cut = graft.state.Checkpoints.stableThenRelease(deduped, release)
+    val out = cut.orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     assert(out.toSeq === Seq(
       (1L, "intro one\ncommon footer\nbody a", 0L),
@@ -243,6 +249,7 @@ class CorpusPipelineSpec extends SparkSpec {
       (4L, "", 2L),
       (5L, "", 0L),
       (6L, "   \nsolo", 0L)))
+    assert(persistedSince(before, cut).isEmpty, "the paragraphs cache outlived the release")
   }
 
   test("dedupParagraphs == naive row_number-per-paragraph window on a " +
@@ -257,10 +264,11 @@ class CorpusPipelineSpec extends SparkSpec {
       val n = rnd.nextInt(5) + 1
       (i, (0 until n).map(_ => pool(rnd.nextInt(25))).mkString("\n"))
     }.toDF("doc_id", "text")
-    val got = graft.pipelines.CorpusPipeline
+    val (deduped, release) = graft.pipelines.CorpusPipeline
       .dedupParagraphs(docs, "doc_id", "text")
-      .select("doc_id", "text", "n_removed_paragraphs")
+    val got = try deduped.select("doc_id", "text", "n_removed_paragraphs")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    finally release()
     // naive reference: row_number over each paragraph's occurrences
     // (the hot-partition shape the operator deliberately avoids)
     val paras = docs.select(col("doc_id"),
@@ -283,26 +291,28 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(got === expect)
     // the operator itself must not plan ANY window (min-struct
     // aggregation instead of per-paragraph row_number)
-    val (out2, cache) = graft.pipelines.CorpusPipeline
-      .dedupParagraphsManaged(docs, "doc_id", "text")
+    val (out2, release2) = graft.pipelines.CorpusPipeline
+      .dedupParagraphs(docs, "doc_id", "text")
     val wins = out2.queryExecution.optimizedPlan.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
     }
     assert(wins.isEmpty, "paragraph dedup must be window-free")
-    cache.unpersist(blocking = false)
+    release2()
   }
 
   test("dedupParagraphs is idempotent: a second pass removes nothing") {
     import spark.implicits._
     val docs = Seq(
       (1L, "x\ny\nx"), (2L, "y\nz"), (3L, "x\nz\nw")).toDF("doc_id", "text")
-    val once = graft.pipelines.CorpusPipeline
-      .dedupParagraphs(docs, "doc_id", "text").select("doc_id", "text")
-    val twice = graft.pipelines.CorpusPipeline
+    val (first, releaseFirst) = graft.pipelines.CorpusPipeline
+      .dedupParagraphs(docs, "doc_id", "text")
+    val once = first.select("doc_id", "text")
+    val (twice, releaseTwice) = graft.pipelines.CorpusPipeline
       .dedupParagraphs(once, "doc_id", "text")
     assert(twice.filter(col("n_removed_paragraphs") =!= 0L).count() === 0)
     assert(twice.select("doc_id", "text").collect().toSet ===
       once.collect().toSet)
+    Seq(releaseTwice, releaseFirst).foreach(_())
   }
 
   test("decontaminate: shared-trigram counts; clean docs absent") {
@@ -448,9 +458,12 @@ class CorpusPipelineSpec extends SparkSpec {
     val exact = CorpusPipeline.decontaminate(docs, "doc_id", "text",
         bench, "btext", n = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val bloom = CorpusPipeline.decontaminateBloom(docs, "doc_id", "text",
+    val before = persistedIds()
+    val (flagged, release) = CorpusPipeline.decontaminateBloom(docs, "doc_id", "text",
         bench, "btext", n = 3, fpp = 1e-6)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val cut = graft.state.Checkpoints.stableThenRelease(flagged, release)
+    assert(persistedSince(before, cut).isEmpty, "the reference-gram cache outlived the call")
+    val bloom = cut.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // every exactly-contaminated doc present with at least its true count
     exact.foreach { case (id, c) =>
       assert(bloom.contains(id) && bloom(id) >= c, s"doc $id lost: $c vs ${bloom.get(id)}")
@@ -533,9 +546,11 @@ class CorpusPipelineSpec extends SparkSpec {
     val spans = CorpusPipeline.duplicateSpans(docs, "doc_id", "text",
         windowTokens = w, minDocs = 2)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val fracs = CorpusPipeline.duplicateSpanFraction(docs, "doc_id", "text",
+    val (fracOut, release) = CorpusPipeline.duplicateSpanFraction(docs, "doc_id", "text",
         windowTokens = w, minDocs = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+    val fracs = try fracOut.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+    finally release()
     assert(spans.nonEmpty, "tiny vocab must generate cross-doc duplicates")
     spans.foreach { case (s, nd, no) =>
       assert(nd >= 2 && no >= nd, s"span '$s': n_docs=$nd n_occ=$no")
@@ -558,9 +573,12 @@ class CorpusPipelineSpec extends SparkSpec {
       (2L, "a b c d"),     // 1 window, dup -> fraction 1.0
       (3L, "p q r s t"),   // 2 windows, none dup -> 0.0
       (4L, "a b")).toDF("doc_id", "text")
-    val out = CorpusPipeline.duplicateSpanFraction(docs, "doc_id", "text",
+    val before = persistedIds()
+    val (fracs, release) = CorpusPipeline.duplicateSpanFraction(docs, "doc_id", "text",
         windowTokens = 4, minDocs = 2)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
+    val cut = graft.state.Checkpoints.stableThenRelease(fracs, release)
+    assert(persistedSince(before, cut).isEmpty, "the span cache outlived the release")
+    val out = cut.collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
         r.getDouble(3)))).toMap
     assert(out(1L) === ((2L, 1L, 0.5)))
     assert(out(2L) === ((1L, 1L, 1.0)))
@@ -671,7 +689,7 @@ class CorpusPipelineSpec extends SparkSpec {
     ).reduce(_ unionByName _))
     val state = graft.similarity.Ann.quantizeInt8(corpus, "vec_id", "embedding")
     val (admitted, newState, release) =
-      CorpusPipeline.incrementalSemanticDedupManaged(
+      CorpusPipeline.incrementalSemanticDedup(
         state, batch, "vec_id", "embedding", threshold = 0.45)
     val admittedRows = admitted.select(col("vec_id"),
         coalesce(size(col("embedding")), lit(-1)).as("n")).as[(Long, Int)]
@@ -799,8 +817,9 @@ class CorpusPipelineSpec extends SparkSpec {
       (31L, Array.empty[Float]),
       (31L, v(5 -> 1.0))
     ).toDF("vec_id", "embedding")
+    val before = persistedIds()
     val (admitted, newState, release) =
-      CorpusPipeline.incrementalSemanticDedupManaged(
+      CorpusPipeline.incrementalSemanticDedup(
         state, batch, "vec_id", "embedding", threshold = 0.9)
     // the empty row of id 31 is admitted unconditionally AND through
     // its kept vector sibling's id, as the per-stage form did
@@ -809,6 +828,8 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(newState.select("vec_id").as[Long].collect().sorted.toSeq ===
       Seq(2L, 3L, 11L, 23L, 31L))
     release()
+    assert(persistedSince(before).isEmpty,
+      "the handle must free the batch cache and the pair cut")
     assert(state.storageLevel !=
       org.apache.spark.storage.StorageLevel.NONE,
       "release must not clobber a caller-owned corpus-state cache")

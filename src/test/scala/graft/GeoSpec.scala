@@ -171,9 +171,17 @@ class GeoSpec extends SparkSpec {
       .map { case (n, w, s0, e) => (n, w, s0, e.map(Long.box).orNull) }
       .toDF("zone", "wkt", "start_unix", "end_unix")
       .withColumn("end_unix", col("end_unix").cast("long"))
-    val grid = Geo.gridRevGeoZone(pts, zonesDf, outCol = "hood", idCol = "id",
-      latCol = "lat", longCol = "long")
+    // with codegen's interpreted fallbacks off (whole-stage and the
+    // projection factory the UDF encoders use), generated code that
+    // janino rejects fails the query instead of running silently slower
+    val noFallback = Seq("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val prior = noFallback.map { case (k, _) => k -> spark.conf.getOption(k) }
+    noFallback.foreach { case (k, v) => spark.conf.set(k, v) }
+    val grid = try Geo.gridRevGeoZone(pts, zonesDf, outCol = "hood", idCol = "id",
+        latCol = "lat", longCol = "long")
       .select("id", "hood").as[(Long, Option[String])].collect().toMap
+    finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
     val bcast = Geo.revGeoZone(pts, zones, outCol = "hood",
       latCol = "lat", longCol = "long")
       .select("id", "hood").as[(Long, Option[String])].collect().toMap

@@ -242,7 +242,8 @@ class NearDupSpec extends SparkSpec {
       (14L, "yet another fully distinct new document about spark plans"),
       (15L, null.asInstanceOf[String]))                // NULL text -> admitted, never vanishes
       .toDF("doc_id", "text")
-    val (admitted, newSigs) = NearDup.incrementalDedup(
+    val before = persistedIds()
+    val (admitted, newSigs, release) = NearDup.incrementalDedup(
       corpusSigs, incoming, "doc_id", "text", threshold = 0.7)
     val ids = admitted.select("doc_id").as[Long].collect().toSet
     assert(ids === Set(11L, 13L, 14L, 15L))
@@ -252,9 +253,12 @@ class NearDupSpec extends SparkSpec {
     // state admits nothing (13/15 have no signature and would re-admit
     // -- production keys short rows by exact digest; exclude them here)
     val grown = corpusSigs.unionByName(newSigs)
-    val (again, _) = NearDup.incrementalDedup(
+    val (again, _, releaseAgain) = NearDup.incrementalDedup(
       grown, incoming.filter(!$"doc_id".isin(13L, 15L)), "doc_id", "text", threshold = 0.7)
     assert(again.count() === 0)
+    Seq(releaseAgain, release).foreach(_())
+    assert(persistedSince(before).isEmpty,
+      "the handles must free the batch caches and the pair cuts")
 
     // edge inputs against a plain-Scala replica of the admission rule:
     // a candidate shares a 4-perm band slice and verifies on signature
@@ -304,7 +308,7 @@ class NearDupSpec extends SparkSpec {
         (if (rejected(id)) Nil else Seq(id -> text))
       else Seq(id -> text) ++ (if (bs.contains(id) && !rejected(id)) Seq(id -> text) else Nil)
     }
-    val (admitted2, newSigs2) = NearDup.incrementalDedup(
+    val (admitted2, newSigs2, release2) = NearDup.incrementalDedup(
       corpusSigs = NearDup.minhashSignatures(corpus2, "doc_id", "text"),
       batch2, "doc_id", "text", threshold = 0.7)
     def sorted(rows: Seq[(Long, String)]) = rows.sortBy { case (i, t) => (i, String.valueOf(t)) }
@@ -313,6 +317,7 @@ class NearDupSpec extends SparkSpec {
       Seq(3L, 31L, 40L, 50L, 50L, 50L, 51L, 52L))
     assert(newSigs2.select("doc_id").as[Long].collect().sorted.toSeq ===
       bs.keySet.filterNot(rejected).toSeq.sorted)
+    release2()
   }
 
   test("one-shot incrementalDedup / incrementalSemanticDedup return " +
@@ -324,17 +329,23 @@ class NearDupSpec extends SparkSpec {
     val docs = Seq((1L, "alpha beta gamma delta epsilon"), (2L, "alpha beta gamma delta zeta"))
       .toDF("doc_id", "text")
     val vecs = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f))).toDF("vec_id", "embedding")
+    import graft.state.Checkpoints.stable
     val flag = graft.state.Checkpoints.ReliableFlag
     val dir = tempDir("oneshot_ckpt")
     org.apache.spark.SpecSparkInternals.withCheckpointDir(spark.sparkContext, dir.toString) {
       spark.conf.set(flag, "true")
       try {
-        val (admitted, newSigs) = NearDup.incrementalDedup(
+        val (lazyAdmitted, lazySigs, release) = NearDup.incrementalDedup(
           NearDup.minhashSignatures(docs.limit(0), "doc_id", "text"), docs, "doc_id", "text")
+        val (admitted, newSigs) =
+          try (stable(lazyAdmitted), stable(lazySigs)) finally release()
         assert(cut(admitted).isCheckpointed && cut(newSigs).isCheckpointed)
-        val (semAdmitted, semState) = graft.pipelines.CorpusPipeline.incrementalSemanticDedup(
-          graft.similarity.Ann.quantizeInt8(vecs.limit(0), "vec_id", "embedding"),
-          vecs, "vec_id", "embedding", threshold = 0.9)
+        val (lazySemAdmitted, lazySemState, semRelease) =
+          graft.pipelines.CorpusPipeline.incrementalSemanticDedup(
+            graft.similarity.Ann.quantizeInt8(vecs.limit(0), "vec_id", "embedding"),
+            vecs, "vec_id", "embedding", threshold = 0.9)
+        val (semAdmitted, semState) =
+          try (stable(lazySemAdmitted), stable(lazySemState)) finally semRelease()
         assert(cut(semAdmitted).isCheckpointed && cut(semState).isCheckpointed)
         assert(admitted.count() === 2 && semAdmitted.count() === 2)
       } finally spark.conf.unset(flag)

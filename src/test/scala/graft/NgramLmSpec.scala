@@ -157,8 +157,11 @@ class NgramLmSpec extends SparkSpec {
       (i, g, txt)
     }.toDF("doc_id", "lang", "text")
     val lm = NgramLm.trainBigramLm(docs, "text")
-    val out = graft.pipelines.CorpusPipeline.perplexityBuckets(
+    val before = persistedIds()
+    val (bucketed, release) = graft.pipelines.CorpusPipeline.perplexityBuckets(
       docs, "doc_id", "text", "lang", lm)
+    val out = graft.state.Checkpoints.stableThenRelease(bucketed, release)
+    assert(persistedSince(before, out).isEmpty, "the score cache outlived the release")
     val scored = NgramLm.scorePerplexity(docs, "doc_id", "text", lm)
       .join(docs.select("doc_id", "lang"), "doc_id")
       .select("doc_id", "lang", "ppl")
@@ -195,8 +198,9 @@ class NgramLmSpec extends SparkSpec {
       (5L, "en", "zq xv kj pw mm nn"),
       (6L, "en", "aa bb cc dd ee ff gg")).toDF("doc_id", "lang", "text")
     val lm = NgramLm.trainBigramLm(docs, "text")
-    val out = bucketRows(graft.pipelines.CorpusPipeline.perplexityBuckets(
-      docs, "doc_id", "text", "lang", lm))
+    val (bucketed, release) = graft.pipelines.CorpusPipeline.perplexityBuckets(
+      docs, "doc_id", "text", "lang", lm)
+    val out = try bucketRows(bucketed) finally release()
     val scored = NgramLm.scorePerplexity(docs, "doc_id", "text", lm)
       .select("doc_id", "ppl").as[(Long, Double)].collect()
       .map { case (id, p) => (id, Some("en"): Option[String], p) }
@@ -214,7 +218,7 @@ class NgramLmSpec extends SparkSpec {
     val docs = Seq((1L, "en", "a b c"), (2L, "de", "d e f"))
       .toDF("doc_id", "lang", "text")
     val lm = NgramLm.trainBigramLm(docs, "text")
-    val (out, release) = graft.pipelines.CorpusPipeline.perplexityBucketsManaged(
+    val (out, release) = graft.pipelines.CorpusPipeline.perplexityBuckets(
       docs, "doc_id", "text", "lang", lm)
     val wins = out.queryExecution.optimizedPlan.collect { case w: LWindow => w }
     assert(wins.nonEmpty)

@@ -105,11 +105,11 @@ class PlanShapeSpec extends SparkSpec {
     "the shape is asserted on the operator)") {
     import spark.implicits._
     val docs = Seq((1L, "a\nb"), (2L, "a\nc"), (3L, "a\nd")).toDF("doc_id", "text")
-    val (cleaned, linesCache) = graft.pipelines.CorpusPipeline
-      .dropBoilerplateLinesManaged(docs, "doc_id", "text", maxDocs = 2)
+    val (cleaned, release) = graft.pipelines.CorpusPipeline
+      .dropBoilerplateLines(docs, "doc_id", "text", maxDocs = 2)
     val p = cleaned.queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"), p)
-    linesCache.unpersist(blocking = false)
+    release()
   }
 
   test("q93 LM scoring: per-doc aggregate is partial, no window anywhere, " +
@@ -260,7 +260,7 @@ class PlanShapeSpec extends SparkSpec {
     }.toDF("rid", "pk").write.mode("overwrite").parquet(probeDir)
     val probe = spark.read.parquet(probeDir)
     val build = (0 to 60).map(k => (k.toLong * 3, s"tag$k")).toDF("bk", "tag")
-    val (out, release) = ScaleJoins.bloomPrunedJoinManaged(
+    val (out, release) = ScaleJoins.bloomPrunedJoin(
       probe, "pk", build, "bk")
     try {
       val got = out.select("rid", "bk").as[(Long, Long)].collect().toSet
@@ -275,12 +275,12 @@ class PlanShapeSpec extends SparkSpec {
     } finally release()
 
     intercept[IllegalArgumentException] {
-      ScaleJoins.bloomPrunedJoinManaged(
+      ScaleJoins.bloomPrunedJoin(
         probe, "pk", build.withColumnRenamed("bk", "pk"), "pk")
     }
     intercept[IllegalArgumentException] {
       val b2 = build.withColumn("bk", $"bk".cast("double"))
-      ScaleJoins.bloomPrunedJoinManaged(probe, "pk", b2, "bk")
+      ScaleJoins.bloomPrunedJoin(probe, "pk", b2, "bk")
     }
   }
 
@@ -289,12 +289,13 @@ class PlanShapeSpec extends SparkSpec {
     val probe = Seq((1L, "a"), (2L, "b"), (3L, null), (4L, "zz"))
       .toDF("rid", "pk")
     val build = Seq(("a", 10), ("zz", 20)).toDF("bk", "v")
-    val (out, release) = ScaleJoins.bloomPrunedJoinManaged(
+    val before = persistedIds()
+    val (joined, release) = ScaleJoins.bloomPrunedJoin(
       probe, "pk", build, "bk")
-    try {
-      assert(out.select("rid", "v").as[(Long, Int)].collect().toSet ===
-        Set((1L, 10), (4L, 20)))
-    } finally release()
+    val out = graft.state.Checkpoints.stableThenRelease(joined, release)
+    assert(persistedSince(before, out).isEmpty, "the build-key cache outlived the call")
+    assert(out.select("rid", "v").as[(Long, Int)].collect().toSet ===
+      Set((1L, 10), (4L, 20)))
   }
 
   test("q163 char entropy: map-only — no exchange at all") {

@@ -24,6 +24,9 @@ trait SparkSpec extends AnyFunSuite
     tmpRoots += p
     p
   }
+  /** The ids of the RDDs persisted now. */
+  def persistedIds(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   /** The ids of the RDDs persisted now that were not in `before`,
     * less the blocks of the lineage cuts in `handedBack` (the frames a
     * call returns, which its caller owns).

@@ -24,13 +24,16 @@ class StreamingSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(cur))
   }
 
-  /** Runs one admission-gate call and asserts it left no persisted RDD
-    * behind (the gates return nothing, so they own every cut they make).
+  /** Runs one call that returns no frame (an admission gate, a batch
+    * that replaces its state) and asserts it left no persisted RDD
+    * behind: such a call owns every cut it makes. Returns the body's
+    * result (e.g. an intercepted exception).
     */
-  private def assertNoCutLeft(body: => Unit): Unit = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    body
+  private def assertNoCutLeft[T](body: => T): T = {
+    val before = persistedIds()
+    val out = body
     assert(persistedSince(before).isEmpty, "the call left a cut persisted")
+    out
   }
 
   /** The two crash windows of a verdict-state family's per-batch
@@ -504,9 +507,9 @@ class StreamingSpec extends SparkSpec {
     // state (doc 10 would reject itself); it must re-decide and admit.
     val b1 = Seq((10L, "entirely novel second era content right here"))
       .toDF("doc_id", "text")
-    val (_, sigs1) = graft.dedup.NearDup.incrementalDedup(
+    val (_, sigs1, release1) = graft.dedup.NearDup.incrementalDedup(
       spark.read.parquet(sigP).drop("batch"), b1, "doc_id", "text", threshold = 0.7)
-    sigs1.write.mode("overwrite").parquet(sigP + "/batch=1")
+    try sigs1.write.mode("overwrite").parquet(sigP + "/batch=1") finally release1()
     StreamingOps.dedupBatch(b1, 1L, "doc_id", "text", sigP, outP, 0.7)
     val ids = spark.read.parquet(outP).select("doc_id").as[Long].collect().toSet
     assert(ids === Set(1L, 2L, 10L), s"half-committed retry must admit doc 10, got $ids")
@@ -566,9 +569,9 @@ class StreamingSpec extends SparkSpec {
     // retry must NOT treat its own batch=1 state as corpus (vec 10
     // would cosine-reject itself); it must re-decide and admit.
     val b1 = Seq((10L, Array(-0.7f, 0.7f))).toDF("vec_id", "embedding")
-    val (_, state1) = graft.pipelines.CorpusPipeline.incrementalSemanticDedup(
+    val (_, state1, release1) = graft.pipelines.CorpusPipeline.incrementalSemanticDedup(
       spark.read.parquet(stP).drop("batch"), b1, "vec_id", "embedding", 0.85)
-    state1.write.mode("overwrite").parquet(stP + "/batch=1")
+    try state1.write.mode("overwrite").parquet(stP + "/batch=1") finally release1()
     StreamingOps.semanticDedupBatch(b1, 1L, "vec_id", "embedding", stP, outP, 0.85)
     val ids = spark.read.parquet(outP).select("vec_id").as[Long].collect().toSet
     assert(ids === Set(1L, 2L, 10L), s"half-committed retry must admit vec 10, got $ids")
@@ -749,7 +752,7 @@ class StreamingSpec extends SparkSpec {
     graft.streaming.StreamingOps.ccLabelBatch(b0, "a", "b", dir)
     assert(labels() === Map(10L -> 10L, 20L -> 10L, 30L -> 30L,
       40L -> 30L))
-    graft.streaming.StreamingOps.ccLabelBatch(b1, "a", "b", dir)
+    assertNoCutLeft(graft.streaming.StreamingOps.ccLabelBatch(b1, "a", "b", dir))
     assert(labels() === Map(10L -> 10L, 20L -> 10L, 30L -> 30L,
       40L -> 30L, 50L -> 30L, 60L -> 60L, 70L -> 60L))
     // batch 2 is a retry after a crash mid-replace of the label table:
@@ -791,8 +794,8 @@ class StreamingSpec extends SparkSpec {
     // batch 1 is a retry after a crash mid-replace of the distance
     // table: it must relax against the .old copy, so no distance is lost
     crashMidReplace(dp)
-    graft.streaming.StreamingOps.spIncrementBatch(b1, 1L, "a", "b", "w",
-      seeds, "node", ep, dp, rounds = 6)
+    assertNoCutLeft(graft.streaming.StreamingOps.spIncrementBatch(b1, 1L, "a", "b", "w",
+      seeds, "node", ep, dp, rounds = 6))
     val expected = graft.graph.GraphOps.weightedDistances(
       b0.unionByName(b1).select(col("a").as("id_a"), col("b").as("id_b"),
         col("w").as("weight")),
@@ -826,10 +829,10 @@ class StreamingSpec extends SparkSpec {
     // instead of freezing too-high distances into the state
     val b1 = Seq((3L, 4L, 1L), (4L, 5L, 1L), (5L, 6L, 1L), (6L, 7L, 1L))
       .toDF("a", "b", "w")
-    val ex = intercept[IllegalStateException] {
+    val ex = assertNoCutLeft(intercept[IllegalStateException] {
       graft.streaming.StreamingOps.spIncrementBatch(b1, 1L, "a", "b", "w",
         seeds, "node", ep, dp, rounds = 1)
-    }
+    })
     assert(ex.getMessage.contains("frontier not drained"))
     assert(dists() === before, "failed batch must not touch state")
     // rerun with an adequate cap: edge admission was idempotent, the
