@@ -120,15 +120,17 @@ object NearDup {
     // element instead of k interpreted passes re-hashing the string
     graft.expressions.SimilarityExpressions.minhash_sig(shingles, numPerms)
 
-  /** Banded LSH key rows: one row per (band, bandHash) per doc.
-    * numPerms must be divisible by bands; r = numPerms/bands rows per
-    * band. Docs sharing any band hash are candidates.
+  /** Banded LSH key rows `(idCol, sigCol, band, band_hash)`: one row
+    * per (band, bandHash) per doc, beside the doc's signature (a
+    * caller that reads only the keys has it pruned). numPerms must be
+    * divisible by bands; r = numPerms/bands rows per band. Docs
+    * sharing any band hash are candidates.
     */
   def lshBands(df: DataFrame, idCol: String, sigCol: String,
                bands: Int, numPerms: Int): DataFrame = {
     val r = numPerms / bands
     require(bands * r == numPerms, s"bands=$bands must divide numPerms=$numPerms")
-    df.select(col(idCol), posexplode(
+    df.select(col(idCol), col(sigCol), posexplode(
         graft.expressions.ExprOps.bind(col(sigCol)) { sig =>
           transform(sequence(lit(0), lit(bands - 1)),
             b => xxhash64(slice(sig, b * r + 1, lit(r)), b))
@@ -583,18 +585,21 @@ object NearDup {
     * the corpus state, release handle). Both outputs are lazy. The
     * handle unpersists what this call CREATED — the batch frame (rows
     * plus signatures), at the Dataset level so its CacheManager entry
-    * goes too, and the cut of verified candidate pairs — so a
-    * long-running stream or batch loop does not accumulate
+    * goes too, and the cut of verified pairs the over-the-limit branch
+    * makes — so a long-running stream or batch loop does not accumulate
     * InMemoryRelations on the driver. The corpus signatures are never
     * cached here, so a caller-owned corpus cache is never touched.
     * Call it only AFTER both outputs are materialized (written or cut,
     * e.g. with [[graft.state.Checkpoints.stableThenRelease]]):
     * releasing earlier makes the next action recompute the batch.
     *
-    * Materialization strategy: one batch cache, one EAGER cut of the
-    * verified candidate pairs (batch vs corpus and batch vs batch,
-    * from ONE band join), the rejected ids computed on the driver for
-    * small pair sets, and one narrow job per output — see
+    * Materialization strategy: one batch cache and ONE pass over the
+    * corpus signatures, whose band rows keep their signature, meet two
+    * batch-sized broadcasts (the batch's band keys, and its signatures
+    * by id) and are verified in the same shuffle-free pipeline (batch
+    * vs corpus and batch vs batch); for small verified pair sets the
+    * rejected ids are computed on the driver and each output is one
+    * narrow job filtered by an id predicate — see
     * [[graft.pipelines.CorpusPipeline.admitBatch]]. On a micro-batch
     * the cost is driver time between jobs, so the job count is what
     * this shape minimizes. Every frame with several consumers is

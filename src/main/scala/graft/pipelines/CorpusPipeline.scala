@@ -48,8 +48,9 @@ object CorpusPipeline {
     * (label(x) := label(label(x))), so convergence is O(log diameter)
     * rounds — a chain of 10^6 duplicates resolves in ~20 rounds, not
     * 10^6. Every round localCheckpoints the label frame (truncating
-    * lineage — mandatory for iterative Spark) and counts changed
-    * labels; the loop exits when nothing changed. `maxIter` is a
+    * lineage — mandatory for iterative Spark), counts changed labels
+    * and releases the previous round's cut; the loop exits when
+    * nothing changed, and the last cut is the caller's. `maxIter` is a
     * runaway backstop, logged loudly if hit.
     *
     * `nodes`: one column `node`; `pairs`: columns `id_a`, `id_b`.
@@ -158,6 +159,9 @@ object CorpusPipeline {
         .transform(graft.state.Checkpoints.stable)
       // labels only ever decrease, so "changed" = any strict decrease
       changed = jumped.filter(col("label") < col("old_label")).count()
+      // the round's cut and count are done: the superseded labels have
+      // no reader left (the last round's labels are the caller's)
+      graft.state.Checkpoints.release(labels)
       labels = jumped.select("node", "label")
       i += 1
     }
@@ -386,8 +390,9 @@ object CorpusPipeline {
     *
     * Scale shape is the MinHash path's, through the same kernel
     * ([[admitBatch]]): candidates come from banded hyperplane LSH over
-    * the codes — only (bandKey, id) rows shuffle, codes are fetched per
-    * distinct candidate; the corpus contributes O(|state|), not
+    * the codes — the state's band rows carry their codes past the
+    * batch's broadcast band keys and are verified in the same pass, so
+    * nothing shuffles; the corpus contributes O(|state|), not
     * O(corpus text/fp32), and is never cached, so the release handle
     * never touches a caller-owned corpus cache. Rows with a
     * NULL/empty embedding cannot be near-dups — admitted
@@ -406,7 +411,7 @@ object CorpusPipeline {
       eligible = col(vecCol).isNotNull && size(col(vecCol)) > 0,
       state = Seq("scale" -> codes.getField("scale"), "qvec" -> codes.getField("qvec")),
       payload = "qvec",
-      bandRows = df => df.select(col("__id"),
+      bandRows = df => df.select(col("__id"), col("__p"),
         explode(graft.expressions.SimilarityExpressions.hyperplane_bands(
           col("__p"), bands, bitsPerBand, seed)).as("__band")),
       verify = (a, b) => NearDup.cosine(a, b) >= threshold,
@@ -423,37 +428,43 @@ object CorpusPipeline {
     * be near-dups and are admitted unconditionally), its `state`
     * columns computed per eligible row (`payload` names the one that
     * is banded and verified; the corpus carries the same columns),
-    * `bandRows` mapping an `(__id, __p)` frame to `(__id, key...)`
-    * band rows, and the pairwise `verify` predicate over two payloads
-    * (the batch row's first).
+    * `bandRows` mapping an `(__id, __p)` frame to `(__id, __p, key...)`
+    * band rows (each band row keeps its payload), and the pairwise
+    * `verify` predicate over two payloads (the batch row's first).
     *
-    * Materialization strategy — one cache and one cut per call, since
-    * on a micro-batch the driver time between jobs, not the work, is
-    * the cost:
+    * Materialization strategy — one cache and one corpus pass per
+    * call, since on a micro-batch the driver time between jobs, not the
+    * work, is the cost:
     *  - the batch (incoming rows wrapped as one struct, plus the state
     *    columns) is persisted once and materialized by the job that
-    *    collects the ids of its ineligible rows; both output writes
-    *    read it, so the incoming source is scanned exactly once;
-    *  - the corpus state is read, never cached: it is scanned by the
-    *    band join and by the payload join of the one pair job;
-    *  - ONE band join of the batch's band keys against the union of the
-    *    corpus's and the batch's own band keys yields every candidate,
-    *    tagged corpus or self (self pairs keep a < b); candidates are
-    *    distinct'ed, verified in one pass and cut EAGERLY
-    *    (Checkpoints.stable). Collision and verification are facts about
-    *    a pair alone, so dropping the self pairs that touch a
+    *    collects the ids of its ineligible rows; every later read of
+    *    the batch comes from that cache;
+    *  - the corpus state is read once and never cached: its band rows,
+    *    with the batch's own band rows (self, a < b) beside them, meet
+    *    two batch-sized broadcasts, the batch's band keys and the
+    *    batch's payloads by id, and `verify` runs in that same
+    *    pipeline, so the pair plan holds no shuffle. A pair colliding
+    *    in several bands is verified once per band; the payload stays
+    *    out of the band-key broadcast, which would copy it once per
+    *    band. A corpus row with a NULL id matches nothing;
+    *  - `limit(smallEdgeLimit + 1)` collects the verified rows directly
+    *    and the driver removes duplicate pairs, so up to the limit
+    *    there is no cut: the rejected ids (corpus matches plus the
+    *    non-minimum members of the components the corpus survivors'
+    *    self pairs form) come from union-find on the driver, and each
+    *    write is one narrow job over the batch cache filtered by an
+    *    id predicate in the id column's own type. The gate counts rows
+    *    before that dedup, so a truncated sample always takes the
+    *    distributed branch: over the limit, or for an id type without
+    *    a driver ordering, the distinct pairs are cut eagerly
+    *    (Checkpoints.stable) for the several consumers of the
+    *    distributed fixpoint. Collision and verification are facts
+    *    about a pair alone, so dropping the self pairs that touch a
     *    corpus-matched row afterwards leaves exactly the self pairs of
-    *    the corpus survivors;
-    *  - the cut feeds the [[minLabelComponents]] size gate directly: up
-    *    to `smallEdgeLimit` verified pairs, the rejected ids (corpus
-    *    matches plus non-minimum component members) are computed by
-    *    union-find on the driver and each write is one narrow job
-    *    against a broadcast local relation; over the limit (or for an
-    *    id type without a driver ordering) the distributed fixpoint
-    *    runs over the cut instead. The choice depends only on the pair
-    *    count.
+    *    the corpus survivors.
     *
-    * The returned handle frees both, the batch cache and the pair cut.
+    * The returned handle frees the batch cache and, if the distributed
+    * branch ran, its pair cut.
     *
     * Output contract (the q75/q92 oracles and the specs pin it): an
     * eligible row is admitted iff its id is not rejected, and an
@@ -471,15 +482,10 @@ object CorpusPipeline {
       bandRows: DataFrame => DataFrame, verify: (Column, Column) => Column,
       maxIter: Int = 50,
       smallEdgeLimit: Long = 100000L): (DataFrame, DataFrame, () => Unit) = {
-    val spark = incoming.sparkSession
     val batch = incoming.select(
         Seq(struct(col("*")).as("__in"), col(idCol), eligible.as("__elig")) ++
           state.map { case (n, c) => when(eligible, c).as(n) }: _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val idType = batch.schema(idCol).dataType
-    def local(ids: Seq[Any], dt: DataType): DataFrame = broadcast(spark.createDataFrame(
-      java.util.Arrays.asList(ids.map(org.apache.spark.sql.Row(_)): _*),
-      StructType(Seq(StructField("__r", dt)))))
     // the one job that materializes the batch cache (a scan builds
     // whole cached partitions); the ids of its ineligible rows are
     // needed only for the rare id shared with an eligible row
@@ -487,62 +493,73 @@ object CorpusPipeline {
       .collect().map(_.get(0)).filter(_ != null).distinct
     val shared =
       if (ineligible.isEmpty) Array.empty[Any]
-      else batch.filter(col("__elig"))
-        .join(local(ineligible, idType), col(idCol) === col("__r"), "left_semi")
+      else batch.filter(col("__elig") && isIn(col(idCol), ineligible))
         .select(col(idCol)).collect().map(_.get(0)).distinct
 
     val mine = batch.filter(col("__elig"))
       .select(col(idCol).as("__id"), col(payload).as("__p"))
-    val theirs = corpus.select(col(idCol).as("__id"), col(payload).as("__p"))
     val probe = bandRows(mine)
-    val keys = probe.columns.filterNot(_ == "__id").toSeq
-    val pairs = probe.withColumnRenamed("__id", "__a")
-      .join(bandRows(theirs).withColumn("__self", lit(false))
-          .unionByName(probe.withColumn("__self", lit(true)))
-          .withColumnRenamed("__id", "__b"), keys)
+    val keys = probe.columns.filterNot(Set("__id", "__p")).toSeq
+    val verified = bandRows(corpus.filter(col(idCol).isNotNull)
+          .select(col(idCol).as("__id"), col(payload).as("__p")))
+        .withColumn("__self", lit(false))
+        .unionByName(probe.withColumn("__self", lit(true)))
+        .withColumnsRenamed(Map("__id" -> "__b", "__p" -> "__pb"))
+      .join(broadcast(probe.select(col("__id").as("__a") +: keys.map(col): _*)), keys)
       .filter(!col("__self") || col("__a") < col("__b"))
-      .select("__a", "__b", "__self").distinct()
-      .join(mine.select(col("__id").as("__a"), col("__p").as("__pa")), "__a")
-      .join(theirs.withColumn("__self", lit(false))
-          .unionByName(mine.withColumn("__self", lit(true)))
-          .select(col("__id").as("__b"), col("__p").as("__pb"), col("__self")),
-        Seq("__b", "__self"))
+      .join(broadcast(mine.select(col("__id").as("__a"), col("__p").as("__pa"))), "__a")
       .filter(verify(col("__pa"), col("__pb")))
       .select("__a", "__b", "__self")
-      .transform(graft.state.Checkpoints.stable)
 
-    val sample = pairs.limit(math.min(smallEdgeLimit + 1, Int.MaxValue.toLong).toInt)
+    val sample = verified.limit(math.min(smallEdgeLimit + 1, Int.MaxValue.toLong).toInt)
       .collect()
-    // rejected ids: the batch rows with a verified corpus match, plus
-    // the non-minimum members of the components their self pairs form
-    def onDriver[T: Ordering: scala.reflect.ClassTag](dt: DataType, key: Any => T): DataFrame = {
-      val hits = sample.filter(!_.getBoolean(2)).map(r => key(r.get(0))).toSet
-      val edges = sample.filter(_.getBoolean(2))
-        .map(r => (key(r.get(0)), key(r.get(1))))
-        .filterNot { case (a, b) => hits(a) || hits(b) }
-      local((hits ++ driverUnionFind(edges).collect {
-        case (n, root) if n != root => n }).toSeq, dt)
+    val driverOrder: Option[Ordering[Any]] = batch.schema(idCol).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => Some(Ordering.by[Any, Long](asLong))
+      case StringType => Some(Ordering.by[Any, String](_.asInstanceOf[String]))
+      case _ => None
     }
-    val rejected = idType match {
-      case _ if sample.length > smallEdgeLimit => distributedRejects(pairs, maxIter)
-      case ByteType | ShortType | IntegerType | LongType => onDriver(LongType, asLong)
-      case StringType => onDriver(StringType, _.asInstanceOf[String])
-      case _ => distributedRejects(pairs, maxIter)
+    val candidates = batch.filter((col("__elig") || isIn(col(idCol), shared)) &&
+      col(idCol).isNotNull)
+    val (kept, cut) = driverOrder match {
+      case Some(ord) if sample.length <= smallEdgeLimit =>
+        // rejected ids: the batch rows with a verified corpus match,
+        // plus the non-minimum members of the components their self
+        // pairs form
+        val pairs = sample.map(r => (r.get(0), r.get(1), r.getBoolean(2))).distinct
+        val hits = pairs.collect { case (a, _, false) => a }.toSet
+        val edges = pairs.collect { case (a, b, true) if !hits(a) && !hits(b) => (a, b) }
+        val rejected = hits ++ driverUnionFind(edges)(ord).collect {
+          case (n, root) if n != root => n }
+        (candidates.filter(!isIn(col(idCol), rejected)), None)
+      case _ =>
+        val pairs = verified.distinct().transform(graft.state.Checkpoints.stable)
+        (candidates.join(distributedRejects(pairs, maxIter), col(idCol) === col("__r"),
+          "left_anti"), Some(pairs))
     }
-    val kept = batch.filter((col("__elig") || col(idCol).isin(shared: _*)) &&
-        col(idCol).isNotNull)
-      .join(rejected, col(idCol) === col("__r"), "left_anti")
     val admitted = batch.filter(!col("__elig")).unionByName(kept).select("__in.*")
     val newState = kept.filter(col("__elig"))
       .select((idCol +: state.map(_._1)).map(col): _*)
     (admitted, newState, () => {
       batch.unpersist(blocking = false)
-      graft.state.Checkpoints.release(pairs)
+      cut.foreach(graft.state.Checkpoints.release(_))
     })
   }
 
-  /** [[admitBatch]]'s over-the-limit branch: the rejected ids `__r` of
-    * a verified pair cut, through the distributed fixpoint.
+  /** `c` is one of `ids` (values of `c`'s own type, no NULL), as one
+    * InSet predicate; `false` for no ids.
+    */
+  private def isIn(c: Column, ids: Iterable[Any]): Column =
+    if (ids.isEmpty) lit(false)
+    else org.apache.spark.sql.graftbridge.ColumnBridge.toColumn(
+      org.apache.spark.sql.catalyst.expressions.InSet(
+        org.apache.spark.sql.graftbridge.ColumnBridge.toExpression(c),
+        ids.iterator.map {
+          case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
+          case v => v
+        }.toSet))
+
+  /** [[admitBatch]]'s distributed branch: the rejected ids `__r` of a
+    * cut of distinct verified pairs, through the distributed fixpoint.
     */
   private def distributedRejects(pairs: DataFrame, maxIter: Int): DataFrame = {
     val hits = pairs.filter(!col("__self")).select(col("__a").as("__r"))

@@ -247,11 +247,11 @@ object CorpusQueries {
       val corpus = embs.filter(col("vec_id") % 2 === 0)
       val batch  = embs.filter(col("vec_id") % 2 === 1)
       val state = graft.similarity.Ann.quantizeInt8(corpus, "vec_id", "embedding")
-      // the admission kernel distincts the candidate multiset before
-      // fetching codes: unlike q51, where skipping that distinct won,
-      // it fetches codes through TWO joins per candidate row, so the
-      // distinct pays for itself — measured 5.3 s vs 10.7 s at sf0.1
-      // (see git rev e579ea9)
+      // the admission kernel verifies each band collision in its one
+      // pass over the state: the state's band rows carry their codes
+      // past the batch's broadcast band keys and codes, so no
+      // candidate distinct and no code join runs, and the driver drops
+      // the duplicate pairs (timings in SCALE.md's q92 cost anatomy)
       val (admitted, _, release) = CorpusPipeline.incrementalSemanticDedup(
         state, batch, "vec_id", "embedding", threshold = 0.45)
       // materialize the (tiny) rejected-id answer eagerly, then release

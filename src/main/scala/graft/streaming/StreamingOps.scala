@@ -415,16 +415,17 @@ object StreamingOps {
     * state before re-deciding — so a crash between the two writes can
     * neither double-admit nor leak signatures for rows that were never
     * admitted. All existence checks go through the Hadoop `FileSystem`
-    * of the path (HDFS/S3-safe), with a read-and-catch fallback for a
-    * state dir that exists but holds no readable footers yet.
+    * of the path (HDFS/S3-safe), with a read-and-catch fallback to the
+    * empty state for a state dir that does not exist yet.
     *
     * Cache hygiene: admission holds ONE cache per batch — the batch
-    * rows with their signatures, read by both writes — beside one
-    * eager cut of the verified candidate pairs (see
-    * `CorpusPipeline.admitBatch`); the stored signature state is read,
-    * never cached. Once the writes land (or fail), the batch frees
-    * both through the handle `incrementalDedup` returns — the cache at
-    * the DATASET level, so its CacheManager entry goes too and a
+    * rows with their signatures, read by the pair pass and by both
+    * writes — and no lineage cut while the verified pairs fit the
+    * driver (see `CorpusPipeline.admitBatch`); the stored signature
+    * state is read once with its declared schema, never cached. Once
+    * the writes land (or fail), the batch frees what the admission
+    * holds through the handle `incrementalDedup` returns — the cache
+    * at the DATASET level, so its CacheManager entry goes too and a
     * long-running stream does not accumulate InMemoryRelations on the
     * driver. Caches owned by other queries on the same SparkContext
     * are untouched.
@@ -432,20 +433,35 @@ object StreamingOps {
   def dedupBatch(batch: DataFrame, batchId: Long, idCol: String, textCol: String,
                  sigPath: String, outPath: String, threshold: Double): Unit =
     runAdmissionBatch(batch, batchId, sigPath, outPath,
-      graft.dedup.NearDup.minhashSignatures(batch.limit(0), idCol, textCol)) {
+      emptySignatureState(batch, idCol, textCol)) {
       graft.dedup.NearDup.incrementalDedup(_, batch, idCol, textCol,
         threshold = threshold)
     }
 
+  /** The empty signature state of [[dedupBatch]]: its schema is the one
+    * the state read declares.
+    */
+  private[graft] def emptySignatureState(batch: DataFrame, idCol: String,
+                                         textCol: String): DataFrame =
+    graft.dedup.NearDup.minhashSignatures(batch.limit(0), idCol, textCol)
+
+  /** The empty int8 state of [[semanticDedupBatch]]: its schema is the
+    * one the state read declares.
+    */
+  private[graft] def emptyQuantizedState(batch: DataFrame, idCol: String,
+                                         vecCol: String): DataFrame =
+    graft.similarity.Ann.quantizeInt8(batch.limit(0), idCol, vecCol)
+
   /** The runner [[dedupBatch]] and [[semanticDedupBatch]] share: skip a
     * fully-committed batch (both `_SUCCESS` markers), read the corpus
-    * state without this batch's own `batch=<id>` partition (`empty`
-    * when the store holds no readable footers yet), `admit` the batch
-    * against it, overwrite both batch partitions, then release the
-    * admission's cache.
+    * state with the family's own `empty` state schema (no footer
+    * inference job) and without this batch's own `batch=<id>`
+    * partition (`empty` itself when the store does not exist yet),
+    * `admit` the batch against it, overwrite both batch partitions,
+    * then release the admission's cache.
     */
   private def runAdmissionBatch(batch: DataFrame, batchId: Long,
-      statePath: String, outPath: String, empty: => DataFrame)(
+      statePath: String, outPath: String, empty: DataFrame)(
       admit: DataFrame => (DataFrame, DataFrame, () => Unit)): Unit = {
     val spark    = batch.sparkSession
     val hconf    = spark.sparkContext.hadoopConfiguration
@@ -456,7 +472,7 @@ object StreamingOps {
     if (!(committed(stateDir) && committed(outDir))) {
       val state =
         try {
-          val all = spark.read.parquet(statePath)
+          val all = spark.read.schema(empty.schema).parquet(statePath)
           // `batch` is the partition-discovery column; a retry must not
           // see its own half-written state as "the corpus"
           if (all.columns.contains("batch"))
@@ -507,7 +523,7 @@ object StreamingOps {
                          threshold: Double, bands: Int = 96,
                          bitsPerBand: Int = 6): Unit =
     runAdmissionBatch(batch, batchId, statePath, outPath,
-      graft.similarity.Ann.quantizeInt8(batch.limit(0), idCol, vecCol)) {
+      emptyQuantizedState(batch, idCol, vecCol)) {
       graft.pipelines.CorpusPipeline.incrementalSemanticDedup(
         _, batch, idCol, vecCol, threshold, bands, bitsPerBand)
     }

@@ -62,10 +62,13 @@ class CorpusPipelineSpec extends SparkSpec {
     // both strategies: driver union-find (small gate) and the
     // distributed fixpoint loop (gate forced off)
     for (gate <- Seq(100000L, 0L)) {
-      val labels = CorpusPipeline.minLabelComponents(nodes, pairs, smallEdgeLimit = gate)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val before = persistedIds()
+      val out = CorpusPipeline.minLabelComponents(nodes, pairs, smallEdgeLimit = gate)
+      val labels = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(labels.values.toSet === Set(1L),
         s"all nodes must label to 1 (gate=$gate), got $labels")
+      // only the returned labels' cut outlives the call
+      assert(persistedSince(before, out).isEmpty, s"gate=$gate")
     }
   }
 
@@ -829,7 +832,7 @@ class CorpusPipelineSpec extends SparkSpec {
       Seq(2L, 3L, 11L, 23L, 31L))
     release()
     assert(persistedSince(before).isEmpty,
-      "the handle must free the batch cache and the pair cut")
+      "the handle must free what the call cached")
     assert(state.storageLevel !=
       org.apache.spark.storage.StorageLevel.NONE,
       "release must not clobber a caller-owned corpus-state cache")
@@ -840,7 +843,9 @@ class CorpusPipelineSpec extends SparkSpec {
     "what the driver-side union-find branch admits") {
     // a toy family: the payload IS the band-key list, and every
     // colliding pair verifies
-    val corpus = Seq((1L, Seq(10L)), (2L, Seq(20L))).toDF("id", "keys")
+    val corpus = Seq((Some(1L), Seq(10L)), (Some(2L), Seq(20L)),
+      (None, Seq(30L))           // a NULL id colliding with 6 and 7: rejects nothing
+    ).toDF("id", "keys")
     val batch = Seq(
       (5L, Seq(10L)),        // matches corpus 1
       (6L, Seq(10L, 30L)),   // matches corpus 1 and batch row 7
@@ -850,14 +855,17 @@ class CorpusPipelineSpec extends SparkSpec {
       (11L, Seq(50L)),
       (2L, Seq(60L)),        // a corpus id, novel: kept
       (12L, null.asInstanceOf[Seq[Long]]),
-      (8L, null.asInstanceOf[Seq[Long]])  // shares id 8: admitted twice
+      (8L, null.asInstanceOf[Seq[Long]]),  // shares id 8: admitted twice
+      // collide with each other in two bands and join the chain above
+      (16L, Seq(50L, 55L)),
+      (17L, Seq(50L, 55L))
     ).toDF("id", "keys")
     def admit(limit: Long, idType: String) = {
       def typed(df: org.apache.spark.sql.DataFrame) = df.withColumn("id", col("id").cast(idType))
       val (admitted, newState, release) = CorpusPipeline.admitBatch(
         typed(corpus), typed(batch), "id", eligible = col("keys").isNotNull,
         state = Seq("keys" -> col("keys")), payload = "keys",
-        bandRows = df => df.select(col("__id"), explode(col("__p")).as("__k")),
+        bandRows = df => df.select(col("__id"), col("__p"), explode(col("__p")).as("__k")),
         verify = (_, _) => lit(true), smallEdgeLimit = limit)
       try (admitted.select(col("id").cast("string")).as[String].collect().sorted.toSeq,
         newState.select(col("id").cast("string")).as[String].collect().sorted.toSeq)
@@ -872,6 +880,13 @@ class CorpusPipelineSpec extends SparkSpec {
     val expectedStr = (strs(2, 7, 8, 11, 12), strs(2, 7, 11))
     assert(admit(100000L, "string") === expectedStr)
     assert(admit(0L, "string") === expectedStr)
+    // the verified rows are 2 corpus matches and 9 self rows (16-17
+    // collide twice), 10 distinct pairs: a limit of 10 fits the pairs
+    // but not the rows, so it takes the distributed branch; the
+    // rejected-id predicate holds every integral width
+    for (t <- Seq("long", "int", "short", "byte"); limit <- Seq(100000L, 10L, 0L))
+      assert(admit(limit, t) === expected, s"id type $t, smallEdgeLimit $limit")
+    assert(admit(10L, "string") === expectedStr)
   }
 
   test("containmentScore: verbatim quote scores 1.0, disjoint doc 0.0, " +

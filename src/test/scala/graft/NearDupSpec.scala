@@ -258,7 +258,7 @@ class NearDupSpec extends SparkSpec {
     assert(again.count() === 0)
     Seq(releaseAgain, release).foreach(_())
     assert(persistedSince(before).isEmpty,
-      "the handles must free the batch caches and the pair cuts")
+      "the handles must free what the calls cached")
 
     // edge inputs against a plain-Scala replica of the admission rule:
     // a candidate shares a 4-perm band slice and verifies on signature

@@ -43,6 +43,49 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("admitBatch on a micro-batch: the pair plan scans the corpus state " +
+    "once and shuffles nothing; no write broadcasts a local relation") {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeLike}
+    object H extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val dir = tempDir("admit_plan").toFile
+    def path(n: String) = new java.io.File(dir, n).getPath
+    val text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    val b0 = Seq((1L, text), (2L, "an unrelated first document with its own words"))
+      .toDF("doc_id", "text")
+    graft.streaming.StreamingOps.dedupBatch(b0, 0L, "doc_id", "text", path("sigs"), path("docs"), 0.7)
+    val b1 = Seq((10L, text), (11L, "novel words for the second batch right here"),
+      (12L, "novel words for the second batch right here"), (13L, "short"))
+      .toDF("doc_id", "text")
+    val plans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized(plans += qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try graft.streaming.StreamingOps.dedupBatch(b1, 1L, "doc_id", "text",
+      path("sigs"), path("docs"), 0.7)
+    finally {
+      org.apache.spark.SpecSparkInternals.drainListenerBus(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    assert(spark.read.parquet(path("docs")).filter(col("batch") === 1)
+      .select("doc_id").as[Long].collect().sorted.toSeq === Seq(11L, 13L))
+    val pairPlans = plans.filter(H.find(_)(_.isInstanceOf[CollectLimitExec]).nonEmpty)
+    assert(pairPlans.size === 1, plans.mkString("\n"))
+    val pairPlan = pairPlans.head
+    assert(H.collect(pairPlan) { case s: FileSourceScanExec => s }.size === 1, pairPlan)
+    assert(H.collect(pairPlan) { case e: ShuffleExchangeLike => e }.isEmpty, pairPlan)
+    val writes = plans.filter(H.find(_)(_.isInstanceOf[DataWritingCommandExec]).nonEmpty)
+    assert(writes.size === 2, plans.mkString("\n"))
+    writes.foreach { w =>
+      assert(H.collect(w) { case b: BroadcastExchangeExec
+        if b.find(_.isInstanceOf[LocalTableScanExec]).nonEmpty => b }.isEmpty, w)
+    }
+  }
+
   test("q29 ANN: query side broadcast, corpus never shuffled before scoring") {
     val p = plan("q29_knn_cosine")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"), p)

@@ -633,9 +633,31 @@ class StreamingSpec extends SparkSpec {
       .select("vec_id").as[Long].collect().toSet
     assert(admittedVecs === (202L to 210L).toSet, s"got $admittedVecs")
     info(s"jobs per (dedupBatch, semanticDedupBatch) call, batches 0-2: $counts")
+    // one corpus pass, no pair cut and no broadcast of the rejected
+    // ids: 8 jobs per call, tighter than the name's 20
     val (minhashJobs, semanticJobs) = counts.last
-    assert(minhashJobs <= 20, s"dedupBatch ran $minhashJobs jobs (all calls: $counts)")
-    assert(semanticJobs <= 20, s"semanticDedupBatch ran $semanticJobs jobs (all calls: $counts)")
+    assert(minhashJobs <= 8, s"dedupBatch ran $minhashJobs jobs (all calls: $counts)")
+    assert(semanticJobs <= 8, s"semanticDedupBatch ran $semanticJobs jobs (all calls: $counts)")
+  }
+
+  test("dedupBatch / semanticDedupBatch: the state schema each read declares " +
+    "is the schema of the batch=<id> state partition each write leaves") {
+    val dir = tempDir("state_schema").toFile
+    def path(n: String) = new java.io.File(dir, n).getPath
+    val docs = Seq((1L, "alpha beta gamma delta epsilon zeta"), (2L, "too short"))
+      .toDF("doc_id", "text")
+    val vecs = Seq((1L, Array(1.0f, 0.5f)), (2L, Array.empty[Float]))
+      .toDF("vec_id", "embedding")
+    StreamingOps.dedupBatch(docs, 0L, "doc_id", "text", path("sigs"), path("docs"), 0.7)
+    StreamingOps.semanticDedupBatch(vecs, 0L, "vec_id", "embedding",
+      path("state"), path("vecs"), 0.9)
+    // names and types: a file read makes every field nullable anyway
+    def fields(s: org.apache.spark.sql.types.StructType) =
+      s.fields.toSeq.filter(_.name != "batch").map(f => f.name -> f.dataType.catalogString)
+    assert(fields(spark.read.parquet(path("sigs")).schema) ===
+      fields(StreamingOps.emptySignatureState(docs, "doc_id", "text").schema))
+    assert(fields(spark.read.parquet(path("state")).schema) ===
+      fields(StreamingOps.emptyQuantizedState(vecs, "vec_id", "embedding").schema))
   }
 
   test("cusumStreaming ≡ the fixed-mean CUSUM recurrence: day-close " +
