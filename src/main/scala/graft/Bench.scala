@@ -2,7 +2,7 @@ package graft
 
 /** Benchmark main: runs the headline query set on
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line
-  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"failed":[...],"sf":...}`.
+  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"failed":[...],"sf":...,"cpus":N,"rev":...}`.
   * A query with any thrown rep is listed in `failed` and left out of
   * every per-query map and total.
   *
@@ -61,24 +61,23 @@ object Bench {
     * they carry the SAME query-name set (same-surface proxy — any code
     * change that adds or removes a query starts a fresh merge window),
     * the same `sf` (a sf0.001 probe sweep must never contribute its
-    * tiny walls to the sf0.1 official minima), and a timestamp within
-    * 24 h of `now` (one round). Caveat the name-set proxy cannot see:
-    * an implementation change that keeps every query name leaves the
-    * old code's minima in the window — a round that deliberately
-    * trades speed for semantics in an existing query should treat the
-    * affected minima as stale (or rename the query) rather than read
-    * the merged line as the new code's number. Returns (minima,
-    * sweeps merged — 1 means no usable history). min is the right statistic: every
+    * tiny walls to the sf0.1 official minima), the same `cpus` (an
+    * 8-core sweep's walls are not a 32-core minimum), the same code
+    * revision `rev` (see [[sourceRevision]]; an implementation change
+    * that keeps every query name starts a fresh window too), and a
+    * timestamp within 24 h of `now` (one round). A line without `cpus`
+    * or `rev`, and any line when `rev` is None, never merges. Returns
+    * (minima, sweeps merged — 1 means no usable history). min is the right statistic: every
     * per-query number is already a min-of-3 wall of a deterministic
     * computation, so all upward excursions are host noise by
     * construction (the r14 adjudication: three same-code sweeps
     * degraded 321.7 -> 368.3 s on a drifting container).
     */
   private[graft] def mergedMins(
-      historyPath: java.nio.file.Path, sfDir: String,
-      current: Map[String, Double],
+      historyPath: java.nio.file.Path, sfDir: String, cpus: Int,
+      rev: Option[String], current: Map[String, Double],
       now: java.time.Instant): (Map[String, Double], Int) = {
-    val (mins, _, n) = mergedStats(historyPath, sfDir, current, now)
+    val (mins, _, n) = mergedStats(historyPath, sfDir, cpus, rev, current, now)
     (mins, n)
   }
 
@@ -91,11 +90,12 @@ object Bench {
     * that a lucky single sweep's min could mask shows in the median.
     * LOWER median (the order statistic at index (n−1)/2), no fp
     * averaging — with the typical 3–7 sweeps a midpoint average would
-    * manufacture values no sweep measured.
+    * manufacture values no sweep measured. Same filters as
+    * [[mergedMins]].
     */
   private[graft] def mergedStats(
-      historyPath: java.nio.file.Path, sfDir: String,
-      current: Map[String, Double],
+      historyPath: java.nio.file.Path, sfDir: String, cpus: Int,
+      rev: Option[String], current: Map[String, Double],
       now: java.time.Instant):
       (Map[String, Double], Map[String, Double], Int) = {
     import org.json4s._
@@ -104,7 +104,7 @@ object Bench {
         val vs = all.map(_(k)).sorted
         k -> vs((vs.size - 1) / 2)
       }.toMap
-    if (!java.nio.file.Files.exists(historyPath))
+    if (rev.isEmpty || !java.nio.file.Files.exists(historyPath))
       return (current, current, 1)
     val cutoff = now.minusSeconds(24L * 3600L)
     val sweeps = scala.collection.mutable.ArrayBuffer(current)
@@ -128,7 +128,15 @@ object Bench {
           case JString(s) => s == sfDir
           case _          => false
         }
-        if (at != null && at.isAfter(cutoff) && sameSf &&
+        val sameCpus = j \ "cpus" match {
+          case JInt(n) => n == cpus
+          case _       => false
+        }
+        val sameRev = j \ "rev" match {
+          case JString(r) => rev.contains(r)
+          case _          => false
+        }
+        if (at != null && at.isAfter(cutoff) && sameSf && sameCpus && sameRev &&
             qs.keySet == current.keySet) sweeps += qs
       } catch { case _: Throwable => () } // a bad line never kills the bench
     } finally src.close()
@@ -137,6 +145,26 @@ object Bench {
     }
     (mins, medians(sweeps.toSeq), sweeps.size)
   }
+
+  /** The code revision a sweep ran: a hash of the `.scala` sources
+    * under `dir` (their relative paths and bytes), the way perfbench
+    * stamps a checkout without git — unlike git HEAD it also tells
+    * uncommitted edits apart — or None when `dir` is not there.
+    */
+  private[graft] def sourceRevision(dir: java.nio.file.Path): Option[String] =
+    if (!java.nio.file.Files.isDirectory(dir)) None
+    else {
+      import scala.jdk.CollectionConverters._
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      val walk = java.nio.file.Files.walk(dir)
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .toSeq.sortBy(_.toString).foreach { p =>
+          md.update(dir.relativize(p).toString.getBytes("UTF-8"))
+          md.update(java.nio.file.Files.readAllBytes(p))
+        }
+      finally walk.close()
+      Some("src-sha256:" + md.digest().take(8).map("%02x".format(_)).mkString)
+    }
 
   /** A query's reported wall from its timed reps (None = that rep
     * threw): the min, or None when any rep failed. A thrown rep stops
@@ -247,19 +275,21 @@ object Bench {
     // CF win under host drift. The official artifact therefore also
     // carries, per query, the MINIMUM across this round's full sweeps:
     // bench_full.jsonl retains every full-sweep per-query line, so the
-    // merge filters history to entries with the SAME query-name set
-    // (same-surface proxy: any code change that adds/removes a query
-    // starts a fresh merge window) recorded within the last 24 h (one
+    // merge filters history to entries with the SAME query-name set,
+    // core count and code revision recorded within the last 24 h (one
     // round), then takes per-query min including the current sweep.
     // min is the right statistic here because every per-query number
     // is already a min-of-3 wall of a DETERMINISTIC computation — all
     // upward excursions are host noise by construction.
     val sweep = results.map { case (k, v, _) => k -> v }.toMap
+    val rev = sourceRevision(java.nio.file.Paths.get("src", "main", "scala"))
     val (mins, meds, sweepsMerged) =
       if (only.isEmpty)
         mergedStats(java.nio.file.Paths.get("bench_full.jsonl"), sfDir,
-          sweep, java.time.Instant.now())
+          LocalSession.cpus, rev, sweep, java.time.Instant.now())
       else (sweep, sweep, 1)
+    val revJson = rev.fold("null")("\"" + _ + "\"")
+    val sweepStamp = s""""cpus":${LocalSession.cpus},"rev":$revJson"""
     val qsMin = results.map { case (k, _, _) => "\"" + k + "\":" + mins(k) }
       .mkString("{", ",", "}")
     val totalMin = results.map { case (k, _, _) => mins(k) }.sum
@@ -289,12 +319,12 @@ object Bench {
     // the kept tail); the full queries_min map rides bench_full.jsonl,
     // which is where per-query numbers are read from anyway.
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_runs":3,"gc_sec":$gcTotal,"queries":$qs,"failed":$failed,"sf":"$sfDir","value_median":$totalMed,"value_min":$totalMin,"sweeps_merged":$sweepsMerged}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_runs":3,"gc_sec":$gcTotal,"queries":$qs,"failed":$failed,"sf":"$sfDir",$sweepStamp,"value_median":$totalMed,"value_min":$totalMin,"sweeps_merged":$sweepsMerged}"""
     val stagesJson =
       if (stageLines.isEmpty) ""
       else s""","stage_profiles":${stageLines.mkString("{", ",", "}")}"""
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_runs":3,"gc_sec":$gcTotal,"value_min":$totalMin,"value_median":$totalMed,"sweeps_merged":$sweepsMerged,"queries_min":$qsMin,"queries_median":$qsMed,"queries":$qs,"gc_queries":$gcs,"failed":$failed$stagesJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_runs":3,"gc_sec":$gcTotal,"value_min":$totalMin,"value_median":$totalMed,"sweeps_merged":$sweepsMerged,"queries_min":$qsMin,"queries_median":$qsMed,"queries":$qs,"gc_queries":$gcs,"failed":$failed$stagesJson,"sf":"$sfDir",$sweepStamp}"""
     println(line)
     // defend against the driver's 2000-char stdout-tail truncation
     // (BENCH_r6/r7 lost per-query history for a third of the set): the

@@ -3,19 +3,22 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local session the query-surface mains run in — [[Bench]],
-  * [[Verify]], `tools.SubsetVerify`, `tools.AbProbe` and
-  * `tools.DeterminismProbe` — so a timing and a correctness check see
-  * the same conf. `local[N]` with N shuffle partitions, N from
+  * [[Verify]], `tools.SubsetVerify`, `tools.AbProbe`,
+  * `tools.DeterminismProbe` and `tools.ExplainDump` — so a timing, a
+  * correctness check and a plan dump see the same conf. `local[N]`
+  * with N shuffle partitions, N from
   * `SPARK_GRAFT_CPUS` (default 32, the documented measurement host;
   * set it to the host's cores elsewhere, or the session oversubscribes
   * them).
   */
 object LocalSession {
+  /** N: `SPARK_GRAFT_CPUS`, default 32. */
+  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
   def apply(logLevel: String = "WARN"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       // AQE may right-size CACHED plan output too (default false):
       // without this every cached intermediate materializes at the
       // static shuffle partition count — q75's KB-sized admission

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -189,6 +189,20 @@ object AnalyticsOps {
                        tsCol: String = "ts", idCol: String = "event_id",
                        typeCol: String = "event_type",
                        bucketSecs: Long = 86400L): DataFrame = {
+    typedTransitionPairs(events, userCol, tsCol, idCol, typeCol, bucketSecs)
+      .groupBy("from_type", "to_type")
+      .agg(count(lit(1)).as("n_transitions"))
+  }
+
+  /** The consecutive (from_type → to_type) event pairs of
+    * [[transitionCounts]] and [[markovNextEventAccuracy]], each with
+    * its TO-event's epoch microseconds `__tots`: within-bucket pairs
+    * from a lag over (user, time bucket), plus the one cross-bucket
+    * pair per bucket boundary from the per-user bucket summary.
+    */
+  private def typedTransitionPairs(events: DataFrame, userCol: String,
+                                   tsCol: String, idCol: String,
+                                   typeCol: String, bucketSecs: Long): DataFrame = {
     require(bucketSecs > 0, "bucket must be positive")
     val e = events.select(
       col(userCol).as("__u"), col(idCol).as("__id"),
@@ -197,7 +211,8 @@ object AnalyticsOps {
     val wB = Window.partitionBy("__u", "__b").orderBy("__ts", "__id")
     val within = e.withColumn("__p", lag("__t", 1).over(wB))
       .filter(col("__p").isNotNull)
-      .select(col("__p").as("from_type"), col("__t").as("to_type"))
+      .select(col("__p").as("from_type"), col("__t").as("to_type"),
+        col("__ts").as("__tots"))
     val wU = Window.partitionBy("__u").orderBy("__b")
     val boundary = e.groupBy("__u", "__b")
       .agg(min(struct(col("__ts"), col("__id"), col("__t"))).as("__first"),
@@ -205,10 +220,39 @@ object AnalyticsOps {
       .withColumn("__prevLastT", lag(col("__last.__t"), 1).over(wU))
       .filter(col("__prevLastT").isNotNull)
       .select(col("__prevLastT").as("from_type"),
-        col("__first.__t").as("to_type"))
+        col("__first.__t").as("to_type"),
+        col("__first.__ts").as("__tots"))
     within.unionByName(boundary)
-      .groupBy("from_type", "to_type")
-      .agg(count(lit(1)).as("n_transitions"))
+  }
+
+  /** Per-(group, calendar day) event counts `(__g, day, __n)`, the
+    * daily frame the [[denseDailyGrid]] operators start from.
+    */
+  private def dailyCounts(events: DataFrame, groupCol: String,
+                          tsCol: String): DataFrame = events
+    .select(col(groupCol).as("__g"), to_date(col(tsCol)).as("day"))
+    .groupBy("__g", "day")
+    .agg(count(lit(1)).as("__n"))
+
+  /** The dense zero-filled (group × observed day) grid behind the
+    * daily-series operators: `daily` — one row per observed (`__g`,
+    * `day`) with its event count `__n` — is persisted, the #groups-row
+    * group list is crossed with the #days-row union calendar (both
+    * tiny) and left-joined back, and a day a group has no events reads
+    * `__n` = 0 (a genuine zero, not a missing observation; any other
+    * column of `daily` stays NULL there). Returns the lazy grid, the
+    * observed days, and the handle that unpersists `daily`; each
+    * caller cuts with `Checkpoints.stableThenRelease`, so the cache is
+    * freed even when the cut throws.
+    */
+  private def denseDailyGrid(daily: DataFrame): (DataFrame, DataFrame, () => Unit) = {
+    daily.persist()
+    val groups = daily.select("__g").distinct()
+    val days = daily.select("day").distinct()
+    val dense = groups.crossJoin(days)
+      .join(daily, Seq("__g", "day"), "left")
+      .withColumn("__n", coalesce(col("__n"), lit(0L)))
+    (dense, days, () => daily.unpersist())
   }
 
   /** Lead–lag cross-correlation matrix: for every unordered group
@@ -216,8 +260,9 @@ object AnalyticsOps {
     * of a's daily count against b's count `lag` days LATER — the
     * "does A's spike predict B's" report (q146's zero-lag correlation
     * generalized along the time axis). Same dense zero-filled grid
-    * and exact Decimal(38,0) moments as q146; alignment is integer
-    * day arithmetic, one closing double expression per cell.
+    * ([[denseDailyGrid]]) and exact Decimal(38,0) moments as q146;
+    * alignment is integer day arithmetic, one closing double
+    * expression per cell.
     *
     * Scale shape: the corpus collapses to the daily count frame; the
     * pair×lag fan-out is (#groups × 2·maxLag+1) on a calendar-bounded
@@ -229,19 +274,12 @@ object AnalyticsOps {
     require(maxLag >= 1 && maxLag <= 30, s"maxLag out of range: $maxLag")
     val spark0 = events.sparkSession
     import spark0.implicits._
-    val daily = events
-      .select(col(groupCol).as("__g"), to_date(col(tsCol)).as("__day"))
-      .groupBy("__g", "__day")
-      .agg(count(lit(1)).as("__n"))
-    daily.persist()
-    val groups = daily.select("__g").distinct()
-    val days = daily.select("__day").distinct()
-    val dense = groups.crossJoin(days)
-      .join(daily, Seq("__g", "__day"), "left")
+    val (grid, _, release) = denseDailyGrid(dailyCounts(events, groupCol, tsCol))
+    val dense = grid
       .select(col("__g"),
-        datediff(col("__day"), lit("1970-01-01").cast(DateType))
+        datediff(col("day"), lit("1970-01-01").cast(DateType))
           .cast(LongType).as("__d"),
-        coalesce(col("__n"), lit(0L)).as("__n"))
+        col("__n"))
     val lags = broadcast((-maxLag to maxLag).toDF("lag"))
     val a = dense.select(col("__g").as("group_a"), col("__d"),
       col("__n").as("__x"))
@@ -272,13 +310,11 @@ object AnalyticsOps {
             .cast("double")
             / sqrt(col("__vx").cast("double") * col("__vy").cast("double"))))
           .as("pearson_r"))
-      .transform(graft.state.Checkpoints.stable)
-    daily.unpersist()
-    out
+    graft.state.Checkpoints.stableThenRelease(out, release)
   }
 
   /** Single-changepoint detection by binary segmentation: for each
-    * group's daily count series (dense zero-filled calendar grid),
+    * group's daily count series (the [[denseDailyGrid]] calendar),
     * the split boundary minimizing SSE_left + SSE_right — equivalently
     * maximizing the variance-reduction gain over the unsplit series.
     * Cumulative count/sum/sum-of-squares run as exact integer window
@@ -290,18 +326,8 @@ object AnalyticsOps {
                            groupCol: String = "event_type",
                            tsCol: String = "ts"): DataFrame = {
     val dec = DecimalType(38, 0)
-    val daily = events
-      .select(col(groupCol).as("__g"), to_date(col(tsCol)).as("__day"))
-      .groupBy("__g", "__day")
-      .agg(count(lit(1)).as("__n"))
-    daily.persist()
-    val groups = daily.select("__g").distinct()
-    val days = daily.select("__day").distinct()
-    val dense = groups.crossJoin(days)
-      .join(daily, Seq("__g", "__day"), "left")
-      .select(col("__g"), col("__day"),
-        coalesce(col("__n"), lit(0L)).as("__n"))
-    val w = Window.partitionBy("__g").orderBy(col("__day").asc)
+    val (dense, _, release) = denseDailyGrid(dailyCounts(events, groupCol, tsCol))
+    val w = Window.partitionBy("__g").orderBy(col("day").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = dense
       .withColumn("__cn", count(lit(1)).over(w))
@@ -322,10 +348,10 @@ object AnalyticsOps {
           sse(col("__tq") - col("__cq"), col("__ts2") - col("__cs"),
             col("__tn") - col("__cn")))
       .withColumn("__negd",
-        -datediff(col("__day"), lit("1970-01-01").cast(DateType))
+        -datediff(col("day"), lit("1970-01-01").cast(DateType))
           .cast(LongType))
     val out = scored.groupBy("__g")
-      .agg(max(struct(col("__gain"), col("__negd"), col("__day").as("d"),
+      .agg(max(struct(col("__gain"), col("__negd"), col("day").as("d"),
         col("__cn").as("cn"), col("__cs").as("cs"), col("__ts2").as("ts2"),
         col("__tn").as("tn"))).as("__b"))
       .select(col("__g").as(groupCol),
@@ -340,9 +366,7 @@ object AnalyticsOps {
         // the raw struct): SSE decomposition differences cancel to a
         // ±ε residue on a flat series (VERDICT r15 #2)
         graft.functions.Lattice.e6(col("__b.__gain")).as("gain"))
-      .transform(graft.state.Checkpoints.stable)
-    daily.unpersist()
-    out
+    graft.state.Checkpoints.stableThenRelease(out, release)
   }
 
   /** First-order Markov next-event prediction accuracy — the eval
@@ -361,25 +385,7 @@ object AnalyticsOps {
                               idCol: String = "event_id",
                               typeCol: String = "event_type",
                               bucketSecs: Long = 86400L): DataFrame = {
-    val e = events.select(
-      col(userCol).as("__u"), col(idCol).as("__id"),
-      unix_micros(col(tsCol)).as("__ts"), col(typeCol).as("__t"))
-      .withColumn("__b", expr(s"__ts div ${bucketSecs * 1000000L}L"))
-    val wB = Window.partitionBy("__u", "__b").orderBy("__ts", "__id")
-    val within = e.withColumn("__p", lag("__t", 1).over(wB))
-      .filter(col("__p").isNotNull)
-      .select(col("__p").as("from_type"), col("__t").as("to_type"),
-        col("__ts").as("__tots"))
-    val wU = Window.partitionBy("__u").orderBy("__b")
-    val boundary = e.groupBy("__u", "__b")
-      .agg(min(struct(col("__ts"), col("__id"), col("__t"))).as("__first"),
-        max(struct(col("__ts"), col("__id"), col("__t"))).as("__last"))
-      .withColumn("__prevLastT", lag(col("__last.__t"), 1).over(wU))
-      .filter(col("__prevLastT").isNotNull)
-      .select(col("__prevLastT").as("from_type"),
-        col("__first.__t").as("to_type"),
-        col("__first.__ts").as("__tots"))
-    val pairs = within.unionByName(boundary)
+    val pairs = typedTransitionPairs(events, userCol, tsCol, idCol, typeCol, bucketSecs)
       .withColumn("__day", expr("__tots div 86400000000L"))
     val bounds = pairs.agg(min("__day").as("__lo"), max("__day").as("__hi"))
       .withColumn("__split", expr("__lo + (__hi - __lo) div 2L"))
@@ -519,9 +525,8 @@ object AnalyticsOps {
 
   /** Pairwise Pearson correlation of the groups' DAILY COUNT series —
     * "which metrics move together". Days where a group has no events
-    * count as 0 (the series are aligned on the union calendar, built
-    * by crossing the #groups-row group list with the #days-row
-    * calendar — both tiny). Like [[dailyTrendSlopes]], every moment
+    * count as 0 (the series are aligned on the union calendar of
+    * [[denseDailyGrid]]). Like [[dailyTrendSlopes]], every moment
     * (Σx, Σy, Σxy, Σx², Σy²) is an exact integer sum, so
     *   r = (n·Σxy − Σx·Σy) / sqrt((n·Σx² − (Σx)²) · (n·Σy² − (Σy)²))
     * is deterministic double arithmetic over exact operands. Pairs
@@ -531,24 +536,15 @@ object AnalyticsOps {
   def dailyCountCorrelation(events: DataFrame,
                             groupCol: String = "event_type",
                             tsCol: String = "ts"): DataFrame = {
-    val daily = events
-      .select(col(groupCol).as("__g"), to_date(col(tsCol)).as("__day"))
-      .groupBy("__g", "__day")
-      .agg(count(lit(1)).as("__n"))
-    daily.persist()
-    val groups = daily.select("__g").distinct()
-    val days = daily.select("__day").distinct()
     // dense (group, day) grid — #groups × #days rows, zeros filled
-    val dense = groups.crossJoin(days)
-      .join(daily, Seq("__g", "__day"), "left")
-      .select(col("__g"), col("__day"), coalesce(col("__n"), lit(0L)).as("__n"))
-    val a = dense.select(col("__g").as("group_a"), col("__day"), col("__n").as("__x"))
-    val b = dense.select(col("__g").as("group_b"), col("__day"), col("__n").as("__y"))
+    val (dense, _, release) = denseDailyGrid(dailyCounts(events, groupCol, tsCol))
+    val a = dense.select(col("__g").as("group_a"), col("day"), col("__n").as("__x"))
+    val b = dense.select(col("__g").as("group_b"), col("day"), col("__n").as("__y"))
     // Decimal(38,0) moments: a single 3e9-event group-day would wrap
     // Σy² in a Long — the decimal form stays exact (DuckDB widens to
     // HUGEINT, the same envelope)
     val dec = DecimalType(38, 0)
-    val out = a.join(b, "__day")
+    val out = a.join(b, "day")
       .filter(col("group_a") < col("group_b"))
       .groupBy("group_a", "group_b")
       .agg(count(lit(1)).as("n_days"),
@@ -565,9 +561,7 @@ object AnalyticsOps {
           (col("n_days") * col("__sxy") - col("__sx") * col("__sy")).cast("double")
             / sqrt(col("__vx").cast("double") * col("__vy").cast("double"))))
           .as("pearson_r"))
-      .transform(graft.state.Checkpoints.stable)
-    daily.unpersist()
-    out
+    graft.state.Checkpoints.stableThenRelease(out, release)
   }
 
   /** Trailing-window anomaly scores: per (group, day), the day's event
@@ -704,8 +698,8 @@ object AnalyticsOps {
     * profile (fixed-period seasonality): a weekly cycle shows up as an
     * ACF peak at lag 7 with no prior day-of-week assumption.
     *
-    * Series are aligned on the union calendar with zero-fill (as in
-    * [[dailyCountCorrelation]] — a group with no events that day had
+    * Series are aligned on the union calendar with zero-fill (the
+    * [[denseDailyGrid]] — a group with no events that day had
     * count 0, not "no observation"), so every lag-k pair whose both
     * endpoints lie inside the calendar span contributes. Pearson over
     * the pairs from EXACT Decimal(38,0) integer moments; `acf` is NULL
@@ -720,18 +714,11 @@ object AnalyticsOps {
   def lagAutocorrelation(events: DataFrame, groupCol: String = "event_type",
                          tsCol: String = "ts", maxLag: Int = 7): DataFrame = {
     require(maxLag >= 1 && maxLag <= 366, s"maxLag out of range: $maxLag")
-    val daily = events
-      .select(col(groupCol).as("__g"), to_date(col(tsCol)).as("__day"))
-      .groupBy("__g", "__day")
-      .agg(count(lit(1)).as("__n"))
-    daily.persist()
-    val groups = daily.select("__g").distinct()
-    val days = daily.select("__day").distinct()
-    val dense = groups.crossJoin(days)
-      .join(daily, Seq("__g", "__day"), "left")
+    val (grid, _, release) = denseDailyGrid(dailyCounts(events, groupCol, tsCol))
+    val dense = grid
       .select(col("__g"),
-        datediff(col("__day"), lit("1970-01-01").cast(DateType)).as("__dayN"),
-        coalesce(col("__n"), lit(0L)).as("__n"))
+        datediff(col("day"), lit("1970-01-01").cast(DateType)).as("__dayN"),
+        col("__n"))
     val lagged = dense
       .withColumn("lag", explode(array((1 to maxLag).map(lit): _*)))
       .select(col("__g"), (col("__dayN") + col("lag")).as("__dayN"),
@@ -755,9 +742,7 @@ object AnalyticsOps {
           (col("n_pairs") * col("__sxy") - col("__sx") * col("__sy")).cast("double")
             / sqrt(col("__vx").cast("double") * col("__vy").cast("double"))))
           .as("acf"))
-      .transform(graft.state.Checkpoints.stable)
-    daily.unpersist()
-    out
+    graft.state.Checkpoints.stableThenRelease(out, release)
   }
 
   /** Concentration report over a categorical key: Gini coefficient,
@@ -926,24 +911,16 @@ object AnalyticsOps {
     * alarm never depends on a float.
     *
     * Days with no events are genuine zeros via the dense group ×
-    * union-calendar grid (a silent outage IS a level shift — downward
-    * drift must accumulate). Scale shape: map-side-combined daily
+    * union-calendar grid of [[denseDailyGrid]] (a silent outage IS a
+    * level shift — downward drift must accumulate). Scale shape:
+    * map-side-combined daily
     * counts, the tiny dense grid, and two windows over the
     * CALENDAR-BOUNDED daily frame (≤ #days rows per group).
     */
   def cusumAlarms(events: DataFrame, groupCol: String = "event_type",
                   tsCol: String = "ts", alarmMult: Long = 4L): DataFrame = {
     require(alarmMult >= 1, "alarmMult must be at least 1")
-    val daily = events
-      .select(col(groupCol).as("__g"), to_date(col(tsCol)).as("day"))
-      .groupBy("__g", "day")
-      .agg(count(lit(1)).as("__n"))
-    daily.persist()
-    val groups = daily.select("__g").distinct()
-    val days = daily.select("day").distinct()
-    val dense = groups.crossJoin(days)
-      .join(daily, Seq("__g", "day"), "left")
-      .select(col("__g"), col("day"), coalesce(col("__n"), lit(0L)).as("__n"))
+    val (dense, _, release) = denseDailyGrid(dailyCounts(events, groupCol, tsCol))
     val dec = DecimalType(38, 0)
     val totals = dense.groupBy("__g").agg(
       sum(col("__n").cast(dec)).as("__t"), count(lit(1)).as("__d"))
@@ -965,9 +942,7 @@ object AnalyticsOps {
         round(col("__s").cast("double") / col("__d").cast("double"), 4)
           .as("cusum"),
         (col("__s") > col("__t") * lit(alarmMult).cast(dec)).as("alarm"))
-      .transform(graft.state.Checkpoints.stable)
-    daily.unpersist()
-    out
+    graft.state.Checkpoints.stableThenRelease(out, release)
   }
 
   /** Machine-cadence (bot) screen: accounts whose inter-event gaps are
@@ -1140,19 +1115,12 @@ object AnalyticsOps {
     */
   def robustTrend(events: DataFrame, groupCol: String = "event_type",
                   tsCol: String = "ts"): DataFrame = {
-    val daily = events
-      .select(col(groupCol).as("__g"), to_date(col(tsCol)).as("__day"))
-      .groupBy("__g", "__day")
-      .agg(count(lit(1)).as("__n"))
-    daily.persist()
-    val groups = daily.select("__g").distinct()
-    val days = daily.select("__day").distinct()
-    val dense = groups.crossJoin(days)
-      .join(daily, Seq("__g", "__day"), "left")
+    val (grid, _, release) = denseDailyGrid(dailyCounts(events, groupCol, tsCol))
+    val dense = grid
       .select(col("__g"),
-        datediff(col("__day"), lit("1970-01-01").cast(DateType))
+        datediff(col("day"), lit("1970-01-01").cast(DateType))
           .cast(LongType).as("__x"),
-        coalesce(col("__n"), lit(0L)).as("__y"))
+        col("__n").as("__y"))
     val a = dense.select(col("__g"), col("__x").as("__xi"), col("__y").as("__yi"))
     val b = dense.select(col("__g"), col("__x").as("__xj"), col("__y").as("__yj"))
     val pairs = a.join(b, "__g").filter(col("__xi") < col("__xj"))
@@ -1182,9 +1150,7 @@ object AnalyticsOps {
           .when(col("mk_s") < 0 && varS > 0,
             (col("mk_s") + 1).cast("double") / sqrt(varS))
           .when(varS > 0, lit(0.0)), 4).as("mk_z"))
-      .transform(graft.state.Checkpoints.stable)
-    daily.unpersist()
-    out
+    graft.state.Checkpoints.stableThenRelease(out, release)
   }
 
   /** Dyadic-decay EWMA of each group's daily event count: decay 1/2
@@ -1202,23 +1168,14 @@ object AnalyticsOps {
     *
     * Days before the calendar start contribute nothing (zero prior),
     * and in-span days with no events contribute genuine zeros via the
-    * dense grid. Scale shape: calendar-bounded daily summary, W×
-    * explode, one hash equi-join on (group, day) — no window over raw
-    * events, no per-group serialization.
+    * dense grid of [[denseDailyGrid]]. Scale shape: calendar-bounded
+    * daily summary, W× explode, one hash equi-join on (group, day) —
+    * no window over raw events, no per-group serialization.
     */
   def ewmaDaily(events: DataFrame, groupCol: String = "event_type",
                 tsCol: String = "ts", windowDays: Int = 16): DataFrame = {
     require(windowDays >= 1 && windowDays <= 62, s"windowDays out of range: $windowDays")
-    val daily = events
-      .select(col(groupCol).as("__g"), to_date(col(tsCol)).as("day"))
-      .groupBy("__g", "day")
-      .agg(count(lit(1)).as("__n"))
-    daily.persist()
-    val groups = daily.select("__g").distinct()
-    val days = daily.select("day").distinct()
-    val dense = groups.crossJoin(days)
-      .join(daily, Seq("__g", "day"), "left")
-      .select(col("__g"), col("day"), coalesce(col("__n"), lit(0L)).as("__n"))
+    val (dense, days, release) = denseDailyGrid(dailyCounts(events, groupCol, tsCol))
     val dec = DecimalType(38, 0)
     // each source day s contributes x_s · 2^{W−1−j} to target day s+j
     val contrib = dense
@@ -1237,9 +1194,7 @@ object AnalyticsOps {
       .select(col("__g").as(groupCol), col("day"), col("n_events"),
         round(col("__num").cast("double") /
           lit((1L << windowDays).toDouble), 6).as("ewma"))
-      .transform(graft.state.Checkpoints.stable)
-    daily.unpersist()
-    out
+    graft.state.Checkpoints.stableThenRelease(out, release)
   }
 
   /** Mann–Whitney rank-sum test, one-vs-rest per group: does group g's
@@ -1334,15 +1289,8 @@ object AnalyticsOps {
   def kaplanMeier(events: DataFrame, userCol: String = "user_id",
                   typeCol: String = "event_type", tsCol: String = "ts",
                   censorDays: Int = 7): DataFrame = {
-    val atDay = survivalAtDay(events, userCol, typeCol, tsCol, censorDays)
-    // at-risk n_t = Σ_{s >= t} (d_s + c_s): reverse cumulative over the
-    // calendar-bounded per-cohort day frame
-    val wDesc = Window.partitionBy("cohort").orderBy(col("__t").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAsc = Window.partitionBy("cohort").orderBy(col("__t").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    atDay
-      .withColumn("n_risk", sum(col("d") + col("__c")).over(wDesc))
+    val (atRisk, wAsc) = survivalAtRisk(events, userCol, typeCol, tsCol, censorDays)
+    atRisk
       .withColumn("__lns", sum(
         when(col("d") > 0,
           log((col("n_risk") - col("d")).cast("double") / col("n_risk").cast("double")))
@@ -1355,6 +1303,23 @@ object AnalyticsOps {
       .select(col("cohort"), col("__t").as("t_days"), col("n_risk"), col("d"),
         round(exp(col("__lns")), 6).as("survival"),
         round(exp(col("__lns")) * sqrt(col("__gw")), 6).as("greenwood_se"))
+  }
+
+  /** [[survivalAtDay]] with the at-risk count n_risk = Σ_{s >= t}
+    * (d_s + c_s) — a reverse cumulative over the calendar-bounded
+    * per-cohort day frame — and the ascending per-cohort window the
+    * estimators fold over: the shared front of [[kaplanMeier]] and
+    * [[nelsonAalen]].
+    */
+  private def survivalAtRisk(events: DataFrame, userCol: String,
+                             typeCol: String, tsCol: String,
+                             censorDays: Int): (DataFrame, WindowSpec) = {
+    val wDesc = Window.partitionBy("cohort").orderBy(col("__t").desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wAsc = Window.partitionBy("cohort").orderBy(col("__t").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    (survivalAtDay(events, userCol, typeCol, tsCol, censorDays)
+      .withColumn("n_risk", sum(col("d") + col("__c")).over(wDesc)), wAsc)
   }
 
   /** Shared survival scaffold: per-user lifetime spans collapsed to
@@ -1396,13 +1361,8 @@ object AnalyticsOps {
   def nelsonAalen(events: DataFrame, userCol: String = "user_id",
                   typeCol: String = "event_type", tsCol: String = "ts",
                   censorDays: Int = 7): DataFrame = {
-    val atDay = survivalAtDay(events, userCol, typeCol, tsCol, censorDays)
-    val wDesc = Window.partitionBy("cohort").orderBy(col("__t").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAsc = Window.partitionBy("cohort").orderBy(col("__t").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    atDay
-      .withColumn("n_risk", sum(col("d") + col("__c")).over(wDesc))
+    val (atRisk, wAsc) = survivalAtRisk(events, userCol, typeCol, tsCol, censorDays)
+    atRisk
       .withColumn("__h", sum(
         when(col("d") > 0,
           col("d").cast("double") / col("n_risk").cast("double"))
@@ -1498,16 +1458,7 @@ object AnalyticsOps {
                       tsCol: String = "ts", windowDays: Int = 12,
                       horizonDays: Int = 7): DataFrame = {
     require(windowDays >= 2 && windowDays <= 20, s"windowDays out of range: $windowDays")
-    val daily = events
-      .select(col(groupCol).as("__g"), to_date(col(tsCol)).as("day"))
-      .groupBy("__g", "day")
-      .agg(count(lit(1)).as("__n"))
-    daily.persist()
-    val groups = daily.select("__g").distinct()
-    val days = daily.select("day").distinct()
-    val dense = groups.crossJoin(days)
-      .join(daily, Seq("__g", "day"), "left")
-      .select(col("__g"), col("day"), coalesce(col("__n"), lit(0L)).as("__n"))
+    val (dense, days, release) = denseDailyGrid(dailyCounts(events, groupCol, tsCol))
     val dec = DecimalType(38, 0)
     val w = windowDays
     // single kernel: source day s contributes to target s+j
@@ -1544,14 +1495,13 @@ object AnalyticsOps {
         graft.functions.Lattice.e6(lit(2.0) * col("__sp") - col("__spp") +
           lit(horizonDays.toDouble) * (col("__sp") - col("__spp")))
           .as("forecast"))
-      .transform(graft.state.Checkpoints.stable)
-    daily.unpersist()
-    out
+    graft.state.Checkpoints.stableThenRelease(out, release)
   }
 
   /** Calendar gap-fill with linear interpolation: each group's daily
-    * mean value on the dense day grid, with absent days filled by the
-    * straight line between the nearest observed neighbors (exact
+    * mean value on the [[denseDailyGrid]] day grid, with absent days
+    * filled by the straight line between the nearest observed
+    * neighbors (exact
     * fraction (d−prev)/(next−prev) of exact per-day means; edge days
     * before the first / after the last observation stay NULL and are
     * flagged). The standard time-series regularization step before
@@ -1575,11 +1525,7 @@ object AnalyticsOps {
       .agg(count(lit(1)).as("__n"), sum("__v").as("__sv"))
       .withColumn("__mean",
         col("__sv").cast("double") / col("__n").cast("double"))
-    daily.persist()
-    val groups = daily.select("__g").distinct()
-    val days = daily.select("day").distinct()
-    val dense = groups.crossJoin(days)
-      .join(daily, Seq("__g", "day"), "left")
+    val (dense, _, release) = denseDailyGrid(daily)
     val wBack = Window.partitionBy("__g").orderBy(col("day").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wFwd = Window.partitionBy("__g").orderBy(col("day").desc)
@@ -1597,11 +1543,9 @@ object AnalyticsOps {
                 (datediff(col("day"), col("__pd")).cast("double") /
                   datediff(col("__nd"), col("__pd")).cast("double"))), 6))
       .select(col("__g").as(groupCol), col("day"),
-        coalesce(col("__n"), lit(0L)).as("n_events"), col("filled"),
+        col("__n").as("n_events"), col("filled"),
         (col("__mean").isNull && col("filled").isNotNull).as("interpolated"))
-      .transform(graft.state.Checkpoints.stable)
-    daily.unpersist()
-    out
+    graft.state.Checkpoints.stableThenRelease(out, release)
   }
 
   /** GROUPED population-stability index on exact ORDER-STATISTIC
@@ -2047,21 +1991,9 @@ object AnalyticsOps {
                   tsCol: String = "ts", salt: String = "exp",
                   splitFrac: Double = 0.5): DataFrame = {
     val dec = DecimalType(38, 0)
-    val rows = events.filter(col(userCol).isNotNull)
-      .select(col(userCol).as("__u"), to_date(col(tsCol)).as("__day"))
-    val daySpan = rows.agg(min("__day").as("__d0"), max("__day").as("__d1"))
-      .select(expr(
-        s"date_add(__d0, CAST(floor(datediff(__d1, __d0) * $splitFrac) AS INT))")
-        .as("__split"))
-    val perUser = rows.crossJoin(broadcast(daySpan))
-      .groupBy("__u")
-      .agg(sum(when(col("__day") <= col("__split"), 1L).otherwise(0L))
-        .cast(dec).as("__x"),
-        sum(when(col("__day") > col("__split"), 1L).otherwise(0L))
-          .cast(dec).as("__y"))
-      .withColumn("arm", when(SplitOps.hashBucket(
-        concat(col("__u").cast(StringType), lit("|" + salt))) % 2 === 0,
-        lit("control")).otherwise(lit("treatment")))
+    val perUser = prePostSplitCounts(events, userCol, tsCol, salt, splitFrac)
+      .withColumn("arm",
+        when(col("__t") === 0, lit("control")).otherwise(lit("treatment")))
     perUser.persist()
     val perArm = perUser.groupBy("arm").agg(
       count(lit(1)).cast(dec).as("__n"),
@@ -2109,9 +2041,34 @@ object AnalyticsOps {
           when(vy > 0, (lit(1.0) - varCuped / vy) * 100.0))
           .as("var_reduction_pct"),
         round(theta, 6).as("theta"))
-      .transform(graft.state.Checkpoints.stable)
-    perUser.unpersist()
-    out
+    graft.state.Checkpoints.stableThenRelease(out, () => perUser.unpersist())
+  }
+
+  /** The per-user scaffold of [[cupedReport]] and [[didReport]]: each
+    * user's event counts before (`__x`) and after (`__y`) the calendar
+    * split at `splitFrac` of the day span (Decimal(38,0), for exact
+    * moments), and the user's arm `__t` (0 control, 1 treatment) from
+    * the engine-portable md5 bucket of the id and `salt`.
+    */
+  private def prePostSplitCounts(events: DataFrame, userCol: String,
+                                 tsCol: String, salt: String,
+                                 splitFrac: Double): DataFrame = {
+    val dec = DecimalType(38, 0)
+    val rows = events.filter(col(userCol).isNotNull)
+      .select(col(userCol).as("__u"), to_date(col(tsCol)).as("__day"))
+    val daySpan = rows.agg(min("__day").as("__d0"), max("__day").as("__d1"))
+      .select(expr(
+        s"date_add(__d0, CAST(floor(datediff(__d1, __d0) * $splitFrac) AS INT))")
+        .as("__split"))
+    rows.crossJoin(broadcast(daySpan))
+      .groupBy("__u")
+      .agg(sum(when(col("__day") <= col("__split"), 1L).otherwise(0L))
+        .cast(dec).as("__x"),
+        sum(when(col("__day") > col("__split"), 1L).otherwise(0L))
+          .cast(dec).as("__y"))
+      .withColumn("__t", (SplitOps.hashBucket(
+        concat(col("__u").cast(StringType), lit("|" + salt))) % 2 === 1)
+        .cast(IntegerType))
   }
 
   /** Temporal-holdout evaluation of [[itemSimilarity]] — the recsys
@@ -2567,6 +2524,28 @@ object AnalyticsOps {
   def ksMatrix(df: DataFrame, groupCol: String,
                valueCol: String): DataFrame = {
     val dec = DecimalType(38, 0)
+    val paired = valueCdfPairs(df, groupCol, valueCol)
+      .withColumn("__num", abs(col("__ca").cast(dec) * col("__nb").cast(dec)
+        - col("__cb").cast(dec) * col("__na").cast(dec)))
+    paired.groupBy(col("__ga").as("source_a"), col("__gb").as("source_b"))
+      .agg(max("__na").as("n_a"), max("__nb").as("n_b"),
+        max(struct(col("__num"), (-col("__v")).as("__negv"))).as("__kk"))
+      .select(col("source_a"), col("source_b"), col("n_a"), col("n_b"),
+        round(col("__kk.__num").cast(DoubleType) /
+          (col("n_a").cast(DoubleType) * col("n_b").cast(DoubleType)), 6)
+          .as("ks_d"),
+        (-col("__kk.__negv")).as("ks_at"))
+  }
+
+  /** The per-group value CDFs of [[ksMatrix]] and [[emdMatrix]], paired
+    * on the value: every group's cumulative count `__cp` on the dense
+    * (group × distinct value) grid — absent values carry the running
+    * count forward — via the grouped two-level cumsum, joined for every
+    * unordered group pair (`__ga` < `__gb`) into (`__ga`, `__v`, `__ca`,
+    * `__na`, `__gb`, `__cb`, `__nb`), `__n*` being the group sizes.
+    */
+  private def valueCdfPairs(df: DataFrame, groupCol: String,
+                            valueCol: String): DataFrame = {
     val rows = df.filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
       .select(col(groupCol).as("__g"), col(valueCol).cast(LongType).as("__v"))
     val values = rows.select("__v").distinct()
@@ -2580,21 +2559,11 @@ object AnalyticsOps {
       Seq(col("__v").asc))
     val cdf = gb.withColumn("__cp", col("__off") + sum("__w").over(gwin))
       .select(col("__g"), col("__v"), col("__cp"), col("__n"))
-    val paired = cdf.select(col("__g").as("__ga"), col("__v"),
+    cdf.select(col("__g").as("__ga"), col("__v"),
       col("__cp").as("__ca"), col("__n").as("__na"))
       .join(cdf.select(col("__g").as("__gb"), col("__v"),
         col("__cp").as("__cb"), col("__n").as("__nb")), "__v")
       .filter(col("__ga") < col("__gb"))
-      .withColumn("__num", abs(col("__ca").cast(dec) * col("__nb").cast(dec)
-        - col("__cb").cast(dec) * col("__na").cast(dec)))
-    paired.groupBy(col("__ga").as("source_a"), col("__gb").as("source_b"))
-      .agg(max("__na").as("n_a"), max("__nb").as("n_b"),
-        max(struct(col("__num"), (-col("__v")).as("__negv"))).as("__kk"))
-      .select(col("source_a"), col("source_b"), col("n_a"), col("n_b"),
-        round(col("__kk.__num").cast(DoubleType) /
-          (col("n_a").cast(DoubleType) * col("n_b").cast(DoubleType)), 6)
-          .as("ks_d"),
-        (-col("__kk.__negv")).as("ks_at"))
   }
 
   /** Exact Spearman rank correlation — the monotonic-relationship
@@ -2758,7 +2727,7 @@ object AnalyticsOps {
     * consecutive observed values, with ONE closing division by
     * n_a·n_b.
     *
-    * Scale shape: the [[ksMatrix]] dense-grid CDFs; the value gap Δv
+    * Scale shape: the [[valueCdfPairs]] dense-grid CDFs; the value gap Δv
     * rides a lead window per (pair) over the value-histogram frame —
     * bounded by the value resolution, the operator's documented
     * envelope, never corpus-sized.
@@ -2766,24 +2735,7 @@ object AnalyticsOps {
   def emdMatrix(df: DataFrame, groupCol: String,
                 valueCol: String): DataFrame = {
     val dec = DecimalType(38, 0)
-    val rows = df.filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(groupCol).as("__g"), col(valueCol).cast(LongType).as("__v"))
-    val values = rows.select("__v").distinct()
-    val classes = rows.groupBy("__g").agg(count(lit(1)).as("__n"))
-    val pgv = rows.groupBy("__g", "__v").agg(count(lit(1)).as("__ng"))
-    val dense = values.crossJoin(broadcast(classes))
-      .join(pgv, Seq("__g", "__v"), "left")
-      .withColumn("__ng", coalesce(col("__ng"), lit(0L)))
-    val (gb, gwin) = TwoLevelCumsum.withGroupedOffsets(
-      dense, Seq("__g"), expr("__v div 1024L"), col("__ng"),
-      Seq(col("__v").asc))
-    val cdf = gb.withColumn("__cp", col("__off") + sum("__w").over(gwin))
-      .select(col("__g"), col("__v"), col("__cp"), col("__n"))
-    val paired = cdf.select(col("__g").as("__ga"), col("__v"),
-      col("__cp").as("__ca"), col("__n").as("__na"))
-      .join(cdf.select(col("__g").as("__gb"), col("__v"),
-        col("__cp").as("__cb"), col("__n").as("__nb")), "__v")
-      .filter(col("__ga") < col("__gb"))
+    val paired = valueCdfPairs(df, groupCol, valueCol)
     val dvWin = Window.partitionBy("__ga", "__gb").orderBy(col("__v").asc)
     paired
       .withColumn("__dv", lead("__v", 1).over(dvWin) - col("__v"))
@@ -2931,21 +2883,7 @@ object AnalyticsOps {
                 tsCol: String = "ts", salt: String = "exp",
                 splitFrac: Double = 0.5): DataFrame = {
     val dec = DecimalType(38, 0)
-    val rows = events.filter(col(userCol).isNotNull)
-      .select(col(userCol).as("__u"), to_date(col(tsCol)).as("__day"))
-    val daySpan = rows.agg(min("__day").as("__d0"), max("__day").as("__d1"))
-      .select(expr(
-        s"date_add(__d0, CAST(floor(datediff(__d1, __d0) * $splitFrac) AS INT))")
-        .as("__split"))
-    val perArm = rows.crossJoin(broadcast(daySpan))
-      .groupBy("__u")
-      .agg(sum(when(col("__day") <= col("__split"), 1L).otherwise(0L))
-        .cast(dec).as("__x"),
-        sum(when(col("__day") > col("__split"), 1L).otherwise(0L))
-          .cast(dec).as("__y"))
-      .withColumn("__t", (SplitOps.hashBucket(
-        concat(col("__u").cast(StringType), lit("|" + salt))) % 2 === 1)
-        .cast(IntegerType))
+    val perArm = prePostSplitCounts(events, userCol, tsCol, salt, splitFrac)
       .groupBy("__t").agg(
         count(lit(1)).cast(dec).as("__n"),
         sum("__x").as("__sx"), sum("__y").as("__sy"),

@@ -1,6 +1,7 @@
 package graft.similarity
 
 import graft.dedup.NearDup
+import graft.expressions.SimilarityExpressions.int_sq_dist
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -329,13 +330,11 @@ object Ann {
       .select(col(cId).as("neighbor_id"), col("qvec").as("__c"))
     // codegen'd integer L2 — exact-value-identical to the former
     // zip_with+aggregate composition, one fused primitive loop
-    def sqDist(a: Column, b: Column): Column =
-      graft.expressions.SimilarityExpressions.int_sq_dist(a, b)
     val scored = qc.crossJoin(cc)
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("__dp", sqDist(slice(col("__q"), 1, prefixDims),
+      .withColumn("__dp", int_sq_dist(slice(col("__q"), 1, prefixDims),
         slice(col("__c"), 1, prefixDims)))
-      .withColumn("__df", sqDist(col("__q"), col("__c")))
+      .withColumn("__df", int_sq_dist(col("__q"), col("__c")))
     val idType = corpus.schema(cId).dataType
     val topPrefix = finishTopK(scored.select(col("query_id"),
       col("neighbor_id"), (-col("__dp")).cast(DoubleType).as("score")),
@@ -400,19 +399,17 @@ object Ann {
       .select("__c").collect()
       .zipWithIndex.map { case (r, i) => (i, r.getSeq[Int](0)) }.toSeq
     val centLit = typedlit(cents)
-    def dist(a: Column, b: Column): Column =
-      graft.expressions.SimilarityExpressions.int_sq_dist(a, b)
     // assignment: argmin (integer distance, cell) — struct min gives
     // the lowest cell on exact-integer distance ties
     val assigned = cc.withColumn("__cell",
       array_min(transform(centLit, c =>
-        struct(dist(col("__c"), c.getField("_2")).as("d"),
+        struct(int_sq_dist(col("__c"), c.getField("_2")).as("d"),
           c.getField("_1").as("cell")))).getField("cell"))
     // per-query cell ranking, computed ONCE: sort the nCells structs
     // (tiny), rank = position
     val ranked = qc.select(col("query_id"),
         posexplode(array_sort(transform(centLit, c =>
-          struct(dist(col("__q"), c.getField("_2")).as("d"),
+          struct(int_sq_dist(col("__q"), c.getField("_2")).as("d"),
             c.getField("_1").as("cell"))))))
       .select(col("query_id"), (col("pos") + 1).cast(IntegerType)
         .as("__cell_rank"), col("col.cell").as("__cell"))
@@ -420,7 +417,7 @@ object Ann {
     val truth = finishTopK(qc.crossJoin(cc)
         .filter(col("query_id") =!= col("neighbor_id"))
         .select(col("query_id"), col("neighbor_id"),
-          (-dist(col("__q"), col("__c"))).cast(DoubleType).as("score")),
+          (-int_sq_dist(col("__q"), col("__c"))).cast(DoubleType).as("score")),
       corpus.schema(cId).dataType, k)
     truth.select("query_id", "neighbor_id")
       .join(assigned.select(col("neighbor_id"), col("__cell")),
@@ -1002,10 +999,6 @@ object Ann {
       .isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"kCenterSelect requires a numeric id column, got " +
         s"${corpus.schema(idCol).dataType}")
-    // codegen'd integer L2 — exact-value-identical to the former
-    // zip_with+aggregate composition, one fused primitive loop
-    def sqDist(a: Column, b: Column): Column =
-      graft.expressions.SimilarityExpressions.int_sq_dist(a, b)
     val codes = quantizeInt8(corpus, idCol, vecCol)
       .select(col(idCol).as("__id"), col("qvec").as("__v"))
       .transform(graft.state.Checkpoints.stable)
@@ -1017,8 +1010,10 @@ object Ann {
       .transform(graft.state.Checkpoints.stable)
     var remaining = codes.crossJoin(broadcast(seed))
       .filter(col("__id") =!= col("__sid"))
+      // codegen'd integer L2 — exact-value-identical to the former
+      // zip_with+aggregate composition, one fused primitive loop
       .select(col("__id"), col("__v"),
-        sqDist(col("__v"), col("__sv")).as("__md"))
+        int_sq_dist(col("__v"), col("__sv")).as("__md"))
       .transform(graft.state.Checkpoints.stable)
     for (r <- 2 to k) {
       val pick = remaining
@@ -1039,7 +1034,7 @@ object Ann {
           col("__pv"))))
         .filter(col("__id") =!= col("__pid"))
         .select(col("__id"), col("__v"),
-          least(col("__md"), sqDist(col("__v"), col("__pv"))).as("__md"))
+          least(col("__md"), int_sq_dist(col("__v"), col("__pv"))).as("__md"))
         .transform(graft.state.Checkpoints.stable)
     }
     selected

@@ -128,31 +128,41 @@ object Classify {
     // 64-bit collision
     val pair = toks.groupBy(col("label"), xxhash64(col("w")).as("w_hash"))
       .agg(count(lit(1)).as("c"))
+    buildNb(docs, labelCol, pair, minPairCount)
+  }
+
+  /** The model build of [[trainNb]] and [[trainScoreSelfChar]] from the
+    * (label, w_hash, c) pair-count frame `pair`, which is persisted for
+    * the build and released after it, also when the build throws.
+    */
+  private def buildNb(docs: DataFrame, labelCol: String, pair: DataFrame,
+                      minPairCount: Int): NbModel = {
     pair.persist()
-    val v = pair.select("w_hash").distinct().count()
-    val docCounts = docs.groupBy(col(labelCol).as("label"))
-      .agg(count(lit(1)).as("nd"))
-    val total = docs.count()
-    require(total > 0 && v > 0, "training corpus is empty")
-    val classes = pair.groupBy("label").agg(sum("c").as("tl"))
-      // a label whose docs all normalize to zero tokens still needs a
-      // class row (T_l = 0): right join keeps it, tl coalesces
-      .join(docCounts, Seq("label"), "right")
-      .select(col("label"),
-        (log(col("nd").cast("double")) - log(lit(total.toDouble))).as("log_prior"),
-        log(coalesce(col("tl"), lit(0L)).cast("double") + v.toDouble).as("log_denom"))
-      // model frames are MODEL-sized (#labels and #(label, token)
-      // observed pairs): the localCheckpoint barrier materializes both
-      // while `pair` is cached, releases the training cache here, and
-      // leaves the model resident for the scoring joins it exists for
-      .transform(graft.state.Checkpoints.stable)
-    val floored =
-      if (minPairCount > 1) pair.filter(col("c") >= minPairCount) else pair
-    val tokenLogs = floored.select(col("w_hash"), col("label"),
-      log(col("c").cast("double") + 1.0).as("log_c1"))
-      .transform(graft.state.Checkpoints.stable)
-    pair.unpersist()
-    NbModel(classes, tokenLogs)
+    try {
+      val v = pair.select("w_hash").distinct().count()
+      val docCounts = docs.groupBy(col(labelCol).as("label"))
+        .agg(count(lit(1)).as("nd"))
+      val total = docs.count()
+      require(total > 0 && v > 0, "training corpus is empty")
+      val classes = pair.groupBy("label").agg(sum("c").as("tl"))
+        // a label whose docs all normalize to zero tokens still needs a
+        // class row (T_l = 0): right join keeps it, tl coalesces
+        .join(docCounts, Seq("label"), "right")
+        .select(col("label"),
+          (log(col("nd").cast("double")) - log(lit(total.toDouble))).as("log_prior"),
+          log(coalesce(col("tl"), lit(0L)).cast("double") + v.toDouble).as("log_denom"))
+        // model frames are MODEL-sized (#labels and #(label, token)
+        // observed pairs): the localCheckpoint barrier materializes both
+        // while `pair` is cached, releases the training cache here, and
+        // leaves the model resident for the scoring joins it exists for
+        .transform(graft.state.Checkpoints.stable)
+      val floored =
+        if (minPairCount > 1) pair.filter(col("c") >= minPairCount) else pair
+      val tokenLogs = floored.select(col("w_hash"), col("label"),
+        log(col("c").cast("double") + 1.0).as("log_c1"))
+        .transform(graft.state.Checkpoints.stable)
+      NbModel(classes, tokenLogs)
+    } finally pair.unpersist()
   }
 
   /** Score documents and pick the argmax label: (idCol, pred_label,
@@ -198,10 +208,19 @@ object Classify {
     val tokRows = base.select(col(idCol), explode(col("__t")).as("w"))
       .groupBy(col(idCol), xxhash64(col("w")).as("w_hash"))
       .agg(count(lit(1)).as("__n"))
+    scoreRows(base.drop("__t"), tokRows, idCol, model, argmaxRound6)
+  }
+
+  /** The scoring of [[scoreNb]] and [[trainScoreSelfChar]]: `base` is
+    * (idCol, n_tokens) with one row per document, `tokRows` the
+    * (idCol, w_hash, __n) within-document feature counts.
+    */
+  private def scoreRows(base: DataFrame, tokRows: DataFrame, idCol: String,
+                        model: NbModel, argmaxRound6: Boolean): DataFrame = {
     val sparse = tokRows.join(model.tokenLogs, "w_hash")
       .groupBy(col(idCol), col("label"))
       .agg(sum(col("__n").cast("double") * col("log_c1")).as("__num"))
-    val dense = base.drop("__t")
+    val dense = base
       .crossJoin(broadcast(model.classes))
       .join(sparse, Seq(idCol, "label"), "left")
       .withColumn("__score", col("log_prior") + coalesce(col("__num"), lit(0.0))
@@ -249,56 +268,32 @@ object Classify {
           .as("w_hash"))
       .persist()
 
-    // ---- training (the trainNb aggregation, reading the shared frame)
-    // (round-17 probed overlapping the vocab/doc counts and the two
-    // model checkpoints via Par.build — NEUTRAL on A/B at sf0.1
-    // (q131 +0.2 s, q118 +0.1 s); reverted, serial kept)
-    val pair = g.groupBy(col("label"), col("w_hash"))
-      .agg(count(lit(1)).as("c"))
-    pair.persist()
-    val v = pair.select("w_hash").distinct().count()
-    val docCounts = docs.groupBy(col(labelCol).as("label"))
-      .agg(count(lit(1)).as("nd"))
-    val total = docs.count()
-    require(total > 0 && v > 0, "training corpus is empty")
-    val classes = pair.groupBy("label").agg(sum("c").as("tl"))
-      .join(docCounts, Seq("label"), "right")
-      .select(col("label"),
-        (log(col("nd").cast("double")) - log(lit(total.toDouble))).as("log_prior"),
-        log(coalesce(col("tl"), lit(0L)).cast("double") + v.toDouble).as("log_denom"))
-      .transform(graft.state.Checkpoints.stable)
-    val floored =
-      if (minPairCount > 1) pair.filter(col("c") >= minPairCount) else pair
-    val tokenLogs = floored.select(col("w_hash"), col("label"),
-      log(col("c").cast("double") + 1.0).as("log_c1"))
-      .transform(graft.state.Checkpoints.stable)
-    pair.unpersist(blocking = false)
-
-    // ---- scoring (the scoreNb pipeline, reading the shared frame)
     val tokRows = g.groupBy(col(idCol), col("w_hash"))
       .agg(count(lit(1)).as("__n"))
-    tokRows.persist()
-    val perDoc = tokRows.groupBy(col(idCol)).agg(sum("__n").as("__nt"))
-    val base = docs.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("__nt"), lit(0L)).as("n_tokens"))
-    val sparse = tokRows.join(tokenLogs, "w_hash")
-      .groupBy(col(idCol), col("label"))
-      .agg(sum(col("__n").cast("double") * col("log_c1")).as("__num"))
-    val dense = base
-      .crossJoin(broadcast(classes))
-      .join(sparse, Seq(idCol, "label"), "left")
-      .withColumn("__score", col("log_prior") + coalesce(col("__num"), lit(0.0))
-        - col("n_tokens").cast("double") * col("log_denom"))
-    val w = Window.partitionBy(idCol).orderBy(col("__score").desc, col("label").asc)
-    val out = dense.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(col(idCol), col("label").as("pred_label"),
-        round(col("__score"), 6).as("score"),
-        col("n_tokens").cast("long").as("n_tokens"))
-      .transform(graft.state.Checkpoints.stable)
-    tokRows.unpersist(blocking = false)
-    g.unpersist(blocking = false)
-    out
+    try {
+      // ---- training (the trainNb build, reading the shared frame)
+      // (round-17 probed overlapping the vocab/doc counts and the two
+      // model checkpoints via Par.build — NEUTRAL on A/B at sf0.1
+      // (q131 +0.2 s, q118 +0.1 s); reverted, serial kept)
+      val pair = g.groupBy(col("label"), col("w_hash"))
+        .agg(count(lit(1)).as("c"))
+      val model = buildNb(docs, labelCol, pair, minPairCount)
+
+      // ---- scoring (the scoreNb pipeline, reading the shared frame)
+      tokRows.persist()
+      val perDoc = tokRows.groupBy(col(idCol)).agg(sum("__n").as("__nt"))
+      val base = docs.select(col(idCol)).join(perDoc, Seq(idCol), "left")
+        .select(col(idCol), coalesce(col("__nt"), lit(0L)).as("n_tokens"))
+      // the model is internal: nothing reads its cuts after this one
+      graft.state.Checkpoints.stableThenRelease(
+        scoreRows(base, tokRows, idCol, model, argmaxRound6 = false), () => {
+          graft.state.Checkpoints.release(model.classes)
+          graft.state.Checkpoints.release(model.tokenLogs)
+        })
+    } finally {
+      tokRows.unpersist(blocking = false)
+      g.unpersist(blocking = false)
+    }
   }
 
   /** Group-distinctive terms — the "Fightin' Words" method (Monroe,

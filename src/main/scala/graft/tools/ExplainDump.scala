@@ -1,21 +1,15 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{LocalSession, SparkEntry}
 
 /** Dump formatted physical plans for plan review (args: query names,
-  * default = a representative set).
+  * default = a representative set). The session is [[LocalSession]]'s,
+  * so the plans are the ones Bench and Verify run at the same
+  * `SPARK_GRAFT_CPUS`.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("ERROR")
     // SPARK_GRAFT_CONF="k=v;k2=v2" sets session confs before planning
     // (e.g. spark.sql.autoBroadcastJoinThreshold=-1 to see the plan
     // without broadcast joins)

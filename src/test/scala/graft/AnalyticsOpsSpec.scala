@@ -1699,4 +1699,73 @@ class AnalyticsOpsSpec extends SparkSpec {
     assert(out("B") === ((3L, 2.0 / 4.0)))
   }
 
+
+  /** The operators that share a private kernel (the dense daily grid,
+    * the value-CDF pairs, the typed transition pairs, the pre/post
+    * split counts, the survival at-risk windows): name, whether the
+    * call ends in a cut, and its Spark job count for one call plus a
+    * collect on [[kernelEvents]] with adaptive execution off, as
+    * measured before the kernels were shared.
+    */
+  private val kernelOps: Seq[(String, Boolean, Int, org.apache.spark.sql.DataFrame =>
+      org.apache.spark.sql.DataFrame)] = Seq(
+    ("leadLagCorrelation", true, 5, AnalyticsOps.leadLagCorrelation(_)),
+    ("changepointDetection", true, 4, AnalyticsOps.changepointDetection(_)),
+    ("dailyCountCorrelation", true, 4, AnalyticsOps.dailyCountCorrelation(_)),
+    ("lagAutocorrelation", true, 5, AnalyticsOps.lagAutocorrelation(_)),
+    ("cusumAlarms", true, 5, AnalyticsOps.cusumAlarms(_)),
+    ("robustTrend", true, 5, AnalyticsOps.robustTrend(_)),
+    ("ewmaDaily", true, 6, AnalyticsOps.ewmaDaily(_)),
+    ("brownTrendDaily", true, 6, AnalyticsOps.brownTrendDaily(_)),
+    ("gapFillDaily", true, 4, AnalyticsOps.gapFillDaily(_)),
+    ("ksMatrix", false, 5, AnalyticsOps.ksMatrix(_, "event_type", "value")),
+    ("emdMatrix", false, 5, AnalyticsOps.emdMatrix(_, "event_type", "value")),
+    ("transitionCounts", false, 1, AnalyticsOps.transitionCounts(_)),
+    ("markovNextEventAccuracy", false, 3, AnalyticsOps.markovNextEventAccuracy(_)),
+    ("cupedReport", true, 4, AnalyticsOps.cupedReport(_)),
+    ("didReport", false, 3, AnalyticsOps.didReport(_)),
+    ("kaplanMeier", false, 2, AnalyticsOps.kaplanMeier(_)),
+    ("nelsonAalen", false, 2, AnalyticsOps.nelsonAalen(_)))
+
+  /** 36 events: three types over six days (each type misses some days,
+    * so the dense grid zero-fills), four users, ids and values.
+    */
+  private def kernelEvents(): org.apache.spark.sql.DataFrame =
+    (0 until 36).map { i =>
+      (i.toLong, (i % 4).toLong, Seq("A", "B", "C")(i % 3),
+        ts(f"2024-01-${1 + (i * 5 + i / 3) % 6}%02d ${8 + i % 5}%02d:00:00"),
+        (i % 7).toDouble)
+    }.toDF("event_id", "user_id", "event_type", "ts", "value")
+
+  test("operators sharing a kernel keep their job counts and leave no " +
+    "cache behind, also when the evaluation or the cut throws") {
+    val good = kernelEvents()
+    // strings ANSI to_date and the timestamp / numeric casts reject:
+    // the first job that reads them throws
+    val bad = good.withColumn("ts", format_string("day %d", col("event_id")))
+      .withColumn("value", format_string("v%d", col("event_id")))
+    val runs = kernelOps.map { case (name, cuts, _, op) =>
+      val before = persistedIds()
+      val (out, jobs) = withoutAqe(jobsDuring { val o = op(good); o.collect(); o })
+      val leftOnSuccess = persistedSince(before, out)
+      val beforeBad = persistedIds()
+      intercept[Exception](op(bad).collect())
+      val leftOnBadInput = persistedSince(beforeBad)
+      // the bad strings throw while Spark builds the first cache, before
+      // it holds blocks; a cut that fails later finds the caches built
+      val beforeCut = persistedIds()
+      if (cuts) withFailingCuts(intercept[Exception](op(good)))
+      val leftOnFailedCut = persistedSince(beforeCut)
+      (name, jobs.size, leftOnSuccess, leftOnBadInput, leftOnFailedCut)
+    }
+    info(s"jobs per call + collect: ${runs.map(r => s"${r._1}=${r._2}").mkString(", ")}")
+    val leaks = runs.collect { case (name, _, onSuccess, onBadInput, onFailedCut)
+        if (onSuccess ++ onBadInput ++ onFailedCut).nonEmpty =>
+      s"$name left RDDs $onSuccess on success, $onBadInput when its input threw, " +
+        s"$onFailedCut when its cut threw"
+    }
+    assert(leaks.isEmpty, leaks.mkString("; "))
+    assert(runs.map(r => r._1 -> r._2) === kernelOps.map { case (n, _, j, _) => n -> j })
+  }
+
 }

@@ -323,4 +323,59 @@ class ClassifySpec extends SparkSpec {
     out.foreach(r => assert(r.getLong(1) === r.getLong(2),
       s"fold ${r.getInt(0)} must be perfectly separable"))
   }
+
+  test("naive bayes train, score and the fused path keep their job " +
+    "counts and leave no cache behind, also when the evaluation or the " +
+    "cut throws") {
+    val docs = Seq(
+      (1L, "en", "the quick brown fox jumps over the lazy dog"),
+      (2L, "de", "der schnelle braune fuchs springt"),
+      (3L, "en", "another small english sentence"),
+      (4L, "de", "noch ein deutscher satz"),
+      (5L, "en", "")).toDF("doc_id", "lang", "text")
+    // label and id strings the ANSI casts reject: the first job that
+    // reads them throws
+    val bad = docs
+      .withColumn("lang", expr("CAST(concat('x', lang) AS INT)"))
+      .withColumn("doc_id", expr("CAST(concat('x', doc_id) AS BIGINT)"))
+    val wordModel = Classify.trainNaiveBayes(docs, "lang", "text")
+    val charModel = Classify.trainNaiveBayesChar(docs, "lang", "text")
+    def collected(o: org.apache.spark.sql.DataFrame) = { o.collect(); Seq(o) }
+    // name, whether the call cuts, and its job count for one call (plus
+    // a collect of a lazy result) with adaptive execution off, as
+    // measured before the model build and the scoring were shared
+    val ops: Seq[(String, Boolean, Int, org.apache.spark.sql.DataFrame =>
+        Seq[org.apache.spark.sql.DataFrame])] = Seq(
+      ("trainNaiveBayes", true, 5, { d =>
+        val m = Classify.trainNaiveBayes(d, "lang", "text"); Seq(m.classes, m.tokenLogs) }),
+      ("trainNaiveBayesChar", true, 5, { d =>
+        val m = Classify.trainNaiveBayesChar(d, "lang", "text", minPairCount = 2)
+        Seq(m.classes, m.tokenLogs) }),
+      ("scoreNaiveBayes", false, 4, d =>
+        collected(Classify.scoreNaiveBayes(d, "doc_id", "text", wordModel))),
+      ("scoreNaiveBayesChar", false, 4, d =>
+        collected(Classify.scoreNaiveBayesChar(d, "doc_id", "text", charModel))),
+      ("trainScoreSelfChar", true, 11, d =>
+        collected(Classify.trainScoreSelfChar(d, "lang", "doc_id", "text"))))
+    val runs = ops.map { case (name, cuts, _, op) =>
+      val before = persistedIds()
+      val (out, jobs) = withoutAqe(jobsDuring(op(docs)))
+      val leftOnSuccess = persistedSince(before, out: _*)
+      val beforeBad = persistedIds()
+      intercept[Exception](op(bad))
+      val leftOnBadInput = persistedSince(beforeBad)
+      val beforeCut = persistedIds()
+      if (cuts) withFailingCuts(intercept[Exception](op(docs)))
+      val leftOnFailedCut = persistedSince(beforeCut)
+      (name, jobs.size, leftOnSuccess, leftOnBadInput, leftOnFailedCut)
+    }
+    info(s"jobs per call: ${runs.map(r => s"${r._1}=${r._2}").mkString(", ")}")
+    val leaks = runs.collect { case (name, _, onSuccess, onBadInput, onFailedCut)
+        if (onSuccess ++ onBadInput ++ onFailedCut).nonEmpty =>
+      s"$name left RDDs $onSuccess on success, $onBadInput when its input threw, " +
+        s"$onFailedCut when its cut threw"
+    }
+    assert(leaks.isEmpty, leaks.mkString("; "))
+    assert(runs.map(r => r._1 -> r._2) === ops.map { case (n, _, j, _) => n -> j })
+  }
 }

@@ -206,26 +206,9 @@ class QalertPipelineSpec extends SparkSpec {
     val (f1, f2) = series(tempDir("qalert_jobs").toFile)
     val (m1, _, _) = QalertPipeline.runBatch(spark, f1, QalertPipeline.emptyMasters(spark, shaped(f1)),
       cityWkt, enclaveWkt, zones)
-    val sc = spark.sparkContext
-    val key = "graft.spec.call"
-    val tag = s"qalert-${System.nanoTime}"
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(key) == tag)) stages.add(e.stageInfos.map(_.name))
-    }
-    org.apache.spark.SpecSparkInternals.drainListenerBus(sc)
-    sc.addSparkListener(l)
-    sc.setLocalProperty(key, tag)
-    val (m2, _, _) = try QalertPipeline.runBatch(spark, f2, m1, cityWkt, enclaveWkt, zones)
-    finally {
-      sc.setLocalProperty(key, null)
-      org.apache.spark.SpecSparkInternals.drainListenerBus(sc)
-      sc.removeSparkListener(l)
-    }
+    val ((m2, _, _), jobs) =
+      jobsDuring(QalertPipeline.runBatch(spark, f2, m1, cityWkt, enclaveWkt, zones))
     assert(m2.currentStatus.count() === 11)
-    import scala.jdk.CollectionConverters._
-    val jobs = stages.asScala.toSeq
     info(s"${jobs.size} jobs; stage names: ${jobs.flatten.distinct.sorted.mkString(", ")}")
     // local[4]: 19 jobs with the batch persisted under two master cuts
     // (before the batch cut), 13 with the batch cut alone, 8 with the

@@ -39,6 +39,61 @@ trait SparkSpec extends AnyFunSuite
     spark.sparkContext.getPersistentRDDs.keySet.toSet -- before -- owned
   }
 
+  /** Runs `body` and returns its value with the Spark jobs it started,
+    * each as the names of its stages. Jobs are tagged through a local
+    * property (inherited by the threads a query spawns), so jobs other
+    * threads start are not counted; the listener bus is drained before
+    * and after, so no earlier event leaks in and no late one is lost.
+    */
+  def jobsDuring[T](body: => T): (T, Seq[Seq[String]]) = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.call"
+    val tag = s"call-${System.nanoTime}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == tag)) jobs.add(e.stageInfos.map(_.name))
+    }
+    org.apache.spark.SpecSparkInternals.drainListenerBus(sc)
+    sc.addSparkListener(l)
+    sc.setLocalProperty(key, tag)
+    val out = try body finally {
+      sc.setLocalProperty(key, null)
+      org.apache.spark.SpecSparkInternals.drainListenerBus(sc)
+      sc.removeSparkListener(l)
+    }
+    import scala.jdk.CollectionConverters._
+    (out, jobs.asScala.toSeq)
+  }
+
+  /** Runs `body` with adaptive execution off. AQE materializes query
+    * stages concurrently, and a stage that reads a cache not yet built
+    * may start a job of its own, so the same call can start a few more
+    * or fewer jobs from run to run; without AQE a call's job count is a
+    * function of its plan, fit to pin.
+    */
+  def withoutAqe[T](body: => T): T = {
+    val key = "spark.sql.adaptive.enabled"
+    spark.conf.set(key, "false")
+    try body finally spark.conf.unset(key)
+  }
+
+  /** Runs `body` with reliable cuts whose writes fail: the checkpoint
+    * directory is swapped for a plain file, so each cut throws after its
+    * job has read every cache the operator holds — the exception path a
+    * release handle exists for.
+    */
+  def withFailingCuts[T](body: => T): T = {
+    val sc = spark.sparkContext
+    val flag = graft.state.Checkpoints.ReliableFlag
+    org.apache.spark.SpecSparkInternals.withCheckpointDir(sc, tempDir("failing_cuts").toString) {
+      val dir = new java.io.File(new java.net.URI(sc.getCheckpointDir.get))
+      assert(dir.delete() && dir.createNewFile(), s"cannot swap $dir for a file")
+      spark.conf.set(flag, "true")
+      try body finally spark.conf.unset(flag)
+    }
+  }
+
   override protected def afterAll(): Unit = {
     synchronized {
       tmpRoots.foreach(TempTrees.deleteQuietly)

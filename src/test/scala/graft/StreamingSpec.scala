@@ -600,26 +600,7 @@ class StreamingSpec extends SparkSpec {
       val ids = docs.indices.map(i => b * 100L + i)
       (ids.zip(docs).toDF("doc_id", "text"), ids.zip(vecs).toDF("vec_id", "embedding"))
     }
-    val key = "graft.spec.call"
-    def jobsOf(body: => Unit): Int = {
-      val sc = spark.sparkContext
-      val tag = s"admission-${System.nanoTime}"
-      val n = new java.util.concurrent.atomic.AtomicInteger
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (Option(e.properties).exists(_.getProperty(key) == tag)) n.incrementAndGet()
-      }
-      org.apache.spark.SpecSparkInternals.drainListenerBus(sc)
-      sc.addSparkListener(l)
-      sc.setLocalProperty(key, tag)
-      try body
-      finally {
-        sc.setLocalProperty(key, null)
-        org.apache.spark.SpecSparkInternals.drainListenerBus(sc)
-        sc.removeSparkListener(l)
-      }
-      n.get
-    }
+    def jobsOf(body: => Unit): Int = jobsDuring(body)._2.size
     val counts = batches.zipWithIndex.map { case ((docs, vecs), b) =>
       (jobsOf(StreamingOps.dedupBatch(docs, b.toLong, "doc_id", "text", sigP, docP, 0.7)),
         jobsOf(StreamingOps.semanticDedupBatch(vecs, b.toLong, "vec_id", "embedding",
