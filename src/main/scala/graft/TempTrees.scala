@@ -7,6 +7,16 @@ package graft
   */
 object TempTrees {
 
+  /** Runs `body` on a fresh temp directory whose name starts with
+    * `prefix`, then deletes the tree in a `finally`, so a body that
+    * throws leaves nothing behind either. `body` must not return
+    * anything lazy over the tree: cut its result first.
+    */
+  def withTempDir[T](prefix: String)(body: java.nio.file.Path => T): T = {
+    val root = java.nio.file.Files.createTempDirectory(prefix)
+    try body(root) finally deleteQuietly(root)
+  }
+
   /** Delete `root` and everything under it, deepest-first. Never
     * throws: cleanup is best-effort by contract. The `Files.walk`
     * stream is closed via `try/finally` (it holds directory handles —

@@ -392,9 +392,7 @@ object NearDup {
         col("__na").cast(LongType).as("size_a"),
         col("__nb").cast(LongType).as("size_b"),
         round(col("__jac"), 4).as("jaccard"))
-      .transform(graft.state.Checkpoints.stable)
-    base.unpersist(blocking = false)
-    out
+    graft.state.Checkpoints.stableThenRelease(out, () => base.unpersist(blocking = false))
   }
 
   /** Winnowing candidate pairs (the MOSS pipeline end-to-end): docs

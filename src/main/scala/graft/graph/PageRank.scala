@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** PageRank (Brin & Page 1998) as a fixed-iteration dataframe power
@@ -38,69 +38,21 @@ import org.apache.spark.sql.functions._
 object PageRank {
 
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iterations: Int = 10, damping: Double = 0.85): DataFrame = {
-    require(iterations >= 1 && iterations <= 100, "1 <= iterations <= 100")
-    require(damping > 0 && damping < 1, "damping in (0, 1)")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
-      .filter(col("__s").isNotNull && col("__d").isNotNull)
-      .distinct()
-      .persist(lvl)
-    val nodes = e.select(col("__s").as("node"))
-      .unionByName(e.select(col("__d").as("node")))
-      .distinct().persist(lvl)
-    val n = nodes.count()
-    require(n > 0, "empty graph")
-    val outDeg = e.groupBy(col("__s").as("node"))
-      .agg(count(lit(1)).as("__deg")).persist(lvl)
-
-    // each iteration CUTS ITS LINEAGE with an explicit LogicalRDD
-    // barrier: the rank frame is referenced twice per round (dangling
-    // branch + contribution branch), so a lineage-preserving loop
-    // doubles the LOGICAL plan every iteration — 2^k tree nodes by
-    // round k, and Spark's plan stringification alone OOMs the driver
-    // around k=10 (found the hard way in PageRankSpec). The
-    // persist+count+createDataFrame form (instead of localCheckpoint)
-    // keeps an unpersist HANDLE, so the previous round's O(#nodes)
-    // cache is released deterministically rather than waiting on
-    // driver GC + ContextCleaner — at iterations=100 a leak would
-    // stack 100 node-sized block sets on the executors.
-    val spark = edges.sparkSession
-    def barrier(df: DataFrame): (DataFrame, DataFrame) = {
-      val p = df.persist(lvl); p.count()
-      (spark.createDataFrame(p.rdd, p.schema), p)
-    }
-    var (ranks, ranksCache) = barrier(nodes.withColumn("rank", lit(1.0 / n)))
-    for (_ <- 1 to iterations) {
-      val withDeg = ranks.join(outDeg, Seq("node"), "left")
-      // the dangling mass rides as a BROADCAST 1-row frame instead of
-      // a driver scalar — one materializing job per iteration, not two
-      val dang = withDeg.filter(col("__deg").isNull)
-        .agg(coalesce(sum("rank"), lit(0.0)).as("__dm"))
-      val contrib = withDeg.filter(col("__deg").isNotNull)
-        .select(col("node").as("__s"), (col("rank") / col("__deg")).as("__c"))
-        .join(e, "__s")
-        .groupBy(col("__d").as("node"))
-        .agg(sum("__c").as("__in"))
-      val (next, nextCache) = barrier(nodes.join(contrib, Seq("node"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("node"),
-          (lit((1.0 - damping) / n) +
+               iterations: Int = 10, damping: Double = 0.85): DataFrame =
+    powerIterate(edges, srcCol, dstCol, iterations, damping,
+      e => e.select(col("__s").as("node"))
+        .unionByName(e.select(col("__d").as("node")))
+        .distinct(),
+      Seq(col("node")),
+      nodes => {
+        val n = nodes.count()
+        require(n > 0, "empty graph")
+        (lit(1.0 / n),
+          lit((1.0 - damping) / n) +
             lit(damping) * (coalesce(col("__in"), lit(0.0))
               + col("__dm") / lit(n.toDouble)))
-            .as("rank")))
-      ranksCache.unpersist(blocking = false)
-      ranks = next; ranksCache = nextCache
-    }
-    val out = ranks
-      .select(col("node"), round(col("rank") * 1000000.0, 4).as("rank_ppm"))
-      .transform(graft.state.Checkpoints.stable)
-    ranksCache.unpersist(blocking = false)
-    e.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    outDeg.unpersist(blocking = false)
-    out
-  }
+      },
+      Seq(col("node"), round(col("rank") * 1000000.0, 4).as("rank_ppm")))
 
   /** Personalized PageRank (random walk with restart to a SEED set) —
     * the "relevance to these nodes" variant behind related-item
@@ -126,6 +78,42 @@ object PageRank {
                            seeds: DataFrame, seedCol: String,
                            iterations: Int = 10,
                            damping: Double = 0.85): DataFrame = {
+    val sd = seeds.select(col(seedCol).as("node")).filter(col("node").isNotNull)
+      .distinct()
+    powerIterate(edges, srcCol, dstCol, iterations, damping,
+      e => e.select(col("__s").as("node"))
+        .unionByName(e.select(col("__d").as("node")))
+        .distinct()
+        .join(sd.withColumn("__seed", lit(true)), Seq("node"), "left")
+        .withColumn("__seed", coalesce(col("__seed"), lit(false))),
+      Seq(col("node"), col("__seed")),
+      nodes => {
+        val nSeeds = nodes.filter(col("__seed")).count()
+        require(nSeeds > 0, "no seed is present in the graph")
+        val tele = when(col("__seed"), lit(1.0 / nSeeds)).otherwise(lit(0.0))
+        (tele,
+          lit(1.0 - damping) * tele +
+            lit(damping) * (coalesce(col("__in"), lit(0.0))
+              + col("__dm") * tele))
+      },
+      Seq(col("node"), col("__seed").as("is_seed"),
+        round(col("rank") * 1000000.0, 4).as("rank_ppm")))
+  }
+
+  /** The power loop both variants share. It persists the deduplicated
+    * edge list and `nodesOf(edges)`, asks `rates` for the variant's
+    * initial and update rank columns over the persisted nodes (the
+    * update column reads `__in`, the node's contribution sum, and
+    * `__dm`, the round's dangling mass), runs `iterations` rounds with
+    * the `carry` columns riding along, and cuts `result` over the
+    * final ranks. Everything it persisted is released in a `finally`,
+    * on a throw too.
+    */
+  private def powerIterate(edges: DataFrame, srcCol: String, dstCol: String,
+                           iterations: Int, damping: Double,
+                           nodesOf: DataFrame => DataFrame, carry: Seq[Column],
+                           rates: DataFrame => (Column, Column),
+                           result: Seq[Column]): DataFrame = {
     require(iterations >= 1 && iterations <= 100, "1 <= iterations <= 100")
     require(damping > 0 && damping < 1, "damping in (0, 1)")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -133,53 +121,54 @@ object PageRank {
       .filter(col("__s").isNotNull && col("__d").isNotNull)
       .distinct()
       .persist(lvl)
-    val sd = seeds.select(col(seedCol).as("node")).filter(col("node").isNotNull)
-      .distinct()
-    val nodes = e.select(col("__s").as("node"))
-      .unionByName(e.select(col("__d").as("node")))
-      .distinct()
-      .join(sd.withColumn("__seed", lit(true)), Seq("node"), "left")
-      .withColumn("__seed", coalesce(col("__seed"), lit(false)))
-      .persist(lvl)
-    val nSeeds = nodes.filter(col("__seed")).count()
-    require(nSeeds > 0, "no seed is present in the graph")
-    val tele = when(col("__seed"), lit(1.0 / nSeeds)).otherwise(lit(0.0))
-    val outDeg = e.groupBy(col("__s").as("node"))
-      .agg(count(lit(1)).as("__deg")).persist(lvl)
-    val spark = edges.sparkSession
-    def barrier(df: DataFrame): (DataFrame, DataFrame) = {
-      val p = df.persist(lvl); p.count()
-      (spark.createDataFrame(p.rdd, p.schema), p)
-    }
-    var (ranks, ranksCache) =
-      barrier(nodes.select(col("node"), col("__seed"), tele.as("rank")))
-    for (_ <- 1 to iterations) {
-      val withDeg = ranks.join(outDeg, Seq("node"), "left")
-      val dang = withDeg.filter(col("__deg").isNull)
-        .agg(coalesce(sum("rank"), lit(0.0)).as("__dm"))
-      val contrib = withDeg.filter(col("__deg").isNotNull)
-        .select(col("node").as("__s"), (col("rank") / col("__deg")).as("__c"))
-        .join(e, "__s")
-        .groupBy(col("__d").as("node"))
-        .agg(sum("__c").as("__in"))
-      val (next, nextCache) = barrier(nodes.join(contrib, Seq("node"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("node"), col("__seed"),
-          (lit(1.0 - damping) * tele +
-            lit(damping) * (coalesce(col("__in"), lit(0.0))
-              + col("__dm") * tele))
-            .as("rank")))
-      ranksCache.unpersist(blocking = false)
-      ranks = next; ranksCache = nextCache
-    }
-    val out = ranks
-      .select(col("node"), col("__seed").as("is_seed"),
-        round(col("rank") * 1000000.0, 4).as("rank_ppm"))
-      .transform(graft.state.Checkpoints.stable)
-    ranksCache.unpersist(blocking = false)
-    e.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    outDeg.unpersist(blocking = false)
-    out
+    var nodes: DataFrame = null
+    var outDeg: DataFrame = null
+    var ranksCache: DataFrame = null
+    try {
+      nodes = nodesOf(e).persist(lvl)
+      val (initial, update) = rates(nodes)
+      outDeg = e.groupBy(col("__s").as("node"))
+        .agg(count(lit(1)).as("__deg")).persist(lvl)
+
+      // each iteration CUTS ITS LINEAGE with an explicit LogicalRDD
+      // barrier: the rank frame is referenced twice per round (dangling
+      // branch + contribution branch), so a lineage-preserving loop
+      // doubles the LOGICAL plan every iteration — 2^k tree nodes by
+      // round k, and Spark's plan stringification alone OOMs the driver
+      // around k=10 (found the hard way in PageRankSpec). The
+      // persist+count+createDataFrame form (instead of localCheckpoint)
+      // keeps an unpersist HANDLE, so the previous round's O(#nodes)
+      // cache is released deterministically rather than waiting on
+      // driver GC + ContextCleaner — at iterations=100 a leak would
+      // stack 100 node-sized block sets on the executors.
+      val spark = edges.sparkSession
+      def barrier(df: DataFrame): (DataFrame, DataFrame) = {
+        val p = df.persist(lvl); p.count()
+        (spark.createDataFrame(p.rdd, p.schema), p)
+      }
+      val (first, firstCache) = barrier(nodes.select(carry :+ initial.as("rank"): _*))
+      var ranks = first
+      ranksCache = firstCache
+      for (_ <- 1 to iterations) {
+        val withDeg = ranks.join(outDeg, Seq("node"), "left")
+        // the dangling mass rides as a BROADCAST 1-row frame instead of
+        // a driver scalar — one materializing job per iteration, not two
+        val dang = withDeg.filter(col("__deg").isNull)
+          .agg(coalesce(sum("rank"), lit(0.0)).as("__dm"))
+        val contrib = withDeg.filter(col("__deg").isNotNull)
+          .select(col("node").as("__s"), (col("rank") / col("__deg")).as("__c"))
+          .join(e, "__s")
+          .groupBy(col("__d").as("node"))
+          .agg(sum("__c").as("__in"))
+        val (next, nextCache) = barrier(nodes.join(contrib, Seq("node"), "left")
+          .crossJoin(broadcast(dang))
+          .select(carry :+ update.as("rank"): _*))
+        ranksCache.unpersist(blocking = false)
+        ranks = next; ranksCache = nextCache
+      }
+      graft.state.Checkpoints.stable(ranks.select(result: _*))
+    } finally
+      Seq(ranksCache, e, nodes, outDeg).filter(_ != null)
+        .foreach(_.unpersist(blocking = false))
   }
 }

@@ -1694,9 +1694,7 @@ object AnalyticsOps {
         .as("psi"),
         count(lit(1)).as("n_bins"))
       .select(col("__g").as(groupCol), col("n_bins"), col("psi"))
-      .transform(graft.state.Checkpoints.stable)
-    rows.unpersist()
-    out
+    graft.state.Checkpoints.stableThenRelease(out, () => rows.unpersist())
   }
 
   /** One-vs-rest ranking metrics per class: the exact AUC from the
@@ -2172,9 +2170,8 @@ object AnalyticsOps {
             / col("n_eval_users").cast("double")).as("hit_rate"),
           when(col("n_eval_users") > 0, col("__nc").cast("double")
             / col("n_eval_users").cast("double")).as("avg_candidates"))
-        .transform(graft.state.Checkpoints.stable)
-      evalUsers.unpersist(blocking = false)
-      out
+      graft.state.Checkpoints.stableThenRelease(out,
+        () => evalUsers.unpersist(blocking = false))
     } finally {
       // `out` is eagerly checkpointed above, so nothing reads the
       // flagged/sims checkpoints past this point — release their

@@ -453,8 +453,6 @@ object SplitOps {
         }, 6))
       .select(col("fold"), col("label"), col("n"), col("fold_n"),
         col("label_n"), col("expected"), col("chi_contrib"))
-      .transform(graft.state.Checkpoints.stable)
-    cells.unpersist(blocking = false)
-    out
+    graft.state.Checkpoints.stableThenRelease(out, () => cells.unpersist(blocking = false))
   }
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.pipelines.CorpusPipeline
+import graft.queries.OracleSql._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -600,10 +601,9 @@ object CorpusQueries {
         |WHERE rnk <= 8""".stripMargin,
 
     "q79_sequence_packing" ->
-      """WITH toked AS (
+      raw"""WITH toked AS (
         |  SELECT doc_id,
-        |    CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) = 0 THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\s+')) END AS n_tokens
+        |    ${wsTokenCount(9)} AS n_tokens
         |  FROM documents
         |), cum AS (
         |  SELECT doc_id, n_tokens,
@@ -671,10 +671,9 @@ object CorpusQueries {
         |FROM (SELECT doc_id, lang, unnest(range(0, copies)) AS u FROM base)""".stripMargin,
 
     "q82_lang_token_budget" ->
-      """WITH toked AS (
+      raw"""WITH toked AS (
         |  SELECT doc_id, lang,
-        |    CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) = 0 THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\s+')) END AS n_tok
+        |    ${wsTokenCount(9)} AS n_tok
         |  FROM documents
         |), cum AS (
         |  SELECT doc_id, lang,
@@ -689,9 +688,9 @@ object CorpusQueries {
     // stride 13 = 16 - 3; DuckDB list slicing is 1-based inclusive,
     // matching Spark's slice(start, length) window exactly
     "q83_doc_chunking" ->
-      """WITH toked AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\s+') AS toks
-        |  FROM documents WHERE length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) > 0
+      raw"""WITH toked AS (
+        |  SELECT doc_id, regexp_split_to_array(trim(text, $ws), '\s+') AS toks
+        |  FROM documents WHERE length(trim(text, $ws)) > 0
         |)
         |SELECT doc_id, CAST(i AS BIGINT) AS chunk_id,
         |  array_to_string(toks[(i*13+1):(i*13+16)], ' ') AS chunk_text
@@ -702,9 +701,9 @@ object CorpusQueries {
         |  FROM toked)""".stripMargin,
 
     "q73_decontaminate" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\s+') toks
-        |  FROM documents WHERE length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) > 0
+      raw"""WITH toks AS (
+        |  SELECT doc_id, regexp_split_to_array(trim(text, $ws), '\s+') toks
+        |  FROM documents WHERE length(trim(text, $ws)) > 0
         |),
         |dg AS (
         |  SELECT DISTINCT doc_id, g FROM (
@@ -727,9 +726,9 @@ object CorpusQueries {
     // LEFT join grades every doc: containment = hits/total, a ratio
     // of exact integer counts
     "q115_containment_score" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\s+') toks
-        |  FROM documents WHERE length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) > 0
+      raw"""WITH toks AS (
+        |  SELECT doc_id, regexp_split_to_array(trim(text, $ws), '\s+') toks
+        |  FROM documents WHERE length(trim(text, $ws)) > 0
         |),
         |dg AS (
         |  SELECT doc_id,
@@ -753,9 +752,9 @@ object CorpusQueries {
     // path's candidate count equals the exact count when no false
     // positive fires (see the q86 builder comment)
     "q86_bloom_decontaminate" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\s+') toks
-        |  FROM documents WHERE length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) > 0
+      raw"""WITH toks AS (
+        |  SELECT doc_id, regexp_split_to_array(trim(text, $ws), '\s+') toks
+        |  FROM documents WHERE length(trim(text, $ws)) > 0
         |),
         |dg AS (
         |  SELECT DISTINCT doc_id, g FROM (
@@ -787,9 +786,9 @@ object CorpusQueries {
         |) t(doc_id)""".stripMargin,
 
     "q84_dup_spans" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))), '\s+') AS t
-        |  FROM documents WHERE length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) > 0
+      raw"""WITH toks AS (
+        |  SELECT doc_id, regexp_split_to_array(lower(trim(text, $ws)), '\s+') AS t
+        |  FROM documents WHERE length(trim(text, $ws)) > 0
         |), spans AS (
         |  SELECT doc_id,
         |    unnest([array_to_string(t[i:i+7], ' ') for i in range(1, len(t)-6)]) AS span
@@ -801,9 +800,9 @@ object CorpusQueries {
         |HAVING count(DISTINCT doc_id) >= 2""".stripMargin,
 
     "q85_dup_span_fraction" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))), '\s+') AS t
-        |  FROM documents WHERE length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) > 0
+      raw"""WITH toks AS (
+        |  SELECT doc_id, regexp_split_to_array(lower(trim(text, $ws)), '\s+') AS t
+        |  FROM documents WHERE length(trim(text, $ws)) > 0
         |), spans AS (
         |  SELECT doc_id,
         |    unnest([array_to_string(t[i:i+7], ' ') for i in range(1, len(t)-6)]) AS span
@@ -824,12 +823,12 @@ object CorpusQueries {
     // covered positions as the union of exploded dup-window ranges,
     // text rebuilt from the surviving original-case tokens in order
     "q91_dup_span_removal" ->
-      """WITH toks AS (
+      raw"""WITH toks AS (
         |  SELECT doc_id,
-        |    CASE WHEN text IS NULL OR length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) = 0 THEN CAST([] AS VARCHAR[])
-        |         ELSE regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\s+') END AS t,
-        |    CASE WHEN text IS NULL OR length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) = 0 THEN CAST([] AS VARCHAR[])
-        |         ELSE regexp_split_to_array(lower(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))), '\s+') END AS lt
+        |    CASE WHEN text IS NULL OR length(trim(text, $ws)) = 0 THEN CAST([] AS VARCHAR[])
+        |         ELSE regexp_split_to_array(trim(text, $ws), '\s+') END AS t,
+        |    CASE WHEN text IS NULL OR length(trim(text, $ws)) = 0 THEN CAST([] AS VARCHAR[])
+        |         ELSE regexp_split_to_array(lower(trim(text, $ws)), '\s+') END AS lt
         |  FROM documents
         |), spans AS (
         |  SELECT doc_id, CAST(u.strt AS INTEGER) AS strt, u.span FROM (
@@ -959,12 +958,7 @@ object CorpusQueries {
     // exact-Jaccard pairs (the q27-proven ground truth at 0.8) + the
     // same ordered 3-way self-join
     "q144_dup_triangles" ->
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)]) s
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\s+') toks FROM documents)
-        |  WHERE len(toks) >= 3
-        |), pairs AS (
+      raw"""WITH $shingles, pairs AS (
         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
         |  FROM sh a, sh b
         |  WHERE a.doc_id < b.doc_id
@@ -980,12 +974,12 @@ object CorpusQueries {
     // the q91 surgery recomputation with the dup set replaced by the
     // benchmark's own case-folded 4-token windows
     "q140_surgical_decontaminate" ->
-      """WITH toks AS (
+      raw"""WITH toks AS (
         |  SELECT doc_id,
-        |    CASE WHEN text IS NULL OR length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) = 0 THEN CAST([] AS VARCHAR[])
-        |         ELSE regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\s+') END AS t,
-        |    CASE WHEN text IS NULL OR length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) = 0 THEN CAST([] AS VARCHAR[])
-        |         ELSE regexp_split_to_array(lower(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))), '\s+') END AS lt
+        |    CASE WHEN text IS NULL OR length(trim(text, $ws)) = 0 THEN CAST([] AS VARCHAR[])
+        |         ELSE regexp_split_to_array(trim(text, $ws), '\s+') END AS t,
+        |    CASE WHEN text IS NULL OR length(trim(text, $ws)) = 0 THEN CAST([] AS VARCHAR[])
+        |         ELSE regexp_split_to_array(lower(trim(text, $ws)), '\s+') END AS lt
         |  FROM documents
         |), bench(bt) AS (VALUES ('key agg row scan'), ('batch window spark order')),
         |bspans AS (
@@ -1060,9 +1054,9 @@ object CorpusQueries {
     // same totals recomputed from scratch; tokens via the engine's
     // whitespace rule, vocabulary via DISTINCT
     "q126_corpus_stats" ->
-      """WITH toks AS (
-        |  SELECT lang, unnest(regexp_split_to_array(trim(lower(text), ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\s+')) AS w
-        |  FROM documents WHERE length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) > 0
+      raw"""WITH toks AS (
+        |  SELECT lang, unnest(regexp_split_to_array(trim(lower(text), $ws), '\s+')) AS w
+        |  FROM documents WHERE length(trim(text, $ws)) > 0
         |), tok_agg AS (
         |  SELECT lang, CAST(count(*) AS BIGINT) AS n_tokens,
         |    CAST(count(DISTINCT w) AS BIGINT) AS n_distinct_tokens
@@ -1081,12 +1075,7 @@ object CorpusQueries {
     // recursive-CTE min-label components → size histogram, with the
     // singleton row as total − clustered
     "q122_cluster_sizes" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)]) s
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\s+') toks FROM documents)
-        |  WHERE len(toks) >= 3
-        |), pairs AS (
+      raw"""WITH RECURSIVE $shingles, pairs AS (
         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
         |  FROM sh a, sh b
         |  WHERE a.doc_id < b.doc_id
@@ -1117,12 +1106,7 @@ object CorpusQueries {
     // (DuckDB's codepoint slicing == Spark's UTF-16 substr on this
     // BMP-only corpus; both engines see identical gram multisets)
     "q131_charngram_langid" ->
-      """WITH norm AS (
-        |  SELECT doc_id, lang,
-        |    trim(regexp_replace(regexp_replace(lower(text),
-        |      '[^\p{L}\p{N}\s]', '', 'g'), '\s+', ' ', 'g')) AS nt
-        |  FROM documents
-        |), feats AS (
+      raw"""WITH ${normCte("doc_id, lang")}, feats AS (
         |  SELECT doc_id, lang,
         |    unnest([nt[i:i+2] for i in range(1, length(nt) - 1)]) AS w
         |  FROM norm WHERE length(nt) >= 3
@@ -1165,12 +1149,7 @@ object CorpusQueries {
     // label ASC) argmax. The ln(c+1) sparse identity mirrors the
     // engine: absent (label, token) pairs contribute ln(1) = 0.
     "q118_nb_classify" ->
-      """WITH norm AS (
-        |  SELECT doc_id, source,
-        |    trim(regexp_replace(regexp_replace(lower(text),
-        |      '[^\p{L}\p{N}\s]', '', 'g'), '\s+', ' ', 'g')) AS nt
-        |  FROM documents
-        |), toks AS (
+      raw"""WITH ${normCte("doc_id, source")}, toks AS (
         |  SELECT doc_id, source, unnest(regexp_split_to_array(nt, ' ')) AS w
         |  FROM norm WHERE length(nt) > 0
         |), ndoc AS (
@@ -1208,12 +1187,7 @@ object CorpusQueries {
     // q48 md5-prefix formula, both models recount independently, and
     // the weight re-assembles from the same ln(c+1) sparse identity
     "q119_dsir_weights" ->
-      """WITH norm AS (
-        |  SELECT doc_id, lang,
-        |    trim(regexp_replace(regexp_replace(lower(text),
-        |      '[^\p{L}\p{N}\s]', '', 'g'), '\s+', ' ', 'g')) AS nt
-        |  FROM documents
-        |), toked AS (
+      raw"""WITH ${normCte("doc_id, lang")}, toked AS (
         |  SELECT doc_id, lang, regexp_split_to_array(nt, ' ') AS t
         |  FROM norm WHERE length(nt) > 0
         |), feats AS (
@@ -1248,12 +1222,7 @@ object CorpusQueries {
         |FROM documents d LEFT JOIN scored USING (doc_id)""".stripMargin,
 
     "q93_lm_perplexity" ->
-      """WITH norm AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(regexp_replace(lower(text),
-        |      '[^\p{L}\p{N}\s]', '', 'g'), '\s+', ' ', 'g')) AS nt
-        |  FROM documents
-        |), toks AS (
+      raw"""WITH ${normCte("doc_id")}, toks AS (
         |  SELECT doc_id, regexp_split_to_array(nt, ' ') AS t
         |  FROM norm WHERE length(nt) > 0
         |), uni AS (
@@ -1284,12 +1253,7 @@ object CorpusQueries {
     // the same fixed-order ratio divisions, and the same nested
     // coalesce cascade S = r3 else 0.4*(r2 else 0.4*(c3+1)/(N+V))
     "q177_sbo_trigram_ppl" ->
-      """WITH norm AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(regexp_replace(lower(text),
-        |      '[^\p{L}\p{N}\s]', '', 'g'), '\s+', ' ', 'g')) AS nt
-        |  FROM documents
-        |), toks AS (
+      raw"""WITH ${normCte("doc_id")}, toks AS (
         |  SELECT doc_id, regexp_split_to_array(nt, ' ') AS t
         |  FROM norm WHERE length(nt) > 0
         |), uni AS (
@@ -1329,12 +1293,7 @@ object CorpusQueries {
     // exact-Jaccard pairs (the q27-proven ground truth at 0.8) joined
     // with the q48 split formula on both members
     "q106_split_leakage" ->
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)]) s
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\s+') toks FROM documents)
-        |  WHERE len(toks) >= 3
-        |), pairs AS (
+      raw"""WITH $shingles, pairs AS (
         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
         |    round(len(list_intersect(a.s, b.s))::DOUBLE /
         |          (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 4) AS jaccard
@@ -1400,12 +1359,7 @@ object CorpusQueries {
     // pure value compare — every step integer or fixed-order IEEE, so
     // the assignment is engine-reproducible
     "q99_ppl_buckets" ->
-      """WITH norm AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(regexp_replace(lower(text),
-        |      '[^\p{L}\p{N}\s]', '', 'g'), '\s+', ' ', 'g')) AS nt
-        |  FROM documents
-        |), toks AS (
+      raw"""WITH ${normCte("doc_id")}, toks AS (
         |  SELECT doc_id, regexp_split_to_array(nt, ' ') AS t
         |  FROM norm WHERE length(nt) > 0
         |), uni AS (

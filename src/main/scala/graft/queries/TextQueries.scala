@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.dedup.NearDup
+import graft.queries.OracleSql._
 import graft.similarity.Ann
 import graft.text.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -434,9 +435,7 @@ object TextQueries {
           graft.functions.Lattice.e6(lit(hy) -
             sum(col("__bt").cast("double") / total * col("__hb")))
             .as("info_gain"))
-        .transform(graft.state.Checkpoints.stable)
-      long.unpersist(blocking = false)
-      out
+      graft.state.Checkpoints.stableThenRelease(out, () => long.unpersist(blocking = false))
     }),
 
     // dataset-card report: the corpus-level numbers a data release
@@ -594,15 +593,15 @@ object TextQueries {
     */
   private val langPredCte: String = {
     val langLists = graft.text.TextOps.LangStopwords.toSeq.sortBy(_._1)
-      .map { case (l, ws) =>
-        val lst = ws.map(w => s"'$w'").mkString(", ")
-        s"round(CASE WHEN len(toks) > 0 AND length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) > 0 " +
+      .map { case (l, words) =>
+        val lst = words.map(w => s"'$w'").mkString(", ")
+        s"round(CASE WHEN len(toks) > 0 AND length(trim(text, $ws)) > 0 " +
           s"THEN len(list_filter(toks, t -> list_contains([$lst], t)))::DOUBLE " +
           s"/ len(toks) ELSE 0 END, 6) AS score_$l"
       }.mkString(",\n  ")
     s"""WITH t AS (
        |  SELECT doc_id, lang, text,
-       |    regexp_split_to_array(lower(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))), '\\s+') toks
+       |    regexp_split_to_array(lower(trim(text, $ws)), '\\s+') toks
        |  FROM documents
        |), s AS (
        |  SELECT doc_id, lang,
@@ -1057,12 +1056,7 @@ object TextQueries {
   }
 
   private val jaccardOracle: String =
-    s"""WITH sh AS (
-       |  SELECT doc_id,
-       |    list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)]) s
-       |  FROM (SELECT doc_id, regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\\s+') toks FROM documents)
-       |  WHERE len(toks) >= 3
-       |)
+    s"""WITH $shingles
        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        |  round(len(list_intersect(a.s, b.s))::DOUBLE /
        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 4) AS jaccard
@@ -1080,12 +1074,12 @@ object TextQueries {
     // logs; per-term contributions identical IEEE expressions, final
     // sums rounded to 4 (ppm convention)
     "q175_token_drift" ->
-      """WITH ta AS (
-        |  SELECT unnest(regexp_split_to_array(lower(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))), '\s+')) AS term
-        |  FROM documents WHERE lang = 'en' AND length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) > 0
+      raw"""WITH ta AS (
+        |  SELECT unnest(regexp_split_to_array(lower(trim(text, $ws)), '\s+')) AS term
+        |  FROM documents WHERE lang = 'en' AND length(trim(text, $ws)) > 0
         |), tb AS (
-        |  SELECT unnest(regexp_split_to_array(lower(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))), '\s+')) AS term
-        |  FROM documents WHERE lang = 'de' AND length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) > 0
+        |  SELECT unnest(regexp_split_to_array(lower(trim(text, $ws)), '\s+')) AS term
+        |  FROM documents WHERE lang = 'de' AND length(trim(text, $ws)) > 0
         |), ca AS (SELECT term, count(*) AS ca FROM ta GROUP BY 1),
         |cb AS (SELECT term, count(*) AS cb FROM tb GROUP BY 1),
         |j AS (
@@ -1133,7 +1127,7 @@ object TextQueries {
     // the q22 signal formulas + identical bin/entropy/IG arithmetic
     "q200_feature_infogain" ->
       s"""WITH t AS (
-         |  SELECT lang, text, regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\\s+') toks,
+         |  SELECT lang, text, regexp_split_to_array(trim(text, $ws), '\\s+') toks,
          |    length(text) nc
          |  FROM documents
          |), sigs AS (
@@ -1144,7 +1138,7 @@ object TextQueries {
          |    round(CASE WHEN nc > 0
          |      THEN length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g'))::DOUBLE / nc
          |      ELSE 0 END, 4) AS punct_ratio,
-         |    round(CASE WHEN len(toks) > 0 AND length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) > 0
+         |    round(CASE WHEN len(toks) > 0 AND length(trim(text, $ws)) > 0
          |      THEN len(list_filter(toks, x -> list_contains([$stopList], lower(x))))::DOUBLE / len(toks)
          |      ELSE 0 END, 4) AS stopword_ratio
          |  FROM t
@@ -1323,13 +1317,13 @@ object TextQueries {
 
     "q22_text_quality" ->
       s"""WITH t AS (
-         |  SELECT doc_id, text, regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\\s+') toks,
+         |  SELECT doc_id, text, regexp_split_to_array(trim(text, $ws), '\\s+') toks,
          |    length(text) nc
          |  FROM documents
          |)
          |SELECT doc_id,
-         |  CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) = 0 THEN 0 ELSE len(toks) END AS n_tokens,
-         |  round(CASE WHEN len(toks) > 0 AND length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) > 0
+         |  CASE WHEN length(trim(text, $ws)) = 0 THEN 0 ELSE len(toks) END AS n_tokens,
+         |  round(CASE WHEN len(toks) > 0 AND length(trim(text, $ws)) > 0
          |    THEN length(regexp_replace(text, '\\s', '', 'g'))::DOUBLE / len(toks)
          |    ELSE 0 END, 4) AS mean_token_len,
          |  round(CASE WHEN nc > 0
@@ -1338,25 +1332,24 @@ object TextQueries {
          |  round(CASE WHEN nc > 0
          |    THEN length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g'))::DOUBLE / nc
          |    ELSE 0 END, 4) AS punct_ratio,
-         |  round(CASE WHEN len(toks) > 0 AND length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) > 0
+         |  round(CASE WHEN len(toks) > 0 AND length(trim(text, $ws)) > 0
          |    THEN len(list_filter(toks, t -> list_contains([$stopList], lower(t))))::DOUBLE / len(toks)
          |    ELSE 0 END, 4) AS stopword_ratio
          |FROM t""".stripMargin,
 
     "q23_token_counts" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) = 0 THEN 0
-        |       ELSE len(regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\s+')) END AS INTEGER) AS n_ws_tokens,
+      raw"""SELECT doc_id,
+        |  CAST(${wsTokenCount(7)} AS INTEGER) AS n_ws_tokens,
         |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS INTEGER) AS n_bpeish_tokens
         |FROM documents""".stripMargin,
 
     "q24_lang_id" -> {
-      val langLists = TextOps.LangStopwords.toSeq.sortBy(_._1).map { case (l, ws) =>
-        val lst = ws.map(w => s"'$w'").mkString(", ")
-        s"round(CASE WHEN len(toks) > 0 AND length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) > 0 THEN len(list_filter(toks, t -> list_contains([$lst], t)))::DOUBLE / len(toks) ELSE 0 END, 6) AS score_$l"
+      val langLists = TextOps.LangStopwords.toSeq.sortBy(_._1).map { case (l, words) =>
+        val lst = words.map(w => s"'$w'").mkString(", ")
+        s"round(CASE WHEN len(toks) > 0 AND length(trim(text, $ws)) > 0 THEN len(list_filter(toks, t -> list_contains([$lst], t)))::DOUBLE / len(toks) ELSE 0 END, 6) AS score_$l"
       }.mkString(",\n  ")
       s"""WITH t AS (
-         |  SELECT doc_id, text, regexp_split_to_array(lower(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))), '\\s+') toks
+         |  SELECT doc_id, text, regexp_split_to_array(lower(trim(text, $ws)), '\\s+') toks
          |  FROM documents
          |), s AS (
          |  SELECT doc_id,
@@ -1435,12 +1428,7 @@ object TextQueries {
     // exact-Jaccard of every doc's shingle set against the same query
     // literal, the same floor and rounded rank
     "q128_similar_docs" ->
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)]) s
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\s+') toks FROM documents)
-        |  WHERE len(toks) >= 3
-        |), q AS (
+      raw"""WITH $shingles, q AS (
         |  SELECT list_distinct([array_to_string(t[i:i+2], ' ') for i in range(1, len(t)-1)]) s
         |  FROM (SELECT regexp_split_to_array(
         |    'key agg row scan slow fast table value part hash', '\s+') t)
@@ -1459,43 +1447,13 @@ object TextQueries {
     // q128 shingle chains at k=20), fused with the identical
     // fixed-order 1/(60+rank) sum and (rrf DESC, id) cut
     "q181_rrf_hybrid_search" ->
-      """WITH norm AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(regexp_replace(lower(text),
-        |      '[^\p{L}\p{N}\s]', '', 'g'), '\s+', ' ', 'g')) AS nt
-        |  FROM documents
-        |), tok AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(nt, ' ')) AS term
-        |  FROM norm WHERE length(nt) > 0
-        |), dl AS (
-        |  SELECT doc_id, count(*) AS dl FROM tok GROUP BY 1
-        |), st AS (
-        |  SELECT count(*) AS n, sum(dl)*1.0/count(*) AS avgdl FROM dl
-        |), tf AS (
-        |  SELECT doc_id, term, count(*) AS tf FROM tok
-        |  WHERE term IN ('table', 'join', 'stream') GROUP BY 1, 2
-        |), dfc AS (
-        |  SELECT term, count(*) AS df FROM tf GROUP BY 1
-        |), scored AS (
-        |  SELECT tf.doc_id,
-        |    sum(ln(1 + ((SELECT n FROM st) - dfc.df + 0.5) / (dfc.df + 0.5))
-        |      * (tf.tf * (1.2::DOUBLE + 1))
-        |      / (tf.tf + 1.2::DOUBLE * (0.25::DOUBLE
-        |          + 0.75::DOUBLE * dl.dl / (SELECT avgdl FROM st)))) AS s
-        |  FROM tf JOIN dfc USING (term) JOIN dl USING (doc_id)
-        |  GROUP BY 1
-        |), bmr AS (
+      raw"""WITH ${bm25Scored("'table', 'join', 'stream'")}, bmr AS (
         |  SELECT doc_id, rank FROM (
         |    SELECT doc_id,
         |      row_number() OVER (ORDER BY s DESC, doc_id ASC) AS rank
         |    FROM scored)
         |  WHERE rank <= 20
-        |), sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)]) s
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\s+') toks FROM documents)
-        |  WHERE len(toks) >= 3
-        |), q AS (
+        |), $shingles, q AS (
         |  SELECT list_distinct([array_to_string(t[i:i+2], ' ') for i in range(1, len(t)-1)]) s
         |  FROM (SELECT regexp_split_to_array(
         |    'key agg row scan slow fast table value part hash', '\s+') t)
@@ -1532,10 +1490,10 @@ object TextQueries {
     // df recomputed on gram STRINGS (the engine keys on xxhash64 —
     // same result absent a 64-bit collision, the q84 argument)
     "q129_ngram_novelty" ->
-      """WITH grams AS (
+      raw"""WITH grams AS (
         |  SELECT doc_id, unnest(list_distinct(
         |    [array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)])) AS g
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\s+') toks FROM documents)
+        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text, $ws), '\s+') toks FROM documents)
         |  WHERE len(toks) >= 3
         |), dfreq AS (SELECT g, count(*) AS df FROM grams GROUP BY g)
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
@@ -1548,9 +1506,8 @@ object TextQueries {
 
     // full recount of both frames + the same rounded-PMI rank
     "q121_pmi_collocations" ->
-      """WITH toked AS (
-        |  SELECT CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) = 0 THEN []::VARCHAR[]
-        |              ELSE regexp_split_to_array(trim(lower(text), ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\s+') END AS t
+      raw"""WITH toked AS (
+        |  SELECT ${wsTokensLower(14)} AS t
         |  FROM documents
         |), unis AS (
         |  SELECT w, count(*) AS c FROM (SELECT unnest(t) AS w FROM toked) GROUP BY w
@@ -1583,10 +1540,9 @@ object TextQueries {
     // same counting conventions: whitespace words, [.!?]+ runs,
     // vowel-group runs; integer sums, identical closing expressions
     "q207_readability" ->
-      """WITH base AS (
+      raw"""WITH base AS (
         |  SELECT lang, source, text,
-        |    CASE WHEN length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) = 0 THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\s+')) END AS w
+        |    ${wsTokenCount(9)} AS w
         |  FROM documents
         |), perdoc AS (
         |  SELECT lang, source, w,
@@ -1750,32 +1706,7 @@ object TextQueries {
     // constant spelled as the same double-typed expression), same
     // (score desc, id asc) rank, score rounded to 6
     "q112_bm25_search" ->
-      """WITH norm AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(regexp_replace(lower(text),
-        |      '[^\p{L}\p{N}\s]', '', 'g'), '\s+', ' ', 'g')) AS nt
-        |  FROM documents
-        |), tok AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(nt, ' ')) AS term
-        |  FROM norm WHERE length(nt) > 0
-        |), dl AS (
-        |  SELECT doc_id, count(*) AS dl FROM tok GROUP BY 1
-        |), st AS (
-        |  SELECT count(*) AS n, sum(dl)*1.0/count(*) AS avgdl FROM dl
-        |), tf AS (
-        |  SELECT doc_id, term, count(*) AS tf FROM tok
-        |  WHERE term IN ('table', 'join', 'stream') GROUP BY 1, 2
-        |), dfc AS (
-        |  SELECT term, count(*) AS df FROM tf GROUP BY 1
-        |), scored AS (
-        |  SELECT tf.doc_id,
-        |    sum(ln(1 + ((SELECT n FROM st) - dfc.df + 0.5) / (dfc.df + 0.5))
-        |      * (tf.tf * (1.2::DOUBLE + 1))
-        |      / (tf.tf + 1.2::DOUBLE * (0.25::DOUBLE
-        |          + 0.75::DOUBLE * dl.dl / (SELECT avgdl FROM st)))) AS s
-        |  FROM tf JOIN dfc USING (term) JOIN dl USING (doc_id)
-        |  GROUP BY 1
-        |)
+      raw"""WITH ${bm25Scored("'table', 'join', 'stream'")}
         |SELECT doc_id, CAST(rank AS INTEGER) AS rank,
         |  floor(s * 1e6 + 0.5) / 1e6 + 0 AS score FROM (
         |  SELECT doc_id, s,
@@ -1786,9 +1717,9 @@ object TextQueries {
     // the same lexicon as a VALUES table joined on the lowercased
     // token — the join form of the engine's map-literal lookup
     "q108_topic_tags" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))), '\s+')) AS tok
-        |  FROM documents WHERE length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) > 0
+      raw"""WITH toks AS (
+        |  SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text, $ws)), '\s+')) AS tok
+        |  FROM documents WHERE length(trim(text, $ws)) > 0
         |), lex(tok, topic) AS (VALUES
         |  ('table','db'), ('row','db'), ('column','db'), ('join','db'),
         |  ('scan','exec'), ('sort','exec'), ('merge','exec'), ('hash','exec'),
@@ -1833,9 +1764,9 @@ object TextQueries {
     // same (count desc, token asc) rank and the same integer ceil
     // rule recomputed with a plain window over the vocab frame
     "q104_vocab_coverage" ->
-      """WITH toks AS (
-        |  SELECT unnest(regexp_split_to_array(lower(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))), '\s+')) AS tok
-        |  FROM documents WHERE length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) > 0
+      raw"""WITH toks AS (
+        |  SELECT unnest(regexp_split_to_array(lower(trim(text, $ws)), '\s+')) AS tok
+        |  FROM documents WHERE length(trim(text, $ws)) > 0
         |), tc AS (
         |  SELECT tok, count(*) AS c FROM toks GROUP BY tok
         |), tot AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM tc),
@@ -1854,9 +1785,9 @@ object TextQueries {
     // same lowercased-token trigrams with multiplicity; DuckDB's
     // inclusive 1-based slice t[i:i+2] is the 3-token window
     "q101_top_ngrams" ->
-      """WITH toks AS (
-        |  SELECT regexp_split_to_array(lower(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))), '\s+') AS t
-        |  FROM documents WHERE length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) > 0
+      raw"""WITH toks AS (
+        |  SELECT regexp_split_to_array(lower(trim(text, $ws)), '\s+') AS t
+        |  FROM documents WHERE length(trim(text, $ws)) > 0
         |), grams AS (
         |  SELECT unnest([array_to_string(t[i:i+2], ' ') for i in range(1, len(t)-1)]) AS ngram
         |  FROM toks WHERE len(t) >= 3
@@ -1867,12 +1798,7 @@ object TextQueries {
         |LIMIT 25""".stripMargin,
 
     "q96_tfidf_top_terms" ->
-      """WITH norm AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(regexp_replace(lower(text),
-        |      '[^\p{L}\p{N}\s]', '', 'g'), '\s+', ' ', 'g')) AS nt
-        |  FROM documents
-        |), tok AS (
+      raw"""WITH ${normCte("doc_id")}, tok AS (
         |  SELECT doc_id, unnest(regexp_split_to_array(nt, ' ')) AS term
         |  FROM norm WHERE length(nt) > 0
         |), tf AS (
@@ -1969,12 +1895,12 @@ object TextQueries {
 
     // every metric an exact count or one division of exact counts
     "q169_corpus_report" ->
-      """WITH a AS (
+      raw"""WITH a AS (
         |  SELECT
         |    count(*) AS n_docs,
         |    sum(CASE WHEN text IS NULL THEN 1 ELSE 0 END) AS n_null_text,
-        |    sum(CASE WHEN text IS NULL OR length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) = 0 THEN 0
-        |             ELSE len(regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\s+')) END) AS n_ws_tokens,
+        |    sum(CASE WHEN text IS NULL OR length(trim(text, $ws)) = 0 THEN 0
+        |             ELSE len(regexp_split_to_array(trim(text, $ws), '\s+')) END) AS n_ws_tokens,
         |    count(DISTINCT lang) AS n_langs,
         |    count(DISTINCT source) AS n_sources,
         |    count(*) - count(DISTINCT coalesce(md5(text), '')) AS n_exact_dup_docs,
@@ -1994,12 +1920,7 @@ object TextQueries {
     // division, engine-identical); no pair sits within 0.3 of the
     // 0.8 cut at the shipped SFs
     "q166_containment_pairs" ->
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)]) s
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\s+') toks FROM documents)
-        |  WHERE len(toks) >= 3
-        |)
+      raw"""WITH $shingles
         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
         |  round(len(list_intersect(a.s, b.s))::DOUBLE / len(a.s), 4) AS containment
         |FROM sh a, sh b
@@ -2011,12 +1932,7 @@ object TextQueries {
     // lemma, precision by the verification join); same one-division
     // threshold compare on exact integer counts
     "q231_prefix_jaccard_pairs" ->
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)]) s
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\s+') toks FROM documents)
-        |  WHERE len(toks) >= 3
-        |)
+      raw"""WITH $shingles
         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
         |  CAST(len(list_intersect(a.s, b.s)) AS BIGINT) AS inter_size,
         |  CAST(len(a.s) AS BIGINT) AS size_a,
@@ -2053,9 +1969,9 @@ object TextQueries {
     // explicit position walk (overlap-correct where a regex scan is
     // not); the tokens convention matches the q26 oracle
     "q162_phrase_search" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\s+') AS t
-        |  FROM documents WHERE text IS NOT NULL AND trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)) <> ''
+      raw"""WITH toks AS (
+        |  SELECT doc_id, regexp_split_to_array(trim(text, $ws), '\s+') AS t
+        |  FROM documents WHERE text IS NOT NULL AND trim(text, $ws) <> ''
         |), m AS (
         |  SELECT doc_id,
         |    list_sum(list_transform(generate_series(1, len(t) - 1),

@@ -4,6 +4,7 @@ import graft.Tables
 import graft.functions.RefFunctions
 import graft.geo.Geo
 import graft.operators.TimeOps
+import graft.queries.OracleSql._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -195,9 +196,9 @@ object UdfParityQueries {
     },
 
     "q50_repetition_signals" ->
-      """WITH t AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '\s+') toks,
-        |    length(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13))) nt
+      raw"""WITH t AS (
+        |  SELECT doc_id, regexp_split_to_array(trim(text, $ws), '\s+') toks,
+        |    length(trim(text, $ws)) nt
         |  FROM documents
         |), bg AS (
         |  SELECT doc_id,

@@ -183,12 +183,13 @@ object Bpe {
       }
     }
 
-    val vocab = words
+    val vocab = graft.state.Checkpoints.stableThenRelease(words
       .select(col("word"), col("cnt"),
-        size(symbols(col("wrapped"))).as("n_tokens"), col("wrapped"))
-      .transform(graft.state.Checkpoints.stable)
-    if (prevCache != null) prevCache.unpersist(blocking = false)
-    cache.unpersist(blocking = false)
+        size(symbols(col("wrapped"))).as("n_tokens"), col("wrapped")),
+      () => {
+        if (prevCache != null) prevCache.unpersist(blocking = false)
+        cache.unpersist(blocking = false)
+      })
 
     val mergesDf = spark.createDataFrame(merges.result())
       .toDF("rank", "a", "b", "n_pairs")

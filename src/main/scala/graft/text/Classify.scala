@@ -361,9 +361,8 @@ object Classify {
                                    priorMass: Double, heap: Boolean): DataFrame = {
     val (built, caches) =
       distinctiveTermsBuildImpl(docs, groupCol, textCol, k, priorMass, heap)
-    val out = built.transform(graft.state.Checkpoints.stable)
-    caches.foreach(_.unpersist())
-    out
+    graft.state.Checkpoints.stableThenRelease(built,
+      () => caches.foreach(_.unpersist()))
   }
 
   private def distinctiveTermsBuildImpl(
@@ -483,9 +482,7 @@ object Classify {
       // doc-sized result: the q88 localCheckpoint barrier materializes
       // it while the feature frame is still cached, so the cache can be
       // released HERE instead of leaking a handle to the caller
-      .transform(graft.state.Checkpoints.stable)
-    rawRows.unpersist()
-    out
+    graft.state.Checkpoints.stableThenRelease(out, () => rawRows.unpersist())
   }
 
   /** Per-truth-class evaluation report from (truth, prediction) rows:
@@ -521,9 +518,7 @@ object Classify {
         round(r, 6).as("recall"),
         round(when(col("__pred").isNotNull && col("__pred") > 0 &&
           (p + r) > 0, lit(2.0) * p * r / (p + r)), 6).as("f1"))
-      .transform(graft.state.Checkpoints.stable)
-    cm.unpersist(blocking = false)
-    out
+    graft.state.Checkpoints.stableThenRelease(out, () => cm.unpersist(blocking = false))
   }
 
   /** Cohen's kappa from (truth, prediction) rows — agreement
@@ -555,8 +550,6 @@ object Classify {
         // correctly-rounded divisions of counts, never negative
         graft.functions.Lattice.e6(
           when(peD < 1.0, (po - peD) / (lit(1.0) - peD))).as("kappa"))
-      .transform(graft.state.Checkpoints.stable)
-    sc.unpersist(blocking = false)
-    out
+    graft.state.Checkpoints.stableThenRelease(out, () => sc.unpersist(blocking = false))
   }
 }

@@ -257,7 +257,7 @@ object NgramLm {
     // build them as concurrent branches (round-17 opt, guide §2.6 /
     // the q261∥q327 precedent): plans and values byte-identical,
     // their three back-to-back jobs overlap on the idle scheduler
-    val Seq(heads, cont, bigrams) = graft.Par.build(
+    val Seq(heads, cont, bigrams) = try graft.Par.build(
       () => bic.groupBy("w1")
         .agg(sum("c12").as("c1b"), count(lit(1)).as("n1from"))
         .select(xxhash64(col("w1")).as("h_hash"), col("c1b"), col("n1from"))
@@ -269,7 +269,7 @@ object NgramLm {
       () => bic
         .select(xxhash64(col("w1"), col("w2")).as("bg_hash"), col("c12"))
         .transform(graft.state.Checkpoints.stable))
-    bic.unpersist(blocking = false)
+    finally bic.unpersist(blocking = false)
     KneserNeyLm(bigrams, heads, cont, 1.0 / (b + vc).toDouble, discount)
   }
 

@@ -392,7 +392,7 @@ object TextOps {
       .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     bis.persist()
     val n12 = bis.agg(coalesce(sum("c12"), lit(0L))).head().getLong(0)
-    val out =
+    try {
       if (n1 == 0 || n12 == 0) {
         val s = docs.sparkSession
         import s.implicits._
@@ -411,8 +411,7 @@ object TextOps {
         .limit(k)
         .select(col("w1"), col("w2"), col("c12"), col("pmi"))
         .transform(graft.state.Checkpoints.stable)
-    toked.unpersist(); unis.unpersist(); bis.unpersist()
-    out
+    } finally { toked.unpersist(); unis.unpersist(); bis.unpersist() }
   }
 
   /** Keyword-lexicon topic tagging — the curation taxonomy pass
@@ -521,9 +520,7 @@ object TextOps {
         coalesce(sum(when(col("__cum") - col("c") < needed, col("c"))), lit(0L))
           .as("covered_occurrences"),
         lit(total).as("total_occurrences"))
-      .transform(graft.state.Checkpoints.stable)
-    tokCounts.unpersist(blocking = false)
-    out
+    graft.state.Checkpoints.stableThenRelease(out, () => tokCounts.unpersist(blocking = false))
   }
 
   /** Word n-gram shingles (distinct), the MinHash/Jaccard unit.
@@ -570,9 +567,7 @@ object TextOps {
       .withColumn("novelty",
         floor(col("n_unique").cast("double") / col("n_grams").cast("double")
           * lit(1e6d) + lit(0.5d)) / lit(1e6d))
-      .transform(graft.state.Checkpoints.stable)
-    grams.unpersist()
-    out
+    graft.state.Checkpoints.stableThenRelease(out, () => grams.unpersist())
   }
 
   /** Character n-gram shingles (distinct) over normalised text. */

@@ -59,4 +59,17 @@ class OracleHygieneSpec extends AnyFunSuite {
     assert((os -- qs).isEmpty, s"oracles without queries: ${os -- qs}")
     assert((qs -- os).isEmpty, s"queries without oracles: ${qs -- os}")
   }
+
+  test("the query modules' key sets are pairwise disjoint and add up to " +
+    "the merged maps") {
+    val modules = SparkEntry.modules
+    for (Seq((a, qa, oa), (b, qb, ob)) <- modules.combinations(2)) {
+      assert((qa.keySet & qb.keySet).isEmpty,
+        s"$a and $b both define queries ${qa.keySet & qb.keySet}")
+      assert((oa.keySet & ob.keySet).isEmpty,
+        s"$a and $b both define oracles ${oa.keySet & ob.keySet}")
+    }
+    assert(modules.map(_._2.size).sum === SparkEntry.queries.size)
+    assert(modules.map(_._3.size).sum === oracles.size)
+  }
 }
